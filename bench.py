@@ -42,7 +42,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from stock_crypto_data_pipeline_public_spark.plans import registry
-from stock_crypto_data_pipeline_public_spark.session import get_spark
+from stock_crypto_data_pipeline_public_spark.session import env_positive_int, get_spark
 
 # Queries whose plan BUILD does the real work (operators with side
 # effects — t31 materializes edges and writes the inverted index before
@@ -106,7 +106,7 @@ EAGER = {
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = env_positive_int("SPARK_GRAFT_CPUS", 32)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     try:
         sf = float(sf)

@@ -23,7 +23,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import EAGER  # the bench's own billing policy, not a copy
 from stock_crypto_data_pipeline_public_spark.plans import registry
-from stock_crypto_data_pipeline_public_spark.session import get_spark
+from stock_crypto_data_pipeline_public_spark.session import env_positive_int, get_spark
 
 
 def main() -> int:
@@ -36,14 +36,12 @@ def main() -> int:
     args = ap.parse_args()
 
     registry.load_all()
-    resolved = []
-    for n in args.names:
-        hits = [q for q in sorted(registry.QUERIES) if q == n or q.startswith(n)]
-        if len(hits) != 1:
-            raise SystemExit(f"{n!r} matches {hits}")
-        resolved.append(hits[0])
+    try:
+        resolved = registry.resolve(args.names)
+    except ValueError as e:
+        ap.error(str(e))
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = env_positive_int("SPARK_GRAFT_CPUS", 32)
     spark = get_spark("prof-query", cpus=cpus, shuffle_partitions=cpus)
     spark.range(1000).selectExpr("sum(id)").collect()
     spark.range(64).repartition(spark.sparkContext.defaultParallelism).mapInPandas(

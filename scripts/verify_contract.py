@@ -29,12 +29,20 @@ TABLES = (
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
-    ap.add_argument("--only", action="append", default=None)
+    ap.add_argument("--only", action="append", default=None,
+                    help="query name or unique prefix (e.g. s01); repeatable")
     args = ap.parse_args()
 
     mod = importlib.import_module("__spark_entry__")
     from stock_crypto_data_pipeline_public_spark.oracle_compare import canon, duck_pdf, spark_pdf, value_hash
+    from stock_crypto_data_pipeline_public_spark.plans import registry
     from stock_crypto_data_pipeline_public_spark.session import get_spark
+
+    qs, oracles = mod.queries(), mod.oracle_sql()
+    try:  # before the JVM starts: a typo costs nothing
+        names = registry.resolve(args.only) if args.only else sorted(qs)
+    except ValueError as e:
+        ap.error(str(e))
 
     spark = get_spark("verify-contract", cpus=16, shuffle_partitions=16)
 
@@ -49,8 +57,6 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{args.sf_dir}/{t}.parquet')"
         )
 
-    qs, oracles = mod.queries(), mod.oracle_sql()
-    names = args.only or sorted(qs)
     fails = []
     for name in names:
         t0 = time.time()

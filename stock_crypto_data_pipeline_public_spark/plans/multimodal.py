@@ -18,18 +18,15 @@ from pyspark.sql import functions as F
 
 from ..operators import audiofp as AFP
 from ..operators import multimodal as M
+from ..session import env_positive_int
 from ..sources.tables import load_table
 from .registry import query
 
 
 #: input bytes per decode task for the Python-stage fan-out below; env
 #: overrides for clusters whose media synthesis/decode cost per byte differs
-import os as _os
-
-_MEDIA_PART_BYTES = int(_os.environ.get("SPARK_GRAFT_MEDIA_PART_BYTES", 128 * 1024))
-_MEDIA_PART_BYTES_HEAVY = int(
-    _os.environ.get("SPARK_GRAFT_MEDIA_PART_BYTES_HEAVY", 16 * 1024)
-)
+_MEDIA_PART_BYTES = env_positive_int("SPARK_GRAFT_MEDIA_PART_BYTES", 128 * 1024)
+_MEDIA_PART_BYTES_HEAVY = env_positive_int("SPARK_GRAFT_MEDIA_PART_BYTES_HEAVY", 16 * 1024)
 
 
 def _spread(spark: SparkSession, docs: DataFrame, heavy: bool = False) -> DataFrame:

@@ -43,7 +43,7 @@ Oracle-parity rules (applied by every query in this package):
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -66,6 +66,22 @@ def query(name: str, oracle: str | None = None):
         return fn
 
     return deco
+
+
+def resolve(names: Iterable[str]) -> list[str]:
+    """Full query names for ``names``, each an exact name or a unique
+    prefix (``"s02"`` → ``s02_streaming_watermark_end_state``). Raises
+    ``ValueError`` for an unknown or ambiguous name. Needs ``load_all()``
+    first; no Spark session."""
+    resolved = []
+    for n in names:
+        hits = [q for q in QUERIES if q == n] or sorted(
+            q for q in QUERIES if q.startswith(n)
+        )
+        if len(hits) != 1:
+            raise ValueError(f"query {n!r} matches {hits or 'nothing'}")
+        resolved.append(hits[0])
+    return resolved
 
 
 #: Queries promoted to the FRONT of registration order. The round driver

@@ -16,15 +16,18 @@ downstream pipeline.
 
 from __future__ import annotations
 
-import os
+import functools
+import shutil
+from collections.abc import Callable
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, Window as _W
 from pyspark.sql import functions as F
-
-from contextlib import contextmanager
+from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.numeric import dec, money_sum, money_sum_e2, oracle_money_sum, oracle_money_sum_e2, oracle_rnd, rnd
 from ..scratch import mkscratch
+from ..session import env_positive_int
 from ..sources.tables import load_table, local_rows
 from .registry import query
 
@@ -36,22 +39,19 @@ def _drain_shuffle(spark: SparkSession, n: int | None = None):
     The stateful operators (windowed agg, stream-stream join, dedup,
     applyInPandasWithState) create one state-store instance PER shuffle
     partition, and availableNow drains pay per-partition commit/snapshot
-    I/O every micro-batch — at gate/bench data volumes, 32 near-empty
-    state partitions are pure orchestration overhead (measured: s02
-    15.1 → 10.2 s steady-state at sf0.1). Production sizes this to the
-    cluster (state store count = parallelism); the checkpoint pins it at
-    first start, so the value is also what makes the gated end states
+    I/O every micro-batch — at gate/bench data volumes, near-empty state
+    partitions are pure orchestration overhead (measurements: SCALE.md's
+    sizing-knob section). Production sizes this to the cluster (state
+    store count = parallelism); the checkpoint pins it at first start, so
+    the value is also what makes the gated end states
     environment-independent. Restores the session value on exit.
 
-    ``$SPARK_GRAFT_DRAIN_PARTITIONS`` overrides the default (production:
-    set it to the cluster's target state-store parallelism; the gated end
-    states are partition-count-independent aggregates, verified by the
-    oracle gate at any setting). r11 re-measure on the gate volumes:
-    2 partitions beats 8 by ~10-28% best-of-4 (s02 12.7→11.1, s07
-    13.8→12.4, s14 21.8→15.7 on the r11 box) — same rationale as the
-    original 32→8 cut, taken one step further now that it is measured."""
+    ``$SPARK_GRAFT_DRAIN_PARTITIONS`` overrides the default of 2
+    (production: set it to the cluster's target state-store parallelism;
+    the gated end states are partition-count-independent aggregates,
+    verified by the oracle gate at any setting)."""
     if n is None:
-        n = int(os.environ.get("SPARK_GRAFT_DRAIN_PARTITIONS", "2"))
+        n = env_positive_int("SPARK_GRAFT_DRAIN_PARTITIONS", 2)
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
     spark.conf.set(key, str(n))
@@ -66,15 +66,78 @@ def _py_drain_partitions(spark: SparkSession) -> int:
     (s04/s14) — DELIBERATELY higher than _drain_shuffle's JVM-state
     default. The Python-stateful operator calls its track() function once
     per GROUP, so per-batch cost is Python-worker-bound, not state-store-
-    commit-bound: r11's 8→2 cut (right for the JVM windowed aggs) was
-    exactly s04's unexplained 3.7→5.0 s regression — re-measured r12:
-    s04 runs 5.1 s at 2 partitions, 2.7 s at 16; s14 5.2 → 4.5. Sized to
-    half the cores (the two-drain harness overlaps little else), floor 2,
-    env-overridable for clusters."""
-    env = os.environ.get("SPARK_GRAFT_PY_DRAIN_PARTITIONS")
-    if env:
-        return int(env)
-    return max(2, spark.sparkContext.defaultParallelism // 2)
+    commit-bound, and the JVM drains' small partition count starves it
+    (sweep: OPTIMIZATION_r12.md). Sized to half the cores (the two-drain
+    harness overlaps little else), floor 2, env-overridable for
+    clusters."""
+    return env_positive_int(
+        "SPARK_GRAFT_PY_DRAIN_PARTITIONS",
+        max(2, spark.sparkContext.defaultParallelism // 2),
+    )
+
+
+def _streamed(prefix: str):
+    """Give a streaming query's body a scratch directory for its landings,
+    checkpoints and sinks: the body runs as ``body(spark, sf_dir, base)``,
+    its result is materialized (it reads files under ``base``) and
+    ``base`` is removed on return and on raise. Goes under ``@query``."""
+
+    def deco(body: Callable[[SparkSession, str, str], DataFrame]):
+        @functools.wraps(body)
+        def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+            base = mkscratch(prefix)
+            try:
+                return body(spark, sf_dir, base).localCheckpoint(eager=True)
+            finally:
+                shutil.rmtree(base, ignore_errors=True)
+
+        return run
+
+    return deco
+
+
+def _drain(
+    spark: SparkSession,
+    *starts: Callable[[], StreamingQuery],
+    python_state: bool = False,
+) -> None:
+    """One drain: call every ``start()`` under the pinned drain partition
+    count (``python_state``: the applyInPandasWithState count), then await
+    every query — each runs to the offsets available at its start and
+    stops. If a start or an await raises, every query still active is
+    stopped before the error propagates, so none outlives the scratch
+    directory it writes to."""
+    n = _py_drain_partitions(spark) if python_state else None
+    with _drain_shuffle(spark, n):
+        started: list[StreamingQuery] = []
+        try:
+            for start in starts:
+                started.append(start())
+            for q in started:
+                q.awaitTermination()
+        finally:
+            for q in started:
+                if q.isActive:
+                    q.stop()
+
+
+def _to_parquet(df: DataFrame, sink: str, ckpt: str) -> StreamingQuery:
+    """Start the append-mode native parquet sink, drained to the available
+    offsets."""
+    return (
+        df.writeStream.format("parquet")
+        .option("path", sink)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _land(df: DataFrame, landing: str) -> None:
+    """Append ``df`` to a landing directory as ONE file, so no micro-batch
+    of the next drain sees only part of it."""
+    df.coalesce(1).write.mode("append").parquet(landing)
 
 
 # --------------------------------------------------------------------------
@@ -115,66 +178,55 @@ def _py_drain_partitions(spark: SparkSession) -> int:
     GROUP BY event_type
     """,
 )
-def s01_streaming_ingest_end_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
+@_streamed("s01_stream_")
+def s01_streaming_ingest_end_state(spark: SparkSession, sf_dir: str, base: str) -> DataFrame:
     from ..streaming.pipeline import file_stream, run_incremental_sink
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-    base = mkscratch("s01_stream_")
     landing = f"{base}/landing"
     plain_tgt, vault_tgt = f"{base}/raw_plain", f"{base}/raw_vault"
 
     def drain() -> None:
-        with _drain_shuffle(spark):
-            stream = file_stream(spark, landing, ev.schema)
-            qp = (
-                stream.writeStream.format("parquet")
-                .option("path", plain_tgt)
-                .option("checkpointLocation", f"{base}/ckpt_plain")
-                .trigger(availableNow=True)
-                .start()
-            )
-            qv = run_incremental_sink(
-                stream,
+        _drain(
+            spark,
+            lambda: _to_parquet(
+                file_stream(spark, landing, ev.schema), plain_tgt, f"{base}/ckpt_plain"
+            ),
+            lambda: run_incremental_sink(
+                file_stream(spark, landing, ev.schema),
                 vault_tgt,
                 keys=["event_id"],
                 checkpoint=f"{base}/ckpt_vault",
-            )
-            qp.awaitTermination()
-            qv.awaitTermination()
-
-    try:
-        phase_a = ev.filter(F.col("event_id") % 2 == 0)
-        phase_a.write.mode("append").parquet(landing)
-        drain()
-        # at-least-once redelivery: phase B plus phase A AGAIN as new files
-        ev.filter(F.col("event_id") % 2 == 1).write.mode("append").parquet(landing)
-        phase_a.write.mode("append").parquet(landing)
-        drain()  # fresh start(), same checkpoints: must resume, not replay
-
-        plain = (
-            spark.read.parquet(plain_tgt)
-            .groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n_plain"))
+            ),
         )
-        vault = (
-            spark.read.parquet(vault_tgt)
-            .groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_vault"),
-                # decimal money policy: float sums are summation-order-
-                # dependent at the rounding boundary (numeric.py)
-                money_sum_e2("value").alias("sum_value_e2"),
-                F.max("event_id").alias("max_event_id"),
-            )
+
+    phase_a = ev.filter(F.col("event_id") % 2 == 0)
+    phase_a.write.mode("append").parquet(landing)
+    drain()
+    # at-least-once redelivery: phase B plus phase A AGAIN as new files
+    ev.filter(F.col("event_id") % 2 == 1).write.mode("append").parquet(landing)
+    phase_a.write.mode("append").parquet(landing)
+    drain()  # fresh start(), same checkpoints: must resume, not replay
+
+    plain = (
+        spark.read.parquet(plain_tgt)
+        .groupBy("event_type")
+        .agg(F.count(F.lit(1)).alias("n_plain"))
+    )
+    vault = (
+        spark.read.parquet(vault_tgt)
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_vault"),
+            # decimal money policy: float sums are summation-order-
+            # dependent at the rounding boundary (numeric.py)
+            money_sum_e2("value").alias("sum_value_e2"),
+            F.max("event_id").alias("max_event_id"),
         )
-        out = plain.join(vault, "event_type")
-        return out.localCheckpoint(eager=True)  # materialize before rmtree
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    )
+    return plain.join(vault, "event_type")
 
 
 # --------------------------------------------------------------------------
@@ -234,64 +286,49 @@ def s01_streaming_ingest_end_state(spark: SparkSession, sf_dir: str) -> DataFram
     GROUP BY 1, 2
     """,
 )
-def s02_streaming_watermark_end_state(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_streamed("s02_stream_")
+def s02_streaming_watermark_end_state(spark: SparkSession, sf_dir: str, base: str) -> DataFrame:
     import datetime
-    import shutil
 
     from ..streaming.pipeline import file_stream, windowed_counts
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value", "ts"
     )
-    base = mkscratch("s02_stream_")
     landing, sink, ckpt = f"{base}/landing", f"{base}/sink", f"{base}/ckpt"
 
-    def drain() -> None:
-        with _drain_shuffle(spark):
-            # decimal money policy applied ON the stream: the windowed sum then
-            # accumulates exactly (order-independent) and the sink stores the
-            # decimal, cast to its double image only at the read-back edge
-            stream = file_stream(spark, landing, ev.schema).withColumn(
-                "value", dec("value")
-            )
-            q = (
-                windowed_counts(stream, "ts", "1 day", "1 day")
-                .writeStream.format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-    try:
-        on_time = ev.filter("event_id % 17 <> 3")
-        late = ev.filter("event_id % 17 = 3")
-        # single file per phase => exactly one micro-batch per drain, so
-        # the watermark position between drains is fully determined
-        on_time.coalesce(1).write.mode("append").parquet(landing)
-        drain()
-        mx = ev.agg(F.max("ts")).first()[0]  # bounded 1-row pull
-        # single-slice local relation: the multi-slice default made the
-        # coalesce(1) landing write pay ~32 sequential Python round-trips
-        # (~5.5 s for this ONE row — see sources.tables.local_rows)
-        sentinel = local_rows(
-            spark, [(-1, "sentinel", 0.0, mx + datetime.timedelta(days=30))], ev.schema
+    def start() -> StreamingQuery:
+        # decimal money policy applied ON the stream: the windowed sum then
+        # accumulates exactly (order-independent) and the sink stores the
+        # decimal, cast to its double image only at the read-back edge
+        stream = file_stream(spark, landing, ev.schema).withColumn(
+            "value", dec("value")
         )
-        late.unionByName(sentinel).coalesce(1).write.mode("append").parquet(landing)
-        drain()
+        return _to_parquet(windowed_counts(stream, "ts", "1 day", "1 day"), sink, ckpt)
 
-        out = spark.read.parquet(sink).select(
-            "window_start",
-            "event_type",
-            "n_events",
-            # the sink stores the exact decimal window sum; ×100 is integral
-            (F.col("total_value") * F.lit(100)).cast("bigint").alias("total_value_e2"),
-        )
-        return out.localCheckpoint(eager=True)  # materialize before rmtree
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    on_time = ev.filter("event_id % 17 <> 3")
+    late = ev.filter("event_id % 17 = 3")
+    # single file per phase => exactly one micro-batch per drain, so
+    # the watermark position between drains is fully determined
+    _land(on_time, landing)
+    _drain(spark, start)
+    mx = ev.agg(F.max("ts")).first()[0]  # bounded 1-row pull
+    # single-slice local relation: the multi-slice default made the
+    # coalesce(1) landing write pay one sequential Python round-trip per
+    # slice for this ONE row (see sources.tables.local_rows)
+    sentinel = local_rows(
+        spark, [(-1, "sentinel", 0.0, mx + datetime.timedelta(days=30))], ev.schema
+    )
+    _land(late.unionByName(sentinel), landing)
+    _drain(spark, start)
+
+    return spark.read.parquet(sink).select(
+        "window_start",
+        "event_type",
+        "n_events",
+        # the sink stores the exact decimal window sum; ×100 is integral
+        (F.col("total_value") * F.lit(100)).cast("bigint").alias("total_value_e2"),
+    )
 
 
 # --------------------------------------------------------------------------
@@ -334,9 +371,9 @@ def s02_streaming_watermark_end_state(spark: SparkSession, sf_dir: str) -> DataF
      AND p.ts <= c.ts + INTERVAL 2 HOUR
     """,
 )
-def s03_stream_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_streamed("s03_stream_")
+def s03_stream_stream_attribution(spark: SparkSession, sf_dir: str, base: str) -> DataFrame:
     import os
-    import shutil
 
     from ..streaming.pipeline import attribution_join, file_stream
 
@@ -349,50 +386,40 @@ def s03_stream_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame
         F.col("event_id").alias("purchase_id"),
         F.col("ts").alias("purchase_ts"),
     )
-    base = mkscratch("s03_stream_")
     landing_c, landing_p = f"{base}/clicks", f"{base}/purchases"
     sink, ckpt = f"{base}/sink", f"{base}/ckpt"
     os.makedirs(landing_p, exist_ok=True)  # drain 1: purchase side exists, empty
 
-    def drain() -> None:
-        with _drain_shuffle(spark):
-            joined = attribution_join(
-                file_stream(spark, landing_c, clicks.schema),
-                file_stream(spark, landing_p, purchases.schema),
-                click_ts="click_ts",
-                purchase_ts="purchase_ts",
-                watermark="1 hour",
-                within="2 hours",
-            )
-            q = (
-                joined.select(
-                    "user_id",
-                    "click_id",
-                    "purchase_id",
-                    (
-                        F.unix_micros(F.col("purchase_ts"))
-                        - F.unix_micros(F.col("click_ts"))
-                    ).alias("lag_us"),
-                )
-                .writeStream.format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+    def start() -> StreamingQuery:
+        joined = attribution_join(
+            file_stream(spark, landing_c, clicks.schema),
+            file_stream(spark, landing_p, purchases.schema),
+            click_ts="click_ts",
+            purchase_ts="purchase_ts",
+            watermark="1 hour",
+            within="2 hours",
+        )
+        return _to_parquet(
+            joined.select(
+                "user_id",
+                "click_id",
+                "purchase_id",
+                (
+                    F.unix_micros(F.col("purchase_ts"))
+                    - F.unix_micros(F.col("click_ts"))
+                ).alias("lag_us"),
+            ),
+            sink,
+            ckpt,
+        )
 
-    try:
-        # one file per phase => one micro-batch per drain (the watermark
-        # and state-commit positions between drains are fully determined)
-        clicks.coalesce(1).write.mode("append").parquet(landing_c)
-        drain()
-        purchases.coalesce(1).write.mode("append").parquet(landing_p)
-        drain()  # resumed join state must hold every drain-1 click
-        return spark.read.parquet(sink).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    # one file per phase => one micro-batch per drain (the watermark
+    # and state-commit positions between drains are fully determined)
+    _land(clicks, landing_c)
+    _drain(spark, start)
+    _land(purchases, landing_p)
+    _drain(spark, start)  # resumed join state must hold every drain-1 click
+    return spark.read.parquet(sink)
 
 
 # --------------------------------------------------------------------------
@@ -453,9 +480,8 @@ def s03_stream_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame
                         WHERE g2.user_id = g.user_id)
     """,
 )
-def s04_stateful_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
+@_streamed("s04_stream_")
+def s04_stateful_sessionization(spark: SparkSession, sf_dir: str, base: str) -> DataFrame:
     from ..streaming.pipeline import file_stream
     from ..streaming.stateful import sessionize_stream
 
@@ -464,35 +490,26 @@ def s04_stateful_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("user_id").isNotNull() & F.col("ts").isNotNull())
         .select("user_id", "ts")
     )
-    base = mkscratch("s04_stream_")
     landing, sink, ckpt = f"{base}/landing", f"{base}/sink", f"{base}/ckpt"
 
-    def drain() -> None:
-        with _drain_shuffle(spark, n=_py_drain_partitions(spark)):
-            q = (
-                sessionize_stream(file_stream(spark, landing, ev.schema), gap_minutes=360)
-                .writeStream.format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+    def start() -> StreamingQuery:
+        return _to_parquet(
+            sessionize_stream(file_stream(spark, landing, ev.schema), gap_minutes=360),
+            sink,
+            ckpt,
+        )
 
-    try:
-        # time-ordered split at the corpus midpoint: per user, all phase-A
-        # events precede phase-B, so cross-batch tracking must reproduce
-        # the full-corpus sessionization exactly (bounded 1-row pull)
-        mn, mx = ev.agg(F.min("ts"), F.max("ts")).first()
-        cut = mn + (mx - mn) / 2
-        ev.filter(F.col("ts") <= cut).coalesce(1).write.mode("append").parquet(landing)
-        drain()
-        ev.filter(F.col("ts") > cut).coalesce(1).write.mode("append").parquet(landing)
-        drain()  # open sessions recovered from the checkpointed state store
-        return spark.read.parquet(sink).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    # time-ordered split at the corpus midpoint: per user, all phase-A
+    # events precede phase-B, so cross-batch tracking must reproduce
+    # the full-corpus sessionization exactly (bounded 1-row pull)
+    mn, mx = ev.agg(F.min("ts"), F.max("ts")).first()
+    cut = mn + (mx - mn) / 2
+    _land(ev.filter(F.col("ts") <= cut), landing)
+    _drain(spark, start, python_state=True)
+    _land(ev.filter(F.col("ts") > cut), landing)
+    # open sessions recovered from the checkpointed state store
+    _drain(spark, start, python_state=True)
+    return spark.read.parquet(sink)
 
 
 # --------------------------------------------------------------------------
@@ -534,9 +551,8 @@ def s04_stateful_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN customer c ON e.user_id = c.c_custkey
     """,
 )
-def s05_stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
+@_streamed("s05_stream_")
+def s05_stream_static_enrichment(spark: SparkSession, sf_dir: str, base: str) -> DataFrame:
     from ..streaming.pipeline import enrich_stream, file_stream
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -547,47 +563,38 @@ def s05_stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_mktsegment").alias("segment"),
     )
     dim_v2 = dim_v1.withColumn("segment", F.concat(F.lit("POST:"), F.col("segment")))
-    base = mkscratch("s05_stream_")
     landing, dim_dir = f"{base}/landing", f"{base}/dim"
     sink, ckpt = f"{base}/sink", f"{base}/ckpt"
 
-    def drain() -> None:
-        with _drain_shuffle(spark):
-            dim = spark.read.parquet(dim_dir)
-            stream = file_stream(spark, landing, ev.schema)
-            q = (
-                enrich_stream(stream, dim, ["user_id"], how="inner")
-                .select("event_id", "user_id", "event_type", "segment")
-                .writeStream.format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+    def start() -> StreamingQuery:
+        dim = spark.read.parquet(dim_dir)
+        stream = file_stream(spark, landing, ev.schema)
+        return _to_parquet(
+            enrich_stream(stream, dim, ["user_id"], how="inner").select(
+                "event_id", "user_id", "event_type", "segment"
+            ),
+            sink,
+            ckpt,
+        )
 
-    try:
-        # integer-µs midpoint: exactly the oracle's cut (bounded 1-row pull;
-        # timeops.epoch_us — ts is TIMESTAMP_NTZ, unix_micros is LTZ-only)
-        from ..functions.timeops import epoch_us
+    # integer-µs midpoint: exactly the oracle's cut (bounded 1-row pull;
+    # timeops.epoch_us — ts is TIMESTAMP_NTZ, unix_micros is LTZ-only)
+    from ..functions.timeops import epoch_us
 
-        mn_us, mx_us = ev.agg(
-            F.min(epoch_us("ts")), F.max(epoch_us("ts"))
-        ).first()
-        cut_us = (mn_us + mx_us) // 2
-        phase_a = ev.filter(epoch_us("ts") <= F.lit(cut_us))
-        phase_b = ev.filter(epoch_us("ts") > F.lit(cut_us))
+    mn_us, mx_us = ev.agg(
+        F.min(epoch_us("ts")), F.max(epoch_us("ts"))
+    ).first()
+    cut_us = (mn_us + mx_us) // 2
+    phase_a = ev.filter(epoch_us("ts") <= F.lit(cut_us))
+    phase_b = ev.filter(epoch_us("ts") > F.lit(cut_us))
 
-        phase_a.coalesce(1).write.mode("append").parquet(landing)
-        dim_v1.write.mode("overwrite").parquet(dim_dir)
-        drain()
-        dim_v2.write.mode("overwrite").parquet(dim_dir)  # the dim reload
-        phase_b.coalesce(1).write.mode("append").parquet(landing)
-        drain()  # checkpoint: drain-1 files must NOT re-enrich under v2
-        return spark.read.parquet(sink).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    _land(phase_a, landing)
+    dim_v1.write.mode("overwrite").parquet(dim_dir)
+    _drain(spark, start)
+    dim_v2.write.mode("overwrite").parquet(dim_dir)  # the dim reload
+    _land(phase_b, landing)
+    _drain(spark, start)  # checkpoint: drain-1 files must NOT re-enrich under v2
+    return spark.read.parquet(sink)
 
 
 # --------------------------------------------------------------------------
@@ -620,48 +627,34 @@ def s05_stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT event_id, event_type, value FROM events
     """,
 )
-def s06_streaming_dedup_end_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
+@_streamed("s06_stream_")
+def s06_streaming_dedup_end_state(spark: SparkSession, sf_dir: str, base: str) -> DataFrame:
     from ..streaming.pipeline import dedup_stream, file_stream
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value", "ts"
     )
-    base = mkscratch("s06_stream_")
     landing, sink, ckpt = f"{base}/landing", f"{base}/sink", f"{base}/ckpt"
 
-    def drain() -> None:
-        with _drain_shuffle(spark):
-            q = (
-                dedup_stream(
-                    file_stream(spark, landing, ev.schema),
-                    keys=["event_id"],
-                    ts_col="ts",
-                    watermark="15 days",
-                )
-                .select("event_id", "event_type", "value")
-                .writeStream.format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-    try:
-        ev.coalesce(1).write.mode("append").parquet(landing)
-        drain()
-        # at-least-once redelivery: a deterministic duplicate subset as a
-        # NEW file — the recovered dedup state must swallow every row
-        ev.filter("event_id % 13 = 2").coalesce(1).write.mode("append").parquet(
-            landing
+    def start() -> StreamingQuery:
+        return _to_parquet(
+            dedup_stream(
+                file_stream(spark, landing, ev.schema),
+                keys=["event_id"],
+                ts_col="ts",
+                watermark="15 days",
+            ).select("event_id", "event_type", "value"),
+            sink,
+            ckpt,
         )
-        drain()
-        return spark.read.parquet(sink).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+
+    _land(ev, landing)
+    _drain(spark, start)
+    # at-least-once redelivery: a deterministic duplicate subset as a
+    # NEW file — the recovered dedup state must swallow every row
+    _land(ev.filter("event_id % 13 = 2"), landing)
+    _drain(spark, start)
+    return spark.read.parquet(sink)
 
 
 # --------------------------------------------------------------------------
@@ -699,53 +692,43 @@ def s06_streaming_dedup_end_state(spark: SparkSession, sf_dir: str) -> DataFrame
     GROUP BY 1, 2
     """,
 )
-def s07_streaming_ohlcv_end_state(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_streamed("s07_stream_")
+def s07_streaming_ohlcv_end_state(spark: SparkSession, sf_dir: str, base: str) -> DataFrame:
     import datetime
-    import shutil
 
     from ..streaming.pipeline import file_stream, windowed_ohlcv
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value", "props", "ts"
     )
-    base = mkscratch("s07_stream_")
     landing, sink, ckpt = f"{base}/landing", f"{base}/sink", f"{base}/ckpt"
 
-    def drain() -> None:
-        with _drain_shuffle(spark):
-            q = (
-                windowed_ohlcv(
-                    file_stream(spark, landing, ev.schema),
-                    ts_col="ts",
-                    window="1 hour",
-                    watermark="2 hours",
-                    seq_col="event_id",
-                )
-                .writeStream.format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-    try:
-        ev.coalesce(1).write.mode("append").parquet(landing)
-        drain()
-        mx = ev.agg(F.max("ts")).first()[0]  # bounded 1-row pull
-        # single-slice local relation (see s02 / sources.tables.local_rows:
-        # the coalesce(1) write of the multi-slice form cost ~5.5 s alone)
-        sentinel = local_rows(
-            spark,
-            [(-1, "sentinel", 0.0, None, mx + datetime.timedelta(days=30))],
-            ev.schema,
+    def start() -> StreamingQuery:
+        return _to_parquet(
+            windowed_ohlcv(
+                file_stream(spark, landing, ev.schema),
+                ts_col="ts",
+                window="1 hour",
+                watermark="2 hours",
+                seq_col="event_id",
+            ),
+            sink,
+            ckpt,
         )
-        sentinel.coalesce(1).write.mode("append").parquet(landing)
-        drain()  # watermark sweeps past every real bar; sentinel bar open
-        return spark.read.parquet(sink).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+
+    _land(ev, landing)
+    _drain(spark, start)
+    mx = ev.agg(F.max("ts")).first()[0]  # bounded 1-row pull
+    # single-slice local relation (see s02 / sources.tables.local_rows: the
+    # coalesce(1) write of the multi-slice form is slow for one row)
+    sentinel = local_rows(
+        spark,
+        [(-1, "sentinel", 0.0, None, mx + datetime.timedelta(days=30))],
+        ev.schema,
+    )
+    _land(sentinel, landing)
+    _drain(spark, start)  # watermark sweeps past every real bar; sentinel bar open
+    return spark.read.parquet(sink)
 
 # --------------------------------------------------------------------------
 # s08 — STREAMING CURATION SINK end state: near-dup detection ON the
@@ -798,43 +781,32 @@ from ..operators import dedup as _D  # noqa: E402
     WHERE 2 * p.n_common >= ca.n + cb.n - p.n_common
     """,
 )
-def s08_streaming_neardup_end_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
+@_streamed("s08_stream_")
+def s08_streaming_neardup_end_state(spark: SparkSession, sf_dir: str, base: str) -> DataFrame:
     from ..operators.dedup import read_neardup_edges
     from ..streaming.pipeline import file_stream, run_neardup_sink
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    base = mkscratch("s08_stream_")
     landing = f"{base}/landing"
     index_dir, edges, ckpt = f"{base}/index", f"{base}/edges", f"{base}/ckpt"
 
-    def drain() -> None:
-        with _drain_shuffle(spark):
-            q = run_neardup_sink(
-                file_stream(spark, landing, docs.schema),
-                index_dir,
-                edges,
-                ckpt,
-            )
-            q.awaitTermination()
+    def start() -> StreamingQuery:
+        return run_neardup_sink(
+            file_stream(spark, landing, docs.schema),
+            index_dir,
+            edges,
+            ckpt,
+        )
 
-    try:
-        even = docs.filter(F.col("doc_id") % 2 == 0)
-        even.coalesce(1).write.mode("append").parquet(landing)
-        drain()
-        # phase B plus an at-least-once redelivery of a phase-A slice as
-        # NEW files: the recovered index must drop the replayed docs
-        docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
-            "append"
-        ).parquet(landing)
-        even.filter(F.col("doc_id") % 10 == 0).coalesce(1).write.mode(
-            "append"
-        ).parquet(landing)
-        drain()
-        return read_neardup_edges(spark, edges).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    even = docs.filter(F.col("doc_id") % 2 == 0)
+    _land(even, landing)
+    _drain(spark, start)
+    # phase B plus an at-least-once redelivery of a phase-A slice as
+    # NEW files: the recovered index must drop the replayed docs
+    _land(docs.filter(F.col("doc_id") % 2 == 1), landing)
+    _land(even.filter(F.col("doc_id") % 10 == 0), landing)
+    _drain(spark, start)
+    return read_neardup_edges(spark, edges)
 
 # --------------------------------------------------------------------------
 # s09 — STREAMING ANN-INDEX GROWTH end state (streaming/pipeline.
@@ -864,7 +836,6 @@ def s08_streaming_neardup_end_state(spark: SparkSession, sf_dir: str) -> DataFra
 # production shape for an embedding index that grows with its stream.
 # --------------------------------------------------------------------------
 from ..operators import similarity as _S  # noqa: E402
-from ..functions.numeric import oracle_rnd as _oracle_rnd  # noqa: E402
 
 
 @query(
@@ -876,7 +847,7 @@ from ..functions.numeric import oracle_rnd as _oracle_rnd  # noqa: E402
     ),
     scored AS (
         SELECT q.query_id, e.vec_id AS neighbor_id,
-               {_oracle_rnd(_S.oracle_cosine('q.qe', 'e.embedding'), 4)} AS cosine_sim
+               {oracle_rnd(_S.oracle_cosine('q.qe', 'e.embedding'), 4)} AS cosine_sim
         FROM q JOIN embeddings e ON e.vec_id <> q.query_id
     )
     SELECT query_id, neighbor_id, cosine_sim, rk
@@ -889,9 +860,8 @@ from ..functions.numeric import oracle_rnd as _oracle_rnd  # noqa: E402
     WHERE rk <= 5
     """,
 )
-def s09_streaming_ann_index_end_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
+@_streamed("s09_stream_")
+def s09_streaming_ann_index_end_state(spark: SparkSession, sf_dir: str, base: str) -> DataFrame:
     from ..operators.annindex import build_ann_index, query_ann_index
     from ..streaming.pipeline import file_stream, run_ann_index_sink
     from .vectorops import EMB_DIM, IVF_K
@@ -908,44 +878,33 @@ def s09_streaming_ann_index_end_state(spark: SparkSession, sf_dir: str) -> DataF
     centroids = [small[i] for i in range(IVF_K)]
     queries = {qid: small[qid] for qid in range(100, 110)}
 
-    base = mkscratch("s09_stream_")
     index_dir, landing, ckpt = f"{base}/index", f"{base}/landing", f"{base}/ckpt"
 
-    def drain() -> None:
-        with _drain_shuffle(spark):
-            q = run_ann_index_sink(
-                file_stream(spark, landing, emb.schema),
-                index_dir,
-                EMB_DIM,
-                checkpoint=ckpt,
-            )
-            q.awaitTermination()
-
-    try:
-        build_ann_index(
-            spark,
-            emb.filter(F.col("vec_id") % 2 == 0),
+    def start() -> StreamingQuery:
+        return run_ann_index_sink(
+            file_stream(spark, landing, emb.schema),
             index_dir,
-            centroids,
             EMB_DIM,
-            verify=False,
+            checkpoint=ckpt,
         )
-        odd = emb.filter(F.col("vec_id") % 2 == 1)
-        odd.coalesce(1).write.mode("append").parquet(landing)
-        drain()
-        # at-least-once redelivery of an already-streamed slice, new file:
-        # the checkpoint skips drain-1 files; add_to_ann_index's dedupe
-        # scan must drop these re-sent ids
-        odd.filter(F.col("vec_id") % 10 == 5).coalesce(1).write.mode(
-            "append"
-        ).parquet(landing)
-        drain()
-        out = query_ann_index(
-            spark, index_dir, queries, EMB_DIM, nprobe=IVF_K, topk=5
-        )
-        return out.localCheckpoint(eager=True)  # materialize before rmtree
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+
+    build_ann_index(
+        spark,
+        emb.filter(F.col("vec_id") % 2 == 0),
+        index_dir,
+        centroids,
+        EMB_DIM,
+        verify=False,
+    )
+    odd = emb.filter(F.col("vec_id") % 2 == 1)
+    _land(odd, landing)
+    _drain(spark, start)
+    # at-least-once redelivery of an already-streamed slice, new file:
+    # the checkpoint skips drain-1 files; add_to_ann_index's dedupe
+    # scan must drop these re-sent ids
+    _land(odd.filter(F.col("vec_id") % 10 == 5), landing)
+    _drain(spark, start)
+    return query_ann_index(spark, index_dir, queries, EMB_DIM, nprobe=IVF_K, topk=5)
 
 # --------------------------------------------------------------------------
 # s10 — STREAMING CDC MERGE end state (streaming/pipeline.
@@ -982,14 +941,12 @@ def s09_streaming_ann_index_end_state(spark: SparkSession, sf_dir: str) -> DataF
     FROM events
     """,
 )
-def s10_streaming_cdc_merge_end_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
+@_streamed("s10_stream_")
+def s10_streaming_cdc_merge_end_state(spark: SparkSession, sf_dir: str, base: str) -> DataFrame:
     from ..operators.manifest import read_table
     from ..streaming.pipeline import file_stream, run_manifest_merge_sink
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    base = mkscratch("s10_stream_")
     landing, table, ckpt = f"{base}/landing", f"{base}/table", f"{base}/ckpt"
 
     v1 = ev.withColumn("version", F.lit(1).cast("int"))
@@ -999,32 +956,24 @@ def s10_streaming_cdc_merge_end_state(spark: SparkSession, sf_dir: str) -> DataF
         .withColumn("version", F.lit(2).cast("int"))
     )
 
-    def drain() -> None:
-        with _drain_shuffle(spark):
-            q = run_manifest_merge_sink(
-                file_stream(spark, landing, v1.schema),
-                table,
-                keys=["event_id"],
-                version_col="version",
-                checkpoint=ckpt,
-            )
-            q.awaitTermination()
-
-    try:
-        v1.coalesce(1).write.mode("append").parquet(landing)
-        drain()
-        # updates + an at-least-once REDELIVERY of all of phase A as new
-        # files; version ordering makes any batch split land on the same
-        # end state, and the replayed v1 rows must re-merge identically
-        v2.coalesce(1).write.mode("append").parquet(landing)
-        v1.coalesce(1).write.mode("append").parquet(landing)
-        drain()
-        out = read_table(spark, table).select(
-            "event_id", "event_type", "value", "version"
+    def start() -> StreamingQuery:
+        return run_manifest_merge_sink(
+            file_stream(spark, landing, v1.schema),
+            table,
+            keys=["event_id"],
+            version_col="version",
+            checkpoint=ckpt,
         )
-        return out.localCheckpoint(eager=True)  # materialize before rmtree
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+
+    _land(v1, landing)
+    _drain(spark, start)
+    # updates + an at-least-once REDELIVERY of all of phase A as new
+    # files; version ordering makes any batch split land on the same
+    # end state, and the replayed v1 rows must re-merge identically
+    _land(v2, landing)
+    _land(v1, landing)
+    _drain(spark, start)
+    return read_table(spark, table).select("event_id", "event_type", "value", "version")
 
 # --------------------------------------------------------------------------
 # s11 — STREAMING MEDIA-FEATURE sink end state (streaming/pipeline.
@@ -1066,51 +1015,39 @@ def s10_streaming_cdc_merge_end_state(spark: SparkSession, sf_dir: str) -> DataF
     GROUP BY 1
     """,
 )
+@_streamed("s11_stream_")
 def s11_streaming_media_features_end_state(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, base: str
 ) -> DataFrame:
-    import shutil
-
     from ..operators import multimodal as M
     from ..streaming.pipeline import file_stream, run_media_feature_sink
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     media = M.synthesize_wav(docs)
-    base = mkscratch("s11_stream_")
     landing, feats, ckpt = f"{base}/landing", f"{base}/features", f"{base}/ckpt"
 
-    def drain() -> None:
-        with _drain_shuffle(spark):
-            q = run_media_feature_sink(
-                file_stream(spark, landing, media.schema),
-                feats,
-                checkpoint=ckpt,
-            )
-            q.awaitTermination()
-
-    try:
-        media.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
-            "append"
-        ).parquet(landing)
-        drain()
-        media.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
-            "append"
-        ).parquet(landing)
-        drain()  # restart: drain-1 files must NOT re-land under a new epoch
-        out = (
-            spark.read.parquet(feats)
-            .groupBy("sample_rate")
-            .agg(
-                F.count(F.lit(1)).alias("n_clips"),
-                F.sum("n_channels").alias("total_channels"),
-                F.sum("n_samples").alias("total_samples"),
-                F.sum("duration_ms").alias("total_duration_ms"),
-                F.sum(F.col("n_bytes").cast("long")).alias("total_bytes"),
-            )
+    def start() -> StreamingQuery:
+        return run_media_feature_sink(
+            file_stream(spark, landing, media.schema),
+            feats,
+            checkpoint=ckpt,
         )
-        return out.localCheckpoint(eager=True)  # materialize before rmtree
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+
+    _land(media.filter(F.col("doc_id") % 2 == 0), landing)
+    _drain(spark, start)
+    _land(media.filter(F.col("doc_id") % 2 == 1), landing)
+    _drain(spark, start)  # restart: drain-1 files must NOT re-land under a new epoch
+    return (
+        spark.read.parquet(feats)
+        .groupBy("sample_rate")
+        .agg(
+            F.count(F.lit(1)).alias("n_clips"),
+            F.sum("n_channels").alias("total_channels"),
+            F.sum("n_samples").alias("total_samples"),
+            F.sum("duration_ms").alias("total_duration_ms"),
+            F.sum(F.col("n_bytes").cast("long")).alias("total_bytes"),
+        )
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1168,45 +1105,33 @@ _S12_SHARDS = 8
     FROM ranked r LEFT JOIN amax a ON r.shard = a.shard
     """,
 )
+@_streamed("s12_stream_")
 def s12_streaming_shuffle_manifest_end_state(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, base: str
 ) -> DataFrame:
-    import shutil
-
     from ..streaming.pipeline import file_stream, run_shuffle_manifest_sink
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    base = mkscratch("s12_stream_")
     landing, manifest, ckpt = f"{base}/landing", f"{base}/manifest", f"{base}/ckpt"
 
-    def drain() -> None:
-        with _drain_shuffle(spark):
-            q = run_shuffle_manifest_sink(
-                file_stream(spark, landing, docs.schema),
-                manifest,
-                checkpoint=ckpt,
-                seed=_S12_SEED,
-                n_shards=_S12_SHARDS,
-            )
-            q.awaitTermination()
+    def start() -> StreamingQuery:
+        return run_shuffle_manifest_sink(
+            file_stream(spark, landing, docs.schema),
+            manifest,
+            checkpoint=ckpt,
+            seed=_S12_SEED,
+            n_shards=_S12_SHARDS,
+        )
 
-    try:
-        even = docs.filter(F.col("doc_id") % 2 == 0)
-        even.coalesce(1).write.mode("append").parquet(landing)
-        drain()
-        docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
-            "append"
-        ).parquet(landing)
-        # at-least-once redelivery: already-manifested ids must anti-join
-        # to nothing (re-appending would move coordinates under a trainer)
-        even.filter(F.col("doc_id") % 10 == 0).coalesce(1).write.mode(
-            "append"
-        ).parquet(landing)
-        drain()
-        out = spark.read.parquet(manifest).select("doc_id", "shard", "pos")
-        return out.localCheckpoint(eager=True)  # materialize before rmtree
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    even = docs.filter(F.col("doc_id") % 2 == 0)
+    _land(even, landing)
+    _drain(spark, start)
+    _land(docs.filter(F.col("doc_id") % 2 == 1), landing)
+    # at-least-once redelivery: already-manifested ids must anti-join
+    # to nothing (re-appending would move coordinates under a trainer)
+    _land(even.filter(F.col("doc_id") % 10 == 0), landing)
+    _drain(spark, start)
+    return spark.read.parquet(manifest).select("doc_id", "shard", "pos")
 
 # --------------------------------------------------------------------------
 # s13 — STREAMING SKETCH MAINTENANCE end state (streaming/pipeline.
@@ -1249,9 +1174,8 @@ def s12_streaming_shuffle_manifest_end_state(
     FROM counts
     """,
 )
-def s13_streaming_sketch_end_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
+@_streamed("s13_stream_")
+def s13_streaming_sketch_end_state(spark: SparkSession, sf_dir: str, base: str) -> DataFrame:
     from ..operators.sketch import cms_estimate, count_min_table
     from ..streaming.pipeline import file_stream, read_sketch, run_sketch_sink
 
@@ -1261,65 +1185,54 @@ def s13_streaming_sketch_end_state(spark: SparkSession, sf_dir: str) -> DataFram
         .filter(F.col("user_id").isNotNull())
         .select("event_id", "user_id")
     )
-    base = mkscratch("s13_stream_")
     landing, sketch, ckpt = f"{base}/landing", f"{base}/sketch", f"{base}/ckpt"
 
-    def drain() -> None:
-        with _drain_shuffle(spark):
-            q = run_sketch_sink(
-                file_stream(spark, landing, ev.schema),
-                sketch,
-                key_col="user_id",
-                checkpoint=ckpt,
-                w=W_,
-                d=D_,
-            )
-            q.awaitTermination()
+    def start() -> StreamingQuery:
+        return run_sketch_sink(
+            file_stream(spark, landing, ev.schema),
+            sketch,
+            key_col="user_id",
+            checkpoint=ckpt,
+            w=W_,
+            d=D_,
+        )
 
-    try:
-        ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode(
-            "append"
-        ).parquet(landing)
-        drain()
-        ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
-            "append"
-        ).parquet(landing)
-        drain()  # restart: re-processing drain-1 files would double-count
+    _land(ev.filter(F.col("event_id") % 2 == 0), landing)
+    _drain(spark, start)
+    _land(ev.filter(F.col("event_id") % 2 == 1), landing)
+    _drain(spark, start)  # restart: re-processing drain-1 files would double-count
 
-        streamed = read_sketch(spark, sketch)
-        oneshot = count_min_table(ev, "user_id", W_, D_)
-        cells_equal = streamed.join(
-            oneshot.withColumnsRenamed({"cnt": "cnt2"}), ["r", "c"], "full"
-        ).agg(
-            F.min(
-                F.coalesce("cnt", F.lit(-1)) == F.coalesce("cnt2", F.lit(-2))
-            ).alias("eq"),
-            F.count(F.lit(1)).alias("n_cells"),
-            F.sum("cnt").alias("total_cell_count"),
+    streamed = read_sketch(spark, sketch)
+    oneshot = count_min_table(ev, "user_id", W_, D_)
+    cells_equal = streamed.join(
+        oneshot.withColumnsRenamed({"cnt": "cnt2"}), ["r", "c"], "full"
+    ).agg(
+        F.min(
+            F.coalesce("cnt", F.lit(-1)) == F.coalesce("cnt2", F.lit(-2))
+        ).alias("eq"),
+        F.count(F.lit(1)).alias("n_cells"),
+        F.sum("cnt").alias("total_cell_count"),
+    )
+    counts = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("c"))
+    top20 = counts.orderBy(F.desc("c"), F.asc("user_id")).limit(20)
+    est = cms_estimate(streamed, top20.select("user_id"), "user_id", W_, D_)
+    under = top20.join(est, "user_id").agg(
+        F.min(F.col("est") >= F.col("c")).alias("never_under"),
+        F.sum("c").alias("top20_exact_total"),
+    )
+    n_distinct = counts.agg(F.count(F.lit(1)).alias("n_distinct_users"))
+    return (
+        n_distinct.crossJoin(under)
+        .crossJoin(cells_equal)
+        .select(
+            "n_distinct_users",
+            F.col("top20_exact_total").cast("long").alias("top20_exact_total"),
+            F.col("total_cell_count").cast("long").alias("total_cell_count"),
+            F.col("eq").alias("streamed_equals_oneshot"),
+            F.col("never_under").alias("never_undercount"),
+            (F.col("n_cells") <= F.lit(W_ * D_)).alias("cells_bounded"),
         )
-        counts = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("c"))
-        top20 = counts.orderBy(F.desc("c"), F.asc("user_id")).limit(20)
-        est = cms_estimate(streamed, top20.select("user_id"), "user_id", W_, D_)
-        under = top20.join(est, "user_id").agg(
-            F.min(F.col("est") >= F.col("c")).alias("never_under"),
-            F.sum("c").alias("top20_exact_total"),
-        )
-        n_distinct = counts.agg(F.count(F.lit(1)).alias("n_distinct_users"))
-        out = (
-            n_distinct.crossJoin(under)
-            .crossJoin(cells_equal)
-            .select(
-                "n_distinct_users",
-                F.col("top20_exact_total").cast("long").alias("top20_exact_total"),
-                F.col("total_cell_count").cast("long").alias("total_cell_count"),
-                F.col("eq").alias("streamed_equals_oneshot"),
-                F.col("never_under").alias("never_undercount"),
-                (F.col("n_cells") <= F.lit(W_ * D_)).alias("cells_bounded"),
-            )
-        )
-        return out.localCheckpoint(eager=True)  # materialize before rmtree
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1388,8 +1301,8 @@ def s13_streaming_sketch_end_state(spark: SparkSession, sf_dir: str) -> DataFram
     FROM g
     """,
 )
-def s14_idle_timeout_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
+@_streamed("s14_stream_")
+def s14_idle_timeout_eviction(spark: SparkSession, sf_dir: str, base: str) -> DataFrame:
     import time
 
     from ..streaming.stateful import sessionize_stream
@@ -1399,7 +1312,6 @@ def s14_idle_timeout_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("user_id").isNotNull() & F.col("ts").isNotNull())
         .select("user_id", "ts")
     )
-    base = mkscratch("s14_stream_")
     landing, sink, ckpt = f"{base}/landing", f"{base}/sink", f"{base}/ckpt"
 
     # expected = total session count, the closed form of "every session
@@ -1423,55 +1335,47 @@ def s14_idle_timeout_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
         except Exception:  # no committed batch yet
             return 0
 
-    try:
-        # one file per parity phase + maxFilesPerTrigger=1 → each user's
-        # events reach exactly one micro-batch, so flush contents are
-        # invariant to WHEN timers fire — see the family comment
-        ev.filter(F.col("user_id") % 2 == 0).coalesce(1).write.mode(
-            "append"
-        ).parquet(landing)
-        with _drain_shuffle(spark, n=_py_drain_partitions(spark)):
-            q = (
-                sessionize_stream(
-                    spark.readStream.schema(ev.schema)
-                    .option("maxFilesPerTrigger", 1)
-                    .parquet(landing),
-                    gap_minutes=360,
-                    # the end state is invariant to WHEN timers fire (see
-                    # family comment), so the timeout/trigger cadence is
-                    # pure drain latency: 1 s/500 ms cost ~2.5 s of idle
-                    # waiting per bench run (r12) — tightened to the
-                    # shortest cadence the poll loop resolves
-                    idle_timeout_ms=300,
-                    emit_close_reason=True,
-                )
-                .writeStream.format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(processingTime="200 milliseconds")
-                .start()
+    # one file per parity phase + maxFilesPerTrigger=1 → each user's
+    # events reach exactly one micro-batch, so flush contents are
+    # invariant to WHEN timers fire — see the family comment
+    _land(ev.filter(F.col("user_id") % 2 == 0), landing)
+    with _drain_shuffle(spark, n=_py_drain_partitions(spark)):
+        q = (
+            sessionize_stream(
+                spark.readStream.schema(ev.schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(landing),
+                gap_minutes=360,
+                # the end state is invariant to WHEN timers fire (see
+                # family comment), so the timeout/trigger cadence is
+                # pure drain latency — set to the shortest cadence the
+                # poll loop resolves
+                idle_timeout_ms=300,
+                emit_close_reason=True,
             )
-            try:
-                # land phase B while the query runs: odd-user data flows
-                # through the same batches that service even-user timers
-                ev.filter(F.col("user_id") % 2 == 1).coalesce(1).write.mode(
-                    "append"
-                ).parquet(landing)
-                deadline = time.monotonic() + 120
-                while sink_count() < expected:
-                    if time.monotonic() > deadline:
-                        raise RuntimeError(
-                            "s14: idle-timeout eviction never flushed all "
-                            f"sessions ({sink_count()}/{expected})"
-                        )
-                    time.sleep(0.15)
-            finally:
-                q.stop()
-                q.awaitTermination()
-        out = spark.read.parquet(sink)
-        if out.count() != expected:  # a late duplicate flush would be a bug
-            raise RuntimeError("s14: sink overshot the closed-form count")
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+            .writeStream.format("parquet")
+            .option("path", sink)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(processingTime="200 milliseconds")
+            .start()
+        )
+        try:
+            # land phase B while the query runs: odd-user data flows
+            # through the same batches that service even-user timers
+            _land(ev.filter(F.col("user_id") % 2 == 1), landing)
+            deadline = time.monotonic() + 120
+            while sink_count() < expected:
+                if time.monotonic() > deadline:
+                    raise RuntimeError(
+                        "s14: idle-timeout eviction never flushed all "
+                        f"sessions ({sink_count()}/{expected})"
+                    )
+                time.sleep(0.15)
+        finally:
+            q.stop()
+            q.awaitTermination()
+    out = spark.read.parquet(sink)
+    if out.count() != expected:  # a late duplicate flush would be a bug
+        raise RuntimeError("s14: sink overshot the closed-form count")
+    return out

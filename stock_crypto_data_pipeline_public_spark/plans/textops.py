@@ -12,8 +12,6 @@ normalization step of t01.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -21,13 +19,14 @@ from ..functions.numeric import oracle_rnd, rnd
 from ..operators import dedup as D
 from ..operators import retrieval as R
 from ..scratch import mkscratch
+from ..session import env_positive_int
 from ..sources.tables import load_table
 from .registry import query
 
 
 #: source bytes per task for the document-corpus fan-out; env override for
 #: corpora whose per-byte tokenize/regex cost differs
-_DOCS_PART_BYTES = int(os.environ.get("SPARK_GRAFT_DOCS_PART_BYTES", 32 * 1024))
+_DOCS_PART_BYTES = env_positive_int("SPARK_GRAFT_DOCS_PART_BYTES", 32 * 1024)
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:

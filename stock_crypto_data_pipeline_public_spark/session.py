@@ -22,6 +22,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def env_positive_int(name: str, default: int) -> int:
+    """``$name`` as a positive integer, or ``default`` when unset or empty.
+
+    The sizing knobs divide or partition by their value, so ``0``, a
+    negative number or a non-integer is rejected here with the variable's
+    name instead of failing later as a bare ``int()`` or division error."""
+    raw = os.environ.get(name, "").strip()
+    if not raw:
+        return default
+    if not raw.isdecimal() or int(raw) < 1:
+        raise ValueError(f"${name} must be a positive integer, got {raw!r}")
+    return int(raw)
+
+
 def get_spark(
     app_name: str = "spark-market-engine",
     cpus: int | None = None,
@@ -34,7 +48,7 @@ def get_spark(
     ``master`` is supplied by the environment (spark-submit); we only force
     local[] when no master is configured.
     """
-    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    cpus = cpus or env_positive_int("SPARK_GRAFT_CPUS", os.cpu_count() or 4)
     shuffle = shuffle_partitions or max(cpus, 8)
     builder = (
         SparkSession.builder.appName(app_name)

@@ -22,13 +22,15 @@ kept anyway so replays stay idempotent (same belt-and-suspenders as M2).
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType, TimestampNTZType
 
-from ..operators.incremental import idempotent_append
+from ..operators.incremental import idempotent_append, merge_upsert, swap_into_place
 from ..sources.tables import local_rows
 
 
@@ -67,6 +69,20 @@ def file_stream(spark: SparkSession, path: str, schema: StructType, fmt: str = "
     return spark.readStream.format(fmt).schema(schema).load(path)
 
 
+def _drain_foreach_batch(
+    stream: DataFrame, handle: Callable[[DataFrame, int], None], checkpoint: str
+) -> StreamingQuery:
+    """Start ``stream`` → ``foreachBatch(handle)`` under ``checkpoint``,
+    drained to the offsets available at start (``availableNow``): the one
+    trigger every ``run_*_sink`` below uses."""
+    return (
+        stream.writeStream.foreachBatch(handle)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def run_incremental_sink(
     stream: DataFrame,
     target_path: str,
@@ -87,12 +103,7 @@ def run_incremental_sink(
         df = transform(batch) if transform else batch
         idempotent_append(batch.sparkSession, df, target_path, keys, partition_by)
 
-    return (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain_foreach_batch(stream, handle, checkpoint)
 
 
 def run_neardup_sink(
@@ -128,12 +139,7 @@ def run_neardup_sink(
             edges_path=edges_path,
         )
 
-    return (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain_foreach_batch(stream, handle, checkpoint)
 
 
 def run_ann_index_sink(
@@ -188,12 +194,7 @@ def run_ann_index_sink(
             "build_center_sim double, recommend_rebuild boolean",
         ).write.mode("append").parquet(drift_log)
 
-    return (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain_foreach_batch(stream, handle, checkpoint)
 
 
 def run_shuffle_manifest_sink(
@@ -227,12 +228,7 @@ def run_shuffle_manifest_sink(
             batch.sparkSession, docs, manifest_dir, seed=seed, n_shards=n_shards
         )
 
-    return (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain_foreach_batch(stream, handle, checkpoint)
 
 
 def run_sketch_sink(
@@ -269,12 +265,7 @@ def run_sketch_sink(
     def handle(batch: DataFrame, epoch_id: int) -> None:
         land_sketch_epoch(count_min_table(batch, key_col, w, d), sketch_dir, int(epoch_id))
 
-    return (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain_foreach_batch(stream, handle, checkpoint)
 
 
 #: one-line pointer naming the newest LIVE epoch partition; epochs above it
@@ -315,10 +306,6 @@ def land_sketch_epoch(
     all three steps. ``on_phase`` is a test seam: called with "staged"
     and "flipped" between the steps so the no-overcount invariant can be
     asserted AT the phase boundaries."""
-    import os
-
-    from ..operators.incremental import swap_into_place
-
     part = os.path.join(sketch_dir, f"epoch={int(epoch_id)}")
     live = _live_max_epoch(sketch_dir)
     if live is not None and int(epoch_id) <= live:
@@ -339,8 +326,6 @@ def _flip_max_epoch(sketch_dir: str, epoch_id: int) -> None:
     """Atomically point ``_max_epoch`` at ``epoch_id`` — intentionally NOT
     monotonic: a checkpoint-wipe replay must be able to lower it. One small
     file replace = one PUT on an object store (manifest.py's argument)."""
-    import os
-
     tmp = os.path.join(sketch_dir, f".{_MAX_EPOCH}.tmp")
     with open(tmp, "w") as f:
         f.write(str(epoch_id))
@@ -348,8 +333,6 @@ def _flip_max_epoch(sketch_dir: str, epoch_id: int) -> None:
 
 
 def _live_max_epoch(sketch_dir: str) -> int | None:
-    import os
-
     p = os.path.join(sketch_dir, _MAX_EPOCH)
     if not os.path.isfile(p):
         return None  # pre-pointer layout: every epoch is live
@@ -383,10 +366,6 @@ def compact_sketch(spark: SparkSession, sketch_dir: str) -> dict:
     strictly larger, and a post-wipe replay starts by lowering the
     pointer, so the compacted partition can never be double-counted.
     Returns epoch-partition counts before/after."""
-    import os
-
-    from ..operators.incremental import swap_into_place
-
     live = _live_max_epoch(sketch_dir)
     merged = read_sketch(spark, sketch_dir)
     n_before = sum(
@@ -432,12 +411,7 @@ def run_media_feature_sink(
         feats = decode_features(batch, fake=fake)
         feats.write.mode("overwrite").parquet(f"{features_path}/epoch={int(epoch_id)}")
 
-    return (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain_foreach_batch(stream, handle, checkpoint)
 
 
 def run_manifest_merge_sink(
@@ -467,8 +441,6 @@ def run_manifest_merge_sink(
     key-affected partitions rewrite (or Delta MERGE INTO replaces this
     body at deploy); the commit itself stays a single small-file PUT
     regardless of table size."""
-    from ..operators.incremental import merge_upsert
-
     def handle(batch: DataFrame, epoch_id: int) -> None:
         df = transform(batch) if transform else batch
         merge_upsert(
@@ -476,12 +448,7 @@ def run_manifest_merge_sink(
             commit="manifest",
         )
 
-    return (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain_foreach_batch(stream, handle, checkpoint)
 
 
 def ensure_event_time(stream: DataFrame, ts_col: str) -> DataFrame:
@@ -494,8 +461,6 @@ def ensure_event_time(stream: DataFrame, ts_col: str) -> DataFrame:
     the NTZ wall-clock as UTC — value-preserving, so streaming aggregates
     stay comparable to their NTZ batch twins. No-op for LTZ inputs.
     """
-    from pyspark.sql.types import TimestampNTZType
-
     if isinstance(stream.schema[ts_col].dataType, TimestampNTZType):
         return stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     return stream

@@ -146,6 +146,45 @@ def test_drain_shuffle_restores_session_conf(spark):
     assert spark.conf.get(key) == before
 
 
+@pytest.mark.parametrize("fails_at", ["start", "await"])
+def test_drain_stops_its_other_queries_when_one_fails(spark, tmp_path, fails_at):
+    """plans/streamops._drain must not leave a started query running when
+    another start raises, or when awaiting another query raises: the
+    caller's scratch cleanup would then delete the checkpoint and target
+    of a live query."""
+    from stock_crypto_data_pipeline_public_spark.plans.streamops import _drain
+
+    def endless():
+        return (
+            spark.readStream.format("rate").load()
+            .writeStream.format("noop")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .start()
+        )
+
+    def broken_start():
+        raise RuntimeError("start failed")
+
+    def broken_batch(batch, epoch_id):
+        raise RuntimeError("batch failed")
+
+    def failing_query():
+        return (
+            spark.readStream.format("rate").load()
+            .writeStream.foreachBatch(broken_batch)
+            .option("checkpointLocation", str(tmp_path / "ckpt_failing"))
+            .start()
+        )
+
+    if fails_at == "start":
+        starts, error = (endless, broken_start), "start failed"
+    else:  # the first await raises while the second query still runs
+        starts, error = (failing_query, endless), "batch failed"
+    with pytest.raises(Exception, match=error):
+        _drain(spark, *starts)
+    assert spark.streams.active == []
+
+
 def test_every_streaming_query_bills_eagerly_in_bench():
     """Every s-series query drains its streams at plan-BUILD time; one
     missing from bench.py's EAGER set silently bills ~0 seconds. Pin the
