@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..scratch import mkscratch
+from ..scratch import mkscratch, with_scratch
 from ..sources.tables import load_table
 from ..functions.numeric import (
     RATE,
@@ -1757,33 +1757,27 @@ def q38_cobucketed_join_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY event_type
     """,
 )
-def q39_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
+@with_scratch("q39_compact_")
+def q39_compaction_roundtrip(spark: SparkSession, sf_dir: str, base: str) -> DataFrame:
     from ..operators.maintenance import compact_table
 
-    base = mkscratch("q39_compact_")
     tbl = f"{base}/events"
-    try:
-        ev = _t(spark, sf_dir, "events").select("event_id", "event_type", "value", "ts")
-        ev.repartition(32).write.parquet(tbl)  # fragmented ingest state
-        stats = compact_table(spark, tbl, target_bytes=1 << 30, sort_cols=["ts"])
-        out = (
-            spark.read.parquet(tbl)
-            .groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                money_sum_e2("value").alias("sum_value_e2"),
-            )
-            .withColumn(
-                "files_reduced",
-                F.lit(stats["n_files_after"] < stats["n_files_before"]),
-            )
-            .withColumn("compacted_to_one", F.lit(stats["n_files_after"] == 1))
+    ev = _t(spark, sf_dir, "events").select("event_id", "event_type", "value", "ts")
+    ev.repartition(32).write.parquet(tbl)  # fragmented ingest state
+    stats = compact_table(spark, tbl, target_bytes=1 << 30, sort_cols=["ts"])
+    return (
+        spark.read.parquet(tbl)
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            money_sum_e2("value").alias("sum_value_e2"),
         )
-        return out.localCheckpoint(eager=True)  # materialize before rmtree
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        .withColumn(
+            "files_reduced",
+            F.lit(stats["n_files_after"] < stats["n_files_before"]),
+        )
+        .withColumn("compacted_to_one", F.lit(stats["n_files_after"] == 1))
+    )
 
 
 # --------------------------------------------------------------------------
@@ -2068,65 +2062,59 @@ def q43_scd2_quality_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1
     """,
 )
-def q44_manifest_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
+@with_scratch("q44_manifest_")
+def q44_manifest_time_travel(spark: SparkSession, sf_dir: str, base: str) -> DataFrame:
     from ..operators.incremental import merge_upsert
     from ..operators.manifest import history, read_table
 
-    base_dir = mkscratch("q44_manifest_")
-    tbl = f"{base_dir}/orders_scd"
-    try:
-        orders = _t(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_orderstatus", "o_totalprice"
-        )
-        stale = orders.withColumn(
-            "o_totalprice",
-            F.when(F.col("o_orderkey") % 7 == 0, F.lit(0.0)).otherwise(
-                F.col("o_totalprice")
-            ),
-        ).withColumn("version", F.lit(0))
-        corrections = orders.filter(F.col("o_orderkey") % 7 == 0).withColumn(
-            "version", F.lit(1)
-        )
-        merge_upsert(
-            spark, stale, tbl, keys=["o_orderkey"], version_col="version",
-            commit="manifest",
-        )  # generation 0
-        merge_upsert(
-            spark, corrections, tbl, keys=["o_orderkey"], version_col="version",
-            commit="manifest",
-        )  # generation 1 (current)
-        commits = history(tbl)  # newest first; generation ids start at 1
-        n_gens = len(commits)
-        first_gen = min(h["generation"] for h in commits)
+    tbl = f"{base}/orders_scd"
+    orders = _t(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderstatus", "o_totalprice"
+    )
+    stale = orders.withColumn(
+        "o_totalprice",
+        F.when(F.col("o_orderkey") % 7 == 0, F.lit(0.0)).otherwise(
+            F.col("o_totalprice")
+        ),
+    ).withColumn("version", F.lit(0))
+    corrections = orders.filter(F.col("o_orderkey") % 7 == 0).withColumn(
+        "version", F.lit(1)
+    )
+    merge_upsert(
+        spark, stale, tbl, keys=["o_orderkey"], version_col="version",
+        commit="manifest",
+    )  # generation 0
+    merge_upsert(
+        spark, corrections, tbl, keys=["o_orderkey"], version_col="version",
+        commit="manifest",
+    )  # generation 1 (current)
+    commits = history(tbl)  # newest first; generation ids start at 1
+    n_gens = len(commits)
+    first_gen = min(h["generation"] for h in commits)
 
-        def rollup(df: DataFrame, alias: str) -> DataFrame:
-            return df.groupBy("o_orderstatus").agg(
-                F.count(F.lit(1)).cast("bigint").alias(f"n_{alias}"),
-                money_sum_e2("o_totalprice").alias(f"sum_e2_{alias}"),
-            )
+    def rollup(df: DataFrame, alias: str) -> DataFrame:
+        return df.groupBy("o_orderstatus").agg(
+            F.count(F.lit(1)).cast("bigint").alias(f"n_{alias}"),
+            money_sum_e2("o_totalprice").alias(f"sum_e2_{alias}"),
+        )
 
-        g0 = rollup(read_table(spark, tbl, generation=first_gen), "gen0")
-        cur = rollup(read_table(spark, tbl), "current")
-        corrected = (
-            read_table(spark, tbl)
-            .filter(F.col("o_orderkey") % 7 == 0)
-            .groupBy("o_orderstatus")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_corrected"))
+    g0 = rollup(read_table(spark, tbl, generation=first_gen), "gen0")
+    cur = rollup(read_table(spark, tbl), "current")
+    corrected = (
+        read_table(spark, tbl)
+        .filter(F.col("o_orderkey") % 7 == 0)
+        .groupBy("o_orderstatus")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_corrected"))
+    )
+    return (
+        cur.join(g0, "o_orderstatus")
+        .join(corrected, "o_orderstatus", "left")
+        .select(
+            "o_orderstatus",
+            F.col("n_current").alias("n_orders"),
+            "sum_e2_gen0",
+            "sum_e2_current",
+            F.coalesce("n_corrected", F.lit(0)).cast("bigint").alias("n_corrected"),
+            F.lit(n_gens).cast("bigint").alias("n_generations"),
         )
-        out = (
-            cur.join(g0, "o_orderstatus")
-            .join(corrected, "o_orderstatus", "left")
-            .select(
-                "o_orderstatus",
-                F.col("n_current").alias("n_orders"),
-                "sum_e2_gen0",
-                "sum_e2_current",
-                F.coalesce("n_corrected", F.lit(0)).cast("bigint").alias("n_corrected"),
-                F.lit(n_gens).cast("bigint").alias("n_generations"),
-            )
-        )
-        return out.localCheckpoint(eager=True)  # materialize before rmtree
-    finally:
-        shutil.rmtree(base_dir, ignore_errors=True)
+    )

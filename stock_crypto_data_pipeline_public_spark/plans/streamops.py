@@ -16,8 +16,6 @@ downstream pipeline.
 
 from __future__ import annotations
 
-import functools
-import shutil
 from collections.abc import Callable
 from contextlib import contextmanager
 
@@ -26,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.numeric import dec, money_sum, money_sum_e2, oracle_money_sum, oracle_money_sum_e2, oracle_rnd, rnd
-from ..scratch import mkscratch
+from ..scratch import with_scratch
 from ..session import env_positive_int
 from ..sources.tables import load_table, local_rows
 from .registry import query
@@ -74,26 +72,6 @@ def _py_drain_partitions(spark: SparkSession) -> int:
         "SPARK_GRAFT_PY_DRAIN_PARTITIONS",
         max(2, spark.sparkContext.defaultParallelism // 2),
     )
-
-
-def _streamed(prefix: str):
-    """Give a streaming query's body a scratch directory for its landings,
-    checkpoints and sinks: the body runs as ``body(spark, sf_dir, base)``,
-    its result is materialized (it reads files under ``base``) and
-    ``base`` is removed on return and on raise. Goes under ``@query``."""
-
-    def deco(body: Callable[[SparkSession, str, str], DataFrame]):
-        @functools.wraps(body)
-        def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-            base = mkscratch(prefix)
-            try:
-                return body(spark, sf_dir, base).localCheckpoint(eager=True)
-            finally:
-                shutil.rmtree(base, ignore_errors=True)
-
-        return run
-
-    return deco
 
 
 def _drain(
@@ -178,7 +156,7 @@ def _land(df: DataFrame, landing: str) -> None:
     GROUP BY event_type
     """,
 )
-@_streamed("s01_stream_")
+@with_scratch("s01_stream_")
 def s01_streaming_ingest_end_state(spark: SparkSession, sf_dir: str, base: str) -> DataFrame:
     from ..streaming.pipeline import file_stream, run_incremental_sink
 
@@ -286,7 +264,7 @@ def s01_streaming_ingest_end_state(spark: SparkSession, sf_dir: str, base: str) 
     GROUP BY 1, 2
     """,
 )
-@_streamed("s02_stream_")
+@with_scratch("s02_stream_")
 def s02_streaming_watermark_end_state(spark: SparkSession, sf_dir: str, base: str) -> DataFrame:
     import datetime
 
@@ -371,7 +349,7 @@ def s02_streaming_watermark_end_state(spark: SparkSession, sf_dir: str, base: st
      AND p.ts <= c.ts + INTERVAL 2 HOUR
     """,
 )
-@_streamed("s03_stream_")
+@with_scratch("s03_stream_")
 def s03_stream_stream_attribution(spark: SparkSession, sf_dir: str, base: str) -> DataFrame:
     import os
 
@@ -480,7 +458,7 @@ def s03_stream_stream_attribution(spark: SparkSession, sf_dir: str, base: str) -
                         WHERE g2.user_id = g.user_id)
     """,
 )
-@_streamed("s04_stream_")
+@with_scratch("s04_stream_")
 def s04_stateful_sessionization(spark: SparkSession, sf_dir: str, base: str) -> DataFrame:
     from ..streaming.pipeline import file_stream
     from ..streaming.stateful import sessionize_stream
@@ -551,7 +529,7 @@ def s04_stateful_sessionization(spark: SparkSession, sf_dir: str, base: str) -> 
     JOIN customer c ON e.user_id = c.c_custkey
     """,
 )
-@_streamed("s05_stream_")
+@with_scratch("s05_stream_")
 def s05_stream_static_enrichment(spark: SparkSession, sf_dir: str, base: str) -> DataFrame:
     from ..streaming.pipeline import enrich_stream, file_stream
 
@@ -627,7 +605,7 @@ def s05_stream_static_enrichment(spark: SparkSession, sf_dir: str, base: str) ->
     SELECT event_id, event_type, value FROM events
     """,
 )
-@_streamed("s06_stream_")
+@with_scratch("s06_stream_")
 def s06_streaming_dedup_end_state(spark: SparkSession, sf_dir: str, base: str) -> DataFrame:
     from ..streaming.pipeline import dedup_stream, file_stream
 
@@ -692,7 +670,7 @@ def s06_streaming_dedup_end_state(spark: SparkSession, sf_dir: str, base: str) -
     GROUP BY 1, 2
     """,
 )
-@_streamed("s07_stream_")
+@with_scratch("s07_stream_")
 def s07_streaming_ohlcv_end_state(spark: SparkSession, sf_dir: str, base: str) -> DataFrame:
     import datetime
 
@@ -781,7 +759,7 @@ from ..operators import dedup as _D  # noqa: E402
     WHERE 2 * p.n_common >= ca.n + cb.n - p.n_common
     """,
 )
-@_streamed("s08_stream_")
+@with_scratch("s08_stream_")
 def s08_streaming_neardup_end_state(spark: SparkSession, sf_dir: str, base: str) -> DataFrame:
     from ..operators.dedup import read_neardup_edges
     from ..streaming.pipeline import file_stream, run_neardup_sink
@@ -860,7 +838,7 @@ from ..operators import similarity as _S  # noqa: E402
     WHERE rk <= 5
     """,
 )
-@_streamed("s09_stream_")
+@with_scratch("s09_stream_")
 def s09_streaming_ann_index_end_state(spark: SparkSession, sf_dir: str, base: str) -> DataFrame:
     from ..operators.annindex import build_ann_index, query_ann_index
     from ..streaming.pipeline import file_stream, run_ann_index_sink
@@ -941,7 +919,7 @@ def s09_streaming_ann_index_end_state(spark: SparkSession, sf_dir: str, base: st
     FROM events
     """,
 )
-@_streamed("s10_stream_")
+@with_scratch("s10_stream_")
 def s10_streaming_cdc_merge_end_state(spark: SparkSession, sf_dir: str, base: str) -> DataFrame:
     from ..operators.manifest import read_table
     from ..streaming.pipeline import file_stream, run_manifest_merge_sink
@@ -1015,7 +993,7 @@ def s10_streaming_cdc_merge_end_state(spark: SparkSession, sf_dir: str, base: st
     GROUP BY 1
     """,
 )
-@_streamed("s11_stream_")
+@with_scratch("s11_stream_")
 def s11_streaming_media_features_end_state(
     spark: SparkSession, sf_dir: str, base: str
 ) -> DataFrame:
@@ -1105,7 +1083,7 @@ _S12_SHARDS = 8
     FROM ranked r LEFT JOIN amax a ON r.shard = a.shard
     """,
 )
-@_streamed("s12_stream_")
+@with_scratch("s12_stream_")
 def s12_streaming_shuffle_manifest_end_state(
     spark: SparkSession, sf_dir: str, base: str
 ) -> DataFrame:
@@ -1174,7 +1152,7 @@ def s12_streaming_shuffle_manifest_end_state(
     FROM counts
     """,
 )
-@_streamed("s13_stream_")
+@with_scratch("s13_stream_")
 def s13_streaming_sketch_end_state(spark: SparkSession, sf_dir: str, base: str) -> DataFrame:
     from ..operators.sketch import cms_estimate, count_min_table
     from ..streaming.pipeline import file_stream, read_sketch, run_sketch_sink
@@ -1301,7 +1279,7 @@ def s13_streaming_sketch_end_state(spark: SparkSession, sf_dir: str, base: str) 
     FROM g
     """,
 )
-@_streamed("s14_stream_")
+@with_scratch("s14_stream_")
 def s14_idle_timeout_eviction(spark: SparkSession, sf_dir: str, base: str) -> DataFrame:
     import time
 

@@ -687,8 +687,7 @@ def _dup_components(docs: DataFrame) -> DataFrame:
     """(doc_id, component_id) over the trigram-Jaccard ≥ 1/2 near-dup graph
     (the shared spine of t11 and t23). The exploded shingle stream feeds
     both the per-doc counts and the pair generation — materialized once
-    (r12; every consumer is whole-call-billed in bench.py's EAGER set, so
-    the checkpoint is inside the timed region; measured t11 2.8 → 2.3 s)."""
+    so the shingle explode runs once, not once per consumer."""
     sh = D.exploded_shingles(docs, "doc_id", "text", 3).localCheckpoint(eager=True)
     counts = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     pairs = D.copair_counts(sh, "doc_id", "shingle")
@@ -1716,10 +1715,7 @@ def t30_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # s3 feeds FOUR executions across the pipeline (the component spine's
     # shingle stream and node set at build, then both sides of the
-    # decontamination in the output action) — materialize it once. t30 is
-    # whole-call-billed in bench.py's EAGER set, so the eager checkpoint
-    # is inside the timed region (r12 measured: 6.5 → 4.5 s whole-call,
-    # rows identical).
+    # decontamination in the output action) — materialize it once.
     s3 = s3.localCheckpoint(eager=True)
     # 4. near-dup cluster keeper: component_id is the min member label, so
     #    keeper ≡ doc_id == component_id (t23's convention)
@@ -1763,11 +1759,6 @@ def t30_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # would produce. The index lives in a fresh temp dir per call (removed
 # before returning), so the query is pure and replays are deterministic.
 # --------------------------------------------------------------------------
-#: last t31 run's per-increment wall split (bench.py reports it — the
-#: headline number bills TWO full index-building increments, not a query)
-T31_BILLING: dict = {}
-
-
 @query(
     "t31_incremental_vs_batch_neardup",
     oracle=f"""
@@ -1791,24 +1782,17 @@ T31_BILLING: dict = {}
 )
 def t31_incremental_vs_batch_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import time
 
     from ..operators.dedup import incremental_neardup
 
     docs = _docs(spark, sf_dir)
     index_dir = mkscratch("neardup_idx_")
     try:
-        t0 = time.perf_counter()
         e1 = incremental_neardup(
             spark, docs.filter(F.col("doc_id") % 2 == 0), index_dir
         )
-        t1 = time.perf_counter()
         e2 = incremental_neardup(
             spark, docs.filter(F.col("doc_id") % 2 == 1), index_dir
-        )
-        t2 = time.perf_counter()
-        T31_BILLING.update(
-            increment1_s=round(t1 - t0, 3), increment2_s=round(t2 - t1, 3)
         )
         # both edge frames are localCheckpointed (materialized) inside the
         # operator, so the index directory is no longer needed

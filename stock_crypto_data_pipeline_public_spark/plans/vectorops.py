@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from ..functions.numeric import iavg, oracle_rnd, rnd
 from ..operators import retrieval as RETR
 from ..operators import similarity as S
-from ..scratch import mkscratch
+from ..scratch import with_scratch
 from ..sources.tables import load_table, local_rows
 from .registry import query
 
@@ -1191,13 +1191,9 @@ def x12_kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
 # probe join is a partition-PRUNED scan + broadcast equi-join. Hash-gating
 # this against the x07-shape oracle proves the persisted path is
 # value-identical to the inline plan: same assignment, same probes, same
-# exact top-k. The index build is EAGER (bench bills the full call).
+# exact top-k. The index lives in a fresh scratch dir per call, so the
+# result is materialized before the dir is removed.
 # --------------------------------------------------------------------------
-#: last x13 run's build-vs-query wall split (bench.py reports it so the
-#: headline per-query number is not mistaken for query latency)
-X13_BILLING: dict = {}
-
-
 @query(
     "x13_persisted_ann_search",
     oracle=f"""
@@ -1238,18 +1234,8 @@ X13_BILLING: dict = {}
     WHERE rk <= 5
     """,
 )
-def x13_persisted_ann_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """query_s billing note (r6 measurement): the query path is
-    corpus-size-INDEPENDENT — best-of-3 query_s is 2.16 s at sf0.01 vs
-    2.01 s at sf0.1 (10x the corpus, same time), so the ~2 s is fixed
-    per-invocation cost (driver round-trips: sidecar probe reads,
-    createDataFrame, the eager localCheckpoint materialization — a
-    trivial 50-row checkpoint+noop floors at ~0.1 s, the rest is plan/
-    probe setup), NOT a scan growing with the table. The scan itself
-    touches only the probed partitions (PartitionFilters +
-    input_file_name proof in test_annindex)."""
-    import shutil
-
+@with_scratch("ann_idx_")
+def x13_persisted_ann_search(spark: SparkSession, sf_dir: str, index_dir: str) -> DataFrame:
     from ..operators.annindex import build_ann_index, query_ann_index
 
     emb = _emb(spark, sf_dir)
@@ -1262,28 +1248,10 @@ def x13_persisted_ann_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     centroids = [small[i] for i in range(IVF_K)]
     queries = {qid: small[qid] for qid in range(100, 110)}
-    index_dir = mkscratch("ann_idx_")
-    try:
-        import time
-
-        t0 = time.perf_counter()
-        build_ann_index(spark, emb, index_dir, centroids, EMB_DIM, verify=False)
-        t1 = time.perf_counter()
-        out = query_ann_index(
-            spark, index_dir, queries, EMB_DIM, nprobe=IVF_NPROBE, topk=5
-        )
-        # materialize before the temp index dir disappears
-        out = out.localCheckpoint(eager=True)
-        t2 = time.perf_counter()
-        # bench billing split: the headline x13 number is build-dominated
-        # (honest index-construction cost); the query path itself is
-        # milliseconds-scale. Recorded here, surfaced by bench.py stderr.
-        X13_BILLING.update(
-            build_s=round(t1 - t0, 3), query_s=round(t2 - t1, 3)
-        )
-        return out
-    finally:
-        shutil.rmtree(index_dir, ignore_errors=True)
+    build_ann_index(spark, emb, index_dir, centroids, EMB_DIM, verify=False)
+    return query_ann_index(
+        spark, index_dir, queries, EMB_DIM, nprobe=IVF_NPROBE, topk=5
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1369,7 +1337,6 @@ def x14_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("a_sim", "rk")
     )
     # both sides of the pair join consume the assignment; materialize once
-    # (the CC below is eager at build anyway — x14 is EAGER-billed)
     assigned = assigned.localCheckpoint(eager=True)
 
     # Salt the within-cluster all-pairs join (guide §2.5): the join key has

@@ -185,23 +185,6 @@ def test_drain_stops_its_other_queries_when_one_fails(spark, tmp_path, fails_at)
     assert spark.streams.active == []
 
 
-def test_every_streaming_query_bills_eagerly_in_bench():
-    """Every s-series query drains its streams at plan-BUILD time; one
-    missing from bench.py's EAGER set silently bills ~0 seconds. Pin the
-    invariant mechanically so adding s09 without the EAGER entry fails."""
-    import bench
-    from stock_crypto_data_pipeline_public_spark.plans import registry
-
-    registry.load_all()
-    streaming = {n for n in registry.QUERIES if n.startswith("s")}
-    assert streaming, "no s-series queries registered?"
-    missing = streaming - bench.EAGER
-    assert not missing, f"streaming queries not in bench EAGER: {sorted(missing)}"
-    # and EAGER must not name queries that no longer exist
-    stale = bench.EAGER - set(registry.QUERIES)
-    assert not stale, f"bench EAGER names unknown queries: {sorted(stale)}"
-
-
 def test_gate_window_members_are_hash_gated():
     """A _GATE_PRIORITY member without an oracle would spend a driver
     window slot on a rows-only check that can never hash-match — today
@@ -221,20 +204,17 @@ def test_gate_window_members_are_hash_gated():
 
 
 @pytest.fixture(scope="module")
-def built_plans():
-    """Every non-EAGER registered query's DataFrame, built once at
-    sf0.001 — shared by the repo-wide plan/schema contract tests below
-    (plan BUILD only; nothing executes)."""
-    import bench
+def built_plans(sf_dir):
+    """Every registered query's DataFrame, built once at sf0.001 — shared
+    by the repo-wide plan/schema contract tests below (plan build only:
+    the returned frames are never written)."""
     from stock_crypto_data_pipeline_public_spark.plans import registry
     from stock_crypto_data_pipeline_public_spark.session import get_spark
 
     registry.load_all()
     spark = get_spark("plan-contracts", cpus=8, shuffle_partitions=8)
     return {
-        n: registry.QUERIES[n](spark, "/root/testdata/sf0.001")
-        for n in registry.QUERIES
-        if n not in bench.EAGER
+        n: fn(spark, sf_dir) for n, fn in registry.QUERIES.items()
     }
 
 
@@ -275,11 +255,7 @@ def test_no_hashed_output_transits_decimal_to_double(built_plans):
     - decimal LITERALS (v13's 0.25, t29's 0.5): plan-time constants both
       engines fold identically — the q40b/q40f probes gate literal
       rendering directly;
-    - the q40 renderer-fingerprint family (those casts ARE the probe);
-    - bench-EAGER queries, whose plan build executes streaming drains /
-      index builds — the driver hash gate covers their outputs instead
-      (their read-back aggregates were all ported to the e-scaled domain
-      in round 9)."""
+    - the q40 renderer-fingerprint family (those casts ARE the probe)."""
 
     def banned_casts(df):
         found = []

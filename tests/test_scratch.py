@@ -4,8 +4,7 @@ import os
 
 import pytest
 
-from stock_crypto_data_pipeline_public_spark.plans.streamops import _streamed
-from stock_crypto_data_pipeline_public_spark.scratch import mkscratch, scratch_base
+from stock_crypto_data_pipeline_public_spark.scratch import mkscratch, scratch_base, with_scratch
 
 
 def test_env_override_wins(monkeypatch, tmp_path):
@@ -31,13 +30,13 @@ def test_default_is_usable_dir(monkeypatch):
 
 
 def test_streamed_removes_scratch_after_return(spark, monkeypatch, tmp_path):
-    """plans/streamops._streamed: the body sees a live scratch dir; the
+    """scratch.with_scratch: the body sees a live scratch dir; the
     returned frame is materialized, so it still collects once the dir is
     gone."""
     monkeypatch.setenv("SPARK_GRAFT_SCRATCH_DIR", str(tmp_path))
     seen = []
 
-    @_streamed("unit_")
+    @with_scratch("unit_")
     def body(spark, sf_dir, base):
         assert os.path.isdir(base) and base.startswith(str(tmp_path))
         seen.append(base)
@@ -53,7 +52,7 @@ def test_streamed_removes_scratch_on_raise(monkeypatch, tmp_path):
     monkeypatch.setenv("SPARK_GRAFT_SCRATCH_DIR", str(tmp_path))
     seen = []
 
-    @_streamed("unit_")
+    @with_scratch("unit_")
     def body(spark, sf_dir, base):
         assert os.path.isdir(base)
         seen.append(base)
