@@ -72,6 +72,10 @@ def time_query(spark, name: str, sf_dir: str):
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = env_positive_int("SPARK_GRAFT_CPUS", 32)
+    # eras and the wall-clock budget: see the module docstring; read before
+    # the JVM starts so a bad value fails fast
+    PASSES = env_positive_int("SPARK_GRAFT_BENCH_PASSES", 2)
+    BUDGET_S = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_S", "900"))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     try:
         sf = float(sf)
@@ -83,9 +87,6 @@ def main() -> int:
 
     warm_up(spark)
 
-    # eras and the wall-clock budget: see the module docstring
-    PASSES = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "2"))
-    BUDGET_S = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_S", "900"))
     started = time.perf_counter()
     timings: dict[str, float] = {}
     build_s: dict[str, float] = {}

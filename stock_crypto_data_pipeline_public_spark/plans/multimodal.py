@@ -9,7 +9,12 @@ codec-round-trip resize m08), and a full GIF87a/LZW codec (decode m09,
 animated-GIF frame sampling m10), with oracles predicting every decoded
 field — for PNG/GIF the raster pixel sums themselves — from the source
 row. NULL text is treated as '' on BOTH engines
-(coalesce in oracles, ``text or ''`` / coalesce in synthesizers)."""
+(coalesce in oracles, ``text or ''`` / coalesce in synthesizers).
+
+Every query spreads its input through ``fan_out`` ahead of its
+Arrow-batched Python stage: ``MEDIA`` for the light decodes, ``HEAVY`` for
+the decode-dominated pipelines (full-raster OCR, per-frame video diffs,
+codec round-trips), whose Python work keeps every core busy."""
 
 from __future__ import annotations
 
@@ -18,43 +23,8 @@ from pyspark.sql import functions as F
 
 from ..operators import audiofp as AFP
 from ..operators import multimodal as M
-from ..session import env_positive_int
-from ..sources.tables import load_table
+from ..sources.tables import HEAVY, MEDIA, fan_out, load_table
 from .registry import query
-
-
-#: input bytes per decode task for the Python-stage fan-out below; env
-#: overrides for clusters whose media synthesis/decode cost per byte differs
-_MEDIA_PART_BYTES = env_positive_int("SPARK_GRAFT_MEDIA_PART_BYTES", 128 * 1024)
-_MEDIA_PART_BYTES_HEAVY = env_positive_int("SPARK_GRAFT_MEDIA_PART_BYTES_HEAVY", 16 * 1024)
-
-
-def _spread(spark: SparkSession, docs: DataFrame, heavy: bool = False) -> DataFrame:
-    """Scale-adaptive fan-out ahead of the Arrow-batched Python stages.
-
-    The gate corpora arrive as a single file (one scan task), so the decode
-    must be spread — but a flat ``repartition(defaultParallelism)`` is a
-    constant tuned to the 32-core box: at gate volumes it produced 32
-    near-empty partitions whose Python-worker round-trips cost more than
-    the decode itself (r11 scaling probe: m04/m08/m13/m16 ran FASTER on 8
-    cores; measured r12: 32 partitions 0.76 s vs 4 partitions 0.44 s on
-    m04's shape). Size the fan-out from the INPUT's plan statistics
-    instead — one partition per ~128 KiB of source bytes (env-tunable),
-    capped at defaultParallelism — so tiny corpora get a handful of full
-    batches and any production-sized corpus still saturates every core
-    (guide §2: derive partitioning from input size, not a constant).
-
-    ``heavy=True`` is for the decode-dominated pipelines (full-raster OCR,
-    per-frame video diffs, codec round-trips: m12/m14/m15/m19/m20/m23 —
-    the queries whose r11 core-scaling ratio was ≥1.3, i.e. their Python
-    work genuinely parallelizes): they spread at ~16 KiB of source per
-    task (measured r12: the 128 KiB sizing REGRESSED m20 2.2 s → 4.8 s by
-    starving the rasterizer of cores), reaching full parallelism at a
-    fraction of the corpus size the light decodes need."""
-    size = int(str(docs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
-    per = _MEDIA_PART_BYTES_HEAVY if heavy else _MEDIA_PART_BYTES
-    n = max(1, min(spark.sparkContext.defaultParallelism, size // per + 1))
-    return docs.repartition(n)
 
 
 # --------------------------------------------------------------------------
@@ -91,7 +61,7 @@ def m01_media_feature_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # single-file input = one scan task; spread BEFORE the Python stage so
     # the Arrow-batched decode runs on every core, not one
-    docs = _spread(spark, docs)
+    docs = fan_out(docs, MEDIA)
     media = M.attach_media(docs)
     feats = M.decode_features(media, fake=True)
     return feats.groupBy("media_type").agg(
@@ -208,7 +178,7 @@ def m03_frame_sample_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m04_wav_real_decode_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    docs = _spread(spark, docs)
+    docs = fan_out(docs, MEDIA)
     media = M.synthesize_wav(docs)
     feats = M.decode_features(media)  # fake=False: the REAL wave parse
     return feats.groupBy("sample_rate").agg(
@@ -248,7 +218,7 @@ def m04_wav_real_decode_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m05_ppm_real_resize_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    docs = _spread(spark, docs)
+    docs = fan_out(docs, MEDIA)
     # media feeds TWO consumers (source decode + resize) and Spark has no
     # cross-consumer CSE — without a checkpoint the mapInPandas synthesis
     # runs twice per execution (r6 verdict; measured 2x Python-worker cost).
@@ -303,7 +273,7 @@ def m05_ppm_real_resize_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m06_bmp_real_decode_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    docs = _spread(spark, docs)
+    docs = fan_out(docs, MEDIA)
     media = M.synthesize_bmp(docs)
     feats = M.decode_features(media)  # fake=False: the REAL struct parse
     return feats.groupBy("width").agg(
@@ -349,7 +319,7 @@ def m06_bmp_real_decode_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m07_png_real_decode_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    docs = _spread(spark, docs)
+    docs = fan_out(docs, MEDIA)
     media = M.synthesize_png(docs)
     feats = M.decode_features(media)  # fake=False: the REAL stdlib codec
     return feats.groupBy("width").agg(
@@ -396,7 +366,7 @@ def m07_png_real_decode_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m08_png_real_resize_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    docs = _spread(spark, docs)
+    docs = fan_out(docs, MEDIA)
     media = M.synthesize_png(docs)
     resized = M.resize_images(media, 5, 4)  # REAL: full codec round-trip
     rfeat = M.decode_features(resized)  # REAL decode of the rendition
@@ -444,7 +414,7 @@ def m08_png_real_resize_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m09_gif_real_decode_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    docs = _spread(spark, docs)
+    docs = fan_out(docs, MEDIA)
     media = M.synthesize_gif(docs)
     feats = M.decode_features(media)  # fake=False: the REAL LZW decode
     return feats.groupBy("width").agg(
@@ -492,7 +462,7 @@ def m09_gif_real_decode_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m11_jpeg_real_decode_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    docs = _spread(spark, docs)
+    docs = fan_out(docs, MEDIA)
     media = M.synthesize_jpeg(docs)
     feats = M.decode_features(media)  # fake=False: the REAL T.81 decode
     return feats.groupBy("width").agg(
@@ -546,7 +516,7 @@ def m11_jpeg_real_decode_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m12_mp4_demux_decode_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    docs = _spread(spark, docs, heavy=True)
+    docs = fan_out(docs, HEAVY)
     media = M.synthesize_mp4(docs, n_frames=6)
     frames = M.sample_frames(media, n_frames=3)  # REAL ISO-BMFF demux
     feats = M.decode_frames(frames)  # REAL T.81 decode per frame
@@ -591,7 +561,7 @@ def m12_mp4_demux_decode_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m13_audio_spectral_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    docs = _spread(spark, docs)
+    docs = fan_out(docs, MEDIA)
     media = M.synthesize_tone_wav(docs)
     feats = M.extract_audio_features(media)  # REAL rFFT over decoded PCM
     return feats.groupBy("dominant_bin").agg(
@@ -640,7 +610,7 @@ def m13_audio_spectral_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m14_video_frame_delta_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    docs = _spread(spark, docs, heavy=True)
+    docs = fan_out(docs, HEAVY)
     media = M.synthesize_mp4(docs, n_frames=6)
     frames = M.sample_frames(media, n_frames=6)  # all frames, REAL demux
     deltas = M.frame_deltas(frames, assume_grouped=True)  # zero-shuffle diff
@@ -684,7 +654,7 @@ def m14_video_frame_delta_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m15_jpeg_real_resize_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    docs = _spread(spark, docs, heavy=True)
+    docs = fan_out(docs, HEAVY)
     media = M.synthesize_jpeg(docs)
     resized = M.resize_images(media, scale=2)  # REAL lossy-codec round-trip
     rfeat = M.decode_features(resized)  # REAL second decode of renditions
@@ -740,7 +710,7 @@ def m15_jpeg_real_resize_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m10_gif_frame_sample_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    docs = _spread(spark, docs)
+    docs = fan_out(docs, MEDIA)
     media = M.synthesize_animated_gif(docs, n_frames=6)
     frames = M.sample_frames(media, n_frames=3, fps=10)  # REAL path
     feats = M.decode_frames(frames)  # REAL per-frame decode
@@ -797,7 +767,7 @@ def m16_audio_resample_alias_rollup(spark: SparkSession, sf_dir: str) -> DataFra
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 100 != 68  # Nyquist-kill tone: no closed-form bin
     )
-    docs = _spread(spark, docs)
+    docs = fan_out(docs, MEDIA)
     media = M.synthesize_tone_wav(docs)
     halved = M.resample_audio(media, factor=2)  # REAL decimation + re-encode
     feats = M.extract_audio_features(halved)  # REAL rFFT over the new PCM
@@ -840,7 +810,7 @@ def m17_docx_real_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import chunking as C
 
     docs = load_table(spark, sf_dir, "documents")
-    docs = _spread(spark, docs)
+    docs = fan_out(docs, MEDIA)
     extracted = C.extract_text(C.synthesize_docx(docs))  # REAL zip+XML parse
     return extracted.select(
         "doc_id",
@@ -884,7 +854,7 @@ def m18_pdf_real_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import chunking as C
 
     docs = load_table(spark, sf_dir, "documents")
-    docs = _spread(spark, docs)
+    docs = fan_out(docs, MEDIA)
     extracted = C.extract_text(C.synthesize_pdf(docs))  # REAL Flate+BT/ET scan
     return extracted.select(
         "doc_id",
@@ -928,7 +898,7 @@ def m19_png_glyph_ocr(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import ocr as O
 
     docs = load_table(spark, sf_dir, "documents")
-    docs = _spread(spark, docs, heavy=True)
+    docs = fan_out(docs, HEAVY)
     imgs = O.render_text_png(docs, n_chars=48)  # REAL PNG encode
     bin_docs = imgs.select(
         "doc_id",
@@ -973,7 +943,7 @@ def m20_jpeg_glyph_ocr(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import ocr as O
 
     docs = load_table(spark, sf_dir, "documents")
-    docs = _spread(spark, docs, heavy=True)
+    docs = fan_out(docs, HEAVY)
     imgs = O.render_text_jpeg(docs, n_chars=16)  # REAL T.81 encode
     bin_docs = imgs.select(
         "doc_id",
@@ -1019,7 +989,7 @@ def m21_dhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import phash as P
 
     docs = load_table(spark, sf_dir, "documents")
-    docs = _spread(spark, docs)
+    docs = fan_out(docs, MEDIA)
     hashed = P.dhash64(P.synthesize_dhash_png(docs))
     return (
         hashed.groupBy("dhash")
@@ -1065,7 +1035,7 @@ def m21_dhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m22_audio_fp_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    docs = _spread(spark, docs)
+    docs = fan_out(docs, MEDIA)
     fps = AFP.audio_fingerprint(AFP.synthesize_afp_wav(docs))
     return (
         fps.groupBy("fingerprint")
@@ -1109,7 +1079,7 @@ def m22_audio_fp_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m23_scene_cut_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    docs = _spread(spark, docs, heavy=True)
+    docs = fan_out(docs, HEAVY)
     media = M.synthesize_mp4_scenes(docs, n_frames=6)
     frames = M.sample_frames(media, n_frames=6)  # all frames, REAL demux
     deltas = M.frame_deltas(frames, assume_grouped=True)

@@ -25,31 +25,20 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.numeric import dec, money_sum, money_sum_e2, oracle_money_sum, oracle_money_sum_e2, oracle_rnd, rnd
 from ..scratch import with_scratch
-from ..session import env_positive_int
 from ..sources.tables import load_table, local_rows
 from .registry import query
 
 
 @contextmanager
-def _drain_shuffle(spark: SparkSession, n: int | None = None):
-    """Pin ``spark.sql.shuffle.partitions`` for a streaming drain.
+def _drain_shuffle(spark: SparkSession, n: int):
+    """Pin ``spark.sql.shuffle.partitions`` to ``n`` for a streaming drain
+    and restore the session value on exit.
 
     The stateful operators (windowed agg, stream-stream join, dedup,
     applyInPandasWithState) create one state-store instance PER shuffle
-    partition, and availableNow drains pay per-partition commit/snapshot
-    I/O every micro-batch — at gate/bench data volumes, near-empty state
-    partitions are pure orchestration overhead (measurements: SCALE.md's
-    sizing-knob section). Production sizes this to the cluster (state
-    store count = parallelism); the checkpoint pins it at first start, so
-    the value is also what makes the gated end states
-    environment-independent. Restores the session value on exit.
-
-    ``$SPARK_GRAFT_DRAIN_PARTITIONS`` overrides the default of 2
-    (production: set it to the cluster's target state-store parallelism;
-    the gated end states are partition-count-independent aggregates,
-    verified by the oracle gate at any setting)."""
-    if n is None:
-        n = env_positive_int("SPARK_GRAFT_DRAIN_PARTITIONS", 2)
+    partition, and the checkpoint pins the count at first start, so the
+    value is also what makes the gated end states
+    environment-independent."""
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
     spark.conf.set(key, str(n))
@@ -59,33 +48,26 @@ def _drain_shuffle(spark: SparkSession, n: int | None = None):
         spark.conf.set(key, old)
 
 
-def _py_drain_partitions(spark: SparkSession) -> int:
-    """State partition count for the applyInPandasWithState drains
-    (s04/s14) — DELIBERATELY higher than _drain_shuffle's JVM-state
-    default. The Python-stateful operator calls its track() function once
-    per GROUP, so per-batch cost is Python-worker-bound, not state-store-
-    commit-bound, and the JVM drains' small partition count starves it
-    (sweep: OPTIMIZATION_r12.md). Sized to half the cores (the two-drain
-    harness overlaps little else), floor 2, env-overridable for
-    clusters."""
-    return env_positive_int(
-        "SPARK_GRAFT_PY_DRAIN_PARTITIONS",
-        max(2, spark.sparkContext.defaultParallelism // 2),
-    )
-
-
 def _drain(
     spark: SparkSession,
     *starts: Callable[[], StreamingQuery],
     python_state: bool = False,
 ) -> None:
-    """One drain: call every ``start()`` under the pinned drain partition
-    count (``python_state``: the applyInPandasWithState count), then await
-    every query — each runs to the offsets available at its start and
-    stops. If a start or an await raises, every query still active is
-    stopped before the error propagates, so none outlives the scratch
-    directory it writes to."""
-    n = _py_drain_partitions(spark) if python_state else None
+    """One drain: call every ``start()`` under a pinned state partition
+    count, then await every query — each runs to the offsets available at
+    its start and stops. If a start or an await raises, every query still
+    active is stopped before the error propagates, so none outlives the
+    scratch directory it writes to.
+
+    The count is 2: availableNow drains pay per-partition state commit and
+    snapshot I/O every micro-batch, and at gate data volumes near-empty
+    state partitions are pure overhead. ``python_state`` (the
+    applyInPandasWithState drains) takes half the cores, floor 2: that
+    operator calls its function once per group, so its cost is
+    Python-worker-bound and two partitions would starve it. The gated end
+    states are the same at any count, and only the s-queries drain here, so
+    neither count is an env knob."""
+    n = max(2, spark.sparkContext.defaultParallelism // 2) if python_state else 2
     with _drain_shuffle(spark, n):
         started: list[StreamingQuery] = []
         try:
@@ -1317,7 +1299,7 @@ def s14_idle_timeout_eviction(spark: SparkSession, sf_dir: str, base: str) -> Da
     # events reach exactly one micro-batch, so flush contents are
     # invariant to WHEN timers fire — see the family comment
     _land(ev.filter(F.col("user_id") % 2 == 0), landing)
-    with _drain_shuffle(spark, n=_py_drain_partitions(spark)):
+    with _drain_shuffle(spark, max(2, spark.sparkContext.defaultParallelism // 2)):
         q = (
             sessionize_stream(
                 spark.readStream.schema(ev.schema)

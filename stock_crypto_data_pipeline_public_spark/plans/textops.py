@@ -19,36 +19,16 @@ from ..functions.numeric import oracle_rnd, rnd
 from ..operators import dedup as D
 from ..operators import retrieval as R
 from ..scratch import mkscratch
-from ..session import env_positive_int
-from ..sources.tables import load_table
+from ..sources.tables import HEAVY, TEXT, fan_out, load_table
 from .registry import query
 
 
-#: source bytes per task for the document-corpus fan-out; env override for
-#: corpora whose per-byte tokenize/regex cost differs
-_DOCS_PART_BYTES = env_positive_int("SPARK_GRAFT_DOCS_PART_BYTES", 32 * 1024)
-
-
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The documents corpus, fanned out for the text pipelines.
-
-    The gate corpora are ONE single-row-group parquet file, so every scan
-    is one task — and nearly every t-query's first stage runs heavy
-    per-row work there (tokenize, shingle, regex batteries): the whole
-    stage was single-threaded (r12 measured: t49 1.9 s → 0.40 s, t34
-    2.6 → 1.3, t42 2.0 → 1.2, t51 1.5 → 0.78 at 16-way; the cheap
-    queries move ±0.1 s). Partition count derives from the input's
-    plan-stat bytes (~32 KiB of source text per task, env-tunable),
-    capped at defaultParallelism — a multi-file production corpus already
-    scans parallel and takes the cap (guide §2: partitioning from input
-    size, not a constant)."""
-    docs = load_table(spark, sf_dir, "documents")
-    size = int(str(docs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
-    n = max(
-        1,
-        min(spark.sparkContext.defaultParallelism, size // _DOCS_PART_BYTES + 1),
-    )
-    return docs.repartition(n)
+    """The documents corpus spread for the text pipelines: nearly every
+    t-query's first stage runs heavy per-row work (tokenize, shingle,
+    regex batteries), which a one-task single-file scan would run
+    single-threaded."""
+    return fan_out(load_table(spark, sf_dir, "documents"), TEXT)
 
 
 # --------------------------------------------------------------------------
@@ -578,11 +558,9 @@ FP_W = 16   # winnowing window (gram starts)
     """,
 )
 def t09_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
-    # single-file input = one scan task; spread the docs BEFORE the md5-heavy
-    # gram generation so it runs cluster-wide (the shuffle moves only the
-    # short raw texts). Also pre-partitions by the window key.
-    docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    # spread the docs BEFORE the md5-heavy gram generation (the shuffle
+    # moves only the short raw texts), pre-partitioned by the window key
+    docs = fan_out(load_table(spark, sf_dir, "documents"), HEAVY, "doc_id")
     norm = docs.select("doc_id", D.normalize_text("text").alias("t"))
     grams = norm.select(
         "doc_id",

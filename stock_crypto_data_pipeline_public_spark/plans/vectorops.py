@@ -31,7 +31,7 @@ from ..functions.numeric import iavg, oracle_rnd, rnd
 from ..operators import retrieval as RETR
 from ..operators import similarity as S
 from ..scratch import with_scratch
-from ..sources.tables import load_table, local_rows
+from ..sources.tables import HEAVY, fan_out, load_table, local_rows
 from .registry import query
 
 
@@ -76,7 +76,7 @@ def x01_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir).withColumn("nrm", S.norm("embedding", EMB_DIM))
     # single-file corpus = single partition; spread the streamed side so the
     # broadcast nested-loop scoring parallelizes
-    emb = emb.repartition(spark.sparkContext.defaultParallelism, "vec_id")
+    emb = fan_out(emb, HEAVY, "vec_id")
     q = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qe"),
@@ -191,7 +191,7 @@ IVF_K = 8
 )
 def x05_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir).withColumn("nrm", S.norm("embedding", EMB_DIM))
-    emb = emb.repartition(spark.sparkContext.defaultParallelism, "vec_id")
+    emb = fan_out(emb, HEAVY, "vec_id")
     seeds = emb.filter(F.col("vec_id") < IVF_K).select(
         F.col("vec_id").alias("centroid_id"),
         F.col("embedding").alias("ce"),
@@ -265,7 +265,7 @@ IVF_NPROBE = 2
 )
 def x07_ivf_probe_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir).withColumn("nrm", S.norm("embedding", EMB_DIM))
-    emb = emb.repartition(spark.sparkContext.defaultParallelism, "vec_id")
+    emb = fan_out(emb, HEAVY, "vec_id")
     seeds = emb.filter(F.col("vec_id") < IVF_K).select(
         F.col("vec_id").alias("centroid_id"),
         F.col("embedding").alias("ce"),
@@ -587,8 +587,7 @@ def x08_gemm_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             if out:
                 yield pd.concat(out, ignore_index=True)
 
-    par = spark.sparkContext.defaultParallelism
-    cand = emb.repartition(par, "vec_id").mapInPandas(score, schema)
+    cand = fan_out(emb, HEAVY, "vec_id").mapInPandas(score, schema)
     w = W.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
     return cand.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= K)
 
@@ -722,7 +721,7 @@ def x09_pq_adc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # as the previous zip_with/aggregate fold, _l2sq above, and the
     # oracle's list_sum, so doubles stay bit-identical. argmin ties break
     # to the smallest k: array_position returns the FIRST index of the min.
-    spread = emb.repartition(spark.sparkContext.defaultParallelism, "vec_id")
+    spread = fan_out(emb, HEAVY, "vec_id")
     # one projection of the 64 scalar components so each is read once, not
     # once per (k, j) distance term. The big argmin/LUT expressions below
     # are assembled as SQL TEXT and parsed with ONE F.expr each — building
@@ -963,9 +962,7 @@ def x10_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(c, small[c], _nrm(small[c])) for c in range(IVF_K)],
         "centroid_id int, ce array<double>, cnrm double",
     )
-    spread = emb.repartition(
-        spark.sparkContext.defaultParallelism, "vec_id"
-    ).withColumn("nrm", S.norm("embedding", EMB_DIM))
+    spread = fan_out(emb, HEAVY, "vec_id").withColumn("nrm", S.norm("embedding", EMB_DIM))
     sim = S.dot("embedding", "ce", EMB_DIM) / F.nullif(
         F.col("nrm") * F.col("cnrm"), F.lit(0.0)
     )
@@ -1123,7 +1120,7 @@ def _kmeans_oracle() -> str:
 @query("x12_kmeans_refine", oracle=_kmeans_oracle())
 def x12_kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
-    spread = emb.repartition(spark.sparkContext.defaultParallelism, "vec_id")
+    spread = fan_out(emb, HEAVY, "vec_id")
     # seed centroids as true constants (collected once — K rows; float32 →
     # float64 widening is exact, same contract as x09's codebook)
     seeds = local_rows(
@@ -1319,7 +1316,7 @@ def x14_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import connected_components
 
     emb = _emb(spark, sf_dir).withColumn("nrm", S.norm("embedding", EMB_DIM))
-    emb = emb.repartition(spark.sparkContext.defaultParallelism, "vec_id")
+    emb = fan_out(emb, HEAVY, "vec_id")
     seeds = emb.filter(F.col("vec_id") < IVF_K).select(
         F.col("vec_id").alias("centroid_id"),
         F.col("embedding").alias("ce"),
@@ -1418,7 +1415,7 @@ def _sq8_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     (values unchanged — same deterministic expressions)."""
     emb = _emb(spark, sf_dir).withColumn("nrm", S.norm("embedding", EMB_DIM))
     emb = emb.filter(F.col("nrm") > 0)
-    emb = emb.repartition(spark.sparkContext.defaultParallelism, "vec_id")
+    emb = fan_out(emb, HEAVY, "vec_id")
     scaled = emb.withColumn(
         "scale",
         F.array_max(
@@ -2211,11 +2208,11 @@ def x20_binary_quant_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pack once per vector; norms once per side (x01's discipline)
     lo = F.expr(_x20_word_sql(0, base1=False))
     hi = F.expr(_x20_word_sql(1, base1=False))
-    c = emb.select(
+    c = fan_out(emb.select(
         "vec_id", "label", "embedding",
         lo.alias("lo"), hi.alias("hi"),
         S.norm("embedding", EMB_DIM).alias("nrm"),
-    ).repartition(spark.sparkContext.defaultParallelism, "vec_id")
+    ), HEAVY, "vec_id")
     q = c.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qe"),
@@ -2308,11 +2305,11 @@ def x21_binary_quant_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
     lo = F.expr(_x20_word_sql(0, base1=False))
     hi = F.expr(_x20_word_sql(1, base1=False))
-    c = emb.select(
+    c = fan_out(emb.select(
         "vec_id", "embedding",
         S.norm("embedding", EMB_DIM).alias("nrm"),
         lo.alias("lo"), hi.alias("hi"),
-    ).repartition(spark.sparkContext.defaultParallelism, "vec_id")
+    ), HEAVY, "vec_id")
     q = c.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qe"),
@@ -2451,16 +2448,14 @@ def x22_ivf_bq_probe_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     hi = F.expr(_x20_word_sql(1, base1=False))
     # LAZY checkpoint (r11): seeds, the assignment scan and the query
     # slice all read this norm+BQ-code projection — materialize it once
-    emb = (
-        _emb(spark, sf_dir)
-        .select(
+    emb = fan_out(
+        _emb(spark, sf_dir).select(
             "vec_id", "label", "embedding",
             S.norm("embedding", EMB_DIM).alias("nrm"),
             lo.alias("lo"), hi.alias("hi"),
-        )
-        .repartition(spark.sparkContext.defaultParallelism, "vec_id")
-        .localCheckpoint(eager=False)
-    )
+        ),
+        HEAVY, "vec_id",
+    ).localCheckpoint(eager=False)
     seeds = emb.filter(F.col("vec_id") < IVF_K).select(
         F.col("vec_id").alias("centroid_id"),
         F.col("embedding").alias("ce"),
@@ -2627,7 +2622,7 @@ def x23_hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("id", "text_rank")
     )
     emb = _emb(spark, sf_dir).withColumn("nrm", S.norm("embedding", EMB_DIM))
-    emb = emb.repartition(spark.sparkContext.defaultParallelism, "vec_id")
+    emb = fan_out(emb, HEAVY, "vec_id")
     qv = emb.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("qe"), F.col("nrm").alias("qnrm")
     )
@@ -2705,9 +2700,7 @@ def x23_hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def x24_mips_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism, "vec_id"
-    )
+    emb = fan_out(_emb(spark, sf_dir), HEAVY, "vec_id")
     q = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
     )
@@ -2787,11 +2780,11 @@ _X25_K = 5    # exact top-k that must survive
 )
 def x25_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
-    c = emb.select(
+    c = fan_out(emb.select(
         "vec_id", "embedding",
         S.norm("embedding", EMB_DIM).alias("nrm"),
         S.norm("embedding", _X25_P).alias("pnrm"),
-    ).repartition(spark.sparkContext.defaultParallelism, "vec_id")
+    ), HEAVY, "vec_id")
     q = c.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qe"),
@@ -2916,7 +2909,7 @@ _X26_R = 20  # post-filter candidate window
 )
 def x26_filtered_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir).withColumn("nrm", S.norm("embedding", EMB_DIM))
-    emb = emb.repartition(spark.sparkContext.defaultParallelism, "vec_id")
+    emb = fan_out(emb, HEAVY, "vec_id")
     q = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qe"),
@@ -3085,9 +3078,7 @@ def _mips_ann_recall(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame
     cell, so the augmented tier must reproduce the exact MIPS top-5 and
     recall_e4 must be exactly 10000 — the property test that proves the
     norm-augmentation order math (tests/test_properties.py)."""
-    emb = _emb(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism, "vec_id"
-    )
+    emb = fan_out(_emb(spark, sf_dir), HEAVY, "vec_id")
     base = emb.select("vec_id", "embedding", S.dot("embedding", "embedding", EMB_DIM).alias("n2"))
     m = base.agg(F.max("n2").alias("m2"))
     # map-only augmentation: the 1-row max broadcasts (q17 scalar shape).

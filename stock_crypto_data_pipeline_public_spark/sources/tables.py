@@ -86,6 +86,33 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+#: source bytes per task of a :func:`fan_out`, by the per-row cost of the
+#: work after the spread: raster/video decode, 64-dim vector scoring and
+#: md5 gram generation
+HEAVY = 16 * 1024
+#: tokenize, shingle and regex batteries over the documents corpus
+TEXT = 32 * 1024
+#: light media decode ahead of an Arrow-batched Python stage
+MEDIA = 128 * 1024
+
+
+def fan_out(df: DataFrame, bytes_per_task: int, *keys) -> DataFrame:
+    """``df`` repartitioned to one partition per ``bytes_per_task`` of its
+    plan-stat size, capped at ``defaultParallelism``; hash-partitioned on
+    ``keys`` when given, round-robin otherwise.
+
+    The one place a scan spread is sized. A single-file input is one scan
+    task, so heavy per-row work after it would run single-threaded; a flat
+    ``defaultParallelism`` instead gives a small input near-empty
+    partitions whose per-task and Python-worker overhead outweighs the
+    work. Sizing from the input's bytes gives a small input a few full
+    partitions and a large one every core. The exchange runs for a
+    multi-file input too, even when its scan is already parallel."""
+    size = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    n = min(size // bytes_per_task + 1, df.sparkSession.sparkContext.defaultParallelism)
+    return df.repartition(n, *keys)
+
+
 def register_views(spark: SparkSession, sf_dir: str, names=TABLES) -> None:
     """Register temp views so plans can also be expressed via ``spark.sql``."""
     for name in names:

@@ -6,11 +6,7 @@ from stock_crypto_data_pipeline_public_spark.session import env_positive_int
 
 KNOBS = [
     "SPARK_GRAFT_CPUS",
-    "SPARK_GRAFT_DRAIN_PARTITIONS",
-    "SPARK_GRAFT_PY_DRAIN_PARTITIONS",
-    "SPARK_GRAFT_DOCS_PART_BYTES",
-    "SPARK_GRAFT_MEDIA_PART_BYTES",
-    "SPARK_GRAFT_MEDIA_PART_BYTES_HEAVY",
+    "SPARK_GRAFT_BENCH_PASSES",
 ]
 
 
@@ -32,14 +28,14 @@ def test_good_value_and_default(monkeypatch, name):
     assert env_positive_int(name, 7) == 7
 
 
-def test_drain_partitions_knob_is_checked(spark, monkeypatch):
-    """The drain knob is read through the helper: a zero fails before
-    the session conf is touched."""
-    from stock_crypto_data_pipeline_public_spark.plans.streamops import _drain_shuffle
+def test_bench_rejects_zero_passes_before_the_jvm_starts(monkeypatch):
+    """Zero passes would time nothing and report a 0 s bench."""
+    import bench
 
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    monkeypatch.setenv("SPARK_GRAFT_DRAIN_PARTITIONS", "0")
-    with pytest.raises(ValueError, match="SPARK_GRAFT_DRAIN_PARTITIONS"):
-        with _drain_shuffle(spark):
-            pass
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    def no_spark(*args, **kwargs):
+        raise AssertionError("get_spark called before the knob was checked")
+
+    monkeypatch.setattr(bench, "get_spark", no_spark)
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_PASSES", "0")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_BENCH_PASSES"):
+        bench.main()

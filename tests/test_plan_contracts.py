@@ -146,6 +146,62 @@ def test_drain_shuffle_restores_session_conf(spark):
     assert spark.conf.get(key) == before
 
 
+def test_scan_spreads_are_sized_only_by_fan_out():
+    """sources/tables.fan_out is the one place that sizes a scan spread:
+    no ``repartition`` in plans/ or operators/ takes a count built from
+    ``defaultParallelism`` (directly or through a local name), and no
+    module but sources/tables.py reads plan-stat ``sizeInBytes``. Exempt:
+    join-side distributions (t14, x06), blockpair's pair grid and the
+    multimodal operator's frame ordering — none is a scan spread."""
+    import ast
+    from pathlib import Path
+
+    import stock_crypto_data_pipeline_public_spark as pkg
+
+    exempt = {
+        ("plans/textops.py", "t14_blocked_edit_distance"),
+        ("plans/vectorops.py", "x06_bucketed_cosine_neardup"),
+        ("operators/blockpair.py", "block_pair_partials"),
+        ("operators/multimodal.py", "frame_deltas"),
+    }
+    root = Path(pkg.__file__).parent
+    found = []
+
+    def visit(node, rel, fns):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fns = fns + [node]
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "repartition"
+            and node.args
+        ):
+            count = node.args[0]
+            names = {n.id for n in ast.walk(count) if isinstance(n, ast.Name)}
+            sources = [ast.unparse(count)] + [
+                ast.unparse(a.value)
+                for f in fns
+                for a in ast.walk(f)
+                if isinstance(a, ast.Assign)
+                and any(isinstance(t, ast.Name) and t.id in names for t in a.targets)
+            ]
+            if any("defaultParallelism" in src for src in sources) and not any(
+                (rel, f.name) in exempt for f in fns
+            ):
+                found.append(f"{rel}:{node.lineno} repartition({sources[0]}, ...)")
+        for child in ast.iter_child_nodes(node):
+            visit(child, rel, fns)
+
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        src = path.read_text()
+        if "sizeInBytes" in src and rel != "sources/tables.py":
+            found.append(f"{rel}: reads sizeInBytes")
+        if rel.startswith(("plans/", "operators/")):
+            visit(ast.parse(src), rel, [])
+    assert not found, "size scan spreads with sources.tables.fan_out:\n" + "\n".join(found)
+
+
 @pytest.mark.parametrize("fails_at", ["start", "await"])
 def test_drain_stops_its_other_queries_when_one_fails(spark, tmp_path, fails_at):
     """plans/streamops._drain must not leave a started query running when
