@@ -16,14 +16,7 @@ import os
 import sys
 import time
 
-import duckdb
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
 
 
 def main() -> int:
@@ -34,7 +27,9 @@ def main() -> int:
     args = ap.parse_args()
 
     mod = importlib.import_module("__spark_entry__")
-    from stock_crypto_data_pipeline_public_spark.oracle_compare import canon, duck_pdf, spark_pdf, value_hash
+    from stock_crypto_data_pipeline_public_spark.oracle_compare import (
+        canon, duck_connection, duck_pdf, spark_pdf, value_hash,
+    )
     from stock_crypto_data_pipeline_public_spark.plans import registry
     from stock_crypto_data_pipeline_public_spark.session import get_spark
 
@@ -51,11 +46,7 @@ def main() -> int:
     print(f"entry(): {n} rows, cols={edf.columns}")
     assert n > 0, "entry() returned no rows"
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{args.sf_dir}/{t}.parquet')"
-        )
+    con = duck_connection(args.sf_dir)
 
     fails = []
     for name in names:

@@ -221,7 +221,7 @@ def cmd_lifecycle(args, spark: SparkSession) -> int:
         seed = spark.range(100).selectExpr(
             "id AS k", "cast(id % 7 as double) AS v", "CAST(1 AS BIGINT) AS ver"
         )
-        merge_upsert(spark, seed, path, ["k"], "ver", commit="manifest")
+        merge_upsert(spark, seed, path, ["k"], "ver")
         n = MF.read_table(spark, path).count()
         check("write", n == 100, f"seeded rows={n} (want 100)")
 
@@ -232,7 +232,7 @@ def cmd_lifecycle(args, spark: SparkSession) -> int:
         ins = spark.range(100, 110).selectExpr(
             "id AS k", "cast(5 as double) AS v", "CAST(1 AS BIGINT) AS ver"
         )
-        merge_upsert(spark, upd.unionByName(ins), path, ["k"], "ver", commit="manifest")
+        merge_upsert(spark, upd.unionByName(ins), path, ["k"], "ver")
         df = MF.read_table(spark, path)
         n, n_upd = df.count(), df.filter("v = 99.0").count()
         check("merge", n == 110 and n_upd == 20, f"rows={n} updated={n_upd} (want 110/20)")

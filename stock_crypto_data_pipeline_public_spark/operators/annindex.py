@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from ..functions.numeric import rnd
 from ..sources.tables import local_rows
 from . import similarity as S
+from .manifest import replace_file
 
 
 def _centroids_path(index_dir: str) -> str:
@@ -145,18 +146,11 @@ def build_ann_index(
         F.expr("percentile_approx(assign_sim, 0.5)").alias("median_sim"),
     ).first()
     os.makedirs(index_dir, exist_ok=True)
-    tmp = _centroids_path(index_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump([[float(x) for x in c] for c in centroids], f)
-    os.replace(tmp, _centroids_path(index_dir))
-    tmp = _baseline_path(index_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(
-            {"n": stats["n"], "mean_sim": stats["mean_sim"],
-             "std_sim": stats["std_sim"], "median_sim": stats["median_sim"]},
-            f,
-        )
-    os.replace(tmp, _baseline_path(index_dir))
+    replace_file(
+        _centroids_path(index_dir),
+        json.dumps([[float(x) for x in c] for c in centroids]),
+    )
+    replace_file(_baseline_path(index_dir), json.dumps(stats.asDict()))
     n = spark.read.parquet(_vectors_path(index_dir)).count() if verify else -1
     return {"n_vectors": n, "n_centroids": len(centroids)}
 

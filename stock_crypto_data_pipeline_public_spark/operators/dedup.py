@@ -390,15 +390,15 @@ def read_neardup_edges(spark, edges_path: str) -> DataFrame:
 
 def compact_neardup_edges(spark, edges_path: str) -> dict:
     """Rewrite the edges log as its distinct set (the maintenance pass
-    read_neardup_edges assumes): one hash-aggregate + the same atomic
-    rename-aside swap every in-place rewrite uses — readers mid-scan keep
-    a complete log at every instant. Returns row counts before/after."""
-    from .incremental import swap_into_place
+    read_neardup_edges assumes): one hash-aggregate, committed atomically
+    by ``manifest.rewrite`` — readers mid-scan keep a complete log at every
+    instant. Returns row counts before/after."""
+    from .manifest import rewrite
 
     raw = spark.read.parquet(edges_path)
     n_before = raw.count()
-    staging = edges_path.rstrip("/") + ".__staging__"
-    raw.distinct().write.mode("overwrite").parquet(staging)
-    swap_into_place(staging, edges_path)
-    n_after = spark.read.parquet(edges_path).count()
+    live = rewrite(
+        edges_path, lambda out: raw.distinct().write.mode("overwrite").parquet(out)
+    )
+    n_after = spark.read.parquet(live).count()
     return {"n_rows_before": n_before, "n_rows_after": n_after}

@@ -29,18 +29,15 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from . import manifest as MF
+
 LOW_WATERMARK = "1900-01-01 00:00:00"
-
-
-def table_exists(spark: SparkSession, path: str) -> bool:
-    # local/posix check is fine for file: paths; on S3A use the Hadoop FS API
-    return os.path.exists(path)
 
 
 def high_water_mark(spark: SparkSession, path: str, ts_col: str):
     """coalesce(max(ts), LOW_WATERMARK) of the target — a 1-row scan of one
     column (parquet footer stats make this near-free)."""
-    if not table_exists(spark, path):
+    if not os.path.exists(path):
         return None
     row = spark.read.parquet(path).agg(F.max(ts_col).alias("hwm")).first()
     return row["hwm"]
@@ -65,13 +62,13 @@ def idempotent_append(
     Returns the number of rows appended. Within-batch duplicates are also
     collapsed (reference consumers dedup per batch)."""
     new = source.dropDuplicates(list(keys))
-    if table_exists(spark, path):
+    if os.path.exists(path):
         existing = spark.read.parquet(path).select(*keys)
         new = new.join(existing, on=list(keys), how="left_anti")
     new = new.persist()
     try:
         n = new.count()
-        if n or not table_exists(spark, path):
+        if n or not os.path.exists(path):
             # an empty FIRST write still materializes the target (schema +
             # directory): downstream readers (vault_tables → marts) need
             # every model present, and an absent target otherwise forces
@@ -91,32 +88,16 @@ def merge_upsert(
     path: str,
     keys: Sequence[str],
     version_col: str,
-    commit: str = "swap",
 ) -> None:
     """MERGE emulation (M1): last-wins by key across (target ∪ source),
-    source preferred on version ties. The merged table is fully written
-    OUTSIDE the live directory first, then committed; the target is never
-    in a partial state. Two commit protocols:
-
-    - ``commit='swap'`` (default): staging write + directory rename-aside
-      (``swap_into_place``). Always-a-complete-table on POSIX filesystems;
-      directory rename is NOT atomic on object stores.
-    - ``commit='manifest'``: pointer-file generations
-      (operators/manifest.py) — the commit is replacing ONE small manifest
-      file, atomic on object stores too (single PUT). The table lives at
-      ``path/gen-NNNNNN`` resolved via ``path/_current``; read it back
-      with ``manifest.read_table`` (plain-table readers are unaffected —
-      resolve_table passes non-manifest paths through).
-
-    (Delta/Iceberg MERGE INTO replaces this body at deploy; the manifest
-    protocol is the same pointer-flip idea those formats use.)"""
-    from . import manifest as MF
-
-    if commit not in ("swap", "manifest"):
-        raise ValueError(f"commit must be 'swap' or 'manifest', got {commit!r}")
-    live = MF.resolve_table(path) if commit == "manifest" else path
+    source preferred on version ties. The merged table is written in full
+    outside the live state and committed by ``manifest.rewrite``, so the
+    target is never seen partial; a new target becomes a manifest table
+    (read it back with ``manifest.read_table``), an existing one keeps its
+    layout. (Delta/Iceberg MERGE INTO replaces this body at deploy.)"""
+    live = MF.live_table(path)
     src = source.withColumn("__prio", F.lit(1))
-    if table_exists(spark, live) and (commit == "swap" or MF.is_manifest_table(path)):
+    if live is not None:
         tgt = spark.read.parquet(live).withColumn("__prio", F.lit(0))
         merged = tgt.unionByName(src)
     else:
@@ -127,46 +108,7 @@ def merge_upsert(
         .filter(F.col("__rn") == 1)
         .drop("__rn", "__prio")
     )
-    if commit == "manifest":
-        MF.commit_generation(
-            path, lambda gen: result.write.mode("overwrite").parquet(gen)
-        )
-        return
-    staging = path.rstrip("/") + ".__staging__"
-    result.write.mode("overwrite").parquet(staging)  # reads the live target
-    swap_into_place(staging, path)
-
-
-def swap_into_place(staging: str, path: str) -> None:
-    """Swap a fully-written staging directory over the live target: rename
-    the live target ASIDE first, then staging into place, then delete the
-    old copy — a complete table exists at every instant, so a crash
-    mid-swap (or a concurrent reader) never sees a missing target
-    (rmtree-then-rename had a window where the table didn't exist at all).
-    os.rename fails across filesystems (EXDEV) — fall back to copy+delete.
-    Shared by merge_upsert and maintenance.compact_table."""
-    import errno
-    import os
-    import shutil
-
-    target = path.rstrip("/")
-    old = target + ".__old__"
-    if os.path.isdir(old):  # leftover from a crashed previous swap
-        shutil.rmtree(old)
-    if os.path.isdir(target):
-        os.rename(target, old)
-    try:
-        os.rename(staging, target)
-    except OSError as e:
-        if e.errno != errno.EXDEV:
-            # put the live table back before propagating
-            if os.path.isdir(old) and not os.path.isdir(target):
-                os.rename(old, target)
-            raise
-        shutil.copytree(staging, target)
-        shutil.rmtree(staging)
-    if os.path.isdir(old):
-        shutil.rmtree(old)
+    MF.rewrite(path, lambda out: result.write.mode("overwrite").parquet(out))
 
 
 def incremental_run(

@@ -8,8 +8,8 @@ answer (Delta OPTIMIZE / Iceberg rewrite_data_files re-expressed over plain
 Parquet):
 
 - ``compact_table``: rewrite a fragmented table into ~``target_bytes``
-  files, atomically (staging write + the same always-a-complete-table swap
-  ``merge_upsert`` uses).
+  files, committed atomically by ``manifest.rewrite`` like every other
+  whole-table rewrite.
 - ``write_range_sorted``: repartitionByRange + sortWithinPartitions so each
   parquet file owns a disjoint range of the sort key — parquet min/max
   footer stats then let ANY engine (Spark, DuckDB, Trino) skip whole files
@@ -32,7 +32,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .incremental import swap_into_place
+from . import manifest as MF
 
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
 
@@ -80,20 +80,12 @@ def compact_table(
     """Rewrite ``path`` into ``ceil(bytes / target_bytes)`` files and swap
     the result into place atomically. With ``sort_cols`` the rewrite is a
     range-partitioned sort (see ``write_range_sorted``) so compaction and
-    skip-friendly clustering happen in the same single rewrite. Manifest
-    tables (operators/manifest.py) compact through their pointer protocol
-    — the compacted state becomes the next generation.
+    skip-friendly clustering happen in the same single rewrite.
 
     Returns {"n_files_before", "n_files_after", "bytes"} so callers can
     log/alert on compaction effectiveness.
     """
-    from . import manifest as MF
-
-    # a manifest table compacts through its OWN commit protocol: read the
-    # live generation, write the coalesced state as the next generation,
-    # flip the pointer. (Reading the root directly would scan every
-    # retained generation — duplicate rows — and a directory swap would
-    # fight the pointer.)
+    # read the live generation: a manifest root holds every retained one
     live = MF.resolve_table(path)
     _reject_partitioned_root(live, "compact_table(spark, f'{path}/<partition>')")
     before = table_stats(live)
@@ -107,14 +99,7 @@ def compact_table(
             # coalesce, not repartition: narrowing requires no shuffle
             df.coalesce(n_out).write.parquet(out, mode="overwrite")
 
-    if live != path:  # manifest table
-        after_dir = MF.commit_generation(path, _write)
-    else:
-        staging = path.rstrip("/") + ".__staging__"
-        _write(staging)
-        swap_into_place(staging, path)
-        after_dir = path
-    after = table_stats(after_dir)
+    after = table_stats(MF.rewrite(path, _write))
     return {
         "n_files_before": before["n_files"],
         "n_files_after": after["n_files"],
@@ -131,7 +116,7 @@ def compact_partitioned_table(
     """Per-partition compaction for a hive-partitioned ROOT — the layout
     :func:`compact_table` deliberately refuses (a flat rewrite would
     destroy directory pruning). Each ``key=value`` partition directory is
-    rewritten independently with the same rename-aside swap, so the
+    rewritten independently by :func:`compact_table`, so the
     partition column values, directory layout, and every ROW are byte-
     identical afterwards — only the file count changes. This is the
     maintenance entry point for the append-log sinks that grow one file
@@ -318,30 +303,20 @@ def zorder_table(
     n_partitions: int,
     bits: int = 8,
 ) -> dict:
-    """In-place z-order rewrite of a plain-parquet table (Delta OPTIMIZE
+    """In-place z-order rewrite of a parquet table (Delta OPTIMIZE
     ZORDER parity): guard against partitioned roots, cluster into
     ``n_partitions`` tile-aligned files (``write_zordered``), and swap the
-    result in atomically — the same always-a-complete-table contract as
-    ``compact_table``, including the manifest-table generation commit.
-    Returns the before/after file stats."""
-    from . import manifest as MF
-
-    live = MF.resolve_table(path)  # manifest tables rewrite via the pointer
+    result in atomically through ``manifest.rewrite``, like
+    ``compact_table``. Returns the before/after file stats."""
+    live = MF.resolve_table(path)
     _reject_partitioned_root(
         live, "zorder_table(spark, f'{path}/<partition>', ...)"
     )
     before = table_stats(live)
     df = spark.read.parquet(live)
-    if live != path:  # manifest table: the rewrite is the next generation
-        after_dir = MF.commit_generation(
-            path, lambda out: write_zordered(df, out, zorder_cols, n_partitions, bits)
-        )
-    else:
-        staging = path.rstrip("/") + ".__staging__"
-        write_zordered(df, staging, zorder_cols, n_partitions, bits)
-        swap_into_place(staging, path)
-        after_dir = path
-    after = table_stats(after_dir)
+    after = table_stats(MF.rewrite(
+        path, lambda out: write_zordered(df, out, zorder_cols, n_partitions, bits)
+    ))
     return {
         "n_files_before": before["n_files"],
         "n_files_after": after["n_files"],
@@ -359,13 +334,11 @@ def delete_where(
     compact/zorder family was missing. SQL DELETE semantics: rows where
     ``condition`` evaluates TRUE are removed; FALSE **and NULL** rows are
     kept (``~coalesce(cond, false)``). The surviving table is fully
-    written outside the live state and committed with the same
-    always-a-complete-table protocols as ``compact_table`` — rename-aside
-    swap for plain tables, next-generation pointer flip for manifest
-    tables (where the pre-delete state stays readable via
-    ``manifest.read_table(path, generation=...)`` until GC, which is the
-    audit trail a deletion workflow wants... and the retention knob a
-    STRICT erasure wants turned to ``keep_history=0`` + compaction).
+    written outside the live state and committed by ``manifest.rewrite``.
+    On a manifest table the pre-delete state stays readable via
+    ``manifest.read_table(path, generation=...)`` until GC: the audit trail
+    a deletion workflow wants, which a STRICT erasure removes with
+    ``manifest.vacuum(path, keep_history=0)``.
 
     ``condition`` is a Column or a SQL string (``F.expr``-parsed). Row
     counts cost a zero-column parquet scan each (cheap — no data pages
@@ -375,7 +348,6 @@ def delete_where(
     """
     from pyspark.sql import Column
     from pyspark.sql import functions as F
-    from . import manifest as MF
 
     cond = F.expr(condition) if isinstance(condition, str) else condition
     if not isinstance(cond, Column):
@@ -386,15 +358,7 @@ def delete_where(
     n_before = df.count()  # parquet count pushdown — metadata only
     kept = df.filter(~F.coalesce(cond, F.lit(False)))
 
-    if live != path:  # manifest table: the delete is the next generation
-        after_dir = MF.commit_generation(
-            path, lambda out: kept.write.mode("overwrite").parquet(out)
-        )
-    else:
-        staging = path.rstrip("/") + ".__staging__"
-        kept.write.mode("overwrite").parquet(staging)
-        swap_into_place(staging, path)
-        after_dir = path
+    after_dir = MF.rewrite(path, lambda out: kept.write.mode("overwrite").parquet(out))
     n_after = spark.read.parquet(after_dir).count()
     return {
         "n_before": n_before,

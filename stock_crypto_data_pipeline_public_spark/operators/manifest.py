@@ -1,10 +1,16 @@
-"""Pointer-file (manifest) table commits: atomicity without directory rename.
+"""Table commits: the one module that knows how a whole table is replaced.
 
-``swap_into_place`` (incremental.py) keeps a complete table visible at every
-instant on a POSIX filesystem, but its primitive — directory rename — is not
-atomic on object stores (S3A renames are copy+delete per object), and the
-declared production target is object storage (SCALE.md). This module is the
-table-format-free answer: commit = replacing ONE small manifest file.
+:func:`rewrite` is the entry point every whole-table rewriter calls
+(MERGE, compaction, z-order, DELETE, the dedup and sketch compactions). It
+keeps a table's layout: a manifest table, or a path with no table yet
+(:func:`live_table`), commits the next generation through a pointer flip;
+an existing plain parquet table is staged beside itself and swapped in
+rename-aside
+(:func:`swap_into_place`). Directory rename keeps a complete table visible
+at every instant on a POSIX filesystem but is not atomic on object stores
+(S3A renames are copy+delete per object), and the declared production
+target is object storage (SCALE.md) — so new tables are manifest tables,
+whose commit is replacing ONE small file (:func:`replace_file`).
 
 Layout::
 
@@ -37,6 +43,7 @@ plain parquet.
 
 from __future__ import annotations
 
+import errno
 import os
 import shutil
 from collections.abc import Callable
@@ -46,6 +53,16 @@ from pyspark.sql import DataFrame, SparkSession
 CURRENT = "_current"
 LOG = "_log"
 _GEN_PREFIX = "gen-"
+
+
+def replace_file(path: str, text: str) -> None:
+    """Atomically replace the small file ``path`` with ``text``: write a
+    sibling temp file, then ``os.replace`` it over ``path`` (a single
+    small PUT on an object store)."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.replace(tmp, path)
 
 
 def is_manifest_table(path: str) -> bool:
@@ -68,11 +85,30 @@ def current_generation(path: str) -> str | None:
     return gen_path
 
 
+def live_table(path: str) -> str | None:
+    """The directory holding the live rows at ``path``: the live generation
+    of a manifest table, ``path`` itself for a plain parquet table — or
+    None when there is no table yet. A missing or empty path counts as
+    new, and so does one holding only what a crashed first commit left
+    (``gen-*`` dirs, ``_current.tmp``, ``_log``): the next commit GCs those."""
+    cur = current_generation(path)
+    if cur is not None:
+        return cur
+    if not os.path.exists(path):
+        return None
+    if os.path.isdir(path):
+        names = os.listdir(path)
+        if not names or any(
+            n.startswith(_GEN_PREFIX) or n in (CURRENT + ".tmp", LOG) for n in names
+        ):
+            return None
+    return path
+
+
 def resolve_table(path: str) -> str:
-    """The directory a reader should scan: the live generation for a
-    manifest table, the path itself for a plain parquet table — so readers
-    are layout-agnostic."""
-    return current_generation(path) or path
+    """The directory a reader should scan: :func:`live_table`, or the path
+    itself when there is no table yet — so readers are layout-agnostic."""
+    return live_table(path) or path
 
 
 def read_table(
@@ -169,12 +205,7 @@ def commit_generation(
     gen_path = os.path.join(path, gen)
     write_fn(gen_path)
 
-    # THE commit: replace the one-file manifest (os.replace locally; a
-    # single small PUT on an object store)
-    tmp = os.path.join(path, CURRENT + ".tmp")
-    with open(tmp, "w") as f:
-        f.write(gen + "\n")
-    os.replace(tmp, os.path.join(path, CURRENT))
+    replace_file(os.path.join(path, CURRENT), gen + "\n")  # THE commit
     # commit log (after the flip — a crash before this line only loses the
     # HISTORY entry, never the commit): the log records generations that
     # actually WERE current, so orphans from crashed commits never gain a
@@ -205,6 +236,52 @@ def commit_generation(
         if d not in survivors:
             shutil.rmtree(os.path.join(path, d), ignore_errors=True)
     return gen_path
+
+
+def swap_into_place(staging: str, path: str) -> None:
+    """Swap a fully-written staging directory over the live target: rename
+    the live target ASIDE first, then staging into place, then delete the
+    old copy — a complete table exists at every instant, so a crash
+    mid-swap (or a concurrent reader) never sees a missing target.
+    os.rename fails across filesystems (EXDEV) — fall back to copy+delete."""
+    target = path.rstrip("/")
+    old = target + ".__old__"
+    if os.path.isdir(old):  # leftover from a crashed previous swap
+        shutil.rmtree(old)
+    if os.path.isdir(target):
+        os.rename(target, old)
+    try:
+        os.rename(staging, target)
+    except OSError as e:
+        if e.errno != errno.EXDEV:
+            # put the live table back before propagating
+            if os.path.isdir(old) and not os.path.isdir(target):
+                os.rename(old, target)
+            raise
+        shutil.copytree(staging, target)
+        shutil.rmtree(staging)
+    if os.path.isdir(old):
+        shutil.rmtree(old)
+
+
+def rewrite(path: str, write_fn: Callable[[str], None]) -> str:
+    """Replace the whole table at ``path`` with what ``write_fn(out)``
+    writes into the fresh directory ``out``; return the directory now live.
+
+    The layout is kept: a manifest table, or a path with no table yet
+    (:func:`live_table` is None), commits a generation
+    (:func:`commit_generation`); an existing plain table is written to
+    ``path + ".__staging__"`` and swapped in (:func:`swap_into_place`).
+    Either way ``write_fn`` may read the live table — nothing replaces it
+    until the write is complete."""
+    if is_manifest_table(path) or live_table(path) is None:
+        return commit_generation(path, write_fn)
+    target = path.rstrip("/")
+    staging = target + ".__staging__"
+    shutil.rmtree(staging, ignore_errors=True)  # a crashed rewrite's leftover
+    write_fn(staging)
+    swap_into_place(staging, target)
+    return target
 
 
 def vacuum(path: str, keep_history: int = 1) -> dict:

@@ -12,7 +12,7 @@ That path is dtype-sensitive in ways plain ``fetchall()`` is not:
   pandas ``datetime64[ns]`` and error out before any comparison runs.
 
 This module reproduces both behaviours so the local suite fails exactly
-where the driver would. Used by ``tests/oracle_harness.py`` and
+where the driver would. Used by ``tests/test_oracle_parity.py`` and
 ``scripts/verify_contract.py``.
 
 RESOLVED (round 8→10 divergence saga, closed in round 11): the driver's
@@ -46,11 +46,25 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 from datetime import date, datetime
 from decimal import Decimal
 
 import numpy as np
 import pandas as pd
+
+
+def duck_connection(sf_dir: str):
+    """DuckDB connection with one view per generated table of ``sf_dir``."""
+    import duckdb
+
+    from .sources.tables import TABLES
+
+    con = duckdb.connect()
+    for t in TABLES:
+        path = os.path.join(sf_dir, f"{t}.parquet")
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    return con
 
 
 def spark_pdf(df) -> pd.DataFrame:

@@ -2081,12 +2081,10 @@ def q44_manifest_time_travel(spark: SparkSession, sf_dir: str, base: str) -> Dat
         "version", F.lit(1)
     )
     merge_upsert(
-        spark, stale, tbl, keys=["o_orderkey"], version_col="version",
-        commit="manifest",
+        spark, stale, tbl, keys=["o_orderkey"], version_col="version"
     )  # generation 0
     merge_upsert(
-        spark, corrections, tbl, keys=["o_orderkey"], version_col="version",
-        commit="manifest",
+        spark, corrections, tbl, keys=["o_orderkey"], version_col="version"
     )  # generation 1 (current)
     commits = history(tbl)  # newest first; generation ids start at 1
     n_gens = len(commits)

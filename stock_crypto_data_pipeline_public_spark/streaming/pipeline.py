@@ -30,7 +30,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType, TimestampNTZType
 
-from ..operators.incremental import idempotent_append, merge_upsert, swap_into_place
+from ..operators.incremental import idempotent_append, merge_upsert
+from ..operators.manifest import replace_file, rewrite, swap_into_place
 from ..sources.tables import local_rows
 
 
@@ -298,8 +299,7 @@ def land_sketch_epoch(
          the OLD ``epoch<=N`` partitions: the consistent pre-wipe prefix,
          never a mix;
       3. atomically rename-swap the staged partition over ``epoch=N``
-         (operators/incremental.swap_into_place — the compact_sketch
-         idiom).
+         (``manifest.swap_into_place``).
 
     A crash after 2 leaves a stale-but-consistent prefix view that the
     resumed replay (same epoch_id, still <= pointer) repairs by re-running
@@ -325,11 +325,8 @@ def land_sketch_epoch(
 def _flip_max_epoch(sketch_dir: str, epoch_id: int) -> None:
     """Atomically point ``_max_epoch`` at ``epoch_id`` — intentionally NOT
     monotonic: a checkpoint-wipe replay must be able to lower it. One small
-    file replace = one PUT on an object store (manifest.py's argument)."""
-    tmp = os.path.join(sketch_dir, f".{_MAX_EPOCH}.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(epoch_id))
-    os.replace(tmp, os.path.join(sketch_dir, _MAX_EPOCH))
+    file replace = one PUT on an object store."""
+    replace_file(os.path.join(sketch_dir, _MAX_EPOCH), str(epoch_id))
 
 
 def _live_max_epoch(sketch_dir: str) -> int | None:
@@ -360,11 +357,11 @@ def compact_sketch(spark: SparkSession, sketch_dir: str) -> dict:
     ``epoch=<max_epoch>`` partition and drop the rest of the log — the
     maintenance pass that stops read cost growing with epoch count
     (dedup.compact_neardup_edges' idea on the sketch layout). The rewrite
-    stages next to the live dir and swaps atomically (rename-aside), so a
-    reader mid-scan keeps a complete log; run it between drains — the
-    pointer keeps naming ``max_epoch``, the stream's next epoch ids are
-    strictly larger, and a post-wipe replay starts by lowering the
-    pointer, so the compacted partition can never be double-counted.
+    commits through ``manifest.rewrite``, so a reader mid-scan keeps a
+    complete log; run it between drains — the pointer keeps naming
+    ``max_epoch``, the stream's next epoch ids are strictly larger, and a
+    post-wipe replay starts by lowering the pointer, so the compacted
+    partition can never be double-counted.
     Returns epoch-partition counts before/after."""
     live = _live_max_epoch(sketch_dir)
     merged = read_sketch(spark, sketch_dir)
@@ -377,12 +374,12 @@ def compact_sketch(spark: SparkSession, sketch_dir: str) -> dict:
             for e in os.listdir(sketch_dir)
             if e.startswith("epoch=")
         )
-    staging = sketch_dir.rstrip("/") + ".__staging__"
-    merged.coalesce(1).write.mode("overwrite").parquet(
-        f"{staging}/epoch={live}"
-    )
-    _flip_max_epoch(staging, live)
-    swap_into_place(staging, sketch_dir)
+
+    def _write(out: str) -> None:
+        merged.coalesce(1).write.mode("overwrite").parquet(f"{out}/epoch={live}")
+        _flip_max_epoch(out, live)
+
+    rewrite(sketch_dir, _write)
     return {"n_epochs_before": n_before, "n_epochs_after": 1, "max_epoch": live}
 
 
@@ -422,10 +419,10 @@ def run_manifest_merge_sink(
     checkpoint: str,
     transform: Callable[[DataFrame], DataFrame] | None = None,
 ):
-    """writeStream → foreachBatch(merge_upsert, commit='manifest'): each
-    micro-batch MERGEs into a pointer-file generation table — the
-    streaming CDC-apply path onto the object-store-atomic commit protocol
-    (operators/manifest.py), i.e. the shape Delta's streaming MERGE has.
+    """writeStream → foreachBatch(merge_upsert): each micro-batch MERGEs
+    into the table at ``table_path`` — a pointer-file generation table when
+    the sink creates it (operators/manifest.py), i.e. the shape Delta's
+    streaming MERGE has.
 
     Correctness under replay: foreachBatch is at-least-once (a crash
     between the merge commit and the checkpoint commit replays the epoch).
@@ -443,10 +440,7 @@ def run_manifest_merge_sink(
     regardless of table size."""
     def handle(batch: DataFrame, epoch_id: int) -> None:
         df = transform(batch) if transform else batch
-        merge_upsert(
-            batch.sparkSession, df, table_path, keys, version_col,
-            commit="manifest",
-        )
+        merge_upsert(batch.sparkSession, df, table_path, keys, version_col)
 
     return _drain_foreach_batch(stream, handle, checkpoint)
 

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.incremental import high_water_mark, idempotent_append
+from .operators.manifest import replace_file
 from .plans.market import registry as market_registry
 from .flows import load_raw_tables
 
@@ -92,10 +93,10 @@ class VaultMaterializer:
 
     def _save_markers(self, markers: dict[str, datetime]) -> None:
         os.makedirs(self.vault_dir, exist_ok=True)
-        tmp = self._markers_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({k: v.isoformat() for k, v in markers.items()}, f)
-        os.replace(tmp, self._markers_path())
+        replace_file(
+            self._markers_path(),
+            json.dumps({k: v.isoformat() for k, v in markers.items()}),
+        )
 
     def run_increment(self, spark: SparkSession) -> dict[str, int]:
         """One incremental run: HWM-filter the raw tables, rebuild the vault

@@ -339,6 +339,9 @@ def test_cli_lifecycle_smoke(spark, tmp_path, capsys):
                               "CAST(1 AS BIGINT) AS ver").write.parquet(live)
     path2 = str(tmp_path / "fresh")
     assert cmd_lifecycle(_A(path=path2), spark) == 0  # fresh path still green
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    assert cmd_lifecycle(_A(path=str(empty)), spark) == 0  # existing empty dir too
 
 
 def test_cli_psi_drift_alert(spark, tmp_path):

@@ -10,6 +10,7 @@ from stock_crypto_data_pipeline_public_spark.operators.incremental import (
     incremental_run,
     merge_upsert,
 )
+from stock_crypto_data_pipeline_public_spark.operators.manifest import read_table
 
 
 def _orders(spark, sf_dir):
@@ -59,7 +60,7 @@ def test_merge_upsert_last_wins(spark, sf_dir, tmp_path):
         "o_orderkey", "o_totalprice", F.lit(1).alias("version")
     )
     merge_upsert(spark, orders, target, ["o_orderkey"], "version")
-    before = spark.read.parquet(target)
+    before = read_table(spark, target)
     assert before.count() == orders.count()
 
     updates = (
@@ -68,7 +69,7 @@ def test_merge_upsert_last_wins(spark, sf_dir, tmp_path):
         .withColumn("version", F.lit(2))
     )
     merge_upsert(spark, updates, target, ["o_orderkey"], "version")
-    after = spark.read.parquet(target)
+    after = read_table(spark, target)
     assert after.count() == orders.count()  # no duplicates
     updated = after.filter(F.col("version") == 2)
     assert updated.count() == updates.count()
@@ -89,7 +90,7 @@ def test_merge_upsert_source_wins_on_version_tie(spark, sf_dir, tmp_path):
     merge_upsert(spark, orders, target, ["o_orderkey"], "version")
     same_version = orders.withColumn("o_totalprice", F.col("o_totalprice") + 1)
     merge_upsert(spark, same_version, target, ["o_orderkey"], "version")
-    after = spark.read.parquet(target)
+    after = read_table(spark, target)
     # source preferred on tie -> all prices bumped
     orig = orders.selectExpr("o_orderkey", "o_totalprice AS orig_price")
     assert (
@@ -102,16 +103,17 @@ def test_merge_upsert_source_wins_on_version_tie(spark, sf_dir, tmp_path):
 
 def test_merge_upsert_recovers_from_crashed_swap(spark, sf_dir, tmp_path):
     """A leftover .__old__ directory (crash between rename-aside and
-    cleanup) must not break the next merge, and no transient state ever
-    removes the live target before the staging copy is in place."""
+    cleanup) must not break the next merge into a plain table, and no
+    transient state ever removes the live target before the staging copy
+    is in place."""
     import os
 
     target = str(tmp_path / "t")
     orders = _orders(spark, sf_dir).select(
         "o_orderkey", "o_totalprice", F.lit(1).alias("version")
     )
-    merge_upsert(spark, orders, target, ["o_orderkey"], "version")
-    n = spark.read.parquet(target).count()
+    orders.write.parquet(target)  # a plain target: the merge swaps it
+    n = read_table(spark, target).count()
 
     # simulate the crash window: previous old copy still on disk
     os.makedirs(target + ".__old__", exist_ok=True)
@@ -120,7 +122,7 @@ def test_merge_upsert_recovers_from_crashed_swap(spark, sf_dir, tmp_path):
 
     updates = orders.withColumn("version", F.lit(2))
     merge_upsert(spark, updates, target, ["o_orderkey"], "version")
-    after = spark.read.parquet(target)
+    after = read_table(spark, target)
     assert after.count() == n
     assert after.filter(F.col("version") != 2).count() == 0
     # both transient directories are cleaned up

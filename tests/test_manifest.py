@@ -99,32 +99,102 @@ def test_corrupt_pointer_raises_instead_of_reading_empty(spark, tmp_path):
         MF.resolve_table(path)
 
 
-def test_merge_upsert_manifest_commit_matches_swap_semantics(spark, tmp_path):
-    """merge_upsert(commit='manifest') produces the identical merged state
-    as the swap protocol, readable through the pointer, with last-wins +
-    source-preferred-on-ties semantics intact across two upserts."""
+def test_merge_upsert_keeps_plain_layout_and_creates_manifest_tables(spark, tmp_path):
+    """merge_upsert commits through manifest.rewrite, which keeps a table's
+    layout: a merge into a seeded plain table keeps its rows and stays
+    plain, a merge into a new path creates a manifest table, and both hold
+    the same last-wins, source-preferred-on-ties state."""
     base = spark.createDataFrame(
         [(1, "a", 10), (2, "b", 10), (3, "c", 10)], "k int, v string, ver int"
     )
     upd = spark.createDataFrame(
         [(2, "B", 20), (3, "C", 10), (4, "d", 5)], "k int, v string, ver int"
     )
-    swap_path = str(tmp_path / "swap")
-    man_path = str(tmp_path / "man")
-    for p, commit in ((swap_path, "swap"), (man_path, "manifest")):
-        merge_upsert(spark, base, p, ["k"], "ver", commit=commit)
-        merge_upsert(spark, upd, p, ["k"], "ver", commit=commit)
-    got_swap = sorted(map(tuple, spark.read.parquet(swap_path).collect()))
-    got_man = sorted(map(tuple, MF.read_table(spark, man_path).collect()))
-    assert got_swap == got_man == [(1, "a", 10), (2, "B", 20), (3, "C", 10), (4, "d", 5)]
-    # the manifest table is the generation layout, not a flat dir
-    assert MF.is_manifest_table(man_path)
+    plain = str(tmp_path / "plain")
+    base.write.parquet(plain)
+    merge_upsert(spark, upd, plain, ["k"], "ver")
+    fresh = str(tmp_path / "fresh")
+    merge_upsert(spark, base, fresh, ["k"], "ver")
+    merge_upsert(spark, upd, fresh, ["k"], "ver")
+
+    assert not MF.is_manifest_table(plain)
+    assert MF.is_manifest_table(fresh)
+    got_plain = sorted(map(tuple, spark.read.parquet(plain).collect()))
+    got_fresh = sorted(map(tuple, MF.read_table(spark, fresh).collect()))
+    assert got_plain == got_fresh == [
+        (1, "a", 10), (2, "B", 20), (3, "C", 10), (4, "d", 5)
+    ]
 
 
-def test_merge_upsert_manifest_rejects_unknown_commit(spark, tmp_path):
+def test_rewrite_of_a_plain_table_ignores_a_crashed_rewrites_staging(spark, tmp_path):
+    """A ``.__staging__`` dir left by a crashed rewrite must not leak into
+    the next one: a write_fn that adds one partition (compact_sketch's
+    shape) would otherwise swap in the stale partitions beside it."""
+    path = str(tmp_path / "t")
+    spark.range(3).write.parquet(f"{path}/epoch=1")
+    spark.range(100).write.parquet(f"{path}.__staging__/epoch=0")  # the crash
+    live = MF.rewrite(path, lambda out: spark.range(5).write.parquet(f"{out}/epoch=2"))
+    assert live == path and not MF.is_manifest_table(path)
+    assert sorted(os.listdir(path)) == ["epoch=2"]
+    assert not os.path.exists(path + ".__staging__")
+
+
+@pytest.mark.parametrize("crash", ["partial_write", "complete_write", "pointer_flip"])
+def test_merge_upsert_retries_a_crashed_first_commit_as_a_manifest_table(
+    spark, tmp_path, monkeypatch, crash
+):
+    """A first merge into a new path that dies mid-commit leaves the path
+    existing but with no ``_current``: a partial or complete orphan
+    ``gen-*`` dir, or a ``_current.tmp`` from a failed flip. The replayed
+    merge (a foreachBatch epoch retry) must still see a new table — not
+    read the orphan, not turn the path into a plain table — and commit a
+    manifest table holding exactly the merged rows."""
+    path = str(tmp_path / "t")
+    df = spark.createDataFrame([(1, "a", 1), (2, "b", 1)], "k int, v string, ver int")
+    rewrite = MF.rewrite
+
+    def crashing_rewrite(p, write_fn):
+        def crashing_write(out):
+            if crash == "partial_write":
+                os.makedirs(os.path.join(out, "_temporary"))
+            else:
+                write_fn(out)
+            if crash != "pointer_flip":
+                raise RuntimeError("job aborted")
+
+        return rewrite(p, crashing_write)
+
+    def failing_flip(p, text):
+        with open(p + ".tmp", "w") as f:
+            f.write(text)
+        raise OSError("pointer PUT failed")
+
+    monkeypatch.setattr(MF, "rewrite", crashing_rewrite)
+    if crash == "pointer_flip":
+        monkeypatch.setattr(MF, "replace_file", failing_flip)
+    with pytest.raises((RuntimeError, OSError)):
+        merge_upsert(spark, df, path, ["k"], "ver")
+    assert os.path.isdir(path) and not MF.is_manifest_table(path)
+    assert MF.live_table(path) is None
+    monkeypatch.undo()
+
+    merge_upsert(spark, df, path, ["k"], "ver")
+    assert MF.is_manifest_table(path)
+    got = sorted(map(tuple, MF.read_table(spark, path).collect()))
+    assert got == [(1, "a", 1), (2, "b", 1)]
+    # the crashed commit's leftovers are gone: one generation, no tmp pointer
+    assert MF._generations(path) == [os.path.basename(MF.resolve_table(path))]
+    assert not os.path.exists(os.path.join(path, MF.CURRENT + ".tmp"))
+
+
+def test_merge_upsert_into_an_empty_dir_creates_a_manifest_table(spark, tmp_path):
+    path = str(tmp_path / "empty")
+    os.makedirs(path)
+    assert MF.live_table(path) is None
     df = spark.createDataFrame([(1, 1)], "k int, ver int")
-    with pytest.raises(ValueError, match="commit must be"):
-        merge_upsert(spark, df, str(tmp_path / "x"), ["k"], "ver", commit="yolo")
+    merge_upsert(spark, df, path, ["k"], "ver")
+    assert MF.is_manifest_table(path)
+    assert MF.read_table(spark, path).count() == 1
 
 
 def test_compact_and_zorder_operate_through_the_pointer(spark, tmp_path):

@@ -9,9 +9,8 @@ from __future__ import annotations
 
 import pytest
 
+from stock_crypto_data_pipeline_public_spark.oracle_compare import diff, duck_connection
 from stock_crypto_data_pipeline_public_spark.plans import registry
-
-from .oracle_harness import compare, duck_connection
 
 registry.load_all()
 
@@ -31,7 +30,7 @@ def test_query_matches_oracle(name, spark, sf_dir, duck):
         assert df.count() >= 0
         assert len(df.schema.fields) > 0
         return
-    errs = compare(name, df, duck, registry.ORACLES[name])
+    errs = diff(name, df, duck, registry.ORACLES[name])
     assert not errs, "\n".join(errs)
 
 

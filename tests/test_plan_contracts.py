@@ -202,6 +202,54 @@ def test_scan_spreads_are_sized_only_by_fan_out():
     assert not found, "size scan spreads with sources.tables.fan_out:\n" + "\n".join(found)
 
 
+def test_table_commits_go_only_through_manifest():
+    """operators/manifest.py is the one module that knows how a table
+    commits: no other module stages a ``.__staging__`` copy, calls
+    ``os.replace`` / ``os.rename``, or commits through
+    ``commit_generation`` / ``swap_into_place`` — whole-table rewrites
+    call ``manifest.rewrite``, small files ``manifest.replace_file``.
+    Exempt: land_sketch_epoch's replay swap, whose staging dir sits inside
+    the table and whose pointer flips between the stage and the swap."""
+    import ast
+    from pathlib import Path
+
+    import stock_crypto_data_pipeline_public_spark as pkg
+
+    exempt = {("streaming/pipeline.py", "land_sketch_epoch", "swap_into_place")}
+    commits = {"commit_generation", "swap_into_place"}
+    root = Path(pkg.__file__).parent
+    found = []
+
+    def visit(node, rel, fn):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        hit = None
+        if isinstance(node, ast.Constant) and ".__staging__" in str(node.value):
+            hit = ".__staging__"
+        elif isinstance(node, ast.Call):
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+            if name in commits:
+                hit = name
+            elif (
+                name in ("replace", "rename")
+                and isinstance(f, ast.Attribute)
+                and isinstance(f.value, ast.Name)
+                and f.value.id == "os"
+            ):
+                hit = f"os.{name}"
+        if hit and (rel, fn, hit) not in exempt:
+            found.append(f"{rel}:{node.lineno} {hit} (in {fn})")
+        for child in ast.iter_child_nodes(node):
+            visit(child, rel, fn)
+
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel != "operators/manifest.py":
+            visit(ast.parse(path.read_text()), rel, None)
+    assert not found, "commit through operators/manifest.py:\n" + "\n".join(found)
+
+
 @pytest.mark.parametrize("fails_at", ["start", "await"])
 def test_drain_stops_its_other_queries_when_one_fails(spark, tmp_path, fails_at):
     """plans/streamops._drain must not leave a started query running when
