@@ -45,7 +45,7 @@ def oracle_rnd(expr: str, n: int = 2) -> str:
 
 
 # ---------------------------------------------------------------------------
-# Exact-decimal money aggregation (round 7).
+# Exact-decimal money aggregation.
 #
 # :func:`rnd` is bit-deterministic only when its INPUT is — and a float SUM's
 # value depends on summation order, which differs between Spark and DuckDB
@@ -53,7 +53,7 @@ def oracle_rnd(expr: str, n: int = 2) -> str:
 # are NOT exactly representable as binary doubles, so sums over
 # l_extendedprice / o_totalprice / c_acctbal / events.value are
 # order-dependent and one unlucky half-up boundary flips the rounded output
-# (r6 driver: q26/q28 hash red on the driver box, green locally).
+# (q26/q28 were hash-red on the driver box, green locally).
 #
 # Fix: aggregate through DECIMAL. All money columns in the testdata are on
 # an exact 2-dp grid (verified: zero off-grid values across lineitem/orders/
@@ -112,13 +112,12 @@ def oracle_money_sum(expr: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# Scaled-BIGINT money outputs (round 9).
+# Scaled-BIGINT money outputs.
 #
-# Round 7/8 proved that even a DECIMAL-exact sum whose *double image* is
-# hashed is not driver-portable: q26/q28 were driver-red two consecutive
-# rounds on the floor(CAST(sum(DECIMAL) AS DOUBLE)·100+0.5)/100 pipeline
-# while every local mirror passed, and the q40 renderer fingerprint stayed
-# red at the driver in r8 on constant literals alone. The q26 fix — scale
+# Even a DECIMAL-exact sum whose *double image* is hashed is not
+# driver-portable: q26/q28 were driver-red on the
+# floor(CAST(sum(DECIMAL) AS DOUBLE)·100+0.5)/100 pipeline while every
+# local mirror passed. The q26 fix — scale
 # the exact decimal to an integer BEFORE anything hashes it — generalizes:
 # a hashed money output must BE an int64 (`*_e2` = cents, `*_e4` = 1e-4
 # units), never a double.
@@ -138,14 +137,14 @@ def oracle_money_sum(expr: str) -> str:
 # toward zero (verified: -7//2 = -3 on both), so the value is
 # engine-identical for every sign.
 #
-# Range (ENFORCED, round 10): the eK-scaled BIGINT *sum* holds |$| < 9.2e16
+# Range (ENFORCED): the eK-scaled BIGINT *sum* holds |$| < 9.2e16
 # per group at e2 / 9.2e14 at e4 — beyond that the BIGINT output type itself
 # can't represent the value (DuckDB's HUGEINT→BIGINT cast errors there, so
 # the oracle is loud, not wrong); sum the DECIMAL and scale afterward.
 # :func:`iavg`'s half-up numerator ``2·total·10^shift + n`` is computed in
 # DECIMAL(38,0) on the Spark side (HUGEINT on DuckDB), so the quotient is
-# exact for every total the BIGINT sum can hand it — the numerator can no
-# longer wrap int64 even at shift=4 (the r9 hazard: Spark non-ANSI int64
+# exact for every total the BIGINT sum can hand it — the numerator cannot
+# wrap int64 even at shift=4 (the hazard: Spark non-ANSI int64
 # arithmetic wraps SILENTLY; a property test pins the boundary,
 # tests/test_numeric_domain.py). The only remaining divergence window is a
 # true average whose eK image itself exceeds int64 — there Spark's ``div``
@@ -190,7 +189,7 @@ def iavg(total: str, count: str, shift: int = 0) -> Column:
     negatives), so the result is engine-identical whenever the true eK
     average fits int64 — which it does whenever the inputs do.
 
-    Boundary loudness (round 11): a true average whose eK image EXCEEDS
+    Boundary loudness: a true average whose eK image EXCEEDS
     int64 has no BIGINT answer — DuckDB's HUGEINT→BIGINT cast errors
     loudly there while Spark's non-ANSI ``div`` used to wrap silently.
     The quotient is therefore verified by exact reconstruction in the

@@ -189,9 +189,9 @@ def add_to_ann_index(
         )
         new = new.join(seen, id_col, "left_anti")
     assigned = _assign_to_centroids(spark, new, centroids, dim, id_col, vec_col)
-    # one stats job while materialized (count + avg together — r12: the
-    # split count()/agg() form paid one extra job per micro-batch); the
-    # append reuses the checkpointed rows
+    # one stats job while materialized (count + avg together: a split
+    # count()/agg() pays one extra job per micro-batch); the append reuses
+    # the checkpointed rows
     assigned = assigned.localCheckpoint(eager=True)
     row = assigned.agg(
         F.count(F.lit(1)).alias("n"), F.avg("assign_sim").alias("mean_sim")

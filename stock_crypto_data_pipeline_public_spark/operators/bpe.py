@@ -128,27 +128,6 @@ def token_count_sql(expr: str) -> str:
 # --------------------------------------------------------------------------
 # training
 # --------------------------------------------------------------------------
-def word_frequencies(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Corpus → (word, freq) vocabulary: ONE hash aggregation over exploded
-    normalized words. This is the only corpus-sized job in BPE training;
-    everything after runs on the vocab."""
-    norm = F.trim(
-        F.regexp_replace(
-            F.regexp_replace(
-                F.lower(F.coalesce(F.col(text_col), F.lit(""))), "[^a-z ]", ""
-            ),
-            " +",
-            " ",
-        )
-    )
-    return (
-        docs.select(F.explode(F.split(norm, " ")).alias("word"))
-        .filter(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("freq"))
-    )
-
-
 def train_bpe(
     vocab: DataFrame, rounds: int, min_freq: int = 2
 ) -> list[tuple[str, str]]:

@@ -378,7 +378,7 @@ def _pdf_content_text(content: bytes) -> str:
                 operands.append(s)
             elif c == ">":
                 # '>>' dict close (marked-content BDC params); also any stray
-                # '>' — must advance or the scanner stalls (ADVICE r6).
+                # '>' — must advance or the scanner stalls.
                 i += 2 if block[i : i + 2] == ">>" else 1
             elif c in "[]":
                 i += 1  # TJ arrays: strings already collect on the stack
@@ -395,7 +395,7 @@ def _pdf_content_text(content: bytes) -> str:
                 tok = block[i:j]
                 if j == i:
                     # unknown single char (')', '}', …) — always advance so
-                    # no input can stall the scanner (ADVICE r6: hang, not
+                    # no input can stall the scanner (a hang, not an
                     # exception, so on_error='skip' couldn't catch it).
                     i += 1
                     continue

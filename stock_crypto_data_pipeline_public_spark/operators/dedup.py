@@ -218,8 +218,8 @@ def connected_components(nodes: DataFrame, edges: DataFrame, max_iter: int = 25)
         # aggregates to NULL and counts as changed, the case the previous
         # full_outer-join test existed for). The convergence probe then
         # reads the just-checkpointed result instead of paying a second
-        # shuffle join per round (r12: one exchange job per round saved
-        # across every CC consumer — t11/t23/t30/t32/x14).
+        # shuffle join per round (one exchange job per round, for every CC
+        # consumer — t11/t23/t30/t32/x14).
         nulltyped = F.lit(None).cast(id_type)
         new_labels = (
             labels.withColumn("__old", F.col("component_id"))

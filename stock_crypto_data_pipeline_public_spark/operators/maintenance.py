@@ -130,7 +130,7 @@ def compact_partitioned_table(
     a crash mid-run leaves every partition either old-complete or
     new-complete, never mixed. Returns per-leaf stats plus totals.
 
-    Mixed layouts FAIL LOUDLY (r10 ADVICE): data files sitting directly
+    Mixed layouts FAIL LOUDLY: data files sitting directly
     beside ``key=value`` dirs (at the root or any intermediate level) are
     a corrupt-or-unpartitioned layout this rewrite would silently half-
     compact — raise like the no-partitions case does, instead of quietly

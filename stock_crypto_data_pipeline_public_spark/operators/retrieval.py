@@ -54,7 +54,7 @@ def bm25_scores(docs: DataFrame, terms: Sequence[str]) -> DataFrame:
     matching ≥1 term: (doc_id, n_matched_terms, bm25 double UNROUNDED —
     callers round with rnd() at the emission edge per registry rule 2).
 
-    Plan shape (r11 rework — ONE shuffle, no join chain): the exploded
+    Plan shape (ONE shuffle, no join chain): the exploded
     token relation aggregates ONCE by doc_id into (dl, tf_0..tf_k) — dl is
     count(*), each tf_i a conditional count for query term i (map-side
     partials, the fixed-term pivot IS the aggregation). Document

@@ -24,10 +24,6 @@ from pyspark.sql import functions as F
 HIGH_DATE = "9999-12-31 00:00:00"
 
 
-def _cols(cs: Sequence[str | Column]) -> list[Column]:
-    return [F.col(c) if isinstance(c, str) else c for c in cs]
-
-
 def dedup_keep_first(df: DataFrame, keys: Sequence[str], order: Sequence[Column]) -> DataFrame:
     """One row per key: the first by ``order`` (pass explicit asc/desc cols,
     ending with a unique tiebreaker)."""

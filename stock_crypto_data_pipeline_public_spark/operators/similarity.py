@@ -27,13 +27,11 @@ def dot(a: str, b: str, dim: int | None = None) -> Column:
     0..dim-1 sum chain, so results are bit-identical to that chain and to
     the oracle's ``list_sum(list_transform(...))``.
 
-    Why HOF and not the unrolled 64-term chain this used to emit (r12,
-    measured): the flat chain generates one codegen method far past the
-    JIT's ~8 KB bytecode limit, so it executes in the JVM's bytecode
-    INTERPRETER at ~90 µs/row; the HOF's per-element lambda is a small
-    hot loop the JIT compiles — 6x faster at 250 k rows (0.65 s → 0.11 s)
-    — and it constructs in a handful of py4j calls instead of ~500
-    (which alone cost ~1.2 s of driver time per built expression).
+    Why HOF and not an unrolled 64-term chain: the flat chain generates
+    one codegen method far past the JIT's ~8 KB bytecode limit, so it
+    executes in the JVM's bytecode INTERPRETER; the HOF's per-element
+    lambda is a small hot loop the JIT compiles, and it constructs in a
+    handful of py4j calls instead of ~500 (see OPTIMIZATION_r12.md).
     """
     if dim is not None:
         return F.expr(

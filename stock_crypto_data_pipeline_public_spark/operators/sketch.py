@@ -116,7 +116,7 @@ def mg_partition_summaries(df: DataFrame, key_col: str, m: int) -> DataFrame:
     full-corpus pass whose output is not data-sized: P·m rows feed the
     candidate broadcast of the recount pass (plans/textops.py t46).
 
-    NULL keys COUNT (r10 ADVICE): pandas ``value_counts`` defaults to
+    NULL keys COUNT: pandas ``value_counts`` defaults to
     ``dropna=True``, which would silently exclude a null-keyed heavy
     hitter from the candidate set and void the superset guarantee for
     generic callers. Nulls are counted under a private sentinel (NaN/None

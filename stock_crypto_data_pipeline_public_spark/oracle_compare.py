@@ -6,8 +6,8 @@ That path is dtype-sensitive in ways plain ``fetchall()`` is not:
 
 - DuckDB ``sum(<integer>)`` returns HUGEINT, which pandas renders as
   **float64** (``457.0``) while Spark emits int64 (``457``) — a hash
-  mismatch despite numerically equal values. (Root cause of five round-2
-  failures; oracles must ``CAST(sum(..) AS BIGINT)``.)
+  mismatch despite numerically equal values; oracles must
+  ``CAST(sum(..) AS BIGINT)``.
 - Timestamps beyond 2262 (e.g. a ``9999-12-31`` SCD2 sentinel) overflow
   pandas ``datetime64[ns]`` and error out before any comparison runs.
 
@@ -15,31 +15,12 @@ This module reproduces both behaviours so the local suite fails exactly
 where the driver would. Used by ``tests/test_oracle_parity.py`` and
 ``scripts/verify_contract.py``.
 
-RESOLVED (round 8→10 divergence saga, closed in round 11): the driver's
-comparator diverges from this mirror on exactly ONE value class — it
-renders Spark ``Decimal`` cells VERBATIM (trailing zeros included) where
-this mirror's ``_cell`` coerces Decimal→float like DuckDB's ``.df()``
-does. Evidence chain: r8's combined q40 renderer fingerprint was
-rows+schema green and hash-red AT THE DRIVER while passing here; r9 split
-it one-type-per-query and got q40a-e GREEN / q40f alone RED — ambiguous,
-because q40f was not type-faithful (on Spark, floor→BIGINT over the bare
-DECIMAL(4,1) literal 100.0 typed it DECIMAL(27,6), i.e. the driver saw
-Decimal('1234.570000') vs DuckDB's float64 1234.57), consistent with both
-H1 ("the floorpath double arithmetic diverges") and H2 ("Decimal cells
-render verbatim"); r10 gated the pre-registered separating probes and the
-pattern came back **q40g (true-DOUBLE floorpath) GREEN, q40h (equal value,
-Spark DECIMAL vs oracle DOUBLE) RED** — H2 PROVEN, H1 dead, the doubles
-never diverged at all. H2 also retro-explains q40b's green: its decimals
-carry no trailing zeros, so their verbatim renderings coincide with the
-float64 str images.
-
-The durable rule is registry.py rule 7 (never EMIT a DecimalType hashed
-output column), mechanically enforced by
-tests/test_plan_contracts.py::test_no_decimal_typed_gated_outputs. This
-mirror keeps the Decimal→float coercion DELIBERATELY — it models DuckDB's
-rendering, and under rule 7 no gateable query can emit a Decimal anyway;
-the q40/q40g/q40h tripwires stay registered local-only (q40/q40h
-red-by-design at the driver, green here — the rule's negative controls).
+Decimal cells are coerced to float like DuckDB's ``.df()`` renders them.
+The driver's comparator renders Spark ``Decimal`` cells verbatim (trailing
+zeros included), so this mirror cannot see a Decimal mismatch; registry.py
+rule 7 (never EMIT a DecimalType hashed output column, enforced by
+tests/test_plan_contracts.py::test_no_decimal_typed_gated_outputs) keeps
+every gateable query out of that class.
 """
 
 from __future__ import annotations
@@ -97,7 +78,7 @@ def _cell(v):
         # A DATE column arrives as datetime.date from Spark but midnight
         # datetime64 from DuckDB; strip the zero time so they agree. This
         # equivalence is INFERRED from driver behavior (f02's trade_date
-        # hash-matched in round 2 while only its HUGEINT volume failed), so
+        # hash-matched at the driver while only its HUGEINT volume failed), so
         # it intentionally also equates a true midnight TIMESTAMP with a
         # DATE — don't rely on that: registry rule 3 still requires casting
         # date_trunc results to date explicitly on the Spark side.

@@ -331,7 +331,7 @@ def e07_asof_prior_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the average's denominator is count(value) — literally what the
         # oracle divides by — NOT n_matched: the two only coincide while no
         # matched event row carries a NULL value, and the gate should not
-        # lean on that data property (r9 ADVICE)
+        # lean on that data property
         F.count("value").alias("_n_val"),
         money_sum_e2("value").alias("total_prior_value_e2"),
     ).withColumn(
@@ -410,7 +410,7 @@ def e08_purchase_attribution_window(spark: SparkSession, sf_dir: str) -> DataFra
 # streaming estimators (Welford vs textbook) differ between engines in the
 # last float bits; here every double op is written identically on both
 # sides, so the z-scores are bit-identical and hash-gateable. NUMERIC
-# DOMAIN (round 8, q26/q28's insurance pattern): the z-score is scaled to
+# DOMAIN (q26/q28's insurance pattern): the z-score is scaled to
 # an e4 BIGINT before the |z| > 3 threshold comparison and before the
 # min/max rollup, so the compared and output values are exact int64 on
 # both engines (|z_e4| > 30000 ⇔ |rnd(z,4)| > 3 — the boundary value

@@ -122,7 +122,7 @@ def f02_daily_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
         F.get_json_object("props", "$.k").cast("long").alias("size"),
     )
-    # round-9 exact domain: notional is summed as integer cents×size (no
+    # exact domain: notional is summed as integer cents×size (no
     # decimal value ever transits DOUBLE) and the VWAP is the e4 integral
     # quotient — engine-identical trunc division (functions/numeric.iavg)
     cents = (dec("value") * F.lit(100)).cast("bigint")
@@ -140,7 +140,7 @@ def f02_daily_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # f03 — 20-tick rolling Bollinger bands per instrument: rolling mean and
 # sample stddev over ROWS 19 PRECEDING, bands at ±2σ (rounded to cents so
 # both engines compare against the identical band), breakout counts.
-# NUMERIC DOMAIN (round 9, e09/f05's closed-form treatment; widened r10):
+# NUMERIC DOMAIN (e09/f05's closed-form treatment, widened):
 # the rolling variance comes from EXACT integer window sums — s1=Σv_e2 is a
 # BIGINT, s2=Σv_e2² and the 20·s2−s1² combination run in DECIMAL(38,0) on
 # Spark / HUGEINT on DuckDB (they exceed int64 inside the MONEY(12,2)
@@ -215,7 +215,7 @@ def f03_bollinger_breakouts(spark: SparkSession, sf_dir: str) -> DataFrame:
         # non-ANSI Spark WRAPS silently where DuckDB's HUGEINT window sum is
         # exact — so both squares-sum and the s1² term run in DECIMAL(38,0)
         # (scale-0: exact integers, exempt from the decimal→double ban); the
-        # oracle mirrors with an explicit HUGEINT widening (r9 ADVICE)
+        # oracle mirrors with an explicit HUGEINT widening
         F.sum(F.col("v_e2").cast("decimal(38,0)") * F.col("v_e2"))
         .over(wf)
         .alias("s2"),
@@ -342,7 +342,7 @@ def f06_price_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # scale), never on raw ticks. Pairs are ordered (a < b) to emit each pair
 # once.
 #
-# NUMERIC DOMAIN (round 8, q26/q28's insurance pattern): built-in corr()
+# NUMERIC DOMAIN (q26/q28's insurance pattern): built-in corr()
 # is a streaming co-moment estimator whose accumulation order — and
 # algorithm — is engine-specific, i.e. exactly the
 # "aggregate-that-transits-double" class that reds drivers. Instead: the
@@ -396,9 +396,8 @@ def f06_price_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def f05_daily_corr_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
-    # round-9: px_e4 is the e4 integral average computed entirely in int64
-    # (iavg) — the old floor((double-quotient)·1e4+0.5) transited the
-    # decimal->double divavg pipeline the q40e fingerprint probes
+    # px_e4 is the e4 integral average computed entirely in int64 (iavg), so
+    # no hashed value transits a decimal->double quotient
     daily = (
         ev.groupBy("event_type", F.date_trunc("day", "ts").cast("date").alias("day"))
         .agg(
@@ -1000,14 +999,13 @@ def _f13_sql_den(dens: list[float], rn: str = "rn") -> str:
 
 
 def _f13_spark_num(col: str, over_sql: str, pows: list[float]):
-    """The 64-term truncated-EWMA numerator as ONE F.expr string — the
-    Column-operator loop this replaces cost ~1 s of driver py4j time per
-    call (r12, similarity.dot's finding; 3 calls per f13 build). Same
-    parsed tree: left-associative `+`, lag(col, j) OVER the inline spec,
-    and `{p!r}D` double literals identical to F.lit's. (A window-collect +
-    HOF-fold variant was ALSO measured: bit-identical values but 0.96 →
-    1.73 s runtime — the per-row 64-element array materialization loses;
-    the flat lag chain stays.)"""
+    """The 64-term truncated-EWMA numerator as ONE F.expr string — a
+    Column-operator loop pays one py4j call per node (similarity.dot's
+    finding; 3 calls per f13 build). Same parsed tree: left-associative
+    `+`, lag(col, j) OVER the inline spec, and `{p!r}D` double literals
+    identical to F.lit's. (A window-collect + HOF-fold variant gives
+    bit-identical values but runs slower — the per-row 64-element array
+    materialization loses; the flat lag chain stays.)"""
     terms = [f"({col} * {pows[0]!r}D)"] + [
         f"(coalesce(lag({col}, {j}) OVER {over_sql}, 0.0D) * {pows[j]!r}D)"
         for j in range(1, len(pows))
@@ -1439,7 +1437,7 @@ def f16_gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # partitionings: the trailing return partitions by SYMBOL (time series),
 # the rank partitions by DAY (cross section) — exactly one exchange each.
 # Daily close is arg_max(value, event_id) — exact, no float aggregation.
-# NUMERIC DOMAIN (round 8, q26/q28's insurance pattern): the trailing
+# NUMERIC DOMAIN (q26/q28's insurance pattern): the trailing
 # return is scaled to an e6 BIGINT (floor(x·1e6 + 0.5), half-up) before
 # the rank, so the ranked value and the output are exact int64 on both
 # engines — nothing the driver hashes for this query transits a float

@@ -86,8 +86,7 @@ def g01_pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     # distinct on the RAW integer pair, string labels minted after — the
     # dedup exchange carries two BIGINTs instead of built strings (guide
-    # §2.3 narrower types through the shuffle; r12 measured 2.7 → 1.9 s
-    # whole-call with g03's identical rewrite)
+    # §2.3 narrower types through the shuffle; g03 does the same)
     pairs = (
         orders.join(li, orders.o_orderkey == li.l_orderkey)
         .select("o_custkey", "l_suppkey")
@@ -102,12 +101,12 @@ def g01_pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # materialize the edge list once: every iteration joins against it, and
     # without the checkpoint the lazy orders ⋈ lineitem ⋈ distinct
-    # derivation would re-execute per iteration (measured 6.5 -> ~2.5 s at
-    # sf0.1); at real scale this is a persisted edge table anyway
+    # derivation would re-execute per iteration; at real scale this is a
+    # persisted edge table anyway
     edges = edges.localCheckpoint(eager=True)
     # deg is read by every iteration's weight join plus the init ranks —
     # LAZY checkpoint so the degree aggregation runs once inside the
-    # single output action instead of once per consumer (r11 round)
+    # single output action instead of once per consumer
     deg = (
         edges.groupBy(F.col("src").alias("node"))
         .agg(F.count(F.lit(1)).alias("deg"))
@@ -126,12 +125,11 @@ def g01_pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (measured 2.4x SLOWER than letting the shuffle join pipeline);
     # the shuffle join stays.
     for _ in range(_ITERS):
-        # r11 optimization: join ranks⋈deg FIRST (two node-sized relations
-        # co-keyed on node — one cheap exchange pair), then hit the edge
-        # list ONCE with the combined rank/deg weight. The previous shape
-        # joined edges against ranks AND deg separately — two edge-sized
-        # join probes per iteration for the same per-src weight (w values
-        # identical: rank/deg computed from the same floats either way).
+        # join ranks⋈deg FIRST (two node-sized relations co-keyed on node —
+        # one cheap exchange pair), then hit the edge list ONCE with the
+        # combined rank/deg weight, not two edge-sized join probes per
+        # iteration for the same per-src weight (w values identical:
+        # rank/deg computed from the same floats either way).
         weights = ranks.join(deg, "node").select(
             F.col("node").alias("src_node"),
             (F.col("rank") / F.col("deg")).alias("w"),
@@ -272,9 +270,9 @@ def g02_supplier_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # global top-K with a total-order tiebreak → Spark plans a TakeOrdered,
     # never a full sort; the kept-edge subgraph bounds everything downstream.
-    # LAZY checkpoint (r11): the wedge join reads e three ways and deg once
-    # more — without it each consumer re-ran the os⋈os co-trade aggregation
-    # plus the top-K (measured ~5 executions per action)
+    # LAZY checkpoint: the wedge join reads e three ways and deg once more —
+    # without it each consumer re-runs the os⋈os co-trade aggregation plus
+    # the top-K (~5 executions per action)
     e = top_edges(co, _TOP_EDGES).localCheckpoint(eager=False)
     # K rows: broadcast both probe sides of the wedge join
     e1, e2, e3 = e.alias("e1"), F.broadcast(e.alias("e2")), F.broadcast(e.alias("e3"))
@@ -290,8 +288,8 @@ def g02_supplier_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("e2.s2").alias("c"),
         )
     )
-    # one pass over tri (the 3-way union re-executed the whole wedge join
-    # per branch); explode emits the same (s) multiset — r11 round
+    # one pass over tri (a 3-way union re-executes the whole wedge join per
+    # branch); explode emits the same (s) multiset
     pertri = tri.select(
         F.explode(F.array(F.col("a"), F.col("b"), F.col("c"))).alias("s")
     )
@@ -400,7 +398,7 @@ def g03_bfs_trade_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sided: s-type at even hops, c-type at odd. Materializing only the
     # HALF-edge pair list and alternating the probe column per level scans
     # half the bytes per level and skips the symmetrizing union outright
-    # (r12; the generic bfs_expand keeps the symmetrized form for graphs
+    # (the generic bfs_expand keeps the symmetrized form for graphs
     # without this structure). Same discovered set, level for level.
     pairs = pairs.localCheckpoint(eager=True)
     seed_nodes = sup.filter(F.col("s_suppkey") % _SEED_MOD == 0).select(
@@ -433,7 +431,7 @@ def bfs_expand(edges: DataFrame, frontier: DataFrame, visited: DataFrame) -> Dat
     visited set are node-bounded (≪ edges), so both sides of the expansion
     BROADCAST: each level is one map-only pass over the materialized edge
     list + a distinct over matched dsts — the edge list itself never
-    re-shuffles (measured 8.2 s -> ~3.5 s at sf0.1). At diameters/graphs
+    re-shuffles. At diameters/graphs
     where the frontier outgrows the broadcast threshold, drop the hints
     and the same plan becomes the co-partitioned shuffle join — the 100 TB
     form. The broadcast shape is plan-asserted in

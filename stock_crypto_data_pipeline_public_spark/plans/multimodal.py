@@ -221,11 +221,11 @@ def m05_ppm_real_resize_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = fan_out(docs, MEDIA)
     # media feeds TWO consumers (source decode + resize) and Spark has no
     # cross-consumer CSE — without a checkpoint the mapInPandas synthesis
-    # runs twice per execution (r6 verdict; measured 2x Python-worker cost).
-    # localCheckpoint materializes it once; at 100 TB the encoded relation
-    # would be a persisted table for the same reason. m08/m10/m12/m15 are
-    # linear encode->transform->decode chains (single consumer) — audited
-    # r7, no fork, nothing to cache.
+    # runs twice per execution (2x Python-worker cost). localCheckpoint
+    # materializes it once; at 100 TB the encoded relation would be a
+    # persisted table for the same reason. m08/m10/m12/m15 are linear
+    # encode->transform->decode chains (single consumer) — no fork,
+    # nothing to cache.
     media = M.synthesize_ppm(docs).localCheckpoint(eager=True)
     src = M.decode_features(media)  # REAL P6 header parse
     resized = M.resize_images(media, 16, 12)  # REAL nearest-neighbor

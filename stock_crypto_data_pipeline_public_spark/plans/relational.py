@@ -80,14 +80,14 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 )
 def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
-    # NUMERIC DOMAIN (round 9): every hashed money output is an exact
-    # scaled BIGINT (_e2 = cents, _e4/_e6 = higher-scale decimal grids) —
-    # nothing the driver hashes transits DOUBLE (functions/numeric.py
-    # round-9 policy note; q26's docstring has the cross-engine argument).
+    # NUMERIC DOMAIN: every hashed money output is an exact scaled BIGINT
+    # (_e2 = cents, _e4/_e6 = higher-scale decimal grids) — nothing the
+    # driver hashes transits DOUBLE (functions/numeric.py policy note;
+    # q26's docstring has the cross-engine argument).
     # The decimal expressions are PRE-PROJECTED so each per-row cast/
     # multiply chain evaluates once and the aggregates consume plain
-    # attributes (measured 1.27 s -> 1.03 s at sf0.1; inline trees
-    # re-evaluate the shared disc_price chain in every consuming aggregate).
+    # attributes (inline trees re-evaluate the shared disc_price chain in
+    # every consuming aggregate).
     disc1 = (F.lit(1) - dec("l_discount", RATE)).cast(RATE)
     tax1 = (F.lit(1) + dec("l_tax", RATE)).cast(RATE)
     disc_price = dec("l_extendedprice") * disc1
@@ -129,7 +129,7 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Reference shape: fct_transactions.sql:32-42 multi-join;
 # warehouse_tools.py:206-207 ORDER BY ... LIMIT n.
 # Deterministic top-k: sort key is the EXACT e4-scaled integer revenue
-# (round-9 domain: no hashed/ranked value transits DOUBLE) plus the unique
+# (exact domain: no hashed/ranked value transits DOUBLE) plus the unique
 # orderkey tiebreak, so nothing can flip membership.
 # --------------------------------------------------------------------------
 @query(
@@ -223,7 +223,7 @@ def q03_region_nation_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             dsum_e(F.col("acctbal_d"), 2).alias("total_acctbal_e2"),
         )
         # acctbal can be negative — iavg's trunc-toward-zero division is
-        # engine-identical for every sign (numeric.py round-9 note)
+        # engine-identical for every sign (numeric.py policy note)
         .withColumn("avg_acctbal_e4", iavg("total_acctbal_e2", "n_customers", 2))
     )
 
@@ -475,7 +475,7 @@ def q10_part_type_categorizer(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q11_event_impact_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
-    # round-9 exact domain: the daily average is an e4 BIGINT (iavg), and
+    # exact domain: the daily average is an e4 BIGINT (iavg), and
     # the guarded pct-changes are e4 BIGINT ratios of those integers —
     # trunc-div identical on both engines, so no value here is a double
     daily = (
@@ -1018,12 +1018,12 @@ def q25_customer_rank_family(spark: SparkSession, sf_dir: str) -> DataFrame:
 # revenue aggregates below the join output, the nation dim broadcasts
 # (AQE sees the tiny build side), the ranking window partitions by year.
 #
-# NUMERIC DOMAIN (round 8): revenue never transits DOUBLE. r6 proved a
-# float SUM is order-dependent; r7 proved even a DECIMAL-exact sum whose
-# *double image* feeds a rank is not driver-portable (two consecutive
-# driver-red rounds while every local mirror passed — the decimal→double
-# cast or the float renderer diverges somewhere in the driver's pipeline
-# in a way no local signal reproduces). So: the per-row revenue term
+# NUMERIC DOMAIN: revenue never transits DOUBLE. A float SUM is
+# order-dependent, and even a DECIMAL-exact sum whose *double image* feeds
+# a rank is not driver-portable (driver-red while every local mirror
+# passed — the decimal→double cast or the float renderer diverges
+# somewhere in the driver's pipeline in a way no local signal
+# reproduces). So: the per-row revenue term
 # l_extendedprice·(1−l_discount) — exact on a 1e-4 grid (2-dp money ×
 # 2-dp rate) — is scaled to an e4 BIGINT *before* the sum, the sum is a
 # plain long sum, the rank orders the exact integer, and the output IS
@@ -1148,10 +1148,10 @@ def q27_status_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 # aggregate). Driven through spark.sql like q26 so the analyzer's subquery
 # path is the surface under test.
 #
-# NUMERIC DOMAIN (round 8, same reasoning as q26): nothing here transits
-# DOUBLE — r7's driver stayed red on the floor(CAST(decimal AS DOUBLE)
-# /count·1e4+0.5) pipeline for a second round while every local mirror
-# passed, so the comparison AND the output now live entirely in BIGINT.
+# NUMERIC DOMAIN (same reasoning as q26): nothing here transits DOUBLE —
+# the driver was red on the floor(CAST(decimal AS DOUBLE)/count·1e4+0.5)
+# pipeline while every local mirror passed, so the comparison AND the
+# output live entirely in BIGINT.
 # Each price is scaled to an exact e4 integer (2-dp grid × 10000 is
 # integral, so the BIGINT cast is exact in both engines); the
 # per-customer average is rounded half-up to e4 units with PURE INTEGER
@@ -1473,8 +1473,8 @@ def q33_lateral_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q34 — Bloom-filter semi join as a GATED surface (operators/bloomprune —
-# previously covered only by the local property suite): lineitems of
+# q34 — Bloom-filter semi join as a GATED surface (operators/bloomprune):
+# lineitems of
 # urgent-priority orders through bloom_semi_join. The operator's contract
 # is EXACTNESS — the bloom bitset prunes the probe map-side (no false
 # negatives, property-tested) and the trailing left_semi collapses the
@@ -1523,7 +1523,7 @@ def q34_bloom_semi_urgent_lineitems(spark: SparkSession, sf_dir: str) -> DataFra
 
 # --------------------------------------------------------------------------
 # q35 — salted two-phase aggregation as a GATED surface (operators/skew.
-# salted_agg — previously local-only): per-status order totals through the
+# salted_agg): per-status order totals through the
 # hot-key mitigation path. The operator's contract is EXACTNESS for
 # decomposable aggregates — phase 1 pre-aggregates on (keys, salt), phase
 # 2 merges partials — so the plain GROUP BY is the oracle, and a wrong
@@ -1578,8 +1578,8 @@ def q35_salted_status_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q36 — salted equi-join as a GATED surface (operators/skew.salted_join —
-# previously local-only): lineitem (large, skewed side, salted) joined to
+# q36 — salted equi-join as a GATED surface (operators/skew.salted_join):
+# lineitem (large, skewed side, salted) joined to
 # orders (replicated once per salt value) then rolled up per priority.
 # Exactness contract: salting only spreads rows across reducers — the
 # joined multiset is identical — so the plain join is the oracle; a
@@ -1663,16 +1663,16 @@ def q37_recursive_org_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # q38 — co-bucketed join as a GATED surface (catalog.materialize_bucketed —
-# §2.11's write-path bucketing, previously proven only by the plan-shape
-# unit tests): orders and lineitem materialize as EXTERNAL bucketed tables
-# (same key, same bucket count) inside the query, join bucket-to-bucket,
-# and roll up per (priority, returnflag). The operator's contract is
-# EXACTNESS — bucketing only pre-partitions rows, the joined multiset is
-# identical — so the plain join is the oracle, and a bucket-hash drift, a
-# dropped bucket file, or a catalog bucket-spec mismatch shifts counts/
-# sums and breaks the driver hash. The no-shuffle property stays pinned by
-# tests/test_bucketed_tables.py (both-sides-bucketed join plans zero
-# Exchange); money totals ride the decimal policy.
+# §2.11's write-path bucketing): orders and lineitem materialize as
+# EXTERNAL bucketed tables (same key, same bucket count) inside the query,
+# join bucket-to-bucket, and roll up per (priority, returnflag). The
+# operator's contract is EXACTNESS — bucketing only pre-partitions rows,
+# the joined multiset is identical — so the plain join is the oracle, and
+# a bucket-hash drift, a dropped bucket file, or a catalog bucket-spec
+# mismatch shifts counts/sums and breaks the driver hash. The no-shuffle
+# property stays pinned by tests/test_bucketed_tables.py
+# (both-sides-bucketed join plans zero Exchange); money totals ride the
+# decimal policy.
 # 100 TB: THE repeated-fact-join shape — the shuffle of the big sides is
 # paid ONCE at write; every subsequent join on the bucket key plans
 # shuffle-free regardless of query count. Bucket count scales with data
@@ -1729,7 +1729,7 @@ def q38_cobucketed_join_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # q39 — small-file compaction as a GATED surface (operators/maintenance.
-# compact_table — §2.11's write-path maintenance, previously local-only):
+# compact_table — §2.11's write-path maintenance):
 # the events table lands as 32 deliberately-small files, compacts through
 # the atomic staging-swap rewrite (with a range-sorted layout on ts), and
 # the read-back rolls up per event_type. The operator's contract is
@@ -1781,124 +1781,11 @@ def q39_compaction_roundtrip(spark: SparkSession, sf_dir: str, base: str) -> Dat
 
 
 # --------------------------------------------------------------------------
-# q40 — RENDERER FINGERPRINT (round-8 diagnostic gate row). q26/q28 were
-# driver-hash-red for two consecutive rounds while every local mirror of
-# the driver's comparison passed — meaning the local mirror of the
-# driver's canonicalization is provably not the driver's on SOME value
-# class. This query runs the IDENTICAL constant-literal SQL text on both
-# engines — no data, no aggregation, no ordering — one probe column per
-# output type the registry emits, plus the exact float pipelines the old
-# q26/q28 used (decimal→double cast, floor(x·100+0.5)/100.0 rendering,
-# decimal-sum/count quotient). If any future round reds a value-bearing
-# query while this row is green, the divergence is in that query; if THIS
-# row is red, CORRECTNESS's per-column diff names the exact type/pipeline
-# the driver's comparator renders differently — localizing driver-vs-
-# mirror divergence mechanically instead of by conjecture.
-# STATUS (r11): LOCAL-ONLY regression tripwire, red-by-design at the
-# driver (it emits Decimal probe columns; rule 7 PROVEN in r10 — see the
-# settled-history block below). _NEVER_GATE bans it from the window.
-# --------------------------------------------------------------------------
-_Q40_SQL = """
-    SELECT CAST(42 AS BIGINT)                                   AS p_bigint,
-           CAST(7 AS INT)                                       AS p_int,
-           CAST(2.5 AS DOUBLE)                                  AS p_double_exact,
-           CAST(0.1 AS DOUBLE) + CAST(0.2 AS DOUBLE)            AS p_double_repr,
-           CAST(551.43 AS DOUBLE) / CAST(8 AS DOUBLE)           AS p_double_quot,
-           floor(CAST(CAST(1234.565 AS DECIMAL(12,3)) AS DOUBLE)
-                 * 100 + 0.5) / 100.0                           AS p_double_floorpath,
-           CAST(CAST(1111111.11 AS DECIMAL(12,2)) AS DOUBLE) / 7.0
-                                                                AS p_double_divavg,
-           CAST(123.45 AS DECIMAL(12,2))                        AS p_decimal,
-           DATE '2024-02-29'                                    AS p_date,
-           TIMESTAMP '2024-02-29 23:59:59'                      AS p_ts,
-           TIMESTAMP '2024-03-01 00:00:00'                      AS p_ts_midnight,
-           true                                                 AS p_bool,
-           'spark-graft'                                        AS p_string,
-           CAST(NULL AS VARCHAR(8))                             AS p_null_str,
-           CAST(NULL AS DOUBLE)                                 AS p_null_double
-"""
-
-
-@query("q40_renderer_fingerprint", oracle=_Q40_SQL)
-def q40_renderer_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_Q40_SQL)
-
-
-# --------------------------------------------------------------------------
-# q40a-q40h — SETTLED HISTORY of the r8-r10 driver-comparator divergence
-# saga, kept so the tripwires below stay interpretable. Timeline:
-#   r8: the combined q40 fingerprint (constant-literal SQL, identical text
-#       both engines) was rows+schema GREEN but hash-RED at the driver while
-#       the local mirror passed — the driver's comparator renders SOME
-#       type/pipeline differently from oracle_compare.py's mirror.
-#   r9: split one-type-per-query (q40a ints/strings/bools, q40b decimals,
-#       q40c date/ts, q40d doubles, q40e quotients, q40f the
-#       floor(CAST(decimal AS DOUBLE)*100+0.5)/100 money rendering).
-#       Driver: a-e GREEN, f alone RED. But q40f was not type-faithful: on
-#       Spark floor() returns BIGINT and the bare 100.0 literal parses as
-#       DECIMAL(4,1), so its output was DECIMAL(27,6) —
-#       Decimal('1234.570000') — vs DuckDB's DOUBLE 1234.57. Two hypotheses
-#       fit: H1 (the floorpath double arithmetic diverges) and H2 (the
-#       driver renders Decimal cells VERBATIM, trailing zeros included,
-#       while DuckDB's .df() renders all decimals as float64).
-#   r10: gated the separating probes — q40g (the identical floorpath
-#       emitted as a true DOUBLE on both engines) and q40h (the type
-#       condition alone: Spark DECIMAL(27,6) vs oracle DOUBLE, equal
-#       value). Driver: **q40g GREEN, q40h RED** — exactly the
-#       pre-registered H2 pattern. H2 is PROVEN: the driver's comparator
-#       renders Decimal cells verbatim (str(Decimal('1234.570000')) !=
-#       str(1234.57)) and never diverged on doubles at all. r9's H1
-#       reading is formally corrected.
-# The durable outcome is registry rule 7 — never EMIT a DecimalType hashed
-# output column — mechanically enforced by
-# tests/test_plan_contracts.py::test_no_decimal_typed_gated_outputs. With
-# the rule plan-contract-enforced, the one-type-per-query probes (q40a-f)
-# and the q26/q28 stage diagnostics (q41 revenue-stage / q42 custavg-stage,
-# which localized the original money-pipeline reds to their aggregation
-# stages) are retired from the registry entirely; the combined q40 row
-# above plus q40g/q40h below stay registered LOCAL-ONLY (never in the
-# driver window — q40/q40h are red-by-design there, since both emit a
-# Decimal probe column; _NEVER_GATE enforces the ban mechanically) as
-# regression tripwires for the local mirror's canonicalization.
-# --------------------------------------------------------------------------
-
-# q40g — the floorpath emitting a true DOUBLE on BOTH engines: Spark's
-# floor() returns BIGINT and BIGINT / DOUBLE is DOUBLE; DuckDB's floor()
-# already returns DOUBLE. Identical SQL text, identical value 1234.57,
-# identical type. Driver-GREEN in r10 — the double floorpath is exonerated.
-_Q40G_SQL = """
-    SELECT floor(CAST(CAST(1234.565 AS DECIMAL(12,3)) AS DOUBLE)
-                 * 100 + 0.5) / CAST(100.0 AS DOUBLE)   AS p_floorpath_dbl
-"""
-
-# q40h — the r9-q40f TYPE CONDITION isolated from all arithmetic: the Spark
-# side emits DECIMAL(27,6) (pandas hands the driver Decimal('1234.570000'),
-# trailing zeros) while the oracle emits DOUBLE (DuckDB .df() renders even
-# a decimal as float64 1234.57). Values equal; renderings differ exactly
-# when the comparator is verbatim-Decimal-sensitive. Driver-RED in r10 as
-# designed — the probe that PROVED H2. Local-only forever (rule 7's
-# negative control: the local mirror coerces Decimal→float, so this row is
-# green here and red at the driver BY CONSTRUCTION).
-_Q40H_SPARK_SQL = "SELECT CAST(1234.57 AS DECIMAL(27,6)) AS p_dec_vs_dbl"
-_Q40H_ORACLE_SQL = "SELECT CAST(1234.57 AS DOUBLE) AS p_dec_vs_dbl"
-
-
-@query("q40g_fp_floorpath_true_double", oracle=_Q40G_SQL)
-def q40g_fp_floorpath_true_double(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_Q40G_SQL)
-
-
-@query("q40h_fp_decimal_vs_double", oracle=_Q40H_ORACLE_SQL)
-def q40h_fp_decimal_vs_double(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_Q40H_SPARK_SQL)
-
-
-# --------------------------------------------------------------------------
 # q43 — the SCD2 QUALITY BATTERY as a gated surface (quality.py:182's
 # check_customer_history_no_overlaps + check_scd2_effective_dates +
-# check_exactly_one_current — §2's W4 family, previously covered only by
-# the local unit suite; reference tests/test_customer_history_no_overlaps
-# .sql:3-26, test_scd2_effective_dates.sql:3-11). The history is built
+# check_exactly_one_current — §2's W4 family; reference
+# tests/test_customer_history_no_overlaps.sql:3-26,
+# test_scd2_effective_dates.sql:3-11). The history is built
 # from events (q14's SCD2 shape, deduped to one state per (user, ts) so
 # intervals are strictly increasing), the three checks run on the CLEAN
 # history (all violation counts must be exactly zero) and again on a

@@ -1,5 +1,5 @@
-"""Streaming-path gated queries: the driver's value-hash gate has covered
-every batch operator since round 3, but the streaming layer (readStream →
+"""Streaming-path gated queries: the driver's value-hash gate covers every
+batch operator, but the streaming layer (readStream →
 foreachBatch → checkpoint) was only ever proven by local tests. s01 closes
 that gap: its returned DataFrame is computed from tables that were LANDED
 BY STRUCTURED STREAMING inside the query — two drains with a checkpoint
@@ -221,7 +221,7 @@ def s01_streaming_ingest_end_state(spark: SparkSession, sf_dir: str, base: str) 
 # Scale: windowed agg state is hash-partitioned by (window, event_type);
 # the watermark bounds state to ~1 day of open windows regardless of
 # stream length — this is THE mechanism that makes infinite streams
-# finite-state, and it is now a gated number, not a doc claim.
+# finite-state, and it is a gated number, not a doc claim.
 # --------------------------------------------------------------------------
 @query(
     "s02_streaming_watermark_end_state",
@@ -295,7 +295,7 @@ def s02_streaming_watermark_end_state(spark: SparkSession, sf_dir: str, base: st
 # s03 — STREAM-STREAM join state across a checkpoint restart
 # (streaming/pipeline.attribution_join — watermarked inner equi-join with a
 # time-range bound, the streaming form of e08's purchase-attribution
-# window; previously proven only by the local suite):
+# window):
 #
 #   landing_c: ALL clicks, one file     → drain 1 (purchase side empty)
 #   landing_p: ALL purchases, one file  → drain 2 (fresh start(), same
@@ -475,7 +475,7 @@ def s04_stateful_sessionization(spark: SparkSession, sf_dir: str, base: str) -> 
 # --------------------------------------------------------------------------
 # s05 — STREAM-STATIC broadcast enrichment with a dimension RELOAD between
 # micro-batches (streaming/pipeline.enrich_stream — the most common
-# production streaming join; previously local-only):
+# production streaming join):
 #
 #   phase A events land, dim v1 written       → drain 1
 #   dim OVERWRITTEN with v2, phase B lands    → drain 2 (same checkpoint)
@@ -560,7 +560,7 @@ def s05_stream_static_enrichment(spark: SparkSession, sf_dir: str, base: str) ->
 # --------------------------------------------------------------------------
 # s06 — NATIVE streaming dedup end state (streaming/pipeline.dedup_stream —
 # `dropDuplicatesWithinWatermark`, the bounded-state twin of s01's
-# foreachBatch anti-join dedup; previously local-only):
+# foreachBatch anti-join dedup):
 #
 #   drain 1: the full corpus, one file
 #   drain 2: a redelivered duplicate subset (event_id % 13 = 2), one file,
@@ -620,7 +620,7 @@ def s06_streaming_dedup_end_state(spark: SparkSession, sf_dir: str, base: str) -
 # --------------------------------------------------------------------------
 # s07 — streaming OHLCV bars end state ≡ the batch candles
 # (streaming/pipeline.windowed_ohlcv — tumbling event-time windows with
-# min_by/max_by open/close, O(1) bar state; previously local-only). The
+# min_by/max_by open/close, O(1) bar state). The
 # full corpus drains once; a sentinel tick 30 days past max(ts) drains
 # second through the same checkpoint, sweeping the watermark past every
 # real bar so append mode emits them all exactly once — the sentinel's own
@@ -870,7 +870,7 @@ def s09_streaming_ann_index_end_state(spark: SparkSession, sf_dir: str, base: st
 # s10 — STREAMING CDC MERGE end state (streaming/pipeline.
 # run_manifest_merge_sink → foreachBatch → incremental.merge_upsert with
 # the pointer-file manifest commit — the "streaming MERGE INTO a
-# Delta-style table" shape; previously local-only):
+# Delta-style table" shape):
 #
 #   phase A: every event as version 1            → drain 1 (gen commit)
 #   phase B: version-2 UPDATES for event_id%7=0  → drain 2 (fresh
@@ -939,7 +939,7 @@ def s10_streaming_cdc_merge_end_state(spark: SparkSession, sf_dir: str, base: st
 # s11 — STREAMING MEDIA-FEATURE sink end state (streaming/pipeline.
 # run_media_feature_sink — binary payloads stream in, the REAL codecs
 # extract features per micro-batch, the narrow feature table lands
-# partitioned by epoch; previously local-only). Even doc_ids' WAV clips
+# partitioned by epoch). Even doc_ids' WAV clips
 # drain first, odd doc_ids' drain second through a fresh start() on the
 # same checkpoint. This sink's exactly-once is EPOCH-overwrite (each
 # micro-batch owns an immutable epoch=N partition, so a crash replay
@@ -1013,7 +1013,7 @@ def s11_streaming_media_features_end_state(
 # --------------------------------------------------------------------------
 # s12 — STREAMING TRAINING-ORDER MANIFEST end state (streaming/pipeline.
 # run_shuffle_manifest_sink — the seeded shuffle-shard manifest grows WITH
-# the document stream; previously local-only). Even doc_ids drain first,
+# the document stream). Even doc_ids drain first,
 # odd doc_ids plus a REDELIVERED even slice drain second through a fresh
 # start() on the same checkpoint. Growth is append-after-current-max per
 # shard, so the end state is the exact two-phase closed form the oracle
@@ -1095,7 +1095,7 @@ def s12_streaming_shuffle_manifest_end_state(
 
 # --------------------------------------------------------------------------
 # s13 — STREAMING SKETCH MAINTENANCE end state (streaming/pipeline.
-# run_sketch_sink, NEW this round: a count-min frequency sketch maintained
+# run_sketch_sink: a count-min frequency sketch maintained
 # continuously over the event stream — the monitoring shape for
 # heavy-hitter tracking). Even event_ids drain first, odd second through a
 # fresh start() on the same checkpoint. CMS addition is NOT idempotent, so
@@ -1205,8 +1205,8 @@ def s13_streaming_sketch_end_state(spark: SparkSession, sf_dir: str, base: str) 
 # batch boundary, and therefore a timer firing at ANY later batch flushes
 # the same rows — the end state's CONTENTS are invariant to when eviction
 # happens (the operator docstring's replay caveat, designed away). The
-# harness runs ONE continuously-triggered query (measured: availableNow
-# never self-terminates under ProcessingTimeTimeout — Spark keeps
+# harness runs ONE continuously-triggered query (availableNow never
+# self-terminates under ProcessingTimeTimeout — Spark keeps
 # scheduling empty batches to service timers — so the drain idiom is
 # start → poll the sink for the expected session count → stop) whose
 # empty batches fire the expired timers, leaving the COMPLETE

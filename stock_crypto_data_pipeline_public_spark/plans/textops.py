@@ -235,9 +235,9 @@ def t05_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     # Pair generation is copair_counts: ONE shuffle of the shingle stream
     # (groupBy shingle → sorted id list → streamed suffix-explode) instead
-    # of a self-join's two corpus-sized exchanges. Measured ~30% faster at
-    # sf0.1 and bit-identical; max_bucket=None keeps the exact oracle-gated
-    # semantics (the 100 TB form caps hot-shingle buckets — see SCALE.md).
+    # of a self-join's two corpus-sized exchanges, bit-identical;
+    # max_bucket=None keeps the exact oracle-gated semantics (the 100 TB
+    # form caps hot-shingle buckets — see SCALE.md).
     sh = D.exploded_shingles(docs, "doc_id", "text", 3)
     counts = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     pairs = D.copair_counts(sh, "doc_id", "shingle")
@@ -394,10 +394,9 @@ def t07_lsh_candidate_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def t34_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
-    # (r11 note: a lazy checkpoint of this exploded stream was measured —
-    # cache write+read ≈ the recompute cost of the three consumers at the
-    # shingle volume here, best-of-4 2.77 s vs 3.00 s — so the recompute
-    # stays; contrast t42, where the same move wins 27%.)
+    # (a lazy checkpoint of this exploded stream costs about what the
+    # three consumers' recompute does at this shingle volume, so the
+    # recompute stays; contrast t42, where the same move wins.)
     sh = D.exploded_shingles(docs, "doc_id", "text", 3)
     counts = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     exact = (
@@ -772,10 +771,10 @@ def t11_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def t12_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
-    # r11 optimization: the token and bigram relations each had multiple
-    # consumers (c12/scored read the bigram stream, v reads the token
-    # stream), so the corpus regexp tokenize ran 3x and the bigram explode
-    # 2x per execution. LAZY local checkpoints materialize each once
+    # the token and bigram relations each have multiple consumers
+    # (c12/scored read the bigram stream, v reads the token stream), so
+    # unmaterialized the corpus regexp tokenize runs 3x and the bigram
+    # explode 2x per execution. LAZY local checkpoints materialize each once
     # inside the single output action — the t51 "materialize the token
     # column once" lesson applied to this query's plan (values unchanged:
     # same deterministic expressions, just not recomputed).
@@ -955,7 +954,7 @@ def _quality_q(text_col: str = "text"):
     """The t17/t29 per-doc quality score as a single Column over the raw
     text — a pure per-row expression, so consumers that already carry the
     text can attach it without the join-back _quality_scored's feats
-    detour implies (t30 uses this; r12, §2.4)."""
+    detour implies (t30 uses this; §2.4)."""
     n_chars = F.length(text_col)
     n_tokens = F.size(F.regexp_extract_all(text_col, F.lit("[a-z0-9]+"), 0))
     stop_hits = F.size(F.regexp_extract_all(text_col, F.lit(_STOP_RE), 0))
@@ -1687,7 +1686,7 @@ def t30_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     #    of s2 against its own per-doc score, but doc_id is unique in s2 and
     #    the score is a pure per-row function of text — so the join is a
     #    1:1 column attach. Computing q inline drops the join AND the second
-    #    execution of s2's window + regex subtree it forced (r12, §2.4).
+    #    execution of s2's window + regex subtree it forced (§2.4).
     s3 = s2.withColumn("q", _quality_q("text")).filter(
         F.col("q") >= CURATE_Q_MIN
     )
@@ -1703,8 +1702,8 @@ def t30_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # s4's own fan-out (decontamination probe + final anti-join) rides the
     # s3 checkpoint above — each consumer re-runs only the cheap comp join.
-    # A separate s4 checkpoint and a persist() were both measured (r12) and
-    # showed no further win over the materialized s3.
+    # A separate s4 checkpoint and a persist() both showed no further win
+    # over the materialized s3.
     # 5. decontamination vs the src0 benchmark 5-gram shingle set (t20)
     bench = (
         D.exploded_shingles(
@@ -2528,9 +2527,9 @@ def t39_hll_sketch_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# t43 — the HLL sketch family's EXACT driver-hard contract (r6 verdict
-# item 7): t39's estimates are engine-specific (rows-only by design), but
-# the properties that make the sketch TRUSTWORTHY are exact booleans a
+# t43 — the HLL sketch family's EXACT driver-hard contract: t39's
+# estimates are engine-specific (rows-only by design), but the properties
+# that make the sketch TRUSTWORTHY are exact booleans a
 # DuckDB oracle can pin as literal TRUE rows — the driver hash then goes
 # red if Spark's DataSketches implementation ever breaks them:
 #   merge_equals_direct — union-of-parts ≡ one-shot sketch (mergeability:
@@ -2613,9 +2612,8 @@ def t43_hll_mergeability_contract(spark: SparkSession, sf_dir: str) -> DataFrame
 _T40_K = 50
 # 2^48 — spelled as an EXPLICIT double: a bare fractional literal parses as
 # DECIMAL in both engines' SQL, which silently turned u into a decimal
-# division + decimal->double cast (the exact pipeline the q40 fingerprint
-# probes) instead of the single IEEE division the scheme's reproducibility
-# argument rests on
+# division + decimal->double cast instead of the single IEEE division the
+# scheme's reproducibility argument rests on
 _U48_DEN = "CAST(281474976710656.0 AS DOUBLE)"
 
 
@@ -2854,14 +2852,14 @@ def t42_fuzzy_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stream in ONE projection (t06's shape). Materializing the shingle
     # ARRAY as a column and then filtering on its size / reusing it inlines
     # the whole transform+array_distinct chain into every consumer — no
-    # common-subexpression elimination across operators — measured 37x
-    # slower (18.5 s vs 0.5 s for the same exploded count at sf0.1).
+    # common-subexpression elimination across operators — 37x slower for
+    # the same exploded count.
     # Jaccard therefore uses shared-shingle COUNTS from equi-joins (never
     # carried arrays): docs with zero shingles simply produce no rows.
     docs = _docs(spark, sf_dir)
 
     def exploded(cond) -> DataFrame:
-        # LAZY checkpoint (r11): each stream feeds its signature agg, its
+        # LAZY checkpoint: each stream feeds its signature agg, its
         # per-doc count AND the shared-shingle intersection join — one
         # tokenize+explode per stream instead of three (this caches the
         # exploded ROWS; the 37x note above is about inlining the array
@@ -3504,8 +3502,8 @@ def _t51_bigrams_sql(engine: str) -> str:
 
     The Spark form expects the token array ALREADY materialized as a
     column named ``toks`` — inlining the regexp inside the transform
-    lambda re-evaluates it per element (O(len²) regex calls per doc;
-    measured ~10x slower at sf0.1 before the split)."""
+    lambda re-evaluates it per element (O(len²) regex calls per doc,
+    ~10x slower)."""
     if engine == "spark":
         return (
             "CASE WHEN size(toks) >= 2 THEN "

@@ -603,9 +603,8 @@ def v11_bridge_customer_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lineitem pre-aggregates to its (orderkey, suppkey) grain BEFORE the
     # join: the join input shrinks ~4x AND — because each (order, supplier)
     # is now exactly one row — the oracle's count(DISTINCT o_orderkey)
-    # becomes a plain count(*), dropping the distinct-aggregate Expand the
-    # original plan paid (measured 2.6 -> 1.3 s at sf0.1). Same
-    # aggregate-below-join move as q02.
+    # becomes a plain count(*), dropping the distinct-aggregate Expand a
+    # join-first plan pays. Same aggregate-below-join move as q02.
     o = _t(spark, sf_dir, "orders")
     li = _t(spark, sf_dir, "lineitem")
     per_order_supp = li.groupBy("l_orderkey", "l_suppkey").agg(

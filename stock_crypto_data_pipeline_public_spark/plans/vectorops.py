@@ -329,13 +329,9 @@ def x07_ivf_probe_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # x06 — embedding-cosine near-dup via LSH candidate buckets: pairs share a
 # sign bucket (equi-join, work ∝ bucket sizes, never n²), exact cosine on
 # candidates, keep pairs above threshold. The scale-path dedup join — x04 is
-# its exactness baseline (LSH trades recall for the equi-join).
-#
-# Bench drift note (r3 1.72 s -> r4 2.28 s watch item): best-of-5 at sf0.1
-# measures 1.15 s steady-state with a 3.6 s FIRST pass — the codegen/JIT
-# warm-up for this plan shape is what best-of-2 intermittently captures;
-# the candidate join is still the bucket-repartitioned sort-merge with no
-# plan change since r3.
+# its exactness baseline (LSH trades recall for the equi-join). The first
+# pass of this plan shape pays a large codegen/JIT warm-up, so a best-of-2
+# timing can swing without a plan change.
 # --------------------------------------------------------------------------
 NEARDUP_THRESHOLD = 0.35
 
@@ -390,7 +386,7 @@ def x06_bucketed_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so the top 50 contain every above-threshold row that can appear), but
     # the pre-filter form made Catalyst substitute the 64-term dot into the
     # Filter predicate AND the Project — evaluating the expensive cosine
-    # TWICE per candidate pair (measured 2.4 s vs 1.2 s at sf0.1, r5).
+    # TWICE per candidate pair.
     return (
         pairs.orderBy(F.desc("cosine_sim"), F.asc("vec_a"), F.asc("vec_b"))
         .limit(50)
@@ -714,9 +710,8 @@ def x09_pq_adc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # argmin over 16 literal-coefficient distance expressions: no explode,
     # no join, no aggregation — encode is pure whole-stage-codegen'd
     # projection, the shape a 100 TB encode pass wants (scan → project →
-    # write codes). Round 3's posexplode → broadcast-join → min_by encode
-    # paid two shuffles and a 128-rows-per-vector intermediate for the same
-    # result (measured ~2× slower end-to-end at sf0.1).
+    # write codes). A posexplode → broadcast-join → min_by encode pays two
+    # shuffles and a 128-rows-per-vector intermediate for the same result.
     # Distances fold left-to-right per j — the identical IEEE op sequence
     # as the previous zip_with/aggregate fold, _l2sq above, and the
     # oracle's list_sum, so doubles stay bit-identical. argmin ties break
@@ -726,7 +721,7 @@ def x09_pq_adc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # once per (k, j) distance term. The big argmin/LUT expressions below
     # are assembled as SQL TEXT and parsed with ONE F.expr each — building
     # them operator-by-operator costs thousands of py4j round trips
-    # (~15 s of driver time for ~1k terms, measured); string assembly is
+    # (seconds of driver time for ~1k terms); string assembly is
     # free and the JVM parses 100 KB of SQL in milliseconds. Double
     # literals use repr() (shortest exact round-trip) with the D suffix so
     # Spark parses them as DOUBLE, not DECIMAL — values stay bit-identical.
@@ -741,9 +736,9 @@ def x09_pq_adc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Distances are a data-driven HOF fold over the codebook held as a
     # LITERAL array-of-arrays, not 16 unrolled 8-term chains per subspace:
     # the unrolled form put ~1k flat terms in one codegen method — past the
-    # JIT's bytecode limit, so it ran interpreted (similarity.dot's r12
-    # finding; measured here 0.79 → 0.22 s, codes identical). The fold is
-    # the same left-to-right (x−c)² accumulation as _l2sq and the oracle.
+    # JIT's bytecode limit, so it ran interpreted (similarity.dot's
+    # finding; codes identical). The fold is the same left-to-right (x−c)²
+    # accumulation as _l2sq and the oracle.
     def _code_sql(m: int) -> str:
         cbs = "array(" + ", ".join(
             "array(" + ", ".join(f"{v!r}D" for v in cw[(m, k)]) + ")"
@@ -1339,10 +1334,10 @@ def x14_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Salt the within-cluster all-pairs join (guide §2.5): the join key has
     # only IVF_K distinct values and the 2 000-row inputs are byte-tiny, so
     # AQE coalesces the exchange to ONE partition — and the n² pair
-    # EXPANSION plus the cosine filter then run single-threaded (measured
-    # 8 s). Salting the a-side by vec_id and exploding the b-side K_SALT
-    # ways spreads the pair generation across the cluster; the pair set is
-    # unchanged (every (a, b) meets exactly one salt).
+    # EXPANSION plus the cosine filter then run single-threaded. Salting
+    # the a-side by vec_id and exploding the b-side K_SALT ways spreads the
+    # pair generation across the cluster; the pair set is unchanged (every
+    # (a, b) meets exactly one salt).
     _SALT = 32
     a = assigned.withColumn("salt", F.pmod(F.col("vec_id"), F.lit(_SALT))).alias("a")
     b = assigned.withColumn(
@@ -1395,8 +1390,8 @@ def _int_dot(a: str, b: str, dim: int):
     """Integer dot product over two array<long> code columns — exact
     (≤ 64·127² per term sum, and integer addition is order-independent).
     HOF fold, not an unrolled chain: the flat 64-term chain exceeds the
-    JIT's method limit and runs interpreted (similarity.dot's r12 note),
-    and the loop form cost ~1 s of driver py4j time per expression."""
+    JIT's method limit and runs interpreted (similarity.dot's note), and
+    the loop form pays one py4j call per node."""
     return F.expr(
         f"aggregate(zip_with(slice({a}, 1, {dim}), slice({b}, 1, {dim}), "
         f"(x, y) -> x * y), CAST(0 AS BIGINT), (acc, v) -> acc + v)"
@@ -1408,9 +1403,9 @@ def _sq8_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantization stage of x15/x16. Zero-norm vectors are excluded (they
     have no direction to quantize; parity with the oracle's WHERE nrm > 0).
 
-    Returned LAZILY checkpointed (r11 optimization round): x15/x16 consume
-    this relation on both sides of their broadcast scoring join, so the
-    norm + scale + clamp-quantize projection executed twice per query;
+    Returned LAZILY checkpointed: x15/x16 consume this relation on both
+    sides of their broadcast scoring join, so otherwise the norm + scale +
+    clamp-quantize projection executes twice per query;
     the checkpoint materializes it once inside the single output action
     (values unchanged — same deterministic expressions)."""
     emb = _emb(spark, sf_dir).withColumn("nrm", S.norm("embedding", EMB_DIM))
@@ -1743,15 +1738,14 @@ def x17_hof_vector_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pair similarities, reproduced bit-identically in float64 — runs as ONE
 # Arrow-grouped pass per query_id (applyInPandas over the ≤10-row pool,
 # O(K·pool²) integer work per query), so the whole query is a single
-# action with no iterative jobs and nothing collects to the driver.
-# (r11 optimization: the previous 5-round DataFrame loop ran ~11
-# sequential eager jobs whose fixed latency dominated — see
-# OPTIMIZATION_r11.md; per-query work and results are unchanged.)
+# action with no iterative jobs and nothing collects to the driver (a
+# 5-round DataFrame loop runs ~11 sequential eager jobs whose fixed
+# latency dominates — see OPTIMIZATION_r11.md).
 # At 100 TB the pool stays 10 rows per query, queries partition across
 # the cluster, and the greedy cost is independent of corpus size. The
 # oracle runs the SAME greedy policy as a recursive CTE with a LATERAL
 # argmax step.
-# NUMERIC DOMAIN (round 8, q26/q28's insurance pattern): the raw cosines
+# NUMERIC DOMAIN (q26/q28's insurance pattern): the raw cosines
 # are bit-deterministic (identical fold order both sides — the x01
 # contract), and everything AFTER them is exact int64: rel and pair sims
 # are e4 BIGINTs (floor(cos·1e4 + 0.5)), λ=0.7/μ=0.3 become the integer
@@ -1831,7 +1825,7 @@ def x18_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # No pre-repartition: the scan's own partitioning parallelizes the
     # broadcast scoring join at any real corpus size; the explicit
     # 32-way exchange of a tiny corpus only added a shuffle and 32-task
-    # stages to every downstream job (r11 optimization round)
+    # stages to every downstream job
     emb = _emb(spark, sf_dir).withColumn("nrm", S.norm("embedding", EMB_DIM))
     q = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"),
@@ -2009,7 +2003,7 @@ def _x19_oracle() -> str:
 
 @query("x19_ivf_recall_sweep", oracle=_x19_oracle())
 def x19_ivf_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # LAZY checkpoint (r11): this norm-projected corpus feeds seeds (3
+    # LAZY checkpoint: this norm-projected corpus feeds seeds (3
     # broadcast uses), the assignment scan, the query slice, the exact
     # truth scan and the corpus count — one materialization instead of ~5
     # re-executions of the scan+norm subtree
@@ -2127,7 +2121,7 @@ def x19_ivf_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# x20 — BINARY-quantized search with exact rescore (round 9; the modern
+# x20 — BINARY-quantized search with exact rescore (the modern
 # 32x-compression ANN tier below x15's SQ8: RaBitQ/BQ-style sign-bit
 # codes + Hamming candidate scan + exact top-k rerank). Each 64-dim float
 # vector packs into TWO int64 words (bit j of word w set iff
@@ -2257,7 +2251,7 @@ def x20_binary_quant_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # window? Both rankings computed from one broadcast pair scan (rank by
 # packed-word Hamming distance, rank by exact cosine), hits = exact
 # top-5 rows whose Hamming rank <= R. The recall lands as an e4 BIGINT
-# (round-9 exact domain — x16 predates it and emits the rounded double).
+# (exact domain — x16 predates it and emits the rounded double).
 # This is the number that justifies x20's R=50 rerank window the way
 # x19 justifies nprobe and t34 justifies the LSH band count: if a
 # distribution shift drops sign-bit recall, this row's hash flips.
@@ -2446,7 +2440,7 @@ _X22_R = 30
 def x22_ivf_bq_probe_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     lo = F.expr(_x20_word_sql(0, base1=False))
     hi = F.expr(_x20_word_sql(1, base1=False))
-    # LAZY checkpoint (r11): seeds, the assignment scan and the query
+    # LAZY checkpoint: seeds, the assignment scan and the query
     # slice all read this norm+BQ-code projection — materialize it once
     emb = fan_out(
         _emb(spark, sf_dir).select(
@@ -3082,8 +3076,8 @@ def _mips_ann_recall(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame
     base = emb.select("vec_id", "embedding", S.dot("embedding", "embedding", EMB_DIM).alias("n2"))
     m = base.agg(F.max("n2").alias("m2"))
     # map-only augmentation: the 1-row max broadcasts (q17 scalar shape).
-    # LAZY checkpoint (r11): seeds (2 broadcast uses) and the assignment
-    # scan all read `aug`, and every re-execution re-ran the corpus n²
+    # LAZY checkpoint: seeds (2 broadcast uses) and the assignment
+    # scan all read `aug`, and every re-execution re-runs the corpus n²
     # aggregation behind `m` — materialize once per action
     aug = (
         base.crossJoin(F.broadcast(m))
@@ -3225,10 +3219,9 @@ def _x28_paths(spark: SparkSession, sf_dir: str):
         )
         # LAZY checkpoint: pre- and post-tombstone rankings both consume
         # this candidate relation — without the checkpoint each consumer
-        # re-ran the whole assignment + probe + scoring lineage (the
-        # corpus-sized part of the query) and x28 paid it twice (r11
-        # optimization round; the checkpointed relation is only
-        # (query_id, neighbor_id, cosine_sim) — probe-candidate-sized)
+        # re-runs the whole assignment + probe + scoring lineage (the
+        # corpus-sized part of the query) — the checkpointed relation is
+        # only (query_id, neighbor_id, cosine_sim), probe-candidate-sized
         .localCheckpoint(eager=False)
     )
     dels = emb.filter(F.col("vec_id") % _X28_MOD == _X28_RES).select(

@@ -42,10 +42,8 @@ def test_rows_only_sketches_never_enter_gate_window():
 
     from stock_crypto_data_pipeline_public_spark.plans import registry as R
 
-    # rows-only sketches + the retired q40-family tripwires (q40/q40h are
-    # red-by-design at the driver — rule 7's negative controls — and q40f
-    # is the original not-type-faithful probe)
-    assert R._NEVER_GATE == {"t28", "t29", "t39", "q40", "q40f", "q40h"}
+    # the rows-only sketches, nothing else
+    assert R._NEVER_GATE == {"t28", "t29", "t39"}
     window = list(R.QUERIES)[:50]
     assert not [n for n in window if n.split("_", 1)[0] in R._NEVER_GATE]
     orig = R._GATE_PRIORITY

@@ -323,31 +323,29 @@ def built_plans(sf_dir):
 
 
 def test_no_decimal_typed_gated_outputs(built_plans):
-    """Round-10 renderer rule: no oracled query may EMIT a DecimalType
-    column at all. DuckDB's pandas path renders every decimal as float64
-    while Spark's hands the driver verbatim Decimal objects — equal
-    values hash differently the moment the decimal carries trailing
-    zeros (the decoded r9 q40f red; see oracle_compare.py's KNOWN
-    RESIDUAL). The local mirror coerces Decimal→float, so only the
+    """Registry rule 7: no oracled query may EMIT a DecimalType column at
+    all. DuckDB's pandas path renders every decimal as float64 while
+    Spark's hands the driver verbatim Decimal objects — equal values hash
+    differently the moment the decimal carries trailing zeros. The local
+    mirror coerces Decimal→float (see oracle_compare.py), so only the
     driver can see the mismatch — hence a mechanical ban, not a code
-    -review convention. Exempt: the q40 fingerprint family (q40f/q40h
-    emit decimals BY DESIGN as probes)."""
+    -review convention."""
     from stock_crypto_data_pipeline_public_spark.plans import registry
 
     offenders = {
         name: [f.name for f in df.schema.fields
                if f.dataType.typeName().startswith("decimal")]
         for name, df in built_plans.items()
-        if name in registry.ORACLES and not name.startswith("q40")
+        if name in registry.ORACLES
     }
     offenders = {k: v for k, v in offenders.items() if v}
     assert not offenders, f"decimal-typed hashed outputs: {offenders}"
 
 
 def test_no_hashed_output_transits_decimal_to_double(built_plans):
-    """Round-9 exact-domain rule, enforced mechanically: no registered
-    query's analyzed plan may contain a Cast of a FRACTIONAL (scale > 0),
-    non-literal DecimalType expression to DoubleType — the q26/q28/q40
+    """Exact-domain rule, enforced mechanically: no registered query's
+    analyzed plan may contain a Cast of a FRACTIONAL (scale > 0),
+    non-literal DecimalType expression to DoubleType — the q26/q28
     driver-divergence pipeline. Money aggregates must leave the decimal
     domain as scaled BIGINT (functions/numeric.py dsum_e / money_sum_e2 /
     iavg), never through the double image.
@@ -357,9 +355,7 @@ def test_no_hashed_output_transits_decimal_to_double(built_plans):
       an integer, so the cast is ordinary integer->double correct
       rounding with no decimal-fraction rendering involved;
     - decimal LITERALS (v13's 0.25, t29's 0.5): plan-time constants both
-      engines fold identically — the q40b/q40f probes gate literal
-      rendering directly;
-    - the q40 renderer-fingerprint family (those casts ARE the probe)."""
+      engines fold identically."""
 
     def banned_casts(df):
         found = []
@@ -390,8 +386,6 @@ def test_no_hashed_output_transits_decimal_to_double(built_plans):
 
     offenders = {}
     for name, df in built_plans.items():
-        if name.startswith("q40"):
-            continue
         casts = banned_casts(df)
         if casts:
             offenders[name] = casts[:3]
