@@ -79,12 +79,15 @@ HOT_MODELS = ("fct_transactions", "fct_asset_prices", "dim_customer",
 
 
 def load_raw_tables(spark: SparkSession, warehouse_dir: str) -> dict[str, DataFrame]:
-    """Read whichever raw tables exist in the warehouse directory."""
+    """Read whichever raw tables exist in the warehouse directory, under
+    their declared schemas: every raw table is written aligned to
+    ``SCHEMAS``, so inferring it again from the parquet footers would only
+    cost one Spark job per table."""
     out: dict[str, DataFrame] = {}
-    for name in SCHEMAS:
+    for name, schema in SCHEMAS.items():
         path = os.path.join(warehouse_dir, name)
         if os.path.exists(path):
-            out[name] = spark.read.parquet(path)
+            out[name] = spark.read.schema(schema).parquet(path)
     return out
 
 

@@ -9,9 +9,10 @@ is the "embeddings partitioned by IVF centroid id" row of SCALE.md made
 concrete (and test_annindex proves the pruning mechanically via
 ``inputFiles()``).
 
-Build: one corpus pass (K-row centroid broadcast, min_by collapse — the
-same plan shape as x05/x10's assignment) + one partitioned write. Centroid
-vectors are tiny (K × dim doubles) and live in a JSON sidecar.
+Build: one corpus pass (K-row centroid broadcast ranked by
+``similarity.nearest``, the IVF rule every x-query assigns with) + one
+partitioned write. Centroid vectors are tiny (K × dim doubles) and live in
+a JSON sidecar.
 
 Query: centroid scoring happens on the DRIVER (K × dim floats — trivial),
 the probed centroid ids become a partition filter, and the exact cosine
@@ -54,19 +55,12 @@ def _assign_to_centroids(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """(vec_id, embedding, centroid_id): max-cosine assignment against a
-    K-row centroid broadcast (ties → lowest centroid id, the x05
-    convention) — the shared spine of build and incremental add."""
-
-    def _nrm(v: list[float]) -> float:
-        acc = 0.0
-        for x in v:
-            acc = acc + x * x
-        return acc ** 0.5
-
+    """(vec_id, embedding, nrm, centroid_id, assign_sim): max-cosine
+    assignment against a K-row centroid broadcast by the one IVF rule
+    (``S.nearest``) — the shared spine of build and incremental add."""
     seeds = local_rows(
         spark,
-        [(i, [float(x) for x in c], _nrm(c)) for i, c in enumerate(centroids)],
+        [(i, [float(x) for x in c], S.list_norm(c)) for i, c in enumerate(centroids)],
         "centroid_id int, ce array<double>, cnrm double",
     )
     vecs = emb.select(
@@ -92,23 +86,12 @@ def _assign_to_centroids(
     sim = S.dot("embedding", "ce", dim) / F.nullif(
         F.col("nrm") * F.col("cnrm"), F.lit(0.0)
     )
-    return (
-        vecs.crossJoin(F.broadcast(seeds))
-        .select("vec_id", "embedding", "nrm", "centroid_id", (-sim).alias("neg_sim"))
-        .groupBy("vec_id")
-        .agg(
-            F.expr("min_by(centroid_id, struct(neg_sim, centroid_id))").alias(
-                "centroid_id"
-            ),
-            F.any_value("embedding").alias("embedding"),
-            # the vector's norm is INDEX PAYLOAD: queries score cosine
-            # against candidates, so precomputing ‖v‖ once at build beats
-            # recomputing the 64-term expression on every probe
-            F.any_value("nrm").alias("nrm"),
-            # similarity to the WINNING centroid — the assignment-quality
-            # signal the drift diagnostic compares across batches
-            (-F.min("neg_sim")).alias("assign_sim"),
-        )
+    # the vector's norm is INDEX PAYLOAD: queries score cosine against
+    # candidates, so precomputing ‖v‖ once at build beats recomputing the
+    # 64-term expression on every probe. The winning score is the
+    # assignment-quality signal the drift diagnostic compares across batches.
+    return S.nearest(vecs, seeds, sim, "vec_id", "centroid_id").withColumnRenamed(
+        "score", "assign_sim"
     )
 
 
@@ -207,25 +190,15 @@ def add_to_ann_index(
 
 def probe_centroids(index_dir: str, query_vec: list[float], nprobe: int) -> list[int]:
     """Top-``nprobe`` centroids by cosine for one query — driver-side math
-    over the K × dim sidecar (ties → lowest centroid id)."""
+    over the K × dim sidecar, ranked by the IVF rule (``S.nearest_ids``)."""
     with open(_centroids_path(index_dir)) as f:
         centroids = json.load(f)
-
-    def _dot(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc = acc + x * y
-        return acc
-
-    def _nrm(a):
-        return _dot(a, a) ** 0.5
-
-    qn = _nrm(query_vec)
+    qn = S.list_norm(query_vec)
     scored = []
     for i, c in enumerate(centroids):
-        den = qn * _nrm(c)
-        scored.append((-(_dot(query_vec, c) / den) if den else float("inf"), i))
-    return [i for _, i in sorted(scored)[:nprobe]]
+        den = qn * S.list_norm(c)
+        scored.append((i, S.list_dot(query_vec, c) / den if den else None))
+    return S.nearest_ids(scored, nprobe)
 
 
 def query_ann_index(

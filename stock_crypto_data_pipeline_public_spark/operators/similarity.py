@@ -14,7 +14,10 @@ bucketing; the brute-force path is retained as the exactness baseline.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+import math
+from collections.abc import Iterable
+
+from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 
@@ -65,6 +68,61 @@ def norm(a: str, dim: int | None = None) -> Column:
 
 def cosine(a: str, b: str, dim: int | None = None) -> Column:
     return dot(a, b, dim) / F.nullif(norm(a, dim) * norm(b, dim), F.lit(0.0))
+
+
+def nearest(
+    rows: DataFrame,
+    cands: DataFrame,
+    score: Column,
+    row_id: str,
+    cand_id: str,
+    k: int = 1,
+) -> DataFrame:
+    """The IVF rule: each row of ``rows`` keeps its ``k`` best candidates of
+    the broadcast table ``cands`` — ``score`` descending, a NULL score last,
+    ties to the lowest ``cand_id`` (the oracles' ``ORDER BY score DESC,
+    cand_id ASC``). The caller builds ``score`` from both sides' columns,
+    so its doubles are the caller's own.
+
+    Returns every column of ``rows`` plus ``cand_id`` and ``score``; with
+    ``k > 1`` also ``rank`` (1..k). ``k == 1`` is one aggregation by
+    ``row_id`` (payload through ``any_value``): its map-side partials ship
+    one row per row id where a window would ship all of them. ``max_by``
+    over ``struct(score, -cand_id)``, not ``min_by`` over
+    ``struct(-score, cand_id)``: a struct orders a NULL field first, so
+    only the ``max_by`` form lets a NULL score lose."""
+    scored = rows.crossJoin(F.broadcast(cands)).select(
+        *rows.columns, cand_id, score.alias("score")
+    )
+    if k > 1:
+        w = W.partitionBy(row_id).orderBy(F.desc("score"), F.asc(cand_id))
+        return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return scored.groupBy(row_id).agg(
+        F.max_by(cand_id, F.struct("score", -F.col(cand_id))).alias(cand_id),
+        *[F.any_value(c).alias(c) for c in rows.columns if c != row_id],
+        F.max("score").alias("score"),
+    )
+
+
+def list_dot(a: list[float], b: list[float]) -> float:
+    """Driver-side :func:`dot`: the same left fold over Python doubles."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc = acc + x * y
+    return acc
+
+
+def list_norm(a: list[float]) -> float:
+    """Driver-side :func:`norm`."""
+    return math.sqrt(list_dot(a, a))
+
+
+def nearest_ids(scores: Iterable[tuple[int, float | None]], k: int = 1) -> list[int]:
+    """Driver-side :func:`nearest` over ``(cand_id, score)`` pairs: the
+    ``k`` best ids, score descending, a None score last, ties to the
+    lowest id."""
+    ranked = sorted(scores, key=lambda p: (p[1] is None, -(p[1] or 0.0), p[0]))
+    return [c for c, _ in ranked[:k]]
 
 
 def l2sq_slice(vec: str, off_expr: str, cw: str, sub: int) -> Column:

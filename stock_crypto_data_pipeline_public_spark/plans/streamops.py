@@ -1205,12 +1205,14 @@ def s13_streaming_sketch_end_state(spark: SparkSession, sf_dir: str, base: str) 
 # batch boundary, and therefore a timer firing at ANY later batch flushes
 # the same rows — the end state's CONTENTS are invariant to when eviction
 # happens (the operator docstring's replay caveat, designed away). The
-# harness runs ONE continuously-triggered query (availableNow never
-# self-terminates under ProcessingTimeTimeout — Spark keeps
-# scheduling empty batches to service timers — so the drain idiom is
-# start → poll the sink for the expected session count → stop) whose
-# empty batches fire the expired timers, leaving the COMPLETE
-# sessionization in the sink:
+# harness runs the query ONE micro-batch per start (trigger once, resumed
+# from the checkpoint): phase A, phase B, then an empty landing file per
+# run — a batch whose only work is firing the expired timers — until the
+# sink holds every session. Each run ends itself after its batch commits:
+# availableNow never self-terminates under ProcessingTimeTimeout (Spark
+# keeps scheduling empty batches to service timers), and stopping a
+# continuously-triggered query interrupts whichever batch is committing
+# its state store. The sink ends with the COMPLETE sessionization:
 #
 #   - every non-final session per user, closed_by='gap' (the in-batch path
 #     s04 already gates), and
@@ -1225,7 +1227,7 @@ def s13_streaming_sketch_end_state(spark: SparkSession, sf_dir: str, base: str) 
 #
 # Scale: same per-active-user fixed-width state as s04; the eviction path
 # is what keeps state ∝ RECENTLY-active users on an unbounded stream. The
-# poll-until-flushed loop's driver pull is one count per iteration.
+# flush loop's driver pull is one count per run.
 # --------------------------------------------------------------------------
 @query(
     "s14_idle_timeout_eviction",
@@ -1295,21 +1297,12 @@ def s14_idle_timeout_eviction(spark: SparkSession, sf_dir: str, base: str) -> Da
         except Exception:  # no committed batch yet
             return 0
 
-    # one file per parity phase + maxFilesPerTrigger=1 → each user's
-    # events reach exactly one micro-batch, so flush contents are
-    # invariant to WHEN timers fire — see the family comment
-    _land(ev.filter(F.col("user_id") % 2 == 0), landing)
-    with _drain_shuffle(spark, max(2, spark.sparkContext.defaultParallelism // 2)):
-        q = (
-            sessionize_stream(
-                spark.readStream.schema(ev.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(landing),
+    def drain() -> None:
+        _drain(
+            spark,
+            lambda: sessionize_stream(
+                spark.readStream.schema(ev.schema).parquet(landing),
                 gap_minutes=360,
-                # the end state is invariant to WHEN timers fire (see
-                # family comment), so the timeout/trigger cadence is
-                # pure drain latency — set to the shortest cadence the
-                # poll loop resolves
                 idle_timeout_ms=300,
                 emit_close_reason=True,
             )
@@ -1317,24 +1310,28 @@ def s14_idle_timeout_eviction(spark: SparkSession, sf_dir: str, base: str) -> Da
             .option("path", sink)
             .option("checkpointLocation", ckpt)
             .outputMode("append")
-            .trigger(processingTime="200 milliseconds")
-            .start()
+            .trigger(once=True)
+            .start(),
+            python_state=True,
         )
-        try:
-            # land phase B while the query runs: odd-user data flows
-            # through the same batches that service even-user timers
-            _land(ev.filter(F.col("user_id") % 2 == 1), landing)
-            deadline = time.monotonic() + 120
-            while sink_count() < expected:
-                if time.monotonic() > deadline:
-                    raise RuntimeError(
-                        "s14: idle-timeout eviction never flushed all "
-                        f"sessions ({sink_count()}/{expected})"
-                    )
-                time.sleep(0.15)
-        finally:
-            q.stop()
-            q.awaitTermination()
+
+    # one file per parity phase, one run each → each user's events reach
+    # exactly one micro-batch, so flush contents are invariant to WHEN
+    # timers fire — see the family comment
+    _land(ev.filter(F.col("user_id") % 2 == 0), landing)
+    drain()
+    _land(ev.filter(F.col("user_id") % 2 == 1), landing)
+    drain()
+    deadline = time.monotonic() + 120
+    while sink_count() < expected:
+        if time.monotonic() > deadline:
+            raise RuntimeError(
+                "s14: idle-timeout eviction never flushed all "
+                f"sessions ({sink_count()}/{expected})"
+            )
+        time.sleep(0.3)  # past idle_timeout_ms: every armed timer is due
+        _land(ev.limit(0), landing)
+        drain()
     out = spark.read.parquet(sink)
     if out.count() != expected:  # a late duplicate flush would be a bug
         raise RuntimeError("s14: sink overshot the closed-form count")

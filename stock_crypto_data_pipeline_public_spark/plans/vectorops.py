@@ -200,14 +200,10 @@ def x05_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     sim = S.dot("embedding", "ce", EMB_DIM) / F.nullif(
         F.col("nrm") * F.col("cnrm"), F.lit(0.0)
     )
-    scored = emb.crossJoin(F.broadcast(seeds)).select(
-        "vec_id", "centroid_id", sim.alias("sim")
-    )
-    w = W.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("centroid_id"))
-    assigned = scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") == 1)
+    assigned = S.nearest(emb, seeds, sim, "vec_id", "centroid_id")
     return assigned.groupBy("centroid_id").agg(
         F.count(F.lit(1)).alias("n_vecs"),
-        rnd(F.avg("sim"), 4).alias("avg_sim"),
+        rnd(F.avg("score"), 4).alias("avg_sim"),
     )
 
 
@@ -276,14 +272,7 @@ def x07_ivf_probe_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     a_sim = S.dot("embedding", "ce", EMB_DIM) / F.nullif(
         F.col("nrm") * F.col("cnrm"), F.lit(0.0)
     )
-    aw = W.partitionBy("vec_id").orderBy(F.desc("a_sim"), F.asc("centroid_id"))
-    assigned = (
-        emb.crossJoin(F.broadcast(seeds))
-        .select("vec_id", "label", "embedding", "nrm", "centroid_id", a_sim.alias("a_sim"))
-        .withColumn("rk", F.row_number().over(aw))
-        .filter(F.col("rk") == 1)
-        .drop("a_sim", "rk")
-    )
+    assigned = S.nearest(emb, seeds, a_sim, "vec_id", "centroid_id").drop("score")
 
     # queries → top-P probe centroids (10 × 8 rows, driver-trivial)
     q = emb.filter((F.col("vec_id") >= 100) & (F.col("vec_id") < 110)).select(
@@ -294,13 +283,8 @@ def x07_ivf_probe_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     p_sim = S.dot("qe", "ce", EMB_DIM) / F.nullif(
         F.col("qnrm") * F.col("cnrm"), F.lit(0.0)
     )
-    pw = W.partitionBy("query_id").orderBy(F.desc("p_sim"), F.asc("centroid_id"))
-    probes = (
-        q.crossJoin(F.broadcast(seeds))
-        .select("query_id", "qe", "qnrm", "centroid_id", p_sim.alias("p_sim"))
-        .withColumn("rk", F.row_number().over(pw))
-        .filter(F.col("rk") <= IVF_NPROBE)
-        .drop("p_sim", "rk")
+    probes = S.nearest(q, seeds, p_sim, "query_id", "centroid_id", IVF_NPROBE).drop(
+        "score", "rank"
     )
 
     # probe join: broadcast the tiny (query, centroid) side; equi-join on
@@ -668,6 +652,29 @@ def _pq_oracle() -> str:
     """
 
 
+def _pq_tables(small: dict[int, list[float]]) -> tuple[dict, dict]:
+    """(codebook, query lookup tables) from the collected seed and query
+    vectors: codeword (m, k) is subspace m of vector k, and qtab[qid][m][k]
+    is the squared L2 distance of the query's subspace m to it — the
+    left-to-right (x−c)² fold of ``S.l2sq_slice`` and the oracle."""
+    cw = {
+        (m, k): small[k][m * PQ_SUB:(m + 1) * PQ_SUB]
+        for m in range(PQ_M)
+        for k in range(PQ_K)
+    }
+
+    def l2sq(vec: list[float], m: int, k: int) -> float:
+        diff = [x - c for x, c in zip(vec[m * PQ_SUB:(m + 1) * PQ_SUB], cw[(m, k)])]
+        return S.list_dot(diff, diff)
+
+    qtab = {
+        qid: [[l2sq(small[qid], m, k) for k in range(PQ_K)] for m in range(PQ_M)]
+        for qid in sorted(small)
+        if PQ_Q_LO <= qid < PQ_Q_HI
+    }
+    return cw, qtab
+
+
 @query("x09_pq_adc_search", oracle=_pq_oracle())
 def x09_pq_adc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
@@ -685,24 +692,7 @@ def x09_pq_adc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             | ((F.col("vec_id") >= PQ_Q_LO) & (F.col("vec_id") < PQ_Q_HI))
         ).collect()
     }
-    cw = {
-        (m, k): [small[k][m * PQ_SUB + j] for j in range(PQ_SUB)]
-        for m in range(PQ_M)
-        for k in range(PQ_K)
-    }
-
-    def _l2sq(vec: list[float], m: int, k: int) -> float:
-        acc = 0.0
-        for j in range(PQ_SUB):
-            x = vec[m * PQ_SUB + j] - cw[(m, k)][j]
-            acc = acc + x * x
-        return acc
-
-    qtab = {
-        qid: [[_l2sq(small[qid], m, k) for k in range(PQ_K)] for m in range(PQ_M)]
-        for qid in sorted(small)
-        if PQ_Q_LO <= qid < PQ_Q_HI
-    }
+    cw, qtab = _pq_tables(small)
 
     # ---- encode: MAP-ONLY — one projection computes all 8 codes ----------
     # The codebook is driver-side (16 codewords × 8 subspaces of the seed
@@ -713,7 +703,7 @@ def x09_pq_adc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # write codes). A posexplode → broadcast-join → min_by encode pays two
     # shuffles and a 128-rows-per-vector intermediate for the same result.
     # Distances fold left-to-right per j — the identical IEEE op sequence
-    # as the previous zip_with/aggregate fold, _l2sq above, and the
+    # as the previous zip_with/aggregate fold, _pq_tables, and the
     # oracle's list_sum, so doubles stay bit-identical. argmin ties break
     # to the smallest k: array_position returns the FIRST index of the min.
     spread = fan_out(emb, HEAVY, "vec_id")
@@ -738,7 +728,7 @@ def x09_pq_adc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the unrolled form put ~1k flat terms in one codegen method — past the
     # JIT's bytecode limit, so it ran interpreted (similarity.dot's
     # finding; codes identical). The fold is the same left-to-right (x−c)²
-    # accumulation as _l2sq and the oracle.
+    # accumulation as _pq_tables and the oracle.
     def _code_sql(m: int) -> str:
         cbs = "array(" + ", ".join(
             "array(" + ", ".join(f"{v!r}D" for v in cw[(m, k)]) + ")"
@@ -788,12 +778,12 @@ def x09_pq_adc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # probing discipline (each query searches only its P=2 nearest clusters).
 #
 # Plan shape: one corpus pass assigns vectors to centroids (8-row broadcast
-# + per-vector argmax window); the probe filter then cuts the corpus to the
-# probed clusters BEFORE PQ encoding, so encode work is ∝ probed fraction —
-# the property that makes IVF-PQ the shape that survives 100 TB (at write
-# time assignment+codes are precomputed once and partitioned by centroid;
-# the probe becomes partition pruning and the scan reads 4-byte codes, not
-# 256-byte vectors). Probe lists and query lookup tables are driver-side
+# + S.nearest's per-vector aggregation); the probe filter then cuts the
+# corpus to the probed clusters BEFORE PQ encoding, so encode work is ∝
+# probed fraction — the property that makes IVF-PQ the shape that survives
+# 100 TB (at write time assignment+codes are precomputed once and
+# partitioned by centroid; the probe becomes partition pruning and the
+# scan reads 4-byte codes, not 256-byte vectors). Probe lists and query lookup tables are driver-side
 # Python over the same collected seed/query vectors as x09 — explicit
 # left-to-right IEEE folds, bit-identical to both engines' expression
 # chains. Candidate scoring is map-only ADC; the final top-10 window moves
@@ -895,82 +885,33 @@ def x10_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             | ((F.col("vec_id") >= PQ_Q_LO) & (F.col("vec_id") < PQ_Q_HI))
         ).collect()
     }
-    cw = {
-        (m, k): [small[k][m * PQ_SUB + j] for j in range(PQ_SUB)]
-        for m in range(PQ_M)
-        for k in range(PQ_K)
-    }
+    cw, qtab = _pq_tables(small)
+    nrm = {v: S.list_norm(e) for v, e in small.items()}
 
-    def _dot(a: list[float], b: list[float]) -> float:
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc = acc + x * y
-        return acc
+    def cos(q: int, c: int) -> float | None:
+        den = nrm[q] * nrm[c]
+        return S.list_dot(small[q], small[c]) / den if den else None
 
-    def _cos(a: list[float], b: list[float]) -> float:
-        na, nb = 0.0, 0.0
-        for x in a:
-            na = na + x * x
-        for y in b:
-            nb = nb + y * y
-        den = (na ** 0.5) * (nb ** 0.5)
-        return _dot(a, b) / den if den != 0.0 else float("nan")
-
-    def _l2sq(vec: list[float], m: int, k: int) -> float:
-        acc = 0.0
-        for j in range(PQ_SUB):
-            x = vec[m * PQ_SUB + j] - cw[(m, k)][j]
-            acc = acc + x * x
-        return acc
-
-    qids = [v for v in sorted(small) if PQ_Q_LO <= v < PQ_Q_HI]
     probes = {
-        qid: [
-            c
-            for _, c in sorted(
-                ((-_cos(small[qid], small[c]), c) for c in range(IVF_K))
-            )[:IVFPQ_NPROBE]
-        ]
-        for qid in qids
-    }
-    qtab = {
-        qid: [[_l2sq(small[qid], m, k) for k in range(PQ_K)] for m in range(PQ_M)]
-        for qid in qids
+        qid: S.nearest_ids(((c, cos(qid, c)) for c in range(IVF_K)), IVFPQ_NPROBE)
+        for qid in qtab
     }
 
     # ---- coarse assignment: 8-row broadcast, per-vector argmax ----------
-    # centroid norms are Python-computed from the same collected doubles
-    # (explicit IEEE fold, same order as S.norm); the corpus norm is
-    # computed ONCE per vector before the 8-way broadcast, and the argmax
-    # is a min_by hash agg over struct(-sim, centroid_id) — map-side
-    # partials collapse the 8-per-vector scored rows, so the exchange
-    # carries one row per vector (the window formulation would shuffle all
-    # 8 and sort).
-    def _nrm(v: list[float]) -> float:
-        acc = 0.0
-        for x in v:
-            acc = acc + x * x
-        return acc ** 0.5
-
+    # centroid norms come from the same collected doubles (the fold order
+    # of S.norm); the corpus norm is computed ONCE per vector before the
+    # 8-way broadcast
     seeds = local_rows(
         spark,
-        [(c, small[c], _nrm(small[c])) for c in range(IVF_K)],
+        [(c, small[c], nrm[c]) for c in range(IVF_K)],
         "centroid_id int, ce array<double>, cnrm double",
     )
     spread = fan_out(emb, HEAVY, "vec_id").withColumn("nrm", S.norm("embedding", EMB_DIM))
     sim = S.dot("embedding", "ce", EMB_DIM) / F.nullif(
         F.col("nrm") * F.col("cnrm"), F.lit(0.0)
     )
-    assigned = (
-        spread.crossJoin(F.broadcast(seeds))
-        .select("vec_id", "embedding", "centroid_id", (-sim).alias("neg_sim"))
-        .groupBy("vec_id")
-        .agg(
-            F.expr("min_by(centroid_id, struct(neg_sim, centroid_id))").alias(
-                "centroid_id"
-            ),
-            F.any_value("embedding").alias("embedding"),
-        )
+    assigned = S.nearest(spread, seeds, sim, "vec_id", "centroid_id").select(
+        "vec_id", "centroid_id", "embedding"
     )
 
     # ---- probe filter BEFORE encoding: work ∝ probed clusters -----------
@@ -1018,7 +959,7 @@ def x10_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # ---- ADC per probing query, map-only; then the top-10 window ---------
     per_query = []
-    for qid in qids:
+    for qid in qtab:
         acc = "0.0D"
         for m in range(PQ_M):
             lut = "array(" + ", ".join(f"{v!r}D" for v in qtab[qid][m]) + ")"
@@ -1056,8 +997,8 @@ def x10_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # carry any fixed iteration count).
 #
 # Plan shape per iteration: one broadcast of the K-row centroid table
-# against the corpus scan (map-side scoring, min_by collapse — the
-# exchange carries one row per vector), then one (k, dim) hash aggregate
+# against the corpus scan (map-side scoring, S.nearest's aggregation —
+# the exchange carries one row per vector), then one (k, dim) hash aggregate
 # for the means (shuffle ∝ K·dim rows of partials, not corpus). At 100 TB:
 # centroids are always tiny (K × dim doubles), each iteration is one
 # corpus scan + one small agg, and the iteration count is a constant —
@@ -1129,18 +1070,9 @@ def x12_kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = S.l2sq_slice("embedding", "0", "ce", EMB_DIM)
 
     def assign(centroids: DataFrame) -> DataFrame:
-        # K-row broadcast scoring; min_by(struct(d, k)) == ORDER BY d, k —
-        # the map-side partials collapse the K-per-vector scored rows, so
-        # the exchange carries one row per vector
-        return (
-            spread.crossJoin(F.broadcast(centroids))
-            .select("vec_id", "embedding", "k", d.alias("d"))
-            .groupBy("vec_id")
-            .agg(
-                F.expr("min_by(k, struct(d, k))").alias("k"),
-                F.any_value("embedding").alias("embedding"),
-            )
-        )
+        # nearest in L2 = highest -d; negation is exact, so the order (and
+        # the lowest-k tiebreak) is the oracle's ORDER BY d, k
+        return S.nearest(spread, centroids, -d, "vec_id", "k").drop("score")
 
     a1 = assign(seeds)
     # iteration-boundary means: long form (k, dim, value) hash agg, rounded
@@ -1320,16 +1252,10 @@ def x14_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     a_sim = S.dot("embedding", "ce", EMB_DIM) / F.nullif(
         F.col("nrm") * F.col("cnrm"), F.lit(0.0)
     )
-    aw = W.partitionBy("vec_id").orderBy(F.desc("a_sim"), F.asc("centroid_id"))
-    assigned = (
-        emb.crossJoin(F.broadcast(seeds))
-        .select("vec_id", "embedding", "nrm", "centroid_id", a_sim.alias("a_sim"))
-        .withColumn("rk", F.row_number().over(aw))
-        .filter(F.col("rk") == 1)
-        .drop("a_sim", "rk")
-    )
     # both sides of the pair join consume the assignment; materialize once
-    assigned = assigned.localCheckpoint(eager=True)
+    assigned = S.nearest(
+        emb.select("vec_id", "embedding", "nrm"), seeds, a_sim, "vec_id", "centroid_id"
+    ).drop("score").localCheckpoint(eager=True)
 
     # Salt the within-cluster all-pairs join (guide §2.5): the join key has
     # only IVF_K distinct values and the 2 000-row inputs are byte-tiny, so
@@ -2020,18 +1946,8 @@ def x19_ivf_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     csim = S.dot("embedding", "ce", EMB_DIM) / F.nullif(
         F.col("nrm") * F.col("cnrm"), F.lit(0.0)
     )
-    # argmax as ONE hash aggregation (max_by over (sim, -centroid) breaks
-    # ties toward the lower centroid id, matching the oracle's rank-1
-    # window) — no window exchange+sort, and this branch is consumed twice
-    assigned = (
-        emb.crossJoin(F.broadcast(seeds))
-        .select("vec_id", "centroid_id", csim.alias("sim"))
-        .groupBy("vec_id")
-        .agg(
-            F.max_by(
-                "centroid_id", F.struct(F.col("sim"), -F.col("centroid_id"))
-            ).alias("centroid_id")
-        )
+    assigned = S.nearest(emb, seeds, csim, "vec_id", "centroid_id").select(
+        "vec_id", "centroid_id"
     )
     csizes = assigned.groupBy("centroid_id").agg(F.count(F.lit(1)).alias("csize"))
     q = emb.filter((F.col("vec_id") >= 100) & (F.col("vec_id") < 110)).select(
@@ -2042,12 +1958,9 @@ def x19_ivf_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     psim = S.dot("qe", "ce", EMB_DIM) / F.nullif(
         F.col("qnrm") * F.col("cnrm"), F.lit(0.0)
     )
-    wq = W.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("centroid_id"))
-    probes = (
-        q.crossJoin(F.broadcast(seeds))
-        .select("query_id", "centroid_id", psim.alias("sim"))
-        .withColumn("pr", F.row_number().over(wq))
-        .select("query_id", "centroid_id", "pr")
+    # every probe rank is kept: each nprobe setting reads the same ranking
+    probes = S.nearest(q, seeds, psim, "query_id", "centroid_id", IVF_K).select(
+        "query_id", "centroid_id", F.col("rank").alias("pr")
     )
     esim = rnd(
         S.dot("qe", "embedding", EMB_DIM)
@@ -2459,17 +2372,7 @@ def x22_ivf_bq_probe_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     a_sim = S.dot("embedding", "ce", EMB_DIM) / F.nullif(
         F.col("nrm") * F.col("cnrm"), F.lit(0.0)
     )
-    aw = W.partitionBy("vec_id").orderBy(F.desc("a_sim"), F.asc("centroid_id"))
-    assigned = (
-        emb.crossJoin(F.broadcast(seeds))
-        .select(
-            "vec_id", "label", "embedding", "nrm", "lo", "hi", "centroid_id",
-            a_sim.alias("a_sim"),
-        )
-        .withColumn("rk", F.row_number().over(aw))
-        .filter(F.col("rk") == 1)
-        .drop("a_sim", "rk")
-    )
+    assigned = S.nearest(emb, seeds, a_sim, "vec_id", "centroid_id").drop("score")
 
     q = emb.filter((F.col("vec_id") >= 100) & (F.col("vec_id") < 110)).select(
         F.col("vec_id").alias("query_id"),
@@ -2481,16 +2384,8 @@ def x22_ivf_bq_probe_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     p_sim = S.dot("qe", "ce", EMB_DIM) / F.nullif(
         F.col("qnrm") * F.col("cnrm"), F.lit(0.0)
     )
-    pw = W.partitionBy("query_id").orderBy(F.desc("p_sim"), F.asc("centroid_id"))
-    probes = (
-        q.crossJoin(F.broadcast(seeds))
-        .select(
-            "query_id", "qe", "qnrm", "qlo", "qhi", "centroid_id",
-            p_sim.alias("p_sim"),
-        )
-        .withColumn("rk", F.row_number().over(pw))
-        .filter(F.col("rk") <= IVF_NPROBE)
-        .drop("p_sim", "rk")
+    probes = S.nearest(q, seeds, p_sim, "query_id", "centroid_id", IVF_NPROBE).drop(
+        "score", "rank"
     )
 
     # probed-cell Hamming scan over the 16-byte codes — floats untouched
@@ -3094,26 +2989,14 @@ def _mips_ann_recall(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame
     # corpus → nearest augmented centroid (x07's broadcast scoring; the
     # /M² cosine denominator is constant, so rank by the augmented dot)
     a_score = S.dot("embedding", "ce", EMB_DIM) + F.col("a") * F.col("ca")
-    aw = W.partitionBy("vec_id").orderBy(F.desc("a_score"), F.asc("centroid_id"))
-    assigned = (
-        aug.crossJoin(F.broadcast(seeds))
-        .select("vec_id", "embedding", "centroid_id", a_score.alias("a_score"))
-        .withColumn("rk", F.row_number().over(aw))
-        .filter(F.col("rk") == 1)
-        .drop("a_score", "rk")
-    )
+    assigned = S.nearest(aug, seeds, a_score, "vec_id", "centroid_id").drop("score")
     q = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
     )
     # queries probe by plain dot (their augmented coordinate is 0)
     p_score = S.dot("qe", "ce", EMB_DIM)
-    pw = W.partitionBy("query_id").orderBy(F.desc("p_score"), F.asc("centroid_id"))
-    probes = (
-        q.crossJoin(F.broadcast(seeds))
-        .select("query_id", "qe", "centroid_id", p_score.alias("p_score"))
-        .withColumn("rk", F.row_number().over(pw))
-        .filter(F.col("rk") <= nprobe)
-        .drop("p_score", "rk")
+    probes = S.nearest(q, seeds, p_score, "query_id", "centroid_id", nprobe).drop(
+        "score", "rank"
     )
     ip = rnd(S.dot("qe", "embedding", EMB_DIM), 4)
     wq = W.partitionBy("query_id")
@@ -3189,25 +3072,13 @@ def _x28_paths(spark: SparkSession, sf_dir: str):
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("ce")
     )
     sim = S.cosine("embedding", "ce", EMB_DIM)
-    aw = W.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("centroid_id"))
-    assigned = (
-        emb.crossJoin(F.broadcast(seeds))
-        .select("vec_id", "embedding", "centroid_id", sim.alias("sim"))
-        .withColumn("rk", F.row_number().over(aw))
-        .filter(F.col("rk") == 1)
-        .drop("sim", "rk")
-    )
+    assigned = S.nearest(emb, seeds, sim, "vec_id", "centroid_id").drop("score")
     q = emb.filter((F.col("vec_id") >= 100) & (F.col("vec_id") < 110)).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
     )
     qsim = S.cosine("qe", "ce", EMB_DIM)
-    pw = W.partitionBy("query_id").orderBy(F.desc("qsim"), F.asc("centroid_id"))
-    probes = (
-        q.crossJoin(F.broadcast(seeds))
-        .select("query_id", "qe", "centroid_id", qsim.alias("qsim"))
-        .withColumn("rk", F.row_number().over(pw))
-        .filter(F.col("rk") <= IVF_NPROBE)
-        .drop("qsim", "rk")
+    probes = S.nearest(q, seeds, qsim, "query_id", "centroid_id", IVF_NPROBE).drop(
+        "score", "rank"
     )
     cand = (
         assigned.join(F.broadcast(probes), ["centroid_id"])

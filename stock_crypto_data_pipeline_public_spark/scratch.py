@@ -16,9 +16,9 @@ Resolution order:
 
 1. ``$SPARK_GRAFT_SCRATCH_DIR`` — explicit override (set this on a real
    cluster if the default is wrong for the node layout);
-2. ``/dev/shm`` when it is a writable directory (Linux RAM-backed tmpfs —
-   measured on the r11 box: s02 −7%, s09 −13%, x13 −11%, q38 −11% vs
-   ``/tmp`` on the root disk, best-of-4 each way);
+2. ``/dev/shm`` when it is a writable directory (Linux RAM-backed tmpfs:
+   scratch-heavy queries run measurably faster than on a root-disk
+   ``/tmp``, see OPTIMIZATION_r11.md);
 3. ``tempfile.gettempdir()`` (the previous behavior).
 
 DURABLE state never goes through this module: real streaming checkpoints

@@ -45,16 +45,16 @@ def local_rows(spark: SparkSession, rows: list, schema) -> DataFrame:
     ``defaultParallelism`` Python-RDD slices (32 locally), and every
     consumer then pays one JVM→Python worker round-trip PER SLICE — worst
     when a ``coalesce(1)`` write funnels all slices through one task,
-    which pays the ~32 round-trips SEQUENTIALLY (measured 5.8-6.9 s for a
-    ONE-ROW sentinel write at r11; thread dump showed the write task
-    parked in ``PythonRunner.ReaderInputStream.read`` the whole time).
+    which pays the ~32 round-trips SEQUENTIALLY (a thread dump of a
+    ONE-ROW sentinel write showed the write task parked in
+    ``PythonRunner.ReaderInputStream.read`` the whole time).
     One slice = one round-trip, and downstream stages get one healthy
     partition instead of 32 near-empty ones (guide §4.1 — control how
     often the Python boundary is crossed; §2.4 — don't fan out rows you
     will immediately re-funnel). Values are identical to the multi-slice
     form — same verifier, same conversion path, only the slicing changes.
 
-    Failure-mode note (r11 ADVICE): routing rows through ``parallelize``
+    Failure-mode note: routing rows through ``parallelize``
     means schema verification that ``createDataFrame(list)`` performed
     eagerly on the driver happens lazily on executors — a malformed row
     (wrong type in a sentinel tuple) surfaces as a Py4J job failure at

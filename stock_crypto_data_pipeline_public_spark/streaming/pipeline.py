@@ -255,8 +255,8 @@ def run_sketch_sink(
     drop every stale epoch and see the consistent pre-wipe PREFIX the old
     partition holds), then atomically rename-swap the replayed content in.
     No read at any point in either sequence can sum replayed + stale
-    content (the r9-ADVICE transient-overcount window, closed in r11 —
-    pinned by tests/test_streaming.py's phase-by-phase replay test).
+    content (a transient overcount — pinned by tests/test_streaming.py's
+    phase-by-phase replay test).
     :func:`compact_sketch` materializes the cell-wise sum periodically so
     read cost doesn't grow with epoch count. Per-batch work is one
     explode(d) + one hash aggregation over the batch — ∝ batch size,
@@ -289,9 +289,9 @@ def land_sketch_epoch(
 
     Wipe-replay first epoch (``epoch_id`` <= live pointer — only a replay
     that compressed history into fewer micro-batches can go backwards):
-    overwriting ``epoch=N`` in place would open the r9-ADVICE transient
-    window where a read sums the REPLAYED epoch N plus the STALE epochs
-    N+1.. that the old pointer still admits. Two-phase instead:
+    overwriting ``epoch=N`` in place would open a transient window where
+    a read sums the REPLAYED epoch N plus the STALE epochs N+1.. that the
+    old pointer still admits. Two-phase instead:
 
       1. stage the replayed partition beside the live dir (dot-prefixed —
          partition discovery ignores it);

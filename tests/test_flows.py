@@ -50,6 +50,26 @@ def test_typed_round_trip(spark, first_run, flow):
     assert back.filter(F.col("transaction_id").isNull()).count() == 0
 
 
+def test_load_raw_tables_starts_no_job(spark, first_run, flow):
+    """The raw tables are read under their declared schemas: loading them
+    infers nothing from the parquet footers, so it runs no Spark job, and
+    each table reads back with the columns and types it was written with."""
+    from stock_crypto_data_pipeline_public_spark.flows import load_raw_tables
+
+    sc = spark.sparkContext
+    sc.setJobGroup("load_raw_tables", "load_raw_tables")
+    try:
+        raw = load_raw_tables(spark, flow.warehouse_dir)
+        assert list(sc.statusTracker().getJobIdsForGroup("load_raw_tables")) == []
+    finally:
+        sc.setJobGroup(None, None)
+    assert set(raw) == set(first_run[0])
+    for name, df in raw.items():
+        inferred = spark.read.parquet(f"{flow.warehouse_dir}/{name}")
+        assert df.dtypes == inferred.dtypes, name
+        assert df.count() == inferred.count() > 0, name
+
+
 def test_rerun_is_idempotent(spark, first_run, flow):
     # same landing files -> same run-suffix load stamps -> zero new rows
     appended = flow.ingest_raw(spark)

@@ -90,7 +90,7 @@ def test_x10_probe_filter_sits_below_pq_encode(no_aqe):
     the corpus BEFORE the PQ encode stage — encode work ∝ probed fraction.
     In the printed plan tree (parents before descendants), the encode
     Generate must appear above the Filter, which must appear above the
-    coarse-assignment min_by aggregate it consumes."""
+    coarse-assignment max_by aggregate it consumes."""
     spark = no_aqe
     from stock_crypto_data_pipeline_public_spark.plans import registry
 
@@ -108,7 +108,7 @@ def test_x10_probe_filter_sits_below_pq_encode(no_aqe):
     probe_filter = first(
         lambda ln: "Filter" in ln and re.search(r"centroid_id#\d+ IN", ln)
     )
-    coarse = first(lambda ln: "min_by(centroid_id" in ln)
+    coarse = first(lambda ln: "max_by(centroid_id" in ln)
     assert encode < probe_filter < coarse, (encode, probe_filter, coarse)
 
 
@@ -200,6 +200,60 @@ def test_scan_spreads_are_sized_only_by_fan_out():
         if rel.startswith(("plans/", "operators/")):
             visit(ast.parse(src), rel, [])
     assert not found, "size scan spreads with sources.tables.fan_out:\n" + "\n".join(found)
+
+
+def test_nearest_centroid_rule_has_one_home():
+    """operators/similarity.nearest is the one place that ranks IVF
+    candidates (score descending, ties to the lowest id): no other module
+    in plans/ or operators/ orders a window by ``F.asc("centroid_id")`` or
+    ``F.asc("k")`` as a tiebreak, or calls ``min_by``/``max_by`` with a
+    ``struct`` ordering key (as a function or inside a SQL string).
+    Exempt: x10's PQ encode, which takes the nearest codeword of all 8
+    subspaces in one aggregation pass (``FILTER (WHERE m = …)``) — a
+    per-subspace argmin, not a per-row candidate ranking."""
+    import ast
+    from pathlib import Path
+
+    import stock_crypto_data_pipeline_public_spark as pkg
+
+    exempt = {("plans/vectorops.py", "x10_ivfpq_search", "min_by(k, struct(")}
+    struct_key = re.compile(r"\b(?:min|max)_by\(\s*[^,()]+,\s*struct\(")
+    root = Path(pkg.__file__).parent
+    found = []
+
+    def visit(node, rel, fn):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        hit = None
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+            arg = node.args[0] if node.args else None
+            if (
+                name == "asc"
+                and isinstance(arg, ast.Constant)
+                and arg.value in ("centroid_id", "k")
+            ):
+                hit = f'asc("{arg.value}")'
+            elif name in ("min_by", "max_by") and any(
+                isinstance(a, ast.Call)
+                and getattr(a.func, "attr", getattr(a.func, "id", None)) == "struct"
+                for a in node.args[1:]
+            ):
+                hit = f"{name}(…, struct(…))"
+        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+            m = struct_key.search(node.value)
+            hit = m and m.group(0)
+        if hit and (rel, fn, hit) not in exempt:
+            found.append(f"{rel}:{node.lineno} {hit} (in {fn})")
+        for child in ast.iter_child_nodes(node):
+            visit(child, rel, fn)
+
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel.startswith(("plans/", "operators/")) and rel != "operators/similarity.py":
+            visit(ast.parse(path.read_text()), rel, None)
+    assert not found, "rank IVF candidates with similarity.nearest:\n" + "\n".join(found)
 
 
 def test_table_commits_go_only_through_manifest():

@@ -1229,3 +1229,74 @@ def test_m23_real_decode_deltas_are_exactly_bimodal(spark, sf_dir):
     for r in out:
         assert r.n_shots in (2, 3)
         assert 1 <= r.first_cut_frame <= 5
+
+
+@st.composite
+def score_grids(draw):
+    """(candidate ids, per-row score lists): scores from a four-value set so
+    exact ties are common, and one NULL score at a random cell."""
+    n_rows = draw(st.integers(min_value=1, max_value=4))
+    n_cands = draw(st.integers(min_value=1, max_value=6))
+    ids = draw(
+        st.lists(
+            st.integers(min_value=0, max_value=99),
+            min_size=n_cands, max_size=n_cands, unique=True,
+        )
+    )
+    grid = [
+        [draw(st.sampled_from([-0.5, 0.0, 0.25, 1.0])) for _ in range(n_cands)]
+        for _ in range(n_rows)
+    ]
+    grid[draw(st.integers(0, n_rows - 1))][draw(st.integers(0, n_cands - 1))] = None
+    return ids, grid
+
+
+def _brute_topk(pairs: list[tuple[int, float | None]], k: int) -> list[int]:
+    """Repeated argmax by explicit comparison: a higher score wins, any
+    score beats None, and a tie goes to the lower id."""
+
+    def better(a, b):
+        (ca, sa), (cb, sb) = a, b
+        if sa is None or sb is None:
+            return (sa is not None, -ca) > (sb is not None, -cb)
+        return (sa, -ca) > (sb, -cb)
+
+    left, out = list(pairs), []
+    while left and len(out) < k:
+        best = left[0]
+        for p in left[1:]:
+            if better(p, best):
+                best = p
+        out.append(best[0])
+        left.remove(best)
+    return out
+
+
+@SETTINGS
+@given(case=score_grids(), k=st.sampled_from([1, 3]))
+def test_nearest_matches_brute_force_topk(spark, case, k):
+    """similarity.nearest (one aggregation at k = 1, a window above) and
+    its driver twin nearest_ids both rank like a brute-force argmax: score
+    descending, NULL last, ties to the lowest candidate id; k = 1 carries
+    the row's payload and the winning score."""
+    from stock_crypto_data_pipeline_public_spark.operators import similarity as S
+
+    ids, grid = case
+    rows = spark.createDataFrame(
+        [(r, s, f"t{r}") for r, s in enumerate(grid)],
+        "row_id long, s array<double>, tag string",
+    )
+    cands = spark.createDataFrame(list(enumerate(ids)), "pos int, cand_id long")
+    score = F.element_at("s", F.col("pos") + 1)
+    got = S.nearest(rows, cands, score, "row_id", "cand_id", k).collect()
+    for r, scores in enumerate(grid):
+        pairs = list(zip(ids, scores))
+        want = _brute_topk(pairs, k)
+        assert S.nearest_ids(pairs, k) == want
+        mine = sorted((g for g in got if g.row_id == r), key=lambda g: g["rank"] if k > 1 else 0)
+        assert [g.cand_id for g in mine] == want
+        if k == 1:
+            assert mine[0].tag == f"t{r}"
+            assert mine[0].score == dict(pairs)[want[0]]
+        else:
+            assert [g["rank"] for g in mine] == list(range(1, len(want) + 1))

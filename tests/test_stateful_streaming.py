@@ -67,9 +67,8 @@ def test_idle_timeout_flushes_open_session_and_evicts_state(spark, tmp_path):
     their state evicted. Harness note (measured, r11): availableNow NEVER
     self-terminates under ProcessingTimeTimeout — Spark keeps scheduling
     empty batches to service timers — so the test runs ONE continuously-
-    triggered query and polls the sink for the expected rows (the s14
-    gate's idiom), instead of drains that would block out their full
-    awaitTermination timeout."""
+    triggered query and polls the sink for the expected rows, instead of
+    drains that would block out their full awaitTermination timeout."""
     import time
 
     src = str(tmp_path / "events")
