@@ -26,7 +26,8 @@ Measurement policy (cross-referenced from BASELINE.md — keep in sync):
 - **Wall-clock budget gates refinement only.** Era 1 always runs to
   completion (it alone is full coverage); era 2+ starts — and each query
   within it continues — only while total wall time is under
-  ``SPARK_GRAFT_BENCH_BUDGET_S`` (default 900 s). ``"passes"`` in the JSON
+  ``SPARK_GRAFT_BENCH_BUDGET_S`` (whole seconds, default 900; zero, a
+  negative or a non-integer value is rejected). ``"passes"`` in the JSON
   reports how many eras COMPLETED, so a budget-truncated era is visible
   (passes stays at the last complete era; minima from the partial era are
   still kept).
@@ -75,7 +76,7 @@ def main() -> int:
     # eras and the wall-clock budget: see the module docstring; read before
     # the JVM starts so a bad value fails fast
     PASSES = env_positive_int("SPARK_GRAFT_BENCH_PASSES", 2)
-    BUDGET_S = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_S", "900"))
+    BUDGET_S = env_positive_int("SPARK_GRAFT_BENCH_BUDGET_S", 900)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     try:
         sf = float(sf)
@@ -98,7 +99,7 @@ def main() -> int:
         era_complete = True
         # Era 1 covers everything in name order. Refinement eras run
         # SLOWEST-FIRST: a single-era value is indistinguishable from a
-        # burst artifact (r6's m05 17.5s), so when the budget truncates a
+        # burst artifact, so when the budget truncates a
         # refinement era it should have re-measured the big, burst-prone
         # numbers first — the sub-second tail loses least from staying
         # single-era.
@@ -121,11 +122,11 @@ def main() -> int:
 
     total = round(sum(timings.values()), 3)
     # Full names to stderr for humans; the stdout JSON line must stay well
-    # under the driver's 2000-char tail buffer (round 1's full-name line
-    # overflowed it -> "parsed": null), so use each query's unique ID prefix.
+    # under the driver's 2000-char tail buffer (a full-name line overflows
+    # it and nothing parses), so use each query's unique ID prefix.
     extras = {"queries_full": timings, "build_s": build_s}
-    # truncation honesty (r6 verdict #3): a min-of-1 value got no chance to
-    # shed a host burst — name them so an m05-style artifact is mechanically
+    # truncation honesty: a min-of-1 value got no chance to shed a host
+    # burst — name them so a burst artifact is mechanically
     # distinguishable from a real regression in the recorded JSON
     single_era = sorted(n for n, c in eras_done.items() if c == 1)
     if passes_done < PASSES or single_era:

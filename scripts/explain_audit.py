@@ -31,9 +31,9 @@ from stock_crypto_data_pipeline_public_spark.session import get_spark
 #: queries whose plans legitimately contain a broadcast nested-loop join,
 #: mapped to the MAXIMUM occurrence count of "BroadcastNestedLoopJoin" in
 #: their formatted static plan (each node prints twice: tree + details).
-#: Pinning counts instead of a boolean exemption (r11 ADVICE) means a
-#: FUTURE unintended BNLJ sneaking into an allowlisted query still fails
-#: the audit; counts measured at sf0.01, AQE off, r12.
+#: Pinning counts instead of a boolean exemption means a FUTURE unintended
+#: BNLJ sneaking into an allowlisted query still fails the audit; counts
+#: measured at sf0.01, AQE off.
 EXPECTED_NESTED_LOOP = {
     # brute-force pair baselines: non-equi (id < id) pair generation with a
     # broadcast corpus — the deliberate exactness/distribution baselines the
@@ -140,10 +140,9 @@ EXPECTED_NESTED_LOOP = {
     # exactness baseline the contract scores against)
     "x27_mips_ann_recall": 6,
     # MMR re-rank: the bounded 10-query broadcast scoring block (x01's
-    # shape, query != candidate non-equi). The join was ALWAYS executed;
-    # before the r11 single-pass greedy rework it hid behind an eager
-    # localCheckpoint (the audit saw a LogicalRDD), now the lineage is
-    # visible end-to-end in the static plan
+    # shape, query != candidate non-equi). The single-pass greedy takes no
+    # eager localCheckpoint, so the static plan shows the lineage end to
+    # end instead of a LogicalRDD
     "x18_mmr_rerank": 2,
 }
 

@@ -3,9 +3,14 @@
 
 Runs each named query N times in a single session through bench.py's own
 ``time_query`` (whole call: plan build plus noop write) and prints every
-iteration's seconds — min/median included, plus each run's build seconds —
-so steady-state cost is separable from cold-start and host bursts without
-waiting for a full bench era.
+iteration's seconds plus each run's build seconds, without waiting for a
+full bench era. Run 1 is printed apart as ``cold=``: it pays first-use
+costs (Python workers, codegen, file listing) that can reach 5x the
+rest, so ``min`` and ``median`` are taken over runs 2..N only.
+
+To compare two checkouts, run them alternately (A, B, B, A, ...) and
+pool the runs: whichever process runs first on a busy host reads slower,
+so a fixed order turns host drift into a fake difference.
 
 Usage: python scripts/prof_query.py [-n 3] [--sf-dir DIR] [--explain-dir DIR] name [name ...]
 
@@ -60,9 +65,12 @@ def main() -> int:
                 with open(os.path.join(args.explain_dir, f"{name}.txt"), "w") as fh:
                     fh.write(txt)
         spark.sparkContext.setJobDescription(None)
+        warm = runs[1:]
+        stats = (
+            f" min={min(warm):.3f} median={statistics.median(warm):.3f}" if warm else ""
+        )
         print(
-            f"{name}: runs={runs} min={min(runs):.3f} "
-            f"median={statistics.median(runs):.3f} build={builds}",
+            f"{name}: cold={runs[0]:.3f} runs={warm}{stats} build={builds}",
             flush=True,
         )
     return 0

@@ -32,7 +32,15 @@ FFT → band-compare → pack pipeline is correct end to end.
 
 from __future__ import annotations
 
+import io
+import wave
+from collections.abc import Iterator
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
+
+from .multimodal import _encode_wav, media_rows, pattern_bit
 
 #: fingerprint geometry: 8 frames x 64 samples = one 512-sample clip
 AFP_FRAMES = 8
@@ -51,13 +59,6 @@ _AMP = 4000
 _GAIN_STEP = 1000  # per-doc amplitude jitter unit (doc_id % 3 of them)
 
 
-def pattern_bit(group: int, f: int) -> int:
-    """Target fingerprint bit for frame ``f`` in synthesis group ``group``:
-    the 8 cyclic shifts of 11110000 are pairwise distinct, so the 8 groups
-    get 8 distinct fingerprints."""
-    return 1 if (f + group) % 8 < 4 else 0
-
-
 def group_fingerprint(group: int) -> int:
     """Closed-form fingerprint of a synthesis group (bit f at weight 2^f)."""
     return sum(pattern_bit(group, f) << f for f in range(AFP_FRAMES))
@@ -69,50 +70,21 @@ def synthesize_afp_wav(docs: DataFrame) -> DataFrame:
     is 1, else at BIN_HIGH, with g = doc_id % N_GROUPS; the amplitude
     jitter _GAIN_STEP·(doc_id % 3) varies the bytes within a group without
     flipping any band-energy sign. Schema = multimodal.MEDIA_SCHEMA."""
-    from collections.abc import Iterator
+    i = np.arange(AFP_FRAME_LEN)
+    tone = {
+        b: np.sin(2 * np.pi * b * i / AFP_FRAME_LEN) for b in (BIN_LOW, BIN_HIGH)
+    }
 
-    import pandas as pd
+    def wav(doc_id):
+        g = int(doc_id) % N_GROUPS
+        amp = _AMP + _GAIN_STEP * (int(doc_id) % 3)
+        frames = [
+            np.rint(amp * tone[BIN_LOW if pattern_bit(g, f) else BIN_HIGH]).astype("<i2")
+            for f in range(AFP_FRAMES)
+        ]
+        return _encode_wav(np.concatenate(frames).tobytes(), _SR)
 
-    from .multimodal import MEDIA_SCHEMA
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        import wave
-
-        import numpy as np
-
-        i = np.arange(AFP_FRAME_LEN)
-        tone = {
-            b: np.sin(2 * np.pi * b * i / AFP_FRAME_LEN)
-            for b in (BIN_LOW, BIN_HIGH)
-        }
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "media": [], "media_type": [], "n_bytes": []
-            }
-            for doc_id in pdf["doc_id"]:
-                g = int(doc_id) % N_GROUPS
-                amp = _AMP + _GAIN_STEP * (int(doc_id) % 3)
-                frames = [
-                    np.rint(
-                        amp * tone[BIN_LOW if pattern_bit(g, f) else BIN_HIGH]
-                    ).astype("<i2")
-                    for f in range(AFP_FRAMES)
-                ]
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as w:
-                    w.setnchannels(1)
-                    w.setsampwidth(2)
-                    w.setframerate(_SR)
-                    w.writeframes(np.concatenate(frames).tobytes())
-                b = buf.getvalue()
-                out["doc_id"].append(doc_id)
-                out["media"].append(b)
-                out["media_type"].append("audio/wav")
-                out["n_bytes"].append(len(b))
-            yield pd.DataFrame(out)
-
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return media_rows(docs.select("doc_id"), "audio/wav", wav)
 
 
 def audio_fingerprint(media: DataFrame, media_col: str = "media") -> DataFrame:
@@ -123,16 +95,8 @@ def audio_fingerprint(media: DataFrame, media_col: str = "media") -> DataFrame:
     native framing here (the synthesized corpus is already 8×64);
     production callers window longer audio into overlapping frames first
     — the same numpy reshape, one hop loop more."""
-    from collections.abc import Iterator
-
-    import pandas as pd
 
     def fp_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        import wave
-
-        import numpy as np
-
         lo0, lo1 = _LOW_BAND
         hi0, hi1 = _HIGH_BAND
         need = AFP_FRAMES * AFP_FRAME_LEN

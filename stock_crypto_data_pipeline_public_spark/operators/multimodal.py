@@ -5,6 +5,17 @@ with typed metadata alongside; decode / feature-extraction runs as
 Arrow-batched pandas transforms via ``mapInPandas`` (the only place Python
 touches the data — everything else stays JVM-side).
 
+Two contracts hold the layer together:
+
+- every media producer (the ``synthesize_*`` family, ``resample_audio``
+  and the OCR / dHash / fingerprint corpus renderers) returns through
+  :func:`media_rows`, which owns the ``MEDIA_SCHEMA`` row layout; a
+  producer is its closed-form per-row body;
+- every ``media_type`` dispatch (decode, dimension probe, resize, frame
+  sampling, OCR) reads :data:`CODECS` at the bottom of this module. A new
+  format is one table entry; an operation a format lacks raises
+  ``NotImplementedError`` naming every type that has it.
+
 Only interframe VIDEO pixel codecs (H.26x via libav) remain out of scope:
 the container has no media libraries, so types without a real decoder
 (e.g. ``application/octet-stream`` placeholders) raise
@@ -47,11 +58,20 @@ id instead of carrying payloads through analytic plans.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+import io
+import struct
+import wave
+import zlib
+from collections.abc import Callable, Iterator
+from dataclasses import dataclass
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .jpegcodec import decode_jpeg, encode_jpeg
+from .mp4codec import encode_mp4, parse_mp4
 
 #: output schema of the feature extractor (mapInPandas contract); the
 #: audio fields (n_channels/n_samples/duration_ms) are null for images and
@@ -61,6 +81,71 @@ FEATURE_SCHEMA = (
     "sample_rate int, n_channels int, n_samples long, duration_ms long, "
     "pixel_sum long, checksum string"
 )
+
+#: the FEATURE_SCHEMA fields a decoder may report; decode_features fills
+#: every field a decoder leaves out with NULL
+_DECODED = (
+    "width", "height", "sample_rate", "n_channels", "n_samples",
+    "duration_ms", "pixel_sum",
+)
+
+#: media table schema: what attach_media selects and media_rows emits
+MEDIA_SCHEMA = "doc_id long, media binary, media_type string, n_bytes int"
+
+
+def media_rows(
+    df: DataFrame, media_type: str, encode: Callable[..., bytes]
+) -> DataFrame:
+    """One ``MEDIA_SCHEMA`` row per row of ``df``: ``encode(*row)`` gives
+    the payload, the first selected column is the ``doc_id`` and
+    ``n_bytes = len(payload)``. One Arrow-batched, map-only mapInPandas —
+    the harness every media producer shares, so a producer is only its
+    per-row body. The output frame is built from plain lists: next to a
+    typed Series, pandas would turn an empty list into float64."""
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids, payloads = [], []
+            for row in zip(*(pdf[c] for c in pdf.columns)):
+                ids.append(row[0])
+                payloads.append(encode(*row))
+            yield pd.DataFrame({
+                "doc_id": ids,
+                "media": payloads,
+                "media_type": [media_type] * len(ids),
+                "n_bytes": [len(b) for b in payloads],
+            })
+
+    return df.mapInPandas(gen, MEDIA_SCHEMA)
+
+
+def pattern_bit(group: int, i: int) -> int:
+    """Bit ``i`` of synthesis group ``group`` in the near-dup corpora
+    (phash.py's dHash bits, audiofp.py's per-frame band bits): the 8 cyclic
+    shifts of 11110000 are pairwise distinct, so the 8 groups get 8
+    distinct codes."""
+    return 1 if (i + group) % 8 < 4 else 0
+
+
+def _encode_wav(pcm: bytes, rate: int, channels: int = 1) -> bytes:
+    """PCM-16 ``pcm`` frames as a stdlib-``wave`` file: the standard
+    44-byte header, so n_bytes = 44 + len(pcm)."""
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as w:
+        w.setnchannels(channels)
+        w.setsampwidth(2)
+        w.setframerate(rate)
+        w.writeframes(pcm)
+    return buf.getvalue()
+
+
+def _nearest(px, width: int, height: int):
+    """Nearest-neighbor resample of an (h, w, ...) raster to
+    (height, width): output row y samples source row y·h // height, and
+    columns likewise — the one index rule every resize path uses."""
+    h, w = px.shape[:2]
+    return px[np.arange(height) * h // height][:, np.arange(width) * w // width]
+
 
 def attach_media(docs: DataFrame, media_type: str = "application/octet-stream") -> DataFrame:
     """Simulate a media table: utf-8 payload bytes + typed metadata columns.
@@ -82,16 +167,11 @@ def attach_media(docs: DataFrame, media_type: str = "application/octet-stream") 
 
 def _decode_wav(b: bytes) -> dict:
     """REAL audio decode: stdlib ``wave`` parses the RIFF/PCM header."""
-    import io
-    import wave
-
     with wave.open(io.BytesIO(b)) as w:
         sr = w.getframerate()
         nc = w.getnchannels()
         ns = w.getnframes()
     return {
-        "width": None,
-        "height": None,
         "sample_rate": sr,
         "n_channels": nc,
         "n_samples": ns,
@@ -102,16 +182,14 @@ def _decode_wav(b: bytes) -> dict:
 def _decode_ppm(b: bytes) -> dict:
     """REAL image decode: parse the PPM P6 header (magic, width, height,
     maxval — whitespace-separated ASCII, '#' comments allowed)."""
+    w, h = _ppm_dims(b)
+    return {"width": w, "height": h, "n_channels": 3}
+
+
+def _ppm_dims(b: bytes) -> tuple[int, int]:
+    """(width, height) from a P6 header."""
     fields = _ppm_header_fields(b)
-    w, h = int(fields[1]), int(fields[2])
-    return {
-        "width": w,
-        "height": h,
-        "sample_rate": None,
-        "n_channels": 3,
-        "n_samples": None,
-        "duration_ms": None,
-    }
+    return int(fields[1]), int(fields[2])
 
 
 def _ppm_header_fields(b: bytes) -> list[bytes]:
@@ -156,8 +234,6 @@ def _decode_bmp(b: bytes) -> dict:
     with stdlib ``struct`` (uncompressed BMP is pure fixed-offset fields —
     no codec). Height may be negative (top-down row order); the dimension
     is its magnitude."""
-    import struct
-
     if len(b) < 54 or b[:2] != b"BM":
         raise ValueError(f"not a BMP: magic={b[:2]!r}")
     dib_size = struct.unpack_from("<I", b, 14)[0]
@@ -165,14 +241,7 @@ def _decode_bmp(b: bytes) -> dict:
         raise ValueError(f"unsupported DIB header size {dib_size}")
     width, height = struct.unpack_from("<ii", b, 18)
     bitcount = struct.unpack_from("<H", b, 28)[0]
-    return {
-        "width": width,
-        "height": abs(height),
-        "sample_rate": None,
-        "n_channels": bitcount // 8,
-        "n_samples": None,
-        "duration_ms": None,
-    }
+    return {"width": width, "height": abs(height), "n_channels": bitcount // 8}
 
 
 # --------------------------------------------------------------------------
@@ -191,9 +260,6 @@ _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 def _png_chunks(b: bytes):
     """Yield ``(type, data)`` for each chunk, verifying length and CRC32 —
     a corrupt payload fails loudly instead of producing garbage pixels."""
-    import struct
-    import zlib
-
     if b[:8] != _PNG_SIG:
         raise ValueError(f"not a PNG: signature={b[:8]!r}")
     i = 8
@@ -214,8 +280,6 @@ def _png_chunks(b: bytes):
 
 def _paeth(a, b, c):
     """Paeth predictor (PNG spec §9.4) on int numpy arrays."""
-    import numpy as np
-
     p = a + b - c
     pa, pb, pc = np.abs(p - a), np.abs(p - b), np.abs(p - c)
     return np.where((pa <= pb) & (pa <= pc), a, np.where(pb <= pc, b, c))
@@ -230,8 +294,6 @@ def _unfilter_png(flt: bytes, w: int, h: int, bpp: int):
     reconstructed left neighbor, so those rows walk pixels in Python — fine
     inside an Arrow batch, and only rows that actually used filter 3/4 pay.
     """
-    import numpy as np
-
     stride = 1 + w * bpp
     if len(flt) != stride * h:
         raise ValueError(
@@ -287,8 +349,6 @@ def _png_parse(b: bytes) -> tuple[int, int, bytes]:
     validated (8-bit truecolor non-interlaced) and dimensions
     bomb-guarded, shared by decode and resize so neither path can
     mis-unfilter an unsupported layout."""
-    import struct
-
     ihdr = None
     idat = bytearray()
     for ctype, data in _png_chunks(b):
@@ -320,17 +380,12 @@ def _decode_png(b: bytes) -> dict:
     oracle that predicts the raster catches any filter/inflate bug, not
     just a header mis-parse. Supports 8-bit truecolor non-interlaced
     (color type 2); other layouts raise."""
-    import zlib
-
     w, h, idat = _png_parse(b)
     raster = _unfilter_png(zlib.decompress(idat), w, h, bpp=3)
     return {
         "width": w,
         "height": h,
-        "sample_rate": None,
         "n_channels": 3,
-        "n_samples": None,
-        "duration_ms": None,
         "pixel_sum": int(raster.sum(dtype="int64")),
     }
 
@@ -340,11 +395,6 @@ def _encode_png(px, split_idat: bool = False) -> bytes:
     (so every decode exercises all five filters), zlib-compressed, CRC'd
     chunks; ``split_idat`` emits two IDAT chunks to prove the decoder
     concatenates per spec."""
-    import struct
-    import zlib
-
-    import numpy as np
-
     h, w, _ = px.shape
     raw = px.reshape(h, w * 3).astype(np.int64)
     lines = bytearray()
@@ -390,16 +440,11 @@ def _decode_jpeg(b: bytes) -> dict:
     (operators/jpegcodec.py) — Huffman entropy decode, dequantize, IDCT.
     Returns dims + ``pixel_sum`` over the reconstructed raster, so the
     oracle gates the actual decoded pixels through the full lossy path."""
-    from .jpegcodec import decode_jpeg
-
     d = decode_jpeg(b)
     return {
         "width": d["width"],
         "height": d["height"],
-        "sample_rate": None,
         "n_channels": 1,
-        "n_samples": None,
-        "duration_ms": None,
         "pixel_sum": int(d["raster"].sum(dtype="int64")),
     }
 
@@ -410,17 +455,8 @@ def _decode_mp4(b: bytes) -> dict:
     Frame PIXELS are only decodable when the samples are Motion-JPEG
     (see sample_frames/decode_frames); the metadata here is real for any
     conforming file."""
-    from .mp4codec import parse_mp4
-
     d = parse_mp4(b)
-    return {
-        "width": d["width"],
-        "height": d["height"],
-        "sample_rate": None,
-        "n_channels": None,
-        "n_samples": d["n_samples"],
-        "duration_ms": d["duration_ms"],
-    }
+    return {k: d[k] for k in ("width", "height", "n_samples", "duration_ms")}
 
 
 def decode_features(df: DataFrame, fake: bool = False) -> DataFrame:
@@ -436,51 +472,17 @@ def decode_features(df: DataFrame, fake: bool = False) -> DataFrame:
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (
-                "doc_id", "media_type", "n_bytes", "width", "height",
-                "sample_rate", "n_channels", "n_samples", "duration_ms",
-                "pixel_sum", "checksum",
-            )}
+            rows: dict[str, list] = {
+                k: [] for k in ("doc_id", "media_type", "n_bytes", *_DECODED, "checksum")
+            }
             for doc_id, mt, b in zip(pdf["doc_id"], pdf["media_type"], pdf["media"]):
-                if mt == "audio/wav":
-                    feat = _decode_wav(b)
-                elif mt == "image/x-portable-pixmap":
-                    feat = _decode_ppm(b)
-                elif mt == "image/bmp":
-                    feat = _decode_bmp(b)
-                elif mt == "image/png":
-                    feat = _decode_png(b)
-                elif mt == "image/gif":
-                    feat = _decode_gif(b)
-                elif mt == "image/jpeg":
-                    feat = _decode_jpeg(b)
-                elif mt == "video/mp4":
-                    feat = _decode_mp4(b)
-                elif fake:
-                    d = hashlib.md5(b).digest()
-                    feat = {
-                        "width": 64 + d[0] % 192,
-                        "height": 64 + d[1] % 192,
-                        "sample_rate": 8000 + (d[2] % 5) * 8000,
-                        "n_channels": None,
-                        "n_samples": None,
-                        "duration_ms": None,
-                    }
-                else:
-                    raise NotImplementedError(
-                        f"no real decoder for {mt!r}; audio/wav, "
-                        "image/x-portable-pixmap, image/bmp, image/png, "
-                        "image/gif, image/jpeg and video/mp4 (ISO-BMFF "
-                        "metadata) decode for real — run with fake=True "
-                        "for deterministic pseudo-features"
-                    )
-                feat.setdefault("pixel_sum", None)
+                feat = codec_op(mt, "decode", _fake_features if fake else None)(b)
                 rows["doc_id"].append(doc_id)
                 rows["media_type"].append(mt)
                 rows["n_bytes"].append(len(b))
                 rows["checksum"].append(hashlib.md5(b).hexdigest())
-                for k, v in feat.items():
-                    rows[k].append(v)
+                for k in _DECODED:
+                    rows[k].append(feat.get(k))
             pdf_out = pd.DataFrame(rows)
             for c, t in (
                 ("n_bytes", "int32"), ("width", "Int32"), ("height", "Int32"),
@@ -493,8 +495,15 @@ def decode_features(df: DataFrame, fake: bool = False) -> DataFrame:
     return df.mapInPandas(extract, schema=FEATURE_SCHEMA)
 
 
-#: synthesized media table schema (same shape attach_media produces)
-MEDIA_SCHEMA = "doc_id long, media binary, media_type string, n_bytes int"
+def _fake_features(b: bytes) -> dict:
+    """decode_features(fake=True) for a type without a real decoder:
+    digest-derived pseudo dimensions and sample rate."""
+    d = hashlib.md5(b).digest()
+    return {
+        "width": 64 + d[0] % 192,
+        "height": 64 + d[1] % 192,
+        "sample_rate": 8000 + (d[2] % 5) * 8000,
+    }
 
 
 def synthesize_wav(docs: DataFrame) -> DataFrame:
@@ -508,30 +517,12 @@ def synthesize_wav(docs: DataFrame) -> DataFrame:
     standard 44-byte PCM header, so n_bytes = 44 + frames·channels·2.
     """
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        import wave
+    def wav(doc_id, text):
+        nc = int(1 + doc_id % 2)
+        ns = int(100 + (len(text or "") % 400))
+        return _encode_wav(b"\x00" * (ns * nc * 2), int(8000 + (doc_id % 5) * 4000), nc)
 
-        for pdf in batches:
-            out: dict[str, list] = {"doc_id": [], "media": [], "media_type": [], "n_bytes": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                sr = int(8000 + (doc_id % 5) * 4000)
-                nc = int(1 + doc_id % 2)
-                ns = int(100 + (len(text or "") % 400))
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as w:
-                    w.setnchannels(nc)
-                    w.setsampwidth(2)
-                    w.setframerate(sr)
-                    w.writeframes(b"\x00" * (ns * nc * 2))
-                b = buf.getvalue()
-                out["doc_id"].append(doc_id)
-                out["media"].append(b)
-                out["media_type"].append("audio/wav")
-                out["n_bytes"].append(len(b))
-            yield pd.DataFrame(out)
-
-    return docs.select("doc_id", "text").mapInPandas(gen, MEDIA_SCHEMA)
+    return media_rows(docs.select("doc_id", "text"), "audio/wav", wav)
 
 
 def synthesize_ppm(docs: DataFrame) -> DataFrame:
@@ -540,26 +531,16 @@ def synthesize_ppm(docs: DataFrame) -> DataFrame:
     = (x + 2y + 3c + doc_id) % 256 — closed-form, so header size and the
     decoded dimensions are SQL-predictable."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def ppm(doc_id, text):
+        w = int(8 + doc_id % 32)
+        h = int(8 + (len(text or "") % 32))
+        x = np.arange(w)[None, :, None]
+        y = np.arange(h)[:, None, None]
+        c = np.arange(3)[None, None, :]
+        px = ((x + 2 * y + 3 * c + int(doc_id)) % 256).astype(np.uint8)
+        return b"P6\n%d %d\n255\n" % (w, h) + px.tobytes()
 
-        for pdf in batches:
-            out: dict[str, list] = {"doc_id": [], "media": [], "media_type": [], "n_bytes": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                w = int(8 + doc_id % 32)
-                h = int(8 + (len(text or "") % 32))
-                x = np.arange(w)[None, :, None]
-                y = np.arange(h)[:, None, None]
-                c = np.arange(3)[None, None, :]
-                px = ((x + 2 * y + 3 * c + int(doc_id)) % 256).astype(np.uint8)
-                b = b"P6\n%d %d\n255\n" % (w, h) + px.tobytes()
-                out["doc_id"].append(doc_id)
-                out["media"].append(b)
-                out["media_type"].append("image/x-portable-pixmap")
-                out["n_bytes"].append(len(b))
-            yield pd.DataFrame(out)
-
-    return docs.select("doc_id", "text").mapInPandas(gen, MEDIA_SCHEMA)
+    return media_rows(docs.select("doc_id", "text"), "image/x-portable-pixmap", ppm)
 
 
 def synthesize_bmp(docs: DataFrame) -> DataFrame:
@@ -569,33 +550,17 @@ def synthesize_bmp(docs: DataFrame) -> DataFrame:
     closed-form, SQL-predictable, and exercising a decode path (fixed-
     offset little-endian struct fields) that WAV/PPM do not."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    def bmp(doc_id, text):
+        w = int(4 + doc_id % 16)
+        h = int(4 + (len(text or "") % 16))
+        row = (3 * w + 3) // 4 * 4
+        img = row * h
+        head = struct.pack("<2sIHHI", b"BM", 54 + img, 0, 0, 54)
+        dib = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, img, 2835, 2835, 0, 0)
+        px = bytes((x + 2 * y + int(doc_id)) % 256 for y in range(h) for x in range(row))
+        return head + dib + px
 
-        for pdf in batches:
-            out: dict[str, list] = {"doc_id": [], "media": [], "media_type": [], "n_bytes": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                w = int(4 + doc_id % 16)
-                h = int(4 + (len(text or "") % 16))
-                row = (3 * w + 3) // 4 * 4
-                img = row * h
-                head = struct.pack("<2sIHHI", b"BM", 54 + img, 0, 0, 54)
-                dib = struct.pack(
-                    "<IiiHHIIiiII", 40, w, h, 1, 24, 0, img, 2835, 2835, 0, 0
-                )
-                px = bytes(
-                    (x + 2 * y + int(doc_id)) % 256
-                    for y in range(h)
-                    for x in range(row)
-                )
-                b = head + dib + px
-                out["doc_id"].append(doc_id)
-                out["media"].append(b)
-                out["media_type"].append("image/bmp")
-                out["n_bytes"].append(len(b))
-            yield pd.DataFrame(out)
-
-    return docs.select("doc_id", "text").mapInPandas(gen, MEDIA_SCHEMA)
+    return media_rows(docs.select("doc_id", "text"), "image/bmp", bmp)
 
 
 def synthesize_png(docs: DataFrame) -> DataFrame:
@@ -610,26 +575,16 @@ def synthesize_png(docs: DataFrame) -> DataFrame:
     just the header. n_bytes is NOT predictable (zlib), so PNG rollups gate
     on dims/channels/pixel_sum only."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def png(doc_id, text):
+        w = int(4 + doc_id % 8)
+        h = int(4 + (len(text or "") % 8))
+        x = np.arange(w)[None, :, None]
+        y = np.arange(h)[:, None, None]
+        c = np.arange(3)[None, None, :]
+        px = (x + 2 * y + 3 * c + int(doc_id) % 50).astype(np.uint8)
+        return _encode_png(px, split_idat=(doc_id % 2 == 0))
 
-        for pdf in batches:
-            out: dict[str, list] = {"doc_id": [], "media": [], "media_type": [], "n_bytes": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                w = int(4 + doc_id % 8)
-                h = int(4 + (len(text or "") % 8))
-                x = np.arange(w)[None, :, None]
-                y = np.arange(h)[:, None, None]
-                c = np.arange(3)[None, None, :]
-                px = (x + 2 * y + 3 * c + int(doc_id) % 50).astype(np.uint8)
-                b = _encode_png(px, split_idat=(doc_id % 2 == 0))
-                out["doc_id"].append(doc_id)
-                out["media"].append(b)
-                out["media_type"].append("image/png")
-                out["n_bytes"].append(len(b))
-            yield pd.DataFrame(out)
-
-    return docs.select("doc_id", "text").mapInPandas(gen, MEDIA_SCHEMA)
+    return media_rows(docs.select("doc_id", "text"), "image/png", png)
 
 
 def synthesize_tone_wav(docs: DataFrame) -> DataFrame:
@@ -640,37 +595,18 @@ def synthesize_tone_wav(docs: DataFrame) -> DataFrame:
     Bin-centered tones put ALL their energy in one rfft bin, so
     extract_audio_features' spectral argmax recovers b1/b2 EXACTLY and
     the oracle is closed-form; sr = 8192 makes hz = 16·bin an integer."""
+    t = np.arange(512)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        import wave
+    def tone(doc_id):
+        b1 = int(5 + doc_id % 50)
+        b2 = int(60 + doc_id % 100)
+        x = np.rint(
+            6000 * np.sin(2 * np.pi * b1 * t / 512)
+            + 3000 * np.sin(2 * np.pi * b2 * t / 512)
+        ).astype("<i2")
+        return _encode_wav(x.tobytes(), 8192)
 
-        import numpy as np
-
-        t = np.arange(512)
-        for pdf in batches:
-            out: dict[str, list] = {"doc_id": [], "media": [], "media_type": [], "n_bytes": []}
-            for doc_id in pdf["doc_id"]:
-                b1 = int(5 + doc_id % 50)
-                b2 = int(60 + doc_id % 100)
-                x = np.rint(
-                    6000 * np.sin(2 * np.pi * b1 * t / 512)
-                    + 3000 * np.sin(2 * np.pi * b2 * t / 512)
-                ).astype("<i2")
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as w:
-                    w.setnchannels(1)
-                    w.setsampwidth(2)
-                    w.setframerate(8192)
-                    w.writeframes(x.tobytes())
-                b = buf.getvalue()
-                out["doc_id"].append(doc_id)
-                out["media"].append(b)
-                out["media_type"].append("audio/wav")
-                out["n_bytes"].append(len(b))
-            yield pd.DataFrame(out)
-
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return media_rows(docs.select("doc_id"), "audio/wav", tone)
 
 
 def resample_audio(df: DataFrame, factor: int = 2) -> DataFrame:
@@ -691,33 +627,14 @@ def resample_audio(df: DataFrame, factor: int = 2) -> DataFrame:
     if factor < 1:
         raise ValueError(f"factor must be >= 1, got {factor}")
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        import wave
+    def resample(doc_id, b):
+        with wave.open(io.BytesIO(bytes(b))) as w:
+            sr, nc, n = w.getframerate(), w.getnchannels(), w.getnframes()
+            pcm = np.frombuffer(w.readframes(n), dtype="<i2")
+        frames = pcm.reshape(-1, nc)[::factor]
+        return _encode_wav(frames.astype("<i2").tobytes(), sr // factor, nc)
 
-        import numpy as np
-
-        for pdf in batches:
-            out: dict[str, list] = {"doc_id": [], "media": [], "media_type": [], "n_bytes": []}
-            for doc_id, b in zip(pdf["doc_id"], pdf["media"]):
-                with wave.open(io.BytesIO(bytes(b))) as w:
-                    sr, nc, n = w.getframerate(), w.getnchannels(), w.getnframes()
-                    pcm = np.frombuffer(w.readframes(n), dtype="<i2")
-                frames = pcm.reshape(-1, nc)[::factor]
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as wo:
-                    wo.setnchannels(nc)
-                    wo.setsampwidth(2)
-                    wo.setframerate(sr // factor)
-                    wo.writeframes(frames.astype("<i2").tobytes())
-                rb = buf.getvalue()
-                out["doc_id"].append(doc_id)
-                out["media"].append(rb)
-                out["media_type"].append("audio/wav")
-                out["n_bytes"].append(len(rb))
-            yield pd.DataFrame(out)
-
-    return df.select("doc_id", "media").mapInPandas(gen, MEDIA_SCHEMA)
+    return media_rows(df.select("doc_id", "media"), "audio/wav", resample)
 
 
 #: spectral feature schema (extract_audio_features contract)
@@ -737,11 +654,6 @@ def extract_audio_features(df: DataFrame) -> DataFrame:
     channel mean before the transform."""
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        import wave
-
-        import numpy as np
-
         for pdf in batches:
             out: dict[str, list] = {k: [] for k in (
                 "doc_id", "sample_rate", "n_samples", "dominant_bin",
@@ -794,28 +706,15 @@ def synthesize_jpeg(docs: DataFrame) -> DataFrame:
     The max block value 2*(5 + 10 + 49) = 128 < 256 keeps every term
     mod-free on the SQL side. n_bytes is entropy-coded, hence ungated."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def jpeg(doc_id, text):
+        bw = int(2 + doc_id % 6)
+        bh = int(2 + len(text or "") % 6)
+        bx = np.arange(bw)[None, :]
+        by = np.arange(bh)[:, None]
+        blocks = (2 * (bx + 2 * by + int(doc_id) % 50)).astype(np.uint8)
+        return encode_jpeg(np.kron(blocks, np.ones((8, 8), dtype=np.uint8)))
 
-        from .jpegcodec import encode_jpeg
-
-        for pdf in batches:
-            out: dict[str, list] = {"doc_id": [], "media": [], "media_type": [], "n_bytes": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                bw = int(2 + doc_id % 6)
-                bh = int(2 + len(text or "") % 6)
-                bx = np.arange(bw)[None, :]
-                by = np.arange(bh)[:, None]
-                blocks = (2 * (bx + 2 * by + int(doc_id) % 50)).astype(np.uint8)
-                raster = np.kron(blocks, np.ones((8, 8), dtype=np.uint8))
-                b = encode_jpeg(raster)
-                out["doc_id"].append(doc_id)
-                out["media"].append(b)
-                out["media_type"].append("image/jpeg")
-                out["n_bytes"].append(len(b))
-            yield pd.DataFrame(out)
-
-    return docs.select("doc_id", "text").mapInPandas(gen, MEDIA_SCHEMA)
+    return media_rows(docs.select("doc_id", "text"), "image/jpeg", jpeg)
 
 
 def synthesize_mp4(docs: DataFrame, n_frames: int = 6) -> DataFrame:
@@ -828,37 +727,9 @@ def synthesize_mp4(docs: DataFrame, n_frames: int = 6) -> DataFrame:
     even, so each DEMUXED + JPEG-DECODED frame's pixel sum is the closed
     form 128*(BH*BW*(BW-1)/2 + BW*BH*(BH-1) + BW*BH*(k+f)) and the
     container timestamps are src_index*100 — SQL-predictable end to end
-    through two real codec layers."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from .jpegcodec import encode_jpeg
-        from .mp4codec import encode_mp4
-
-        for pdf in batches:
-            out: dict[str, list] = {"doc_id": [], "media": [], "media_type": [], "n_bytes": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                bw = int(2 + doc_id % 4)
-                bh = int(2 + len(text or "") % 4)
-                k = int(doc_id) % 40
-                bx = np.arange(bw)[None, :]
-                by = np.arange(bh)[:, None]
-                ones = np.ones((8, 8), dtype=np.uint8)
-                frames = [
-                    encode_jpeg(
-                        np.kron((2 * (bx + 2 * by + k + f)).astype(np.uint8), ones)
-                    )
-                    for f in range(n_frames)
-                ]
-                b = encode_mp4(frames, 8 * bw, 8 * bh, frame_duration_ms=100)
-                out["doc_id"].append(doc_id)
-                out["media"].append(b)
-                out["media_type"].append("video/mp4")
-                out["n_bytes"].append(len(b))
-            yield pd.DataFrame(out)
-
-    return docs.select("doc_id", "text").mapInPandas(gen, MEDIA_SCHEMA)
+    through two real codec layers. It is synthesize_mp4_scenes with no
+    jump at a cut."""
+    return synthesize_mp4_scenes(docs, n_frames, jump=0)
 
 
 def synthesize_mp4_scenes(docs: DataFrame, n_frames: int = 6, jump: int = 20) -> DataFrame:
@@ -871,39 +742,24 @@ def synthesize_mp4_scenes(docs: DataFrame, n_frames: int = 6, jump: int = 20) ->
     frame-to-frame per-pixel |delta| is exactly 2 off a cut and
     2*(1 + jump) on one: a scene-cut detector thresholding mean pixel
     change is SQL-predictable end to end through both codec layers."""
+    ones = np.ones((8, 8), dtype=np.uint8)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def mp4(doc_id, text):
+        bw = int(2 + doc_id % 4)
+        bh = int(2 + len(text or "") % 4)
+        k = int(doc_id) % 40
+        bx = np.arange(bw)[None, :]
+        by = np.arange(bh)[:, None]
+        cuts = [f for f in range(1, n_frames) if (f + doc_id) % 3 == 0]
+        frames = []
+        for f in range(n_frames):
+            off = f + jump * sum(1 for c in cuts if c <= f)
+            frames.append(
+                encode_jpeg(np.kron((2 * (bx + 2 * by + k + off)).astype(np.uint8), ones))
+            )
+        return encode_mp4(frames, 8 * bw, 8 * bh, frame_duration_ms=100)
 
-        from .jpegcodec import encode_jpeg
-        from .mp4codec import encode_mp4
-
-        for pdf in batches:
-            out: dict[str, list] = {"doc_id": [], "media": [], "media_type": [], "n_bytes": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                bw = int(2 + doc_id % 4)
-                bh = int(2 + len(text or "") % 4)
-                k = int(doc_id) % 40
-                cuts = [f for f in range(1, n_frames) if (f + doc_id) % 3 == 0]
-                bx = np.arange(bw)[None, :]
-                by = np.arange(bh)[:, None]
-                ones = np.ones((8, 8), dtype=np.uint8)
-                frames = []
-                for f in range(n_frames):
-                    off = f + jump * sum(1 for c in cuts if c <= f)
-                    frames.append(
-                        encode_jpeg(
-                            np.kron((2 * (bx + 2 * by + k + off)).astype(np.uint8), ones)
-                        )
-                    )
-                b = encode_mp4(frames, 8 * bw, 8 * bh, frame_duration_ms=100)
-                out["doc_id"].append(doc_id)
-                out["media"].append(b)
-                out["media_type"].append("video/mp4")
-                out["n_bytes"].append(len(b))
-            yield pd.DataFrame(out)
-
-    return docs.select("doc_id", "text").mapInPandas(gen, MEDIA_SCHEMA)
+    return media_rows(docs.select("doc_id", "text"), "video/mp4", mp4)
 
 
 def synthesize_animated_gif(docs: DataFrame, n_frames: int = 6) -> DataFrame:
@@ -913,28 +769,16 @@ def synthesize_animated_gif(docs: DataFrame, n_frames: int = 6) -> DataFrame:
     palette-mapped pixel sum is SQL-closed-form, so a sampled-frame
     pipeline can be oracle-gated end to end."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def gif(doc_id, text):
+        w = int(4 + doc_id % 12)
+        h = int(4 + (len(text or "") % 12))
+        x = np.arange(w)[None, :]
+        y = np.arange(h)[:, None]
+        return _encode_gif_frames(
+            [((x + 2 * y + int(doc_id) + 3 * f) % 8).astype(np.uint8) for f in range(n_frames)]
+        )
 
-        for pdf in batches:
-            out: dict[str, list] = {"doc_id": [], "media": [], "media_type": [], "n_bytes": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                w = int(4 + doc_id % 12)
-                h = int(4 + (len(text or "") % 12))
-                x = np.arange(w)[None, :]
-                y = np.arange(h)[:, None]
-                frames = [
-                    ((x + 2 * y + int(doc_id) + 3 * f) % 8).astype(np.uint8)
-                    for f in range(n_frames)
-                ]
-                b = _encode_gif_frames(frames)
-                out["doc_id"].append(doc_id)
-                out["media"].append(b)
-                out["media_type"].append("image/gif")
-                out["n_bytes"].append(len(b))
-            yield pd.DataFrame(out)
-
-    return docs.select("doc_id", "text").mapInPandas(gen, MEDIA_SCHEMA)
+    return media_rows(docs.select("doc_id", "text"), "image/gif", gif)
 
 
 #: per-frame decode output (sample_frames rows → decoded features)
@@ -999,7 +843,6 @@ def frame_deltas(frames: DataFrame, assume_grouped: bool = False) -> DataFrame:
     back from parquet — group correctly. The explicit partition count
     keeps AQE from coalescing the small-but-compute-heavy shuffle into
     too few Python decode tasks."""
-    import numpy as np
 
     def diff(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         prev_doc = None
@@ -1012,8 +855,6 @@ def frame_deltas(frames: DataFrame, assume_grouped: bool = False) -> DataFrame:
                 pdf["doc_id"], pdf["frame_idx"], pdf["frame_ts_ms"], pdf["frame"]
             ):
                 if bytes(frame[:2]) == b"\xff\xd8":
-                    from .jpegcodec import decode_jpeg
-
                     raster = decode_jpeg(frame)["raster"].astype(np.int64)
                 else:
                     w, h, _palette, gframes = _gif_parse(frame)
@@ -1049,28 +890,18 @@ def _resize_png(b: bytes, width: int, height: int) -> bytes:
     """REAL nearest-neighbor resample of a PNG: full decode (inflate +
     unfilter), subsample, re-encode through the same stdlib codec. Shares
     _png_parse's layout validation and bomb guard with the decoder."""
-    import zlib
-
-    import numpy as np
-
     w, h, idat = _png_parse(b)
     px = _unfilter_png(zlib.decompress(idat), w, h, 3).reshape(h, w, 3)
-    yi = np.arange(height) * h // height
-    xi = np.arange(width) * w // width
-    return _encode_png(px[yi][:, xi])
+    return _encode_png(_nearest(px, width, height))
 
 
 def _resize_gif(b: bytes, width: int, height: int) -> bytes:
     """REAL nearest-neighbor resample of a (single- or multi-frame) GIF:
     LZW-decode every frame's index raster, subsample INDICES (palette
     untouched — GIF is an indexed format), re-encode."""
-    import numpy as np
-
     w, h, palette, frames = _gif_parse(b)
-    yi = np.arange(height) * h // height
-    xi = np.arange(width) * w // width
     resized = [
-        np.frombuffer(f, dtype=np.uint8).reshape(h, w)[yi][:, xi]
+        _nearest(np.frombuffer(f, dtype=np.uint8).reshape(h, w), width, height)
         for f in frames
     ]
     return _encode_gif_frames(resized, palette)
@@ -1078,16 +909,10 @@ def _resize_gif(b: bytes, width: int, height: int) -> bytes:
 
 def _resize_ppm(b: bytes, width: int, height: int) -> bytes:
     """REAL nearest-neighbor resample of a P6 pixel plane (numpy)."""
-    import numpy as np
-
-    fields = _ppm_header_fields(b)
-    w, h = int(fields[1]), int(fields[2])
+    w, h = _ppm_dims(b)
     off = _ppm_pixel_offset(b)
     px = np.frombuffer(b, dtype=np.uint8, count=w * h * 3, offset=off).reshape(h, w, 3)
-    yi = np.arange(height) * h // height
-    xi = np.arange(width) * w // width
-    out = px[yi][:, xi]
-    return b"P6\n%d %d\n255\n" % (width, height) + out.tobytes()
+    return b"P6\n%d %d\n255\n" % (width, height) + _nearest(px, width, height).tobytes()
 
 
 def _resize_jpeg(b: bytes, width: int, height: int) -> bytes:
@@ -1095,33 +920,15 @@ def _resize_jpeg(b: bytes, width: int, height: int) -> bytes:
     re-encode. Lossy in general (JPEG is); an INTEGER upscale of a
     block-constant raster stays block-constant, so the synthesizers'
     payloads round-trip bit-exactly even through the re-encode."""
-    import numpy as np
-
-    from .jpegcodec import decode_jpeg, encode_jpeg
-
-    d = decode_jpeg(b)
-    xi = (np.arange(width) * d["width"]) // width
-    yi = (np.arange(height) * d["height"]) // height
-    return encode_jpeg(d["raster"][yi][:, xi])
+    return encode_jpeg(_nearest(decode_jpeg(b)["raster"], width, height))
 
 
-def _media_dims(mt: str, b: bytes) -> tuple[int, int]:
-    """Source (width, height) probe for the per-row ``scale`` resize."""
-    if mt == "image/x-portable-pixmap":
-        f = _ppm_header_fields(b)
-        return int(f[1]), int(f[2])
-    if mt == "image/png":
-        w, h, _ = _png_parse(b)
-        return w, h
-    if mt == "image/gif":
-        w, h, _, _ = _gif_parse(b)
-        return w, h
-    if mt == "image/jpeg":
-        from .jpegcodec import decode_jpeg
-
-        d = decode_jpeg(b)
-        return d["width"], d["height"]
-    raise NotImplementedError(f"no dimension probe for {mt!r}")
+def _fake_rendition(b: bytes, w: int, h: int) -> bytes:
+    """resize_images(fake=True) for a type without a real resize: a
+    digest-seeded pseudo-rendition of width·height // 64 bytes."""
+    target = max(1, w * h // 64)
+    seed = hashlib.md5(b).digest()
+    return (seed * (target // len(seed) + 1))[:target]
 
 
 def resize_images(
@@ -1145,53 +952,25 @@ def resize_images(
 
     Either fixed ``(width, height)`` for every row, or ``scale=k`` for a
     per-row integer upscale to (k·w, k·h) — the form that keeps
-    block-constant JPEG rasters exact through the lossy re-encode.
+    block-constant JPEG rasters exact through the lossy re-encode. Scale
+    mode needs the source dims, so it raises for a type without a real
+    dimension probe even when ``fake=True``.
     """
     if (scale is None) == (width is None or height is None):
         raise ValueError("resize_images needs (width, height) XOR scale")
 
     def shrink(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def render_fake(b: bytes, w: int, h: int) -> bytes:
-            target = max(1, w * h // 64)
-            seed = hashlib.md5(b).digest()
-            reps = target // len(seed) + 1
-            return (seed * reps)[:target]
-
         for pdf in batches:
             media = []
             widths = []
             heights = []
             for mt, b in zip(pdf["media_type"], pdf["media"]):
                 if scale is not None:
-                    if fake and mt not in (
-                        "image/x-portable-pixmap", "image/png",
-                        "image/gif", "image/jpeg",
-                    ):
-                        raise NotImplementedError(
-                            "scale mode needs real source dims; no probe "
-                            f"for {mt!r}"
-                        )
-                    sw, sh = _media_dims(mt, b)
+                    sw, sh = codec_op(mt, "dims")(b)
                     w, h = sw * scale, sh * scale
                 else:
                     w, h = width, height
-                if mt == "image/x-portable-pixmap":
-                    media.append(_resize_ppm(b, w, h))
-                elif mt == "image/png":
-                    media.append(_resize_png(b, w, h))
-                elif mt == "image/gif":
-                    media.append(_resize_gif(b, w, h))
-                elif mt == "image/jpeg":
-                    media.append(_resize_jpeg(b, w, h))
-                elif fake:
-                    media.append(render_fake(b, w, h))
-                else:
-                    raise NotImplementedError(
-                        f"no real resize path for {mt!r}; "
-                        "image/x-portable-pixmap, image/png, image/gif and "
-                        "image/jpeg resize for real — run with fake=True "
-                        "for pseudo-renditions"
-                    )
+                media.append(codec_op(mt, "resize", _fake_rendition if fake else None)(b, w, h))
                 widths.append(w)
                 heights.append(h)
             yield pd.DataFrame(
@@ -1220,7 +999,8 @@ def sample_frames(df: DataFrame, n_frames: int = 4, fps: int = 30, fake: bool = 
 
     ``image/gif`` payloads go through the REAL path: the animation's
     frames are LZW-decoded (_gif_parse), n_frames are picked at evenly
-    spaced source indices (k·total÷n), and each sampled frame re-encodes
+    spaced source indices (k·total // take, take = min(n_frames, total)
+    — the one pick rule for every format), and each sampled frame re-encodes
     as a standalone single-frame GIF — so every downstream consumer
     (decode_features, resize) works on the sampled rows unchanged.
     ``frame_ts_ms`` = source_index·1000÷fps.
@@ -1232,53 +1012,29 @@ def sample_frames(df: DataFrame, n_frames: int = 4, fps: int = 30, fake: bool = 
     decodable by decode_frames). Types without a real path slice the
     payload into deterministic chunks when ``fake=True``, else raise.
     """
-    import numpy as np
+
+    def fake_frames(media: bytes, fps: int):
+        step = max(1, len(media) // n_frames)
+
+        def pick(i: int) -> tuple[int, bytes]:
+            chunk = media[i * step : (i + 1) * step] or media[-step:]
+            return int(i * (1000 / fps) * (len(media) // step or 1)), chunk
+
+        return n_frames, pick
 
     def split(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out: dict[str, list] = {"doc_id": [], "frame_idx": [], "frame_ts_ms": [], "frame": []}
             mts = pdf["media_type"] if "media_type" in pdf else ["video/mp4"] * len(pdf)
             for doc_id, media, mt in zip(pdf["doc_id"], pdf["media"], mts):
-                if mt == "image/gif":
-                    w, h, palette, frames = _gif_parse(media)
-                    total = len(frames)
-                    take = min(n_frames, total)
-                    for k in range(take):
-                        src = k * total // take
-                        raster = np.frombuffer(
-                            frames[src], dtype=np.uint8
-                        ).reshape(h, w)
-                        out["doc_id"].append(doc_id)
-                        out["frame_idx"].append(k)
-                        out["frame_ts_ms"].append(src * 1000 // fps)
-                        out["frame"].append(_encode_gif(raster, palette))
-                    continue
-                if mt == "video/mp4":
-                    from .mp4codec import parse_mp4
-
-                    samples = parse_mp4(media)["samples"]
-                    total = len(samples)
-                    take = min(n_frames, total)
-                    for k in range(take):
-                        ts_ms, payload = samples[k * total // take]
-                        out["doc_id"].append(doc_id)
-                        out["frame_idx"].append(k)
-                        out["frame_ts_ms"].append(ts_ms)
-                        out["frame"].append(payload)
-                    continue
-                if not fake:
-                    raise NotImplementedError(
-                        f"no real frame-sampling path for {mt!r}; image/gif "
-                        "and video/mp4 (ISO-BMFF) sample for real — run "
-                        "with fake=True for deterministic chunks"
-                    )
-                step = max(1, len(media) // n_frames)
-                for i in range(n_frames):
-                    chunk = media[i * step : (i + 1) * step] or media[-step:]
+                total, pick = codec_op(mt, "frames", fake_frames if fake else None)(media, fps)
+                take = min(n_frames, total)
+                for k in range(take):
+                    ts_ms, frame = pick(k * total // take)
                     out["doc_id"].append(doc_id)
-                    out["frame_idx"].append(i)
-                    out["frame_ts_ms"].append(int(i * (1000 / fps) * (len(media) // step or 1)))
-                    out["frame"].append(chunk)
+                    out["frame_idx"].append(k)
+                    out["frame_ts_ms"].append(ts_ms)
+                    out["frame"].append(frame)
             yield pd.DataFrame(out)
 
     return df.mapInPandas(split, schema=FRAME_SCHEMA)
@@ -1417,8 +1173,6 @@ def _gif_parse(b: bytes):
     header + screen descriptor + global color table, then one LZW
     sub-block stream per full-frame image descriptor (animations are a
     sequence of them)."""
-    import struct
-
     if b[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError(f"not a GIF: magic={b[:6]!r}")
     w, h, flags, _bg, _ar = struct.unpack_from("<HHBBB", b, 6)
@@ -1494,8 +1248,6 @@ def _decode_gif(b: bytes) -> dict:
 def _encode_gif_frames(frames, palette: bytes = _GIF_PALETTE) -> bytes:
     """GIF87a encode of one or more (h, w) uint8 index rasters as a
     multi-image (animated) payload — the inverse of _gif_parse."""
-    import struct
-
     h, w = frames[0].shape
     mcs = _GIF_MCS
     out = bytearray(
@@ -1525,22 +1277,102 @@ def synthesize_gif(docs: DataFrame) -> DataFrame:
     the decoded pixel_sum is Σ 17·((x + 2y + doc_id) % 8), SQL-computable,
     and gating it requires a correct LZW decode of every pixel."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def gif(doc_id, text):
+        w = int(4 + doc_id % 12)
+        h = int(4 + (len(text or "") % 12))
+        x = np.arange(w)[None, :]
+        y = np.arange(h)[:, None]
+        return _encode_gif(((x + 2 * y + int(doc_id)) % 8).astype(np.uint8))
 
-        for pdf in batches:
-            out: dict[str, list] = {"doc_id": [], "media": [], "media_type": [], "n_bytes": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                w = int(4 + doc_id % 12)
-                h = int(4 + (len(text or "") % 12))
-                x = np.arange(w)[None, :]
-                y = np.arange(h)[:, None]
-                idx = ((x + 2 * y + int(doc_id)) % 8).astype(np.uint8)
-                b = _encode_gif(idx)
-                out["doc_id"].append(doc_id)
-                out["media"].append(b)
-                out["media_type"].append("image/gif")
-                out["n_bytes"].append(len(b))
-            yield pd.DataFrame(out)
+    return media_rows(docs.select("doc_id", "text"), "image/gif", gif)
 
-    return docs.select("doc_id", "text").mapInPandas(gen, MEDIA_SCHEMA)
+
+# --------------------------------------------------------------------------
+# The codec table: the one place that decides what each media_type can do
+# for real. Every media_type dispatch in the engine reads it through
+# codec_op.
+# --------------------------------------------------------------------------
+
+
+def _gif_frames(b: bytes, fps: int):
+    """(frame count, pick) of an animated GIF: pick(i) is frame i as a
+    standalone single-frame GIF stamped i·1000 // fps ms."""
+    w, h, palette, frames = _gif_parse(b)
+
+    def pick(i: int) -> tuple[int, bytes]:
+        raster = np.frombuffer(frames[i], dtype=np.uint8).reshape(h, w)
+        return i * 1000 // fps, _encode_gif(raster, palette)
+
+    return len(frames), pick
+
+
+def _mp4_frames(b: bytes, fps: int):
+    """(sample count, pick) of an MP4: pick(i) is sample i's bytes at its
+    CONTAINER timestamp (``fps`` is unused — the stts table decides)."""
+    samples = parse_mp4(b)["samples"]
+    return len(samples), samples.__getitem__
+
+
+def _jpeg_dims(b: bytes) -> tuple[int, int]:
+    d = decode_jpeg(b)
+    return d["width"], d["height"]
+
+
+def _ocr_png(b: bytes) -> str:
+    from .ocr import ocr_png_bytes  # ocr.py builds on this module
+
+    return ocr_png_bytes(b)
+
+
+def _ocr_jpeg(b: bytes) -> str:
+    from .ocr import ocr_jpeg_bytes
+
+    return ocr_jpeg_bytes(b)
+
+
+@dataclass(frozen=True)
+class Codec:
+    """What the engine does for real with one media_type; an operation a
+    format lacks is None.
+
+    - ``decode(b) -> dict``: the FEATURE_SCHEMA fields the format knows
+    - ``dims(b) -> (width, height)``: the source size, for scale resizes
+    - ``resize(b, width, height) -> bytes``: nearest-neighbor rendition
+    - ``frames(b, fps) -> (count, pick)``: pick(i) -> (ts_ms, payload)
+    - ``ocr(b) -> str``: glyph-raster text
+    """
+
+    decode: Callable[[bytes], dict]
+    dims: Callable[[bytes], tuple[int, int]] | None = None
+    resize: Callable[[bytes, int, int], bytes] | None = None
+    frames: Callable | None = None
+    ocr: Callable[[bytes], str] | None = None
+
+
+CODECS: dict[str, Codec] = {
+    "audio/wav": Codec(_decode_wav),
+    "image/x-portable-pixmap": Codec(_decode_ppm, _ppm_dims, _resize_ppm),
+    "image/bmp": Codec(_decode_bmp),
+    "image/png": Codec(
+        _decode_png, lambda b: _png_parse(b)[:2], _resize_png, ocr=_ocr_png
+    ),
+    "image/gif": Codec(
+        _decode_gif, lambda b: _gif_parse(b)[:2], _resize_gif, _gif_frames
+    ),
+    "image/jpeg": Codec(_decode_jpeg, _jpeg_dims, _resize_jpeg, ocr=_ocr_jpeg),
+    "video/mp4": Codec(_decode_mp4, frames=_mp4_frames),
+}
+
+
+def codec_op(mt: str, op: str, fallback: Callable | None = None) -> Callable:
+    """The ``op`` of ``mt``'s codec, else ``fallback`` (an operator's
+    ``fake=True`` pseudo-output); with neither, NotImplementedError naming
+    every media_type that has a real ``op``."""
+    fn = getattr(CODECS.get(mt), op, None) or fallback
+    if fn is None:
+        have = ", ".join(t for t, c in CODECS.items() if getattr(c, op))
+        raise NotImplementedError(
+            f"no real {op} for {mt!r} (unsupported media_type): {have} "
+            "have one; operators with fake=True substitute pseudo-output"
+        )
+    return fn

@@ -27,9 +27,15 @@ linearly with executors like every other codec stage in multimodal.py.
 from __future__ import annotations
 
 import re
+import zlib
 from collections.abc import Iterator
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
+
+from .jpegcodec import decode_jpeg, encode_jpeg
+from .multimodal import _encode_png, _png_parse, _unfilter_png, codec_op, media_rows
 
 #: 5x7 bitmap font, A-Z 0-9 and space: 7 rows top->bottom, 5 bits each,
 #: MSB = leftmost pixel. Classic LED-matrix shapes; every glyph distinct
@@ -95,8 +101,6 @@ def normalize_for_raster(text: str | None, n_chars: int) -> str:
 
 def _render_raster(text: str):
     """(GLYPH_H, CELL_W*len(text), 3) uint8 raster: white glyphs on black."""
-    import numpy as np
-
     w = CELL_W * len(text)
     px = np.zeros((GLYPH_H, w, 3), dtype=np.uint8)
     for i, ch in enumerate(text):
@@ -143,10 +147,6 @@ def ocr_png_bytes(payload: bytes) -> str:
     geometry or an unrecognized cell) — the honest behavior for a
     photographic PNG, whose OCR needs tesseract (reference
     ocr_tools.py:10-24), not a fabricated string."""
-    import zlib
-
-    from .multimodal import _png_parse, _unfilter_png
-
     w, h, idat = _png_parse(payload)
     if h != GLYPH_H or w % CELL_W:
         raise ValueError(
@@ -170,8 +170,6 @@ def ocr_jpeg_bytes(payload: bytes) -> str:
     Huffman entropy decode, dequantize, IDCT), geometry check, 8x
     block-downsample, exact per-cell template match. Same honesty contract
     as :func:`ocr_png_bytes` for non-raster images."""
-    from .jpegcodec import decode_jpeg
-
     d = decode_jpeg(payload)
     w, h = d["width"], d["height"]
     if h != GLYPH_H * JPEG_BLOCK or w % (CELL_W * JPEG_BLOCK):
@@ -183,8 +181,6 @@ def ocr_jpeg_bytes(payload: bytes) -> str:
     # than assume it (an arbitrary JPEG with glyph-like top-left samples
     # but non-constant block interiors is not a rendered raster and must
     # raise, not be 'recognized') — one vectorized compare over the image
-    import numpy as np
-
     down = d["raster"][:: JPEG_BLOCK, :: JPEG_BLOCK]
     if not (
         d["raster"] == np.kron(down, np.ones((JPEG_BLOCK, JPEG_BLOCK), down.dtype))
@@ -206,27 +202,10 @@ def render_text_png(
     (columns: doc_id, media, media_type, n_bytes — multimodal's
     MEDIA_SCHEMA). Fixed ``n_chars``-cell width so every image has
     identical geometry. Arrow-batched, map-only."""
-    import pandas as pd
+    def png(doc_id, text):
+        return _encode_png(_render_raster(normalize_for_raster(text, n_chars)))
 
-    from .multimodal import MEDIA_SCHEMA, _encode_png
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [],
-                "media": [],
-                "media_type": [],
-                "n_bytes": [],
-            }
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                b = _encode_png(_render_raster(normalize_for_raster(text, n_chars)))
-                out["doc_id"].append(doc_id)
-                out["media"].append(b)
-                out["media_type"].append("image/png")
-                out["n_bytes"].append(len(b))
-            yield pd.DataFrame(out)
-
-    return docs.select(id_col, text_col).mapInPandas(gen, MEDIA_SCHEMA)
+    return media_rows(docs.select(id_col, text_col), "image/png", png)
 
 
 def render_text_jpeg(
@@ -240,33 +219,12 @@ def render_text_jpeg(
     through the lossy codec per jpegcodec's contract). Arrow-batched,
     map-only. Default ``n_chars`` is smaller than the PNG path's: each
     char costs 42 DCT blocks through the full entropy coder."""
-    import pandas as pd
+    def jpeg(doc_id, text):
+        gray = _render_raster(normalize_for_raster(text, n_chars))[:, :, 0]
+        even = np.where(gray > 0, 254, 0).astype(np.uint8)
+        return encode_jpeg(np.kron(even, np.ones((JPEG_BLOCK, JPEG_BLOCK), np.uint8)))
 
-    from .jpegcodec import encode_jpeg
-    from .multimodal import MEDIA_SCHEMA
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [],
-                "media": [],
-                "media_type": [],
-                "n_bytes": [],
-            }
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                gray = _render_raster(normalize_for_raster(text, n_chars))[:, :, 0]
-                even = np.where(gray > 0, 254, 0).astype(np.uint8)
-                big = np.kron(even, np.ones((JPEG_BLOCK, JPEG_BLOCK), np.uint8))
-                b = encode_jpeg(big)
-                out["doc_id"].append(doc_id)
-                out["media"].append(b)
-                out["media_type"].append("image/jpeg")
-                out["n_bytes"].append(len(b))
-            yield pd.DataFrame(out)
-
-    return docs.select(id_col, text_col).mapInPandas(gen, MEDIA_SCHEMA)
+    return media_rows(docs.select(id_col, text_col), "image/jpeg", jpeg)
 
 
 def ocr_images(
@@ -276,27 +234,15 @@ def ocr_images(
     type_col: str = "media_type",
 ) -> DataFrame:
     """OCR a media relation of glyph-raster PNGs/JPEGs -> (doc_id, text),
-    routed EXPLICITLY by media_type (anything else raises an unsupported-
-    type error rather than a confusing wrong-codec decode failure).
-    Arrow-batched, map-only; errors propagate (a non-raster image is a
-    caller bug here — extract_text's PERMISSIVE path handles mixed
-    corpora)."""
-    import pandas as pd
-
-    def one(b: bytes, mt: str) -> str:
-        if mt == "image/jpeg":
-            return ocr_jpeg_bytes(b)
-        if mt == "image/png":
-            return ocr_png_bytes(b)
-        raise ValueError(
-            f"unsupported media_type {mt!r}: ocr_images handles "
-            "image/png and image/jpeg only"
-        )
-
+    routed EXPLICITLY by media_type through multimodal.CODECS (any other
+    type raises an unsupported-media_type NotImplementedError rather than
+    a confusing wrong-codec decode failure). Arrow-batched, map-only;
+    errors propagate (a non-raster image is a caller bug here —
+    extract_text's PERMISSIVE path handles mixed corpora)."""
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             texts = [
-                one(bytes(b), mt)
+                codec_op(mt, "ocr")(bytes(b))
                 for b, mt in zip(pdf[media_col], pdf[type_col])
             ]
             yield pd.DataFrame({"doc_id": pdf[id_col].astype("int64"), "text": texts})

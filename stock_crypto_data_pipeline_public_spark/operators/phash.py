@@ -32,7 +32,14 @@ correct end to end.
 
 from __future__ import annotations
 
+import zlib
+from collections.abc import Iterator
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
+
+from .multimodal import _encode_png, _png_parse, _unfilter_png, media_rows, pattern_bit
 
 #: dHash grid: 8 rows x 8 horizontal comparisons over 9 columns = 64 bits
 DHASH_W = 8
@@ -45,49 +52,25 @@ _BASE = 128      # row starting luminance (drift stays within [32, 224])
 _JITTER = 10     # per-doc brightness offset unit (doc_id % 3 of them)
 
 
-def pattern_bit(group: int, i: int) -> int:
-    """Target dHash bit i (i = y·8+x) for synthesis group ``group``: the
-    8 cyclic shifts of 11110000 are pairwise distinct, so the 8 groups get
-    8 distinct 64-bit hashes."""
-    return 1 if (i + group) % 8 < 4 else 0
-
-
 def synthesize_dhash_png(docs: DataFrame) -> DataFrame:
     """One REAL 9×8 truecolor PNG per document: group g = doc_id %
-    N_GROUPS fixes the gradient-sign pattern (hence the dHash); brightness
-    jitter 10·(doc_id % 3) varies the bytes within a group without moving
-    a single sign. Schema = multimodal.MEDIA_SCHEMA."""
-    from collections.abc import Iterator
+    N_GROUPS fixes the gradient-sign pattern (hence the dHash: bit
+    y·8+x is pattern_bit(g, y·8+x)); brightness jitter 10·(doc_id % 3)
+    varies the bytes within a group without moving a single sign.
+    Schema = multimodal.MEDIA_SCHEMA."""
+    def png(doc_id):
+        g = int(doc_id) % N_GROUPS
+        jit = _JITTER * (int(doc_id) % 3)
+        px = np.zeros((DHASH_H, DHASH_W + 1, 3), dtype=np.uint8)
+        for y in range(DHASH_H):
+            v = _BASE + jit
+            px[y, 0, :] = v
+            for x in range(DHASH_W):
+                v += _STEP if pattern_bit(g, y * DHASH_W + x) else -_STEP
+                px[y, x + 1, :] = v
+        return _encode_png(px, split_idat=(doc_id % 2 == 0))
 
-    import pandas as pd
-
-    from .multimodal import MEDIA_SCHEMA, _encode_png
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "media": [], "media_type": [], "n_bytes": []
-            }
-            for doc_id in pdf["doc_id"]:
-                g = int(doc_id) % N_GROUPS
-                jit = _JITTER * (int(doc_id) % 3)
-                px = np.zeros((DHASH_H, DHASH_W + 1, 3), dtype=np.uint8)
-                for y in range(DHASH_H):
-                    v = _BASE + jit
-                    px[y, 0, :] = v
-                    for x in range(DHASH_W):
-                        v += _STEP if pattern_bit(g, y * DHASH_W + x) else -_STEP
-                        px[y, x + 1, :] = v
-                b = _encode_png(px, split_idat=(doc_id % 2 == 0))
-                out["doc_id"].append(doc_id)
-                out["media"].append(b)
-                out["media_type"].append("image/png")
-                out["n_bytes"].append(len(b))
-            yield pd.DataFrame(out)
-
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return media_rows(docs.select("doc_id"), "image/png", png)
 
 
 def dhash64(media: DataFrame, media_col: str = "media") -> DataFrame:
@@ -98,17 +81,8 @@ def dhash64(media: DataFrame, media_col: str = "media") -> DataFrame:
     native size here (the synthesized corpus is already 9×8); production
     callers downsample to the (DHASH_W+1)×DHASH_H grid first — block-mean
     resize, the same numpy path multimodal._resize_png uses."""
-    from collections.abc import Iterator
-
-    import pandas as pd
 
     def hash_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import zlib
-
-        import numpy as np
-
-        from .multimodal import _png_parse, _unfilter_png
-
         for pdf in batches:
             ids, hashes = [], []
             for doc_id, b in zip(pdf["doc_id"], pdf[media_col]):

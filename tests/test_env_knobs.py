@@ -7,6 +7,7 @@ from stock_crypto_data_pipeline_public_spark.session import env_positive_int
 KNOBS = [
     "SPARK_GRAFT_CPUS",
     "SPARK_GRAFT_BENCH_PASSES",
+    "SPARK_GRAFT_BENCH_BUDGET_S",
 ]
 
 

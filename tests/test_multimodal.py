@@ -708,3 +708,210 @@ def test_dhash_brightness_invariant_and_patterns_distinct(spark):
     full = spark.createDataFrame([Row(doc_id=1, text="abcdef")])
     with pytest.raises(Exception, match="downsample"):
         P.dhash64(synthesize_png(full)).collect()
+
+
+#: md5 of every payload each media producer emits for _GOLDEN_ROWS, in
+#: doc_id order. PNG, JPEG, GIF and MP4 sizes are entropy-coded and no
+#: oracle gates their bytes, so these digests are what pins them.
+_GOLDEN_ROWS = [
+    (0, None),
+    (1, ""),
+    (2, "Hello, World 42"),
+    (7, "the quick brown fox jumps over the lazy dog 0123456789 and more text"),
+    (12, "ABC"),
+    (33, "x" * 17),
+    (50, "Zürich café — naïve"),
+    (97, "  spaced   out  "),
+]
+_GOLDEN_MD5 = {
+    "synthesize_wav": ("audio/wav", (
+        "d905122c14eb65a1a8cedadc1c375558",
+        "258365b740878c90ebeadac103c7f690",
+        "13ec8a86c316a6f25f8e4f817854df8b",
+        "6e1015906d22b7dac53d44d4ab8bb0dc",
+        "f99c20f34e2984f1504e62dbabfa9f6d",
+        "79726a81c7c5b17bc717c27c5e207233",
+        "ed2c1ff668277bac072e325b44a456d4",
+        "975842258c27895d6d4678e346b090c4",
+    )),
+    "synthesize_ppm": ("image/x-portable-pixmap", (
+        "7deba90473c8042ffbec5105ffd25902",
+        "c714823e56b5da6d3494aa770fb3aa76",
+        "a5d341b3dd2fe1344522cca7f1b0ebf0",
+        "3dbc59cc832860dedcc854d990b5654e",
+        "c765bb06b61d0e498f179fbb93a8efc8",
+        "161e2cfd682e9159b511a5e74b89fd27",
+        "cf01aceede3398db2c985fe4e14b6a46",
+        "de3b09dfe9b15e2edbd64fd24a1c910a",
+    )),
+    "synthesize_bmp": ("image/bmp", (
+        "2d710540b5e5fe56eb9d751ddeea937b",
+        "0e4b0a524e1fdedb3543b3d185e4c465",
+        "7933fb589a1e35d4fc52b8abf36ee978",
+        "636b58f73172724c61c2885b26c704b3",
+        "9f5b2a2e06619a11eb9399b08c6bb7aa",
+        "66c74ca3d980bfe3c97f658f7055f76c",
+        "505f49d5bd9bd2a0b569b6e64008b79c",
+        "fc464b7eff28f31f2966cbb5fb27d217",
+    )),
+    "synthesize_png": ("image/png", (
+        "0519a7260b1bcb6fcebc525f3d90e7af",
+        "9844644ca3d1a0e87c7e22d339d13f4b",
+        "377537ece670fe68ca34c2d6888baccf",
+        "916933d120434e29087b260041f31fc8",
+        "3a37194f75d5de783c03fee65cddf09e",
+        "cd06580adb83eb10ebc15abe575a5f59",
+        "d6ef6ddd59bd18454728e111b45a11cc",
+        "c93bbf2feefca5f3aef2489a5c9541cb",
+    )),
+    "synthesize_tone_wav": ("audio/wav", (
+        "daaec252474a7b0b44bf54af141d9c1b",
+        "75ea9258c4019886d89acc20f3ad7d26",
+        "555f3f401087dbfd1fc8a6ec986add1a",
+        "2c3eb4918ddd48c44a397ff2e7462d09",
+        "d84f16c33f0560bde8a820b9ebdfce14",
+        "9dd7c3b98e4d5b6dd3edbcb83639f22d",
+        "d0eb13918566cf626e0bc6d79743045a",
+        "4aa7fce945fd0e4c448c60f1cdbed4ac",
+    )),
+    "resample_audio": ("audio/wav", (
+        "92796011f7179ddc6b099e877482aee9",
+        "8f27b06087e96001ac539bea574bc590",
+        "fc9090072006b0978d9c0b4a6a4549c7",
+        "bc61d885766c9f3409c8eb25194d7e56",
+        "7400e36669313a6d91eb8e4d7d56280c",
+        "daafb28028f2c565720f3c9b76bd944b",
+        "5f52c4803915e9f37f2b69c8a2b626f5",
+        "5a6b0b90c2661c7d601bfd07701efd39",
+    )),
+    "synthesize_jpeg": ("image/jpeg", (
+        "3947f25ca1ad2e74d211333b95fdc160",
+        "2674ac491b03a311dfc3d43436a2e14f",
+        "3c01e3c9f6fcba4c1d79d1d78a68b40a",
+        "c16c8261c7af7992c63e022c73702b55",
+        "e1b30b552566879380a79ef7a07777c7",
+        "ba152d9ada6a05806e27cbcff969349e",
+        "3f1ddf9233ef555334ad0e853c951839",
+        "0e8c72bbdd632d114f4901650a47efdb",
+    )),
+    "synthesize_mp4": ("video/mp4", (
+        "61e7f4dc7e22bd840c82cce7178e067d",
+        "01f45b0e9086b8e3e8a0c5551bae8dbe",
+        "6d490b4476829dddc1b5ec759487d096",
+        "451ce0ce893c0b23de9f1487e2f0c1d0",
+        "0e863ee70c40156ba7fe21921cd5fde8",
+        "8d88b37c1ffbf76b73d642dc1376ac5e",
+        "ff5f8e1f68f75e85458408c10d2968e0",
+        "b94b89c6052014b1203dbb4aeb89078c",
+    )),
+    "synthesize_mp4_scenes": ("video/mp4", (
+        "8ebec03525900679a650f829903ba108",
+        "48f82592be37f0ec9cfb97507ced7bd2",
+        "6fadd6fdfc3a1372d8348be5dd62a0e0",
+        "ec96f9f72910d135a53cf4c5dce5d4b4",
+        "4ef42eaac28bc114a1c7d03974939682",
+        "d8e1abc937c3d6dc4bffe67100e7c3ad",
+        "4087b7aaa5f2623401840819197649cc",
+        "d76533c3d8a02a6148393df18a314b6f",
+    )),
+    "synthesize_animated_gif": ("image/gif", (
+        "7d9729e22d0871ac14a6f5be2a54eac7",
+        "7d7cefe5bb1762ea39c66817d12c00c4",
+        "6f000229c0bb3d69622cab8eb64abca9",
+        "cf2557a0593dfadc9f2eb501a5759df4",
+        "ee501d75675fbf78dfe0527435dd760e",
+        "e0843cf7b2308663664f21a0d053b5fc",
+        "316f43a4ae42dd5b30791a5d967b13f4",
+        "5492d324a9994a5cd2f8ad4a2deebd8a",
+    )),
+    "synthesize_gif": ("image/gif", (
+        "ce9883f3d0068fca05aba1efe1c6e2ef",
+        "5ab3fe5c5007aa0701a50af5c40addd2",
+        "aeba92c55ba4c6e2fc2a87b0768860b1",
+        "61ef7c2f76765369496b976116c2dcc5",
+        "82dffa08dd383eb93ddf9c026cdfc3f1",
+        "10c0a704271644a44c754620742b9fd8",
+        "05cdef479817d6f06cb8fa4a05c0a41d",
+        "1ac822be497d21910e13c2014d4613bb",
+    )),
+    "render_text_png": ("image/png", (
+        "3ec25bb3364f16eed903f603e36b3197",
+        "3ec25bb3364f16eed903f603e36b3197",
+        "49550456fa71e63b3fbff93d7cb49dff",
+        "ba2d5bfa6f19bdc0f660f5c97a767071",
+        "eeffea07fc2e6382bbbe4c6f3570c68d",
+        "a517d0cac75c746ddd8098b30f2313a2",
+        "03ab1895cf5d78a2daa7963c737b0dc2",
+        "8fe2b2ae6b5959fe932c5dd9d7ae74e7",
+    )),
+    "render_text_jpeg": ("image/jpeg", (
+        "133b0997cc7d0698cedb6d39b4d9e05c",
+        "133b0997cc7d0698cedb6d39b4d9e05c",
+        "e227d11ccd73b7c7830a19c75fcc60cb",
+        "15eb685a8997f2a09badb298066ef8a1",
+        "ec14fee4203083acfcb4828440de6a9b",
+        "0b3aba18c6f824b9e54a645e60eb2fe4",
+        "1987b9ffd27e5581b6c95da30a128f62",
+        "23acd1ad622cd8b983b1901ef1e7d4a3",
+    )),
+    "synthesize_dhash_png": ("image/png", (
+        "9b33cf4f31a531c30c558108a08e9197",
+        "e4e4abc563c85f34871b386d57a25bf2",
+        "d718ce7892770a777fd656d58365b687",
+        "0edb099ee602d6896f307ba02a29a0df",
+        "894e9c80a7ae7b53a7a6ec06bd1e411d",
+        "bfca66e51bd880de6644fa5916c9e237",
+        "d718ce7892770a777fd656d58365b687",
+        "e4e4abc563c85f34871b386d57a25bf2",
+    )),
+    "synthesize_afp_wav": ("audio/wav", (
+        "cd52c27e434c2a56826a43df61d67810",
+        "25f3b9f9c548f0449b5333c19459d565",
+        "ba67747fbd23b4e6986b75aebbed20c5",
+        "616967868631579e3a01e9a14297a2ec",
+        "2ff48faf68d7272ac245e0adc24e5c3a",
+        "bb01d6174a69b23b64b7ca879e28e4fc",
+        "ba67747fbd23b4e6986b75aebbed20c5",
+        "25f3b9f9c548f0449b5333c19459d565",
+    )),
+}
+
+
+def test_media_producers_emit_pinned_payloads(spark):
+    """Every media producer emits byte-identical payloads for a fixed
+    8-document frame that holds a NULL text and sits on 10 partitions
+    (two of them empty), with n_bytes = len(media) and its own
+    media_type."""
+    import hashlib
+
+    from stock_crypto_data_pipeline_public_spark.operators import audiofp, ocr, phash
+
+    docs = spark.createDataFrame(
+        spark.sparkContext.parallelize(_GOLDEN_ROWS, 10), "doc_id long, text string"
+    )
+    assert 0 in docs.rdd.glom().map(len).collect()
+    producers = {
+        "synthesize_wav": M.synthesize_wav,
+        "synthesize_ppm": M.synthesize_ppm,
+        "synthesize_bmp": M.synthesize_bmp,
+        "synthesize_png": M.synthesize_png,
+        "synthesize_tone_wav": M.synthesize_tone_wav,
+        "resample_audio": lambda d: M.resample_audio(M.synthesize_wav(d)),
+        "synthesize_jpeg": M.synthesize_jpeg,
+        "synthesize_mp4": M.synthesize_mp4,
+        "synthesize_mp4_scenes": M.synthesize_mp4_scenes,
+        "synthesize_animated_gif": M.synthesize_animated_gif,
+        "synthesize_gif": M.synthesize_gif,
+        "render_text_png": ocr.render_text_png,
+        "render_text_jpeg": ocr.render_text_jpeg,
+        "synthesize_dhash_png": phash.synthesize_dhash_png,
+        "synthesize_afp_wav": audiofp.synthesize_afp_wav,
+    }
+    assert producers.keys() == _GOLDEN_MD5.keys()
+    for name, produce in producers.items():
+        rows = sorted(produce(docs).collect())
+        media_type, digests = _GOLDEN_MD5[name]
+        assert [r.doc_id for r in rows] == [d for d, _ in _GOLDEN_ROWS], name
+        assert {r.media_type for r in rows} == {media_type}, name
+        assert all(r.n_bytes == len(r.media) for r in rows), name
+        assert tuple(hashlib.md5(bytes(r.media)).hexdigest() for r in rows) == digests, name

@@ -256,6 +256,54 @@ def test_nearest_centroid_rule_has_one_home():
     assert not found, "rank IVF candidates with similarity.nearest:\n" + "\n".join(found)
 
 
+def test_media_rows_and_codec_dispatch_have_one_home():
+    """operators/multimodal.py owns both media contracts: only
+    ``media_rows`` runs a ``mapInPandas`` that emits ``MEDIA_SCHEMA``
+    (every producer returns through it), and no module in plans/ or
+    operators/ compares a value with a media_type literal such as
+    ``mt == "image/png"`` — format dispatch reads ``CODECS`` through
+    ``codec_op``."""
+    import ast
+    from pathlib import Path
+
+    import stock_crypto_data_pipeline_public_spark as pkg
+
+    mime = re.compile(r"^(?:image|audio|video|application)/[\w.+-]+$")
+    root = Path(pkg.__file__).parent
+    found = []
+
+    def is_media_schema(node):
+        name = node.attr if isinstance(node, ast.Attribute) else getattr(node, "id", None)
+        return name == "MEDIA_SCHEMA"
+
+    def visit(node, rel, fn):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        if (
+            isinstance(node, ast.Call)
+            and getattr(node.func, "attr", None) == "mapInPandas"
+            and any(is_media_schema(a) for a in [*node.args, *(k.value for k in node.keywords)])
+            and (rel, fn) != ("operators/multimodal.py", "media_rows")
+        ):
+            found.append(f"{rel}:{node.lineno} mapInPandas(…, MEDIA_SCHEMA) (in {fn})")
+        if isinstance(node, ast.Compare) and any(
+            isinstance(c, ast.Constant) and isinstance(c.value, str) and mime.match(c.value)
+            for c in [node.left, *node.comparators]
+        ):
+            found.append(f"{rel}:{node.lineno} media_type comparison (in {fn})")
+        for child in ast.iter_child_nodes(node):
+            visit(child, rel, fn)
+
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel.startswith(("plans/", "operators/")):
+            visit(ast.parse(path.read_text()), rel, None)
+    assert not found, (
+        "emit media through multimodal.media_rows and dispatch formats "
+        "through multimodal.codec_op:\n" + "\n".join(found)
+    )
+
+
 def test_table_commits_go_only_through_manifest():
     """operators/manifest.py is the one module that knows how a table
     commits: no other module stages a ``.__staging__`` copy, calls
@@ -347,7 +395,7 @@ def test_gate_window_members_are_hash_gated():
     """A _GATE_PRIORITY member without an oracle would spend a driver
     window slot on a rows-only check that can never hash-match — today
     that is only prevented for the known sketches via _NEVER_GATE; this
-    pins it for EVERY window member (r9 verdict item 7)."""
+    pins it for EVERY window member."""
     from stock_crypto_data_pipeline_public_spark.plans import registry
 
     registry.load_all()
