@@ -127,19 +127,16 @@ class ModelRegistry:
         """Fingerprint every model's DEFINITION (function source + deps +
         tags) — the engine's analog of dbt's manifest for state comparison.
         dbt fingerprints compiled SQL; here the model body IS Python, so
-        the fingerprint is a sha256 over its source text. Stable across
-        runs and machines for unchanged code."""
+        the fingerprint is a sha256 over its source text and that of every
+        function of its package it reaches by name (shared helpers such as
+        plans/market.hub), so a changed helper marks its models. Stable
+        across runs and machines for unchanged code."""
         import hashlib
-        import inspect
 
         out = {}
         for name, fn in self._fns.items():
-            try:
-                src = inspect.getsource(fn)
-            except (OSError, TypeError):  # e.g. lambdas defined in a REPL
-                src = repr(fn)
             payload = "\x1f".join(
-                (src, ",".join(self._deps[name]), ",".join(sorted(self._tags[name])))
+                (_definition(fn), ",".join(self._deps[name]), ",".join(sorted(self._tags[name])))
             )
             out[name] = hashlib.sha256(payload.encode()).hexdigest()
         return out
@@ -183,3 +180,34 @@ class ModelRegistry:
                 raise KeyError(f"model {name!r} missing inputs {missing}")
             ctx[name] = self._fns[name](ctx)
         return ctx
+
+
+def _definition(fn) -> str:
+    """``fn``'s source, then the source of every function of its package
+    that it reaches by name, transitively through ``__globals__``."""
+    import inspect
+
+    def source(f) -> str:
+        try:
+            return inspect.getsource(f)
+        except (OSError, TypeError):  # e.g. lambdas defined in a REPL
+            return repr(f)
+
+    if not inspect.isfunction(fn):
+        return source(fn)
+    pkg = fn.__module__.split(".")[0]
+    reached: dict[str, str] = {}
+    stack = [fn]
+    while stack:
+        f = stack.pop()
+        codes = [f.__code__]
+        for code in codes:  # nested lambdas, comprehensions and inner defs
+            codes.extend(c for c in code.co_consts if inspect.iscode(c))
+            for g in map(f.__globals__.get, code.co_names):
+                if not inspect.isfunction(g) or (g.__module__ or "").split(".")[0] != pkg:
+                    continue
+                key = f"{g.__module__}.{g.__qualname__}"
+                if key not in reached:
+                    reached[key] = source(g)
+                    stack.append(g)
+    return "\x1e".join([source(fn), *(reached[k] for k in sorted(reached))])

@@ -23,10 +23,6 @@ from ..functions.timeops import epoch_us
 from .registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --------------------------------------------------------------------------
 # e01 — sessionization: 30-minute inactivity gap → session ids → per-user
 # session stats. The batch expression of `session_window(ts, '30 minutes')`;
@@ -61,7 +57,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """,
 )
 def e01_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
     new_sess = (
         F.when(
@@ -106,7 +102,7 @@ def e01_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def e02_daily_type_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 day").alias("win"), "event_type")
         .agg(
@@ -148,7 +144,7 @@ def e02_daily_type_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def e03_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
 
     def first_ts(kind):
         # epoch_us (not unix_micros): ts is TIMESTAMP_NTZ and unix_micros is
@@ -191,7 +187,7 @@ def e03_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def e04_hourly_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return ev.groupBy(
         F.hour("ts").cast("int").alias("hour_of_day"), "event_type"
     ).agg(
@@ -224,7 +220,7 @@ def e04_hourly_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def e05_d7_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     user_days = ev.select(
         "user_id", F.date_trunc("day", "ts").cast("date").alias("day")
     ).distinct()
@@ -268,7 +264,7 @@ def e05_d7_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def e06_bangkok_wall_clock(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     local = ev.select(
         F.from_utc_timestamp("ts", "Asia/Bangkok").alias("local_time"), "value"
     )
@@ -314,11 +310,11 @@ def e07_asof_prior_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.scd import dedup_keep_first
 
     ev = dedup_keep_first(
-        _t(spark, sf_dir, "events").select("user_id", "ts", "event_id", "value"),
+        load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id", "value"),
         ["user_id", "ts"],
         [F.desc("event_id")],
     ).select("user_id", "ts", "value")
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", F.col("o_custkey").alias("user_id"), "o_orderstatus", "o_orderdate"
     )
     joined = asof_join_backward(
@@ -373,7 +369,7 @@ def e07_asof_prior_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def e08_purchase_attribution_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.rangejoin import bucketed_range_join
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     points = ev.select("user_id", "ts", "event_type", "value")
     windows = ev.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("purchase_id"),
@@ -456,7 +452,7 @@ def e08_purchase_attribution_window(spark: SparkSession, sf_dir: str) -> DataFra
 )
 def e09_hourly_rate_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing-24h z-score per (event_type, hour), rolled up per type."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     hourly = (
         ev.select("event_type", F.date_trunc("hour", "ts").alias("hour"))
         .groupBy("event_type", "hour")
@@ -533,7 +529,7 @@ def e09_hourly_rate_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def e10_native_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     sw = F.session_window("ts", "30 minutes")
     return (
         ev.groupBy("user_id", sw.alias("sw"))
@@ -590,7 +586,7 @@ def e10_native_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def e11_cohort_retention_triangle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     # ISO-ish week index anchored on Monday 1970-01-05: exact integer
     # floor((epoch_day - 4) / 7) on both engines
     wk = F.floor(
@@ -689,7 +685,7 @@ def _e12_bin_sql(col: str) -> str:
 )
 def e12_value_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .filter(F.col("value").isNotNull() & F.col("ts").isNotNull())
         .select("value", "ts")
     )
@@ -771,7 +767,7 @@ def e12_value_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def e13_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
     seq = ev.select(
         "event_type", F.lag("event_type").over(w).alias("prev_type")
@@ -846,7 +842,7 @@ _E14_CP_US = 48 * 3600 * 1_000_000  # click→purchase window
     """,
 )
 def e14_windowed_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
 
     def stage(kind: str) -> DataFrame:
         return ev.filter(F.col("event_type") == kind).select(
@@ -967,7 +963,7 @@ def windowed_funnel(
     """,
 )
 def e15_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
     new_sess = F.when(
         F.lag("ts").over(w).isNull()

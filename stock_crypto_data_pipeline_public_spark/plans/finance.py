@@ -42,10 +42,6 @@ from ..sources.tables import load_table
 from .registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --------------------------------------------------------------------------
 # f01 — OHLCV candlestick resample: hourly bars per instrument. open/close
 # are min_by/max_by on the monotone event_id — a single hash aggregation
@@ -69,7 +65,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """,
 )
 def f01_ohlcv_candles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.select(
             F.col("event_type").alias("symbol"),
@@ -115,7 +111,7 @@ def f01_ohlcv_candles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def f02_daily_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     sized = ev.select(
         F.col("event_type").alias("symbol"),
         F.date_trunc("day", "ts").cast("date").alias("trade_date"),
@@ -198,7 +194,7 @@ def f02_daily_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def f03_bollinger_breakouts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("event_type").orderBy(F.asc("ts"), F.asc("event_id"))
     wf = w.rowsBetween(-19, W.currentRow)
     v = ev.select(
@@ -282,7 +278,7 @@ def f03_bollinger_breakouts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def f04_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = (
         W.partitionBy("event_type")
         .orderBy(F.asc("ts"), F.asc("event_id"))
@@ -321,7 +317,7 @@ def f04_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def f06_price_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
 
     def pct(p: float):
         return F.percentile("value", F.lit(p))
@@ -395,7 +391,7 @@ def f06_price_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def f05_daily_corr_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     # px_e4 is the e4 integral average computed entirely in int64 (iavg), so
     # no hashed value transits a decimal->double quotient
     daily = (
@@ -499,7 +495,7 @@ _PAT_L = 24
     """,
 )
 def f07_pattern_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     bars = (
         ev.groupBy(
             F.col("event_type").alias("symbol"),
@@ -595,7 +591,7 @@ def f07_pattern_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def f08_gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     # f15's treatment: the hourly average is the exact e4 integral average
     # divided by the exact double 10000.0 — same value, but no raw double
     # sum (summation-order-dependent at large group sizes) and no rounded
@@ -676,7 +672,7 @@ def f08_gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def f09_realized_volatility(spark: SparkSession, sf_dir: str) -> DataFrame:
     ticks = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .filter(F.col("value") > 0)
         .select(
             F.col("event_type").alias("symbol"),
@@ -752,7 +748,7 @@ def f10_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
     (warehouse analytics queries) with the indicator its analysts compute
     downstream; same window discipline as f03 (bounded ROWS frame,
     instrument-partitioned)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("event_type").orderBy(F.asc("ts"), F.asc("event_id"))
     deltas = ev.select(
         "event_type",
@@ -833,7 +829,7 @@ def f11_stochastic_oscillator(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: beyond-reference indicator suite (see module
     docstring); the reference's analytics stop at daily means
     (warehouse_tools.py price queries)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("event_type").orderBy(F.asc("ts"), F.asc("event_id"))
     v = w.rowsBetween(-13, W.currentRow)
     ranked = ev.select(
@@ -915,7 +911,7 @@ def f11_stochastic_oscillator(spark: SparkSession, sf_dir: str) -> DataFrame:
 def f12_obv_daily_close(spark: SparkSession, sf_dir: str) -> DataFrame:
     """On-balance volume with daily closing snapshots per symbol — exact
     integer arithmetic end to end."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     ticks = ev.select(
         "event_type",
         "event_id",
@@ -1060,7 +1056,7 @@ def _f13_spark_den(dens: list[float], rn: str = "rn"):
 )
 def f13_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MACD line, signal line, and bullish/bearish tick counts per symbol."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("event_type").orderBy(F.asc("ts"), F.asc("event_id"))
     w_sql = "(PARTITION BY event_type ORDER BY ts ASC, event_id ASC)"
     base = ev.select(
@@ -1135,7 +1131,7 @@ def f13_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def f14_atr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """14-bar average true range per symbol over hourly bars."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     bars = (
         ev.select(
             F.col("event_type").alias("symbol"),
@@ -1241,7 +1237,7 @@ def f15_rolling_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling OLS beta per instrument against the equal-weight market
     index (beyond-reference: the reference's price analytics stop at daily
     means — fct_asset_price_comparison.sql:9-32)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     daily = (
         ev.groupBy(
             F.col("event_type").alias("symbol"),
@@ -1361,7 +1357,7 @@ def f15_rolling_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def f16_gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     # f15's treatment: the hourly average is the exact e4 integral average
     # divided by the exact double 10000.0 — same value, but no raw double
     # sum (summation-order-dependent at large group sizes) and no rounded
@@ -1482,7 +1478,7 @@ def f17_cross_sectional_momentum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily cross-sectional momentum rank (beyond-reference: the
     reference compares each asset only to its own +N-day price —
     fct_asset_price_comparison.sql:9-32 — never across assets)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         F.col("event_type").alias("symbol"),
         F.date_trunc("day", "ts").cast("date").alias("day"),

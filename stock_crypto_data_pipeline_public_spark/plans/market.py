@@ -12,6 +12,16 @@ queries in the other plan modules prove the operator semantics against a SQL
 oracle; tests/test_market_pipeline.py runs THIS dag end-to-end on the
 deterministic fixtures and applies the ported data-quality suite.
 
+The vault layer has one rule, kept in shared helpers: ``first_load`` is the
+DV2 first-load dedup (reference W1), and the only place its order is written; ``hub``
+and ``link`` build every hub and link over it; ``profile_sat`` builds the
+hashdiff-versioned profile satellites; ``_provenance`` emits
+``record_source`` and ``load_timestamp``. A model declares only its business
+keys and hub joins. Shared inputs are ephemeral models, inlined DataFrame
+subexpressions that are never materialized, as in dbt:
+``ephemeral_transactions`` (the personal ∪ corporate feed), ``ephemeral_news``
+(the case-normalized news feed) and ``ephemeral_asset``.
+
 Scale notes: hubs/dims broadcast into facts; satellites and SCD2 use
 partitioned windows keyed by the hashed business key (uniform, skew-free);
 price facts would partition by price_date at write time; all unions are
@@ -20,7 +30,10 @@ unionByName (column-order safe).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from functools import reduce
+from operator import and_
+
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..dag import ModelRegistry
 from ..functions.keys import hash_key, surrogate_key
@@ -30,34 +43,88 @@ registry = ModelRegistry()
 model = registry.model
 
 # =========================================================================
-# Data Vault: hubs
+# Data Vault: shared builders
 # =========================================================================
-@model("hub_customer", deps=["raw_customers"], tags=["warehouse", "hub"])
-def hub_customer(ctx) -> DataFrame:
-    """reference models/warehouse/hubs/hub_customer.sql:6-36 — unique
-    customer business keys, first-load wins, md5 surrogate key."""
-    raw = ctx["raw_customers"]
-    first = dedup_keep_first(
-        raw, ["customer_id"], [F.asc("load_timestamp"), F.asc("source")]
-    )
+def first_load(df: DataFrame, *keys: str) -> DataFrame:
+    """One row per ``keys``, in the DV2 first-load order (reference W1): the
+    earliest load wins, and the record source breaks a same-instant tie."""
+    return dedup_keep_first(df, keys, [F.asc("load_timestamp"), F.asc("source")])
+
+
+def _provenance(df: DataFrame) -> list[Column]:
+    """``df``'s ``source`` as ``record_source``, then its ``load_timestamp``."""
+    return [df.source.alias("record_source"), df.load_timestamp]
+
+
+def hub(df: DataFrame, hk: str, bks: dict[str, str]) -> DataFrame:
+    """A hub over ``df``'s first load per business key: ``hk`` (md5 over the
+    keys), each key of ``bks`` under its hub name, then provenance.
+
+    Every key is aliased, even under its own name, so that it is an
+    attribute of the hub's own: two models built over one ephemeral frame
+    otherwise share the key's attribute, and a link's ``pairs.k == hub.k``
+    condition would name that one attribute on both sides."""
+    first = first_load(df, *bks)
     return first.select(
-        surrogate_key("customer_id").alias("hk_customer"),
-        F.col("customer_id").alias("customer_bk"),
-        F.col("source").alias("record_source"),
-        "load_timestamp",
+        surrogate_key(*bks).alias(hk),
+        *(F.col(k).alias(bk) for k, bk in bks.items()),
+        *_provenance(first),
     )
 
 
-@model("hub_company", deps=["raw_corporates"], tags=["warehouse", "hub"])
-def hub_company(ctx) -> DataFrame:
-    """reference hub_company.sql:1-37."""
-    raw = ctx["raw_corporates"]
-    first = dedup_keep_first(raw, ["company_id"], [F.asc("load_timestamp"), F.asc("source")])
-    return first.select(
-        surrogate_key("company_id").alias("hk_company"),
-        F.col("company_id").alias("company_bk"),
-        F.col("source").alias("record_source"),
-        "load_timestamp",
+def link(
+    df: DataFrame, lk: str | Column, keys: list[str], hks: list[str], *hubs: tuple
+) -> DataFrame:
+    """A link over ``df``'s first load per ``keys`` (the pair), resolved
+    against each ``(hub, on)`` or ``(hub, on, fold)`` in order: ``on`` maps a
+    pair column to the hub's business-key column, ``fold`` (say ``F.upper``)
+    is applied to the pair side. A dimension-sized hub comes wrapped in
+    ``F.broadcast``. Emits ``lk`` (hash_key over the pair keys, or the
+    given Column), the hub keys ``hks``, then provenance."""
+    pairs = first_load(df, *keys)
+    out = pairs
+    for h, on, *fold in hubs:
+        f = fold[0] if fold else (lambda c: c)
+        out = out.join(h, reduce(and_, [f(pairs[p]) == h[b] for p, b in on.items()]))
+    if isinstance(lk, str):
+        lk = hash_key(*(pairs[k] for k in keys)).alias(lk)
+    return out.select(lk, *hks, *_provenance(pairs))
+
+
+def profile_sat(df: DataFrame, hk: str, key: str, attrs: list[str]) -> DataFrame:
+    """An insert-only satellite of ``key``'s ``attrs``: a new version only
+    when their hashdiff changes."""
+    hashdiff = surrogate_key(*attrs)
+    changed = changes_only(df, [key], hashdiff, "load_timestamp", "source")
+    return changed.select(
+        surrogate_key(key).alias(hk), hashdiff.alias("hashdiff"), *attrs, *_provenance(changed)
+    )
+
+
+# =========================================================================
+# Data Vault: ephemeral models
+# =========================================================================
+@model(
+    "ephemeral_transactions",
+    deps=["raw_transaction_personal", "raw_transaction_corporate"],
+    tags=["warehouse", "ephemeral"],
+)
+def ephemeral_transactions(ctx) -> DataFrame:
+    """reference hub_transaction.sql:13-29, link_customer_transaction.sql:
+    15-32 — the personal ∪ corporate transaction feed (U1)."""
+    return ctx["raw_transaction_personal"].unionByName(ctx["raw_transaction_corporate"])
+
+
+@model("ephemeral_news", deps=["raw_news"], tags=["warehouse", "ephemeral"])
+def ephemeral_news(ctx) -> DataFrame:
+    """reference ephemeral_news.sql — the news feed with ticker and
+    asset_type case-normalized, so raw 'aapl'/'AAPL' variants of one story
+    collapse in the (url, ticker, asset_type) first-load dedup instead of
+    surviving with divergent keys. That dedup (ephemeral_news.sql:17-25)
+    is left to the three news models, whose hub/link/first_load run it
+    anyway: done here too, hub_news and link_news_asset would run it twice."""
+    return ctx["raw_news"].withColumn("ticker", F.upper("ticker")).withColumn(
+        "asset_type", F.upper("asset_type")
     )
 
 
@@ -68,116 +135,93 @@ def hub_company(ctx) -> DataFrame:
         "raw_cryptoprices_coingecko",
         "raw_cryptoprices_yfinance",
         "raw_stockprices_yfinance",
-        "raw_transaction_personal",
-        "raw_transaction_corporate",
+        "ephemeral_transactions",
     ],
     tags=["warehouse", "ephemeral"],
 )
 def ephemeral_asset(ctx) -> DataFrame:
     """reference models/warehouse/ephemeral/ephemeral_asset.sql:14-65 —
     6-way union of every asset sighting (3 crypto feeds, stock feed, both
-    transaction tables), case-normalized, distinct. Ephemeral = an inlined
-    DataFrame subexpression (never materialized), exactly like dbt."""
-    def crypto(name):
-        return ctx[name].select(
-            F.upper(F.split(F.col("symbol"), "-").getItem(0)).alias("asset_symbol"),
-            F.lit("CRYPTO").alias("asset_type"),
-            F.col("source").alias("record_source"),
-            "load_timestamp",
+    transaction tables), case-normalized, distinct."""
+    def sightings(name, symbol, asset_type):
+        df = ctx[name]
+        return df.select(
+            symbol.alias("asset_symbol"), asset_type.alias("asset_type"), *_provenance(df)
         )
 
-    stock = ctx["raw_stockprices_yfinance"].select(
-        F.upper("ticker").alias("asset_symbol"),
-        F.lit("STOCK").alias("asset_type"),
-        F.col("source").alias("record_source"),
-        "load_timestamp",
+    crypto = F.upper(F.split(F.col("symbol"), "-").getItem(0))
+    return reduce(
+        DataFrame.unionByName,
+        [
+            *(
+                sightings(f"raw_cryptoprices_{feed}", crypto, F.lit("CRYPTO"))
+                for feed in ("binance", "coingecko", "yfinance")
+            ),
+            sightings("raw_stockprices_yfinance", F.upper("ticker"), F.lit("STOCK")),
+            sightings("ephemeral_transactions", F.upper("asset_symbol"), F.upper("asset_type")),
+        ],
     )
-    txn = ctx["raw_transaction_personal"].unionByName(
-        ctx["raw_transaction_corporate"]
-    ).select(
-        F.upper("asset_symbol").alias("asset_symbol"),
-        F.upper("asset_type").alias("asset_type"),
-        F.col("source").alias("record_source"),
-        "load_timestamp",
-    )
-    return (
-        crypto("raw_cryptoprices_binance")
-        .unionByName(crypto("raw_cryptoprices_coingecko"))
-        .unionByName(crypto("raw_cryptoprices_yfinance"))
-        .unionByName(stock)
-        .unionByName(txn)
-    )
+
+
+# =========================================================================
+# Data Vault: hubs
+# =========================================================================
+@model("hub_customer", deps=["raw_customers"], tags=["warehouse", "hub"])
+def hub_customer(ctx) -> DataFrame:
+    """reference models/warehouse/hubs/hub_customer.sql:6-36 — unique
+    customer business keys, first-load wins, md5 surrogate key."""
+    return hub(ctx["raw_customers"], "hk_customer", {"customer_id": "customer_bk"})
+
+
+@model("hub_company", deps=["raw_corporates"], tags=["warehouse", "hub"])
+def hub_company(ctx) -> DataFrame:
+    """reference hub_company.sql:1-37."""
+    return hub(ctx["raw_corporates"], "hk_company", {"company_id": "company_bk"})
 
 
 @model("hub_asset", deps=["ephemeral_asset"], tags=["warehouse", "hub"])
 def hub_asset(ctx) -> DataFrame:
     """reference hub_asset.sql:9-44 — one row per (symbol, type)."""
-    first = dedup_keep_first(
-        ctx["ephemeral_asset"],
-        ["asset_symbol", "asset_type"],
-        [F.asc("load_timestamp"), F.asc("record_source")],
-    )
-    return first.select(
-        surrogate_key("asset_symbol", "asset_type").alias("hk_asset"),
-        "asset_symbol",
-        "asset_type",
-        "record_source",
-        "load_timestamp",
+    # ephemeral_asset already names its feed column record_source; hub()
+    # orders and emits the feed's own source
+    return hub(
+        ctx["ephemeral_asset"].withColumnRenamed("record_source", "source"),
+        "hk_asset",
+        {"asset_symbol": "asset_symbol", "asset_type": "asset_type"},
     )
 
 
-@model(
-    "hub_transaction",
-    deps=["raw_transaction_personal", "raw_transaction_corporate"],
-    tags=["warehouse", "hub"],
-)
+@model("hub_transaction", deps=["ephemeral_transactions"], tags=["warehouse", "hub"])
 def hub_transaction(ctx) -> DataFrame:
     """reference hub_transaction.sql:9-60 — union of both feeds, dedup."""
-    both = ctx["raw_transaction_personal"].unionByName(ctx["raw_transaction_corporate"])
-    first = dedup_keep_first(
-        both, ["transaction_id"], [F.asc("load_timestamp"), F.asc("source")]
-    )
-    return first.select(
-        surrogate_key("transaction_id").alias("hk_transaction"),
-        F.col("transaction_id").alias("transaction_bk"),
-        F.col("source").alias("record_source"),
-        "load_timestamp",
+    return hub(
+        ctx["ephemeral_transactions"], "hk_transaction", {"transaction_id": "transaction_bk"}
     )
 
 
-@model("hub_news", deps=["raw_news"], tags=["warehouse", "hub"])
+@model("hub_news", deps=["ephemeral_news"], tags=["warehouse", "hub"])
 def hub_news(ctx) -> DataFrame:
     """reference hub_news.sql:5-36; dedup grain (url, ticker, asset_type)
     keep earliest load (ephemeral_news.sql:17-25).
 
-    ticker/asset_type are case-normalized BEFORE dedup and hashing — raw
-    'aapl'/'AAPL' variants of the same story must collapse to one row, not
-    survive as duplicates with divergent keys. hk_news hashes the FULL
-    grain (url, ticker, asset_type): a url-only hash would be shared by a
-    story tagged for several assets, and every downstream hk_news join
-    (link_news_asset, sat_news_detail, fct_news_events) would fan out and
-    mispair assets."""
-    raw = ctx["raw_news"].withColumn("ticker", F.upper("ticker")).withColumn(
-        "asset_type", F.upper("asset_type")
-    )
-    first = dedup_keep_first(
-        raw,
-        ["url", "ticker", "asset_type"],
-        [F.asc("load_timestamp"), F.asc("source")],
-    )
-    return first.select(
-        surrogate_key("url", "ticker", "asset_type").alias("hk_news"),
-        F.col("url").alias("news_bk"),
-        F.col("ticker").alias("asset_symbol"),
-        "asset_type",
-        F.col("source").alias("record_source"),
-        "load_timestamp",
+    hk_news hashes the FULL grain (url, ticker, asset_type): a url-only hash
+    would be shared by a story tagged for several assets, and every
+    downstream hk_news join (link_news_asset, sat_news_detail,
+    fct_news_events) would fan out and mispair assets."""
+    return hub(
+        ctx["ephemeral_news"],
+        "hk_news",
+        {"url": "news_bk", "ticker": "asset_symbol", "asset_type": "asset_type"},
     )
 
 
 # =========================================================================
 # Data Vault: links
 # =========================================================================
+# hub_transaction and hub_news are never broadcast: both are fact-grain
+# (transactions, the news corpus), and a forced broadcast OOMs at scale;
+# their keys are uniform ids, so AQE picks broadcast when small and a
+# sort-merge join when not.
 @model(
     "link_customer_company",
     deps=["raw_customers", "hub_customer", "hub_company"],
@@ -186,129 +230,70 @@ def hub_news(ctx) -> DataFrame:
 def link_customer_company(ctx) -> DataFrame:
     """reference link_customer_company.sql:23,35-39 — null company filtered,
     hubs joined (broadcast: hubs are small)."""
-    raw = ctx["raw_customers"].filter(F.col("company_id").isNotNull())
-    pairs = dedup_keep_first(
-        raw, ["customer_id", "company_id"], [F.asc("load_timestamp"), F.asc("source")]
-    )
-    return (
-        pairs.join(F.broadcast(ctx["hub_customer"]), pairs.customer_id == F.col("customer_bk"))
-        .join(F.broadcast(ctx["hub_company"]), pairs.company_id == F.col("company_bk"))
-        .select(
-            hash_key("customer_id", "company_id").alias("lk_customer_company"),
-            "hk_customer",
-            "hk_company",
-            pairs.source.alias("record_source"),
-            pairs.load_timestamp.alias("load_timestamp"),
-        )
+    return link(
+        ctx["raw_customers"].filter(F.col("company_id").isNotNull()), "lk_customer_company",
+        ["customer_id", "company_id"], ["hk_customer", "hk_company"],
+        (F.broadcast(ctx["hub_customer"]), {"customer_id": "customer_bk"}),
+        (F.broadcast(ctx["hub_company"]), {"company_id": "company_bk"}),
     )
 
 
 @model(
     "link_customer_transaction",
-    deps=["raw_transaction_personal", "raw_transaction_corporate", "hub_customer", "hub_transaction"],
+    deps=["ephemeral_transactions", "hub_customer", "hub_transaction"],
     tags=["warehouse", "link"],
 )
 def link_customer_transaction(ctx) -> DataFrame:
     """reference link_customer_transaction.sql:15-47,63-79 — union feeds,
     resolve both hubs, dedup on the pair."""
-    both = ctx["raw_transaction_personal"].unionByName(ctx["raw_transaction_corporate"])
-    pairs = dedup_keep_first(
-        both, ["transaction_id", "customer_id"], [F.asc("load_timestamp"), F.asc("source")]
-    )
-    return (
-        pairs.join(F.broadcast(ctx["hub_customer"]), pairs.customer_id == F.col("customer_bk"))
-        .join(
-            ctx["hub_transaction"], pairs.transaction_id == F.col("transaction_bk")
-            # NOT broadcast: hub_transaction is TRANSACTION-grain (fact-sized,
-            # not dim-sized) — a forced broadcast OOMs at scale; the key is a
-            # uniform id, so AQE picks broadcast when small, SMJ when not
-        )
-        .select(
-            hash_key("transaction_id", "customer_id").alias("lk_customer_transaction"),
-            "hk_transaction",
-            "hk_customer",
-            pairs.source.alias("record_source"),
-            pairs.load_timestamp.alias("load_timestamp"),
-        )
+    return link(
+        ctx["ephemeral_transactions"], "lk_customer_transaction",
+        ["transaction_id", "customer_id"], ["hk_transaction", "hk_customer"],
+        (F.broadcast(ctx["hub_customer"]), {"customer_id": "customer_bk"}),
+        (ctx["hub_transaction"], {"transaction_id": "transaction_bk"}),
     )
 
 
 @model(
     "link_transaction_asset",
-    deps=["raw_transaction_personal", "raw_transaction_corporate", "hub_asset", "hub_transaction"],
+    deps=["ephemeral_transactions", "hub_asset", "hub_transaction"],
     tags=["warehouse", "link"],
 )
 def link_transaction_asset(ctx) -> DataFrame:
     """reference link_transaction_asset.sql:15-53 — compound-key join with
     case normalization (J2: upper(asset_type) = upper(hub.asset_type))."""
-    both = ctx["raw_transaction_personal"].unionByName(ctx["raw_transaction_corporate"])
-    pairs = dedup_keep_first(
-        both,
-        ["transaction_id", "asset_symbol", "asset_type"],
-        [F.asc("load_timestamp"), F.asc("source")],
-    )
-    hub = ctx["hub_asset"]
-    return (
-        pairs.join(
-            F.broadcast(hub),
-            (F.upper(pairs.asset_symbol) == hub.asset_symbol)
-            & (F.upper(pairs.asset_type) == hub.asset_type),
-        )
-        .join(
-            ctx["hub_transaction"], pairs.transaction_id == F.col("transaction_bk")
-            # NOT broadcast: hub_transaction is TRANSACTION-grain (fact-sized,
-            # not dim-sized) — a forced broadcast OOMs at scale; the key is a
-            # uniform id, so AQE picks broadcast when small, SMJ when not
-        )
-        .select(
-            hash_key(pairs.transaction_id, pairs.asset_symbol, pairs.asset_type).alias(
-                "lk_transaction_asset"
-            ),
-            "hk_transaction",
-            "hk_asset",
-            pairs.source.alias("record_source"),
-            pairs.load_timestamp.alias("load_timestamp"),
-        )
+    return link(
+        ctx["ephemeral_transactions"], "lk_transaction_asset",
+        ["transaction_id", "asset_symbol", "asset_type"], ["hk_transaction", "hk_asset"],
+        (
+            F.broadcast(ctx["hub_asset"]),
+            {"asset_symbol": "asset_symbol", "asset_type": "asset_type"},
+            F.upper,
+        ),
+        (ctx["hub_transaction"], {"transaction_id": "transaction_bk"}),
     )
 
 
 @model(
     "link_news_asset",
-    deps=["raw_news", "hub_news", "hub_asset"],
+    deps=["ephemeral_news", "hub_news", "hub_asset"],
     tags=["warehouse", "link"],
 )
 def link_news_asset(ctx) -> DataFrame:
-    """reference link_news_asset.sql:15-38."""
-    raw = ctx["raw_news"].withColumn("ticker", F.upper("ticker")).withColumn(
-        "asset_type", F.upper("asset_type")
-    )
-    pairs = dedup_keep_first(
-        raw, ["url", "ticker", "asset_type"], [F.asc("load_timestamp"), F.asc("source")]
-    )
-    hub = ctx["hub_asset"]
-    news = ctx["hub_news"]
-    return (
-        # join the news hub on its FULL grain: url alone would match every
-        # hub row of a multi-asset story and fan the link out
-        pairs.join(
-            # NOT broadcast: hub_news is news-grain (unbounded corpus at
-            # scale); uniform hash key, AQE picks the strategy
-            news,
-            (pairs.url == news.news_bk)
-            & (pairs.ticker == news.asset_symbol)
-            & (pairs.asset_type == news.asset_type),
-        )
-        .join(
-            F.broadcast(hub),
-            (pairs.ticker == hub.asset_symbol) & (pairs.asset_type == hub.asset_type),
-        )
-        .select(
-            hash_key(pairs.url, pairs.ticker, pairs.asset_type).alias("lk_news_asset"),
-            "hk_news",
-            "hk_asset",
-            pairs.source.alias("record_source"),
-            pairs.load_timestamp.alias("load_timestamp"),
-        )
+    """reference link_news_asset.sql:15-38 — the news hub joins on its FULL
+    grain: url alone would match every hub row of a multi-asset story and
+    fan the link out."""
+    return link(
+        ctx["ephemeral_news"], "lk_news_asset",
+        ["url", "ticker", "asset_type"], ["hk_news", "hk_asset"],
+        (
+            ctx["hub_news"],
+            {"url": "news_bk", "ticker": "asset_symbol", "asset_type": "asset_type"},
+        ),
+        (
+            F.broadcast(ctx["hub_asset"]),
+            {"ticker": "asset_symbol", "asset_type": "asset_type"},
+        ),
     )
 
 
@@ -327,30 +312,14 @@ def link_company_transaction(ctx) -> DataFrame:
     reproduced here. Dedup keeps the first load per (company, transaction)
     pair (row_number ... order by load_timestamp asc, sql:56-59; source added
     as a deterministic tiebreak)."""
-    src = ctx["raw_transaction_corporate"].select(
-        "transaction_id",
-        F.col("customer_id").alias("company_id"),
-        "load_timestamp",
-        "source",
-    )
-    pairs = dedup_keep_first(
-        src, ["transaction_id", "company_id"], [F.asc("load_timestamp"), F.asc("source")]
-    )
-    return (
-        pairs.join(F.broadcast(ctx["hub_company"]), pairs.company_id == F.col("company_bk"))
-        .join(
-            ctx["hub_transaction"], pairs.transaction_id == F.col("transaction_bk")
-            # NOT broadcast: hub_transaction is TRANSACTION-grain (fact-sized,
-            # not dim-sized) — a forced broadcast OOMs at scale; the key is a
-            # uniform id, so AQE picks broadcast when small, SMJ when not
-        )
-        .select(
-            surrogate_key("hk_company", "hk_transaction").alias("lk_company_transaction"),
-            "hk_company",
-            "hk_transaction",
-            pairs.source.alias("record_source"),
-            pairs.load_timestamp.alias("load_timestamp"),
-        )
+    return link(
+        ctx["raw_transaction_corporate"].select(
+            "transaction_id", F.col("customer_id").alias("company_id"), "load_timestamp", "source"
+        ),
+        surrogate_key("hk_company", "hk_transaction").alias("lk_company_transaction"),
+        ["transaction_id", "company_id"], ["hk_company", "hk_transaction"],
+        (F.broadcast(ctx["hub_company"]), {"company_id": "company_bk"}),
+        (ctx["hub_transaction"], {"transaction_id": "transaction_bk"}),
     )
 
 
@@ -367,43 +336,23 @@ _CUSTOMER_ATTRS = [
 def sat_customer_profile(ctx) -> DataFrame:
     """reference sat_customer_profile.sql:8-13,48-74 — versioned customer
     attributes; new version only when the hashdiff changes."""
-    raw = ctx["raw_customers"]
-    hashdiff = surrogate_key(*_CUSTOMER_ATTRS)
-    changed = changes_only(raw, ["customer_id"], hashdiff, "load_timestamp", "source")
-    return changed.select(
-        surrogate_key("customer_id").alias("hk_customer"),
-        hashdiff.alias("hashdiff"),
-        *_CUSTOMER_ATTRS,
-        F.col("source").alias("record_source"),
-        "load_timestamp",
-    )
+    return profile_sat(ctx["raw_customers"], "hk_customer", "customer_id", _CUSTOMER_ATTRS)
 
 
 @model(
     "sat_transaction_detail",
-    deps=["raw_transaction_personal", "raw_transaction_corporate"],
+    deps=["ephemeral_transactions"],
     tags=["warehouse", "sat"],
 )
 def sat_transaction_detail(ctx) -> DataFrame:
     """reference sat_transaction_personal/corp + union distinct
     (ephemeral_sat_transaction_full.sql:4-6)."""
-    both = (
-        ctx["raw_transaction_personal"].unionByName(ctx["raw_transaction_corporate"]).distinct()
-    )
-    first = dedup_keep_first(
-        both, ["transaction_id"], [F.asc("load_timestamp"), F.asc("source")]
-    )
+    first = first_load(ctx["ephemeral_transactions"].distinct(), "transaction_id")
     return first.select(
         surrogate_key("transaction_id").alias("hk_transaction"),
-        "transaction_type",
-        "quantity",
-        "price_per_unit",
-        "transaction_amount",
-        "fee_amount",
-        "transaction_timestamp",
-        "data_date",
-        F.col("source").alias("record_source"),
-        "load_timestamp",
+        "transaction_type", "quantity", "price_per_unit", "transaction_amount", "fee_amount",
+        "transaction_timestamp", "data_date",
+        *_provenance(first),
     )
 
 
@@ -485,39 +434,24 @@ def sat_asset_price_stock(ctx) -> DataFrame:
 
 @model("sat_company_profile", deps=["raw_corporates"], tags=["warehouse", "sat"])
 def sat_company_profile(ctx) -> DataFrame:
-    attrs = [
-        "company_name", "company_type", "company_email", "country",
-        "year_founded", "tax_number", "office_primary_location", "registration_date",
-    ]
-    hashdiff = surrogate_key(*attrs)
-    changed = changes_only(
-        ctx["raw_corporates"], ["company_id"], hashdiff, "load_timestamp", "source"
-    )
-    return changed.select(
-        surrogate_key("company_id").alias("hk_company"),
-        hashdiff.alias("hashdiff"),
-        *attrs,
-        F.col("source").alias("record_source"),
-        "load_timestamp",
+    return profile_sat(
+        ctx["raw_corporates"],
+        "hk_company",
+        "company_id",
+        [
+            "company_name", "company_type", "company_email", "country",
+            "year_founded", "tax_number", "office_primary_location", "registration_date",
+        ],
     )
 
 
-@model("sat_news_detail", deps=["raw_news"], tags=["warehouse", "sat"])
+@model("sat_news_detail", deps=["ephemeral_news"], tags=["warehouse", "sat"])
 def sat_news_detail(ctx) -> DataFrame:
-    raw = ctx["raw_news"].withColumn("ticker", F.upper("ticker")).withColumn(
-        "asset_type", F.upper("asset_type")
-    )
-    first = dedup_keep_first(
-        raw, ["url", "ticker", "asset_type"], [F.asc("load_timestamp"), F.asc("source")]
-    )
+    first = first_load(ctx["ephemeral_news"], "url", "ticker", "asset_type")
     return first.select(
         surrogate_key("url", "ticker", "asset_type").alias("hk_news"),
-        "title",
-        "description",
-        "image",
-        F.col("date").alias("published_at"),
-        F.col("source").alias("record_source"),
-        "load_timestamp",
+        "title", "description", "image", F.col("date").alias("published_at"),
+        *_provenance(first),
     )
 
 

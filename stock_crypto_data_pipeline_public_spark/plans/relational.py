@@ -40,10 +40,6 @@ from ..functions.numeric import (
 from .registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --------------------------------------------------------------------------
 # q01 — pricing summary: multi-agg groupBy (A1/A3/P14; TPC-H Q1 shape).
 # Reference shape: fct_asset_price_comparison.sql:9-21 daily mean per group;
@@ -79,7 +75,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """,
 )
 def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     # NUMERIC DOMAIN: every hashed money output is an exact scaled BIGINT
     # (_e2 = cents, _e4/_e6 = higher-scale decimal grids) — nothing the
     # driver hashes transits DOUBLE (functions/numeric.py policy note;
@@ -148,9 +144,9 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q02_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
     # aggregate-below-join: revenue is per-order and needs only lineitem, so
     # reduce 4 lineitems/order to 1 row BEFORE joining (Catalyst doesn't push
     # aggregates through joins); the oracle's post-join GROUP BY is identical
@@ -209,11 +205,11 @@ def q03_region_nation_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pre-project the decimal cast once (q01's treatment): both consuming
     # aggregates then sum the same plain attribute instead of re-evaluating
     # the cast chain per consumer
-    cust = _t(spark, sf_dir, "customer").select(
+    cust = load_table(spark, sf_dir, "customer").select(
         "c_nationkey", dec("c_acctbal").alias("acctbal_d")
     )
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region")
     return (
         cust.join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
@@ -246,8 +242,8 @@ def q03_region_nation_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q04_customer_order_left(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         cust.join(orders, cust.c_custkey == orders.o_custkey, "left")
         .groupBy("c_custkey", "c_name")
@@ -278,8 +274,8 @@ def q04_customer_order_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q05_customers_no_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    big = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 250000)
+    cust = load_table(spark, sf_dir, "customer")
+    big = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 250000)
     return cust.join(big, cust.c_custkey == big.o_custkey, "left_anti").select(
         "c_custkey", "c_name", "c_mktsegment"
     )
@@ -300,8 +296,8 @@ def q05_customers_no_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q06_customers_high_value_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    big = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 400000)
+    cust = load_table(spark, sf_dir, "customer")
+    big = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 400000)
     return cust.join(big, cust.c_custkey == big.o_custkey, "left_semi").select(
         "c_custkey", "c_mktsegment"
     )
@@ -328,8 +324,8 @@ def q06_customers_high_value_semi(spark: SparkSession, sf_dir: str) -> DataFrame
     """,
 )
 def q07_union_distinct_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
     a = (
         li.filter(F.col("l_returnflag") == "R")
         .select(F.col("l_orderkey").alias("order_key"), F.lit("returned_line").alias("src"))
@@ -362,7 +358,7 @@ def q07_union_distinct_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q08_priority_pivot_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
 
     def n(p, alias):
         return F.sum(F.when(F.col("o_orderpriority") == p, 1).otherwise(0)).alias(alias)
@@ -390,7 +386,7 @@ def q08_priority_pivot_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q09_supplier_staleness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_suppkey", "l_partkey")
         .agg(F.max("l_shipdate").alias("_max_ship"))
@@ -421,7 +417,7 @@ def q09_supplier_staleness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q10_part_type_categorizer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part")
+    part = load_table(spark, sf_dir, "part")
     lt = F.lower(F.col("p_type"))
     cat = (
         F.when(lt.like("%economy%"), "Budget")
@@ -474,7 +470,7 @@ def q10_part_type_categorizer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q11_event_impact_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     # exact domain: the daily average is an e4 BIGINT (iavg), and
     # the guarded pct-changes are e4 BIGINT ratios of those integers —
     # trunc-div identical on both engines, so no value here is a double
@@ -531,7 +527,7 @@ def q11_event_impact_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q12_dedup_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id", "event_type").orderBy(F.asc("ts"), F.asc("event_id"))
     return (
         ev.withColumn("rn", F.row_number().over(w))
@@ -557,7 +553,7 @@ def q12_dedup_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q13_latest_event_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
     return (
         ev.withColumn("rn", F.row_number().over(w))
@@ -592,7 +588,7 @@ def q13_latest_event_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q14_scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
     nxt = F.lead("ts").over(w)
     fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
@@ -623,7 +619,7 @@ def q14_scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q15_event_value_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
     prev = F.lag("value").over(w)
     return ev.select(
@@ -652,7 +648,7 @@ def q15_event_value_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q16_topk_events_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("event_type").orderBy(F.desc("value"), F.asc("event_id"))
     return (
         ev.withColumn("rk", F.row_number().over(w))
@@ -680,7 +676,7 @@ def q16_topk_events_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q17_incremental_hwm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     hwm = orders.agg((F.max("o_orderdate") - F.expr("INTERVAL 180 DAY")).alias("_hwm"))
     return (
         orders.crossJoin(F.broadcast(hwm))
@@ -711,7 +707,7 @@ def q17_incremental_hwm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q18_name_sanitize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer")
     clean = F.regexp_replace(F.lower(F.col("c_name")), "[^a-z0-9 ]", " ")
     return cust.filter(
         F.col("c_name").like("Customer%") & (F.length("c_name") >= 10)
@@ -741,7 +737,7 @@ def q18_name_sanitize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q19_json_extract_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").try_cast("int")
     return (
         ev.groupBy((k % 10).alias("k_bucket"))
@@ -772,7 +768,7 @@ def q19_json_extract_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q20_distinct_customers_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return orders.groupBy("o_orderstatus").agg(
         F.countDistinct("o_custkey").alias("n_customers"),
         F.count(F.lit(1)).alias("n_orders"),
@@ -801,7 +797,7 @@ def q20_distinct_customers_by_status(spark: SparkSession, sf_dir: str) -> DataFr
     """,
 )
 def q21_priority_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = load_table(spark, sf_dir, "orders").select(
         F.year("o_orderdate").alias("o_year"), "o_orderpriority", "o_totalprice"
     )
     return orders.rollup("o_year", "o_orderpriority").agg(
@@ -836,7 +832,7 @@ def q21_priority_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q22_status_year_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = load_table(spark, sf_dir, "orders").select(
         "o_orderstatus", F.year("o_orderdate").alias("o_year"), "o_totalprice"
     )
     return (
@@ -927,7 +923,7 @@ def q23_priority_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q24_customer_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     y96 = (
         orders.filter(F.year("o_orderdate") == 1996)
         .select(F.col("o_custkey").alias("custkey"))
@@ -980,8 +976,8 @@ def q24_customer_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q25_customer_rank_family(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
     activity = (
         orders.join(
             F.broadcast(cust.select("c_custkey", "c_nationkey")),
@@ -1065,7 +1061,7 @@ _Q26_SQL = """
 )
 def q26_sql_api_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     for t in ("lineitem", "orders", "customer", "nation"):
-        _t(spark, sf_dir, t).createOrReplaceTempView(f"q26_{t}")
+        load_table(spark, sf_dir, t).createOrReplaceTempView(f"q26_{t}")
     return spark.sql(
         _Q26_SQL.format(
             li="q26_lineitem",
@@ -1105,7 +1101,7 @@ def q26_sql_api_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q27_status_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = load_table(spark, sf_dir, "orders").select(
         "o_orderstatus",
         F.year("o_orderdate").alias("o_year"),
         "o_orderpriority",
@@ -1192,7 +1188,7 @@ _Q28_SQL = """
     oracle=_Q28_SQL.format(orders="orders", div="//"),
 )
 def q28_orders_above_customer_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("q28_orders")
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView("q28_orders")
     return spark.sql(_Q28_SQL.format(orders="q28_orders", div="DIV"))
 
 
@@ -1218,7 +1214,7 @@ def q28_orders_above_customer_avg(spark: SparkSession, sf_dir: str) -> DataFrame
     """,
 )
 def q30_native_pivot_status_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.groupBy(F.year("o_orderdate").cast("int").alias("order_year"))
         .pivot("o_orderstatus", ["F", "O", "P"])
@@ -1260,7 +1256,7 @@ def q30_native_pivot_status_totals(spark: SparkSession, sf_dir: str) -> DataFram
     """,
 )
 def q29_rolling_30d_customer_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_custkey",
         "o_orderdate",
@@ -1332,9 +1328,9 @@ def q29_rolling_30d_customer_spend(spark: SparkSession, sf_dir: str) -> DataFram
 def q31_data_quality_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .. import quality as Q
 
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    li = _t(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    li = load_table(spark, sf_dir, "lineitem")
 
     def row(check: str, target: str, viol: DataFrame, extra=None) -> DataFrame:
         agg = (
@@ -1409,7 +1405,7 @@ def q31_data_quality_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q32_variant_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     v = ev.select(
         "event_type",
         F.parse_json("props").alias("v"),
@@ -1468,7 +1464,7 @@ _Q33_SQL = """
 )
 def q33_lateral_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     for t in ("customer", "orders"):
-        _t(spark, sf_dir, t).createOrReplaceTempView(f"q33_{t}")
+        load_table(spark, sf_dir, t).createOrReplaceTempView(f"q33_{t}")
     return spark.sql(_Q33_SQL.format(cust="q33_customer", orders="q33_orders"))
 
 
@@ -1506,11 +1502,11 @@ def q33_lateral_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q34_bloom_semi_urgent_lineitems(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.bloomprune import bloom_semi_join
 
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("orderkey"), "l_returnflag", "l_extendedprice"
     )
     urgent = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderpriority") == "1-URGENT")
         .select(F.col("o_orderkey").alias("orderkey"))
     )
@@ -1553,7 +1549,7 @@ def q34_bloom_semi_urgent_lineitems(spark: SparkSession, sf_dir: str) -> DataFra
 def q35_salted_status_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.skew import salted_agg
 
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = load_table(spark, sf_dir, "orders").select(
         "o_orderstatus", dec("o_totalprice").alias("price_d"), "o_totalprice"
     )
     agg = salted_agg(
@@ -1605,10 +1601,10 @@ def q35_salted_status_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q36_salted_join_priority_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.skew import salted_join
 
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("orderkey"), dec("l_extendedprice").alias("price_d")
     )
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("orderkey"), "o_orderpriority"
     )
     joined = salted_join(li, orders, ["orderkey"], salt_buckets=8, how="inner")
@@ -1657,7 +1653,7 @@ GROUP BY custkey
     oracle=_Q37_SQL.format(cust="customer", div="//"),
 )
 def q37_recursive_org_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("q37_customer")
+    load_table(spark, sf_dir, "customer").createOrReplaceTempView("q37_customer")
     return spark.sql(_Q37_SQL.format(cust="q37_customer", div="div"))
 
 
@@ -1697,8 +1693,8 @@ def q38_cobucketed_join_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = mkscratch("q38_bucketed_")
     try:
-        orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-        li = _t(spark, sf_dir, "lineitem").select(
+        orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
+        li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_returnflag", dec("l_extendedprice").alias("price_d")
         )
         ot = catalog.materialize_bucketed(
@@ -1762,7 +1758,7 @@ def q39_compaction_roundtrip(spark: SparkSession, sf_dir: str, base: str) -> Dat
     from ..operators.maintenance import compact_table
 
     tbl = f"{base}/events"
-    ev = _t(spark, sf_dir, "events").select("event_id", "event_type", "value", "ts")
+    ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value", "ts")
     ev.repartition(32).write.parquet(tbl)  # fragmented ingest state
     stats = compact_table(spark, tbl, target_bytes=1 << 30, sort_cols=["ts"])
     return (
@@ -1872,7 +1868,7 @@ def q43_scd2_quality_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = dedup_keep_first(
-        _t(spark, sf_dir, "events").select("user_id", "event_id", "ts"),
+        load_table(spark, sf_dir, "events").select("user_id", "event_id", "ts"),
         ["user_id", "ts"],
         [F.asc("event_id")],
     )
@@ -1955,7 +1951,7 @@ def q44_manifest_time_travel(spark: SparkSession, sf_dir: str, base: str) -> Dat
     from ..operators.manifest import history, read_table
 
     tbl = f"{base}/orders_scd"
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
     stale = orders.withColumn(

@@ -32,10 +32,6 @@ from ..functions.numeric import dec, dsum, dsum_e, money_sum, money_sum_e2, orac
 from .registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --------------------------------------------------------------------------
 # v01 — hub_customer: union of two delivery batches → dedup-keep-first →
 # hashed business key (P8/P9/W1/U1).
@@ -62,7 +58,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """,
 )
 def v01_hub_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer")
     b1 = cust.select("c_custkey", F.lit("batch_1").alias("record_source"), F.lit(1).alias("load_seq"))
     b2 = cust.select("c_custkey", F.lit("batch_2").alias("record_source"), F.lit(2).alias("load_seq"))
     raw = b1.unionByName(b2)
@@ -97,7 +93,7 @@ def v01_hub_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def v02_link_order_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return orders.select(
         hash_key("o_orderkey", "o_custkey").alias("lk_order_customer"),
         surrogate_key("o_orderkey").alias("hk_order"),
@@ -135,7 +131,7 @@ def v02_link_order_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def v03_sat_user_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
     hd = surrogate_key("event_type")
     return (
@@ -173,9 +169,9 @@ def v03_sat_user_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def v04_fct_orders_vault(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders").alias("o")
-    cust = _t(spark, sf_dir, "customer").alias("c")
-    nation = _t(spark, sf_dir, "nation").alias("n")
+    orders = load_table(spark, sf_dir, "orders").alias("o")
+    cust = load_table(spark, sf_dir, "customer").alias("c")
+    nation = load_table(spark, sf_dir, "nation").alias("n")
     return (
         orders.join(cust, F.col("o.o_custkey") == F.col("c.c_custkey"))
         .join(F.broadcast(nation), F.col("c.c_nationkey") == F.col("n.n_nationkey"))
@@ -211,8 +207,8 @@ def v04_fct_orders_vault(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def v05_dim_customer_latest_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    ev = _t(spark, sf_dir, "events")
+    cust = load_table(spark, sf_dir, "customer")
+    ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
     latest = (
         ev.withColumn("rn", F.row_number().over(w))
@@ -249,8 +245,8 @@ def v05_dim_customer_latest_activity(spark: SparkSession, sf_dir: str) -> DataFr
     """,
 )
 def v06_semantic_customer_overview(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         cust.join(orders, cust.c_custkey == orders.o_custkey, "left")
         .groupBy("c_custkey", "c_name", "c_mktsegment")
@@ -307,7 +303,7 @@ def v06_semantic_customer_overview(spark: SparkSession, sf_dir: str) -> DataFram
     """,
 )
 def v07_merge_last_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     # exact decimals end-to-end: the 10%-uplift branch multiplies in decimal
     # so the merged sum stays summation-order-independent (numeric.py policy)
     target = orders.select(
@@ -365,7 +361,7 @@ def v07_merge_last_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def v08_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     cutoff = F.lit("2000-01-01 00:00:00").cast("timestamp")
     target = orders.filter(F.col("o_orderdate") < cutoff)
     appended = orders.join(target.select("o_orderkey"), "o_orderkey", "left_anti")
@@ -424,7 +420,7 @@ def v08_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def v09_link_company_transaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     corporate = orders.filter(F.col("o_orderpriority").like("1-%")).select(
         F.col("o_orderkey").alias("transaction_id"),
         F.col("o_custkey").alias("company_id"),
@@ -432,7 +428,7 @@ def v09_link_company_transaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority").alias("record_source"),
     )
     hub_company = (
-        _t(spark, sf_dir, "customer")
+        load_table(spark, sf_dir, "customer")
         .select(
             surrogate_key("c_custkey").alias("hk_company"),
             F.col("c_custkey").alias("company_bk"),
@@ -541,7 +537,7 @@ def v10_pit_user_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") == 1)
         .drop("rn")
     )
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     bounds = ev.agg(
         F.date_trunc("week", F.min("ts")).cast("date").alias("d0"),
         F.max("ts").cast("date").alias("d1"),
@@ -605,8 +601,8 @@ def v11_bridge_customer_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is now exactly one row — the oracle's count(DISTINCT o_orderkey)
     # becomes a plain count(*), dropping the distinct-aggregate Expand a
     # join-first plan pays. Same aggregate-below-join move as q02.
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     per_order_supp = li.groupBy("l_orderkey", "l_suppkey").agg(
         F.count(F.lit(1)).alias("n_li"),
         F.min("l_shipdate").alias("min_ship"),
@@ -678,7 +674,7 @@ def v11_bridge_customer_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def v12_eff_sat_user_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
     hd = surrogate_key("event_type")
     episodes = (
@@ -740,8 +736,8 @@ def _dag_fixtures(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     v13/v14). Every column is a closed form of the TPC row so the oracles
     can restate the whole chain in SQL; the baked-in hazards (replays,
     profile change, lowercase asset feeds) are documented at v13."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     t0 = "TIMESTAMP '2024-01-01 00:00:00'"
 
     base = cust.selectExpr(

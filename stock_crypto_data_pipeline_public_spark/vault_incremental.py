@@ -195,9 +195,6 @@ class VaultMaterializer:
     def marts(self, spark: SparkSession) -> dict[str, DataFrame]:
         """Virtual marts/semantic views over the MATERIALIZED vault — the
         downstream DAG reads parquet instead of recomputing hubs."""
-        ctx = dict(self.vault_tables(spark))
-        mart_models = [
-            m for m in market_registry.models()
-            if m not in VAULT_KEYS and not m.startswith("ephemeral_")
-        ]
-        return market_registry.run(ctx, select=mart_models, skip_existing=True)
+        return market_registry.run(
+            self.vault_tables(spark), tags=["mart", "semantic"], skip_existing=True
+        )

@@ -201,6 +201,131 @@ def test_dag_state_modified_selection():
     assert registry.state_modified(stale, plus=False) == ["hub_customer"]
 
 
+def test_manifest_covers_helpers(tmp_path):
+    """A model's fingerprint folds in every function of its package that it
+    reaches by name, transitively: editing a helper two calls deep marks
+    the model that reaches it and that model's descendants, not the
+    bystander that does not."""
+    import importlib.util
+
+    body = """
+from stock_crypto_data_pipeline_public_spark.dag import ModelRegistry
+
+registry = ModelRegistry()
+
+
+def _inner(df):
+    return df.{op}
+
+
+def helper(df):
+    return _inner(df)
+
+
+@registry.model("a", deps=["raw"])
+def a(ctx):
+    return helper(ctx["raw"])
+
+
+@registry.model("b", deps=["raw"])
+def b(ctx):
+    return ctx["raw"]
+
+
+@registry.model("c", deps=["a"])
+def c(ctx):
+    return ctx["a"]
+"""
+
+    def load(version, op):
+        path = tmp_path / version / "dagmodels.py"
+        path.parent.mkdir()
+        path.write_text(body.format(op=op))
+        spec = importlib.util.spec_from_file_location("dagmodels", path)
+        mod = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(mod)
+        return mod.registry
+
+    before = load("v1", "distinct()").manifest()
+    after = load("v2", "dropDuplicates()")
+    assert after.state_modified(before) == ["a", "c"]
+    assert after.state_modified(before, plus=False) == ["a"]
+    assert load("v3", "distinct()").state_modified(before) == []
+
+
+#: seed-42 fixture digests taken before the vault helpers and the
+#: ephemeral_transactions / ephemeral_news models existed: md5 of the
+#: sorted rows (floats at 10 significant digits, so summation-order noise
+#: cannot flip one) and of ``schema.simpleString()``
+_PINNED = {
+    "dim_asset": ("ccf79144da9470e91451fe22ba8e9fca", "b9d1c5af3f20f0b7a95368776c1a5361"),
+    "dim_company": ("aa5dfdfca663482cc1bcb689a2bea34d", "f3100d8718ff7ce53ff98b343d420dbe"),
+    "dim_customer": ("43d0b1590a70d2d3ed2168c0668dd6b5", "b87374c140ca7527f6aa7da592a8b5e6"),
+    "dim_customer_history": ("89bf48e2f8c1f8b0ec7754e63c7b536c", "937cdabc2b6512665f11d56599a138bd"),
+    "ephemeral_asset": ("5b88df3f1b60e98d7d1e1f11a241cf2e", "0efbb20d3e8c313fa3e212525eaa4803"),
+    "fct_asset_news_impact": ("8744733f6d7829e15783bf5913e4be58", "772948b613add5ee1a9a2a53bda832ae"),
+    "fct_asset_price_comparison": ("b50ea8465401604d71328e69ed00e72b", "c2768869a6b2a3f4d387d8277a6b040d"),
+    "fct_asset_prices": ("0ac807d264a60a74b4b3928325e90525", "a367a261945012e2fc9d7bec9e3c5e72"),
+    "fct_news_events": ("de95ab760e4e8b39602790b7a65a3648", "d96d626b92ca56ff39b95131bee3c747"),
+    "fct_transactions": ("fdcdca4bc42acedf36253f45a8f655f0", "03aac963f3a46783a435775044b7fdfa"),
+    "hub_asset": ("ed04f8dd4c98eed60670cd817cd582ac", "561535220234ae588af38b4048e7a1d0"),
+    "hub_company": ("8cb730b860e283369c2d3a635e3290ff", "f05f090fef5290b886774b12cc2f661f"),
+    "hub_customer": ("f2164c29106e98749fafae862406b1ec", "1e9ae9d4e4bb351dbf646d87c18d81ae"),
+    "hub_news": ("18c9ac0935e42170e79c6257a2a396bd", "941e187c7bbc1f040a27d2b17814aa7e"),
+    "hub_transaction": ("1609d301605d5251a18e3261939d6cb0", "9fc1af13f31cc92d5f15a5f51dfcd3d2"),
+    "link_company_transaction": ("975176603b037fb760d56ecf33166992", "a7e98d1c995176746b61b316bffaa62e"),
+    "link_customer_company": ("a6ec8f8f17ed970def1176269ac05127", "90f7dca65f5de509cf9fb421c78ba8ba"),
+    "link_customer_transaction": ("7ea3c97acab9a9055c43cb3e9d81a1a1", "52fb352d434a1582ec77a11f89663a35"),
+    "link_news_asset": ("dc2c28986c2ee3409cb3f3dfcd9656d0", "baed2c793f3e4cf884e1b77d5b9aa21b"),
+    "link_transaction_asset": ("2370d05dfb4d4d8fb156f6c7604c5e4d", "14d710b38f2ac3464d4f631e0c6f764e"),
+    "sat_asset_price_crypto": ("0625a7867cda4ca1fe787b9417bc1160", "dd67948df21030c2c3b46a4571c5564c"),
+    "sat_asset_price_stock": ("754234ef8f31ef1edf418c4f71e834f3", "bb84d33bc54bceece1176ef48789e56b"),
+    "sat_company_profile": ("e5316ade8a1c3ed837dcc1394402da33", "630438f2c085491abc841f8848d54bf1"),
+    "sat_customer_profile": ("c9e4dcbf9a6106e20531a0de6286b31f", "2750a27208dfca5bfd4400fca875b767"),
+    "sat_news_detail": ("5c6195ac88afd2fbcaab54d8f01996ec", "4b44c57e3d6c45a322149351e9f8b84f"),
+    "sat_transaction_detail": ("f369937c59f9564a68a4d9d868183bd2", "d062d855b791519914e5f4c8d441f3c0"),
+    "semantic_asset_performance": ("8501daa22a2240986611742d1409575f", "10d0531ccf68a3db712d8cfa5ffbe604"),
+    "semantic_customer_overview": ("517688967947b107d51bb08370ca67ed", "cba81c3bd6029c028e5833f94591d758"),
+    "semantic_transactions": ("97136770f71e8611fb43af4a455dac2e", "2a9616f7ccf6ec05644d8cbf15eb636a"),
+}
+
+
+#: columns left out of a model's row digest because their value is a tie
+#: that execution order breaks: every crypto asset's latest price is
+#: observed by three feeds at one instant, and dim_asset's latest_wins
+#: tiebreak (load_timestamp) is shared by all three
+_TIED = {"dim_asset": ("latest_price",)}
+
+
+def test_models_match_pinned_digests(ctx):
+    """Every model's rows and schema on the seed-42 fixture are pinned, so a
+    refactor of the vault builders cannot move a value or a column."""
+    import hashlib
+
+    def md5(text):
+        return hashlib.md5(text.encode()).hexdigest()
+
+    got, persisted = {}, []
+    try:
+        # topological order, each model cached before it is read: a
+        # downstream model then reads its inputs from the cache
+        for name in registry.resolve():
+            df = ctx[name]
+            if not df.is_cached:
+                persisted.append(df.persist())
+            if name in _PINNED:
+                rows = sorted(
+                    repr(tuple(f"{v:.10g}" if isinstance(v, float) else v for v in r))
+                    for r in df.drop(*_TIED.get(name, ())).collect()
+                )
+                got[name] = (md5("\n".join(rows)), md5(df.schema.simpleString()))
+    finally:
+        for df in persisted:
+            df.unpersist()
+    assert {m: d for m, d in got.items() if d != _PINNED[m]} == {}
+    assert set(registry.models()) - set(got) <= {"ephemeral_news", "ephemeral_transactions"}
+
+
 def test_quality_suite_green(ctx):
     results = run_market_quality_suite(ctx, as_of="2024-03-01")
     failures = {k: v for k, v in results.items() if v != 0}

@@ -352,6 +352,39 @@ def test_table_commits_go_only_through_manifest():
     assert not found, "commit through operators/manifest.py:\n" + "\n".join(found)
 
 
+def test_vault_policies_have_one_home():
+    """plans/market.py writes each Data Vault policy once: the DV2
+    first-load order (in ``first_load``), the personal ∪ corporate
+    transaction union (``ephemeral_transactions``) and the news ticker
+    normalization (``ephemeral_news``). Every hub and link returns through
+    the ``hub`` / ``link`` helpers, never its own ``dedup_keep_first``."""
+    import ast
+    import inspect
+
+    from stock_crypto_data_pipeline_public_spark.plans import market
+
+    src = inspect.getsource(market)
+    flat = re.sub(r"\s+", "", src)
+    assert flat.count('[F.asc("load_timestamp"),F.asc("source")]') == 1
+    assert flat.count('unionByName(ctx["raw_transaction_corporate"])') == 1
+    news_fns = [
+        re.sub(r"\s+", "", ast.get_source_segment(src, node))
+        for node in ast.parse(src).body
+        if isinstance(node, ast.FunctionDef)
+        and 'ctx["raw_news"]' in ast.get_source_segment(src, node)
+    ]
+    assert sum(f.count('F.upper("ticker")') for f in news_fns) == 1, news_fns
+
+    found = []
+    for name in market.registry.models():
+        kind = name.split("_")[0]
+        if kind in ("hub", "link"):
+            body = inspect.getsource(getattr(market, name))
+            if not re.search(rf"\b{kind}\(", body) or "dedup_keep_first" in body:
+                found.append(name)
+    assert not found, "build hubs and links through market.hub / market.link: " + str(found)
+
+
 @pytest.mark.parametrize("fails_at", ["start", "await"])
 def test_drain_stops_its_other_queries_when_one_fails(spark, tmp_path, fails_at):
     """plans/streamops._drain must not leave a started query running when
