@@ -74,7 +74,10 @@ def cmd_build(args, spark: SparkSession) -> int:
     if args.write:
         import os
 
-        for name in sorted(built):
+        from .plans.market import registry
+
+        # an ephemeral model is inlined into its consumers, never materialized
+        for name in sorted(set(built) - registry.tagged("ephemeral")):
             out = os.path.join(args.write, name)
             ctx[name].write.mode("overwrite").parquet(out)
             print(f"wrote {name} -> {out}")

@@ -40,6 +40,9 @@ class ModelRegistry:
     def models(self) -> list[str]:
         return list(self._fns)
 
+    def tagged(self, tag: str) -> set[str]:
+        return {m for m, mt in self._tags.items() if tag in mt}
+
     def _all_source_names(self) -> set[str]:
         """Dep names that are not themselves models — the raw source tables."""
         return {d for deps in self._deps.values() for d in deps} - set(self._fns)
@@ -103,7 +106,7 @@ class ModelRegistry:
                 else:
                     wanted.add(name)
             for t in tags or ():
-                wanted |= {m for m, mt in self._tags.items() if t in mt}
+                wanted |= self.tagged(t)
         wanted = self._closure(wanted, prebuilt)
         ordered: list[str] = []
         seen: set[str] = set()

@@ -26,13 +26,14 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.numeric import rnd
 from ..sources.tables import local_rows
 from . import similarity as S
 from .manifest import replace_file
+from .scd import top_k
 
 
 def _centroids_path(index_dir: str) -> str:
@@ -245,8 +246,9 @@ def query_ann_index(
             rnd(sim, 4).alias("cosine_sim"),  # cross-engine deterministic round
         )
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= topk)
+    return top_k(
+        scored, ["query_id"], [F.desc("cosine_sim"), F.asc("neighbor_id")], topk, "rk"
+    )
 
 
 def diagnose_drift(

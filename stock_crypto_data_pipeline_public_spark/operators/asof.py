@@ -15,7 +15,7 @@ with no candidate-pair blowup, and the key-partitioned window never
 funnels through a single task.
 
 Determinism contract: callers must ensure the right side has ONE row per
-(key, ts) — use ``dedup_keep_first`` with an explicit tiebreaker first.
+(key, ts) — use ``scd.top_k`` with an explicit tiebreaker first.
 Equal-timestamp matches are inclusive (right row at exactly left ts wins),
 matching DuckDB's ``ASOF JOIN ... ON r.ts <= l.ts``.
 """

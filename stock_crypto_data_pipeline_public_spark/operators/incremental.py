@@ -26,10 +26,11 @@ from __future__ import annotations
 import os
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import manifest as MF
+from .scd import top_k
 
 LOW_WATERMARK = "1900-01-01 00:00:00"
 
@@ -102,12 +103,7 @@ def merge_upsert(
         merged = tgt.unionByName(src)
     else:
         merged = src
-    w = W.partitionBy(*keys).orderBy(F.desc(version_col), F.desc("__prio"))
-    result = (
-        merged.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__prio")
-    )
+    result = top_k(merged, keys, [F.desc(version_col), F.desc("__prio")]).drop("__prio")
     MF.rewrite(path, lambda out: result.write.mode("overwrite").parquet(out))
 
 

@@ -2,7 +2,8 @@
 
 Reusable builders for the patterns every reference hub/link/sat/dim uses:
 
-- dedup_keep_first — hub/link dedup (reference hub_customer.sql:16-32)
+- top_k           — the per-key ranking rule: hub/link dedup (k=1, reference
+  hub_customer.sql:16-32) and every top-k neighbour or term list
 - latest_wins     — current-state dims (reference dim_asset.sql:36-39)
 - scd2            — effective-dated history (reference
   dim_customer_history.sql:28-31,70-73)
@@ -24,16 +25,26 @@ from pyspark.sql import functions as F
 HIGH_DATE = "9999-12-31 00:00:00"
 
 
-def dedup_keep_first(df: DataFrame, keys: Sequence[str], order: Sequence[Column]) -> DataFrame:
-    """One row per key: the first by ``order`` (pass explicit asc/desc cols,
-    ending with a unique tiebreaker)."""
+def top_k(
+    df: DataFrame,
+    keys: Sequence[str],
+    order: Sequence[Column],
+    k: int | Column = 1,
+    rank: str | None = None,
+) -> DataFrame:
+    """The first ``k`` rows per key by ``order`` (pass explicit asc/desc
+    cols, ending with a unique tiebreaker). ``k`` may be a Column, a per-row
+    bound. The 1-based rank is kept as column ``rank``, or dropped when
+    ``rank`` is None."""
     w = W.partitionBy(*keys).orderBy(*order)
-    return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
+    name = rank or "__rank"
+    out = df.withColumn(name, F.row_number().over(w)).filter(F.col(name) <= k)
+    return out if rank else out.drop(name)
 
 
 def latest_wins(df: DataFrame, keys: Sequence[str], ts_col: str, tiebreak: str) -> DataFrame:
     """One row per key: the most recent version."""
-    return dedup_keep_first(df, keys, [F.desc(ts_col), F.desc(tiebreak)])
+    return top_k(df, keys, [F.desc(ts_col), F.desc(tiebreak)])
 
 
 def scd2(

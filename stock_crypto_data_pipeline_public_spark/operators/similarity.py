@@ -17,8 +17,10 @@ from __future__ import annotations
 import math
 from collections.abc import Iterable
 
-from pyspark.sql import Column, DataFrame, Window as W
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .scd import top_k
 
 
 def dot(a: str, b: str, dim: int | None = None) -> Column:
@@ -95,8 +97,7 @@ def nearest(
         *rows.columns, cand_id, score.alias("score")
     )
     if k > 1:
-        w = W.partitionBy(row_id).orderBy(F.desc("score"), F.asc(cand_id))
-        return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+        return top_k(scored, [row_id], [F.desc("score"), F.asc(cand_id)], k, "rank")
     return scored.groupBy(row_id).agg(
         F.max_by(cand_id, F.struct("score", -F.col(cand_id))).alias(cand_id),
         *[F.any_value(c).alias(c) for c in rows.columns if c != row_id],

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..operators.scd import top_k
 from ..sources.tables import load_table
 from ..functions.numeric import dec, iavg, money_sum, money_sum_e2, oracle_rnd, rnd
 from ..functions.timeops import epoch_us
@@ -307,9 +308,8 @@ def e06_bangkok_wall_clock(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def e07_asof_prior_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.asof import asof_join_backward
-    from ..operators.scd import dedup_keep_first
 
-    ev = dedup_keep_first(
+    ev = top_k(
         load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id", "value"),
         ["user_id", "ts"],
         [F.desc("event_id")],
@@ -974,11 +974,8 @@ def e15_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
         "session_id",
         F.sum("new_session").over(w.rowsBetween(W.unboundedPreceding, W.currentRow)),
     )
-    sw = W.partitionBy("user_id", "session_id").orderBy(
-        F.asc("ts"), F.asc("event_id")
-    )
-    ranked = sessions.withColumn("rn", F.row_number().over(sw)).filter(
-        F.col("rn") <= 3
+    ranked = top_k(
+        sessions, ["user_id", "session_id"], [F.asc("ts"), F.asc("event_id")], 3, "rn"
     )
 
     def slot(i: int):

@@ -37,7 +37,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from ..dag import ModelRegistry
 from ..functions.keys import hash_key, surrogate_key
-from ..operators.scd import changes_only, dedup_keep_first, latest_wins, scd2
+from ..operators.scd import changes_only, latest_wins, scd2, top_k
 
 registry = ModelRegistry()
 model = registry.model
@@ -48,7 +48,7 @@ model = registry.model
 def first_load(df: DataFrame, *keys: str) -> DataFrame:
     """One row per ``keys``, in the DV2 first-load order (reference W1): the
     earliest load wins, and the record source breaks a same-instant tie."""
-    return dedup_keep_first(df, keys, [F.asc("load_timestamp"), F.asc("source")])
+    return top_k(df, keys, [F.asc("load_timestamp"), F.asc("source")])
 
 
 def _provenance(df: DataFrame) -> list[Column]:
@@ -384,7 +384,7 @@ def sat_asset_price_crypto(ctx) -> DataFrame:
         "load_timestamp",
         F.upper("symbol").alias("__raw_symbol"),
     )
-    rows = dedup_keep_first(
+    rows = top_k(
         rows,
         ["asset_symbol", "price_source", "observed_at"],
         # __raw_symbol tiebreak: BTC-EUR and BTC-USD at the same instant
@@ -411,9 +411,7 @@ def sat_asset_price_crypto(ctx) -> DataFrame:
 def sat_asset_price_stock(ctx) -> DataFrame:
     """reference sat_asset_price_stock (OHLCV satellite)."""
     raw = ctx["raw_stockprices_yfinance"]
-    rows = dedup_keep_first(
-        raw, ["ticker", "date", "observed_at"], [F.asc("load_timestamp")]
-    )
+    rows = top_k(raw, ["ticker", "date", "observed_at"], [F.asc("load_timestamp")])
     return rows.select(
         surrogate_key(F.upper("ticker"), F.lit("STOCK")).alias("hk_asset"),
         F.upper("ticker").alias("asset_symbol"),
@@ -527,18 +525,23 @@ def dim_customer_history(ctx) -> DataFrame:
 )
 def dim_asset(ctx) -> DataFrame:
     """reference dim_asset.sql:6-105 — hub enriched with the latest observed
-    price from either satellite (latest-record-wins, left join)."""
+    price from either satellite (latest-record-wins, left join). Feeds that
+    observe one asset at one instant and load together tie: the lowest
+    ``price_source`` wins."""
     crypto = ctx["sat_asset_price_crypto"].select(
-        "hk_asset", "price", "observed_at", "load_timestamp"
+        "hk_asset", "price", "price_source", "observed_at", "load_timestamp"
     )
     stock = ctx["sat_asset_price_stock"].select(
         "hk_asset",
         F.col("close_price").alias("price"),
+        "price_source",
         "observed_at",
         "load_timestamp",
     )
-    latest = latest_wins(
-        crypto.unionByName(stock), ["hk_asset"], "observed_at", "load_timestamp"
+    latest = top_k(
+        crypto.unionByName(stock),
+        ["hk_asset"],
+        [F.desc("observed_at"), F.desc("load_timestamp"), F.asc("price_source")],
     ).select("hk_asset", F.col("price").alias("latest_price"), F.col("observed_at").alias("price_observed_at"))
     return ctx["hub_asset"].join(latest, "hk_asset", "left").select(
         "hk_asset",

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..operators.scd import top_k
 from ..scratch import mkscratch, with_scratch
 from ..sources.tables import load_table
 from ..functions.numeric import (
@@ -528,12 +529,9 @@ def q11_event_impact_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q12_dedup_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id", "event_type").orderBy(F.asc("ts"), F.asc("event_id"))
-    return (
-        ev.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("event_id", "user_id", "event_type", rnd("value", 2).alias("value"))
-    )
+    return top_k(
+        ev, ["user_id", "event_type"], [F.asc("ts"), F.asc("event_id")]
+    ).select("event_id", "user_id", "event_type", rnd("value", 2).alias("value"))
 
 
 # --------------------------------------------------------------------------
@@ -554,16 +552,11 @@ def q12_dedup_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q13_latest_event_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
-    return (
-        ev.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "user_id",
-            F.col("event_id").alias("latest_event_id"),
-            F.col("event_type").alias("latest_type"),
-            rnd("value", 2).alias("latest_value"),
-        )
+    return top_k(ev, ["user_id"], [F.desc("ts"), F.desc("event_id")]).select(
+        "user_id",
+        F.col("event_id").alias("latest_event_id"),
+        F.col("event_type").alias("latest_type"),
+        rnd("value", 2).alias("latest_value"),
     )
 
 
@@ -649,12 +642,9 @@ def q15_event_value_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q16_topk_events_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    w = W.partitionBy("event_type").orderBy(F.desc("value"), F.asc("event_id"))
-    return (
-        ev.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select("event_type", "event_id", "user_id", rnd("value", 2).alias("value"), "rk")
-    )
+    return top_k(
+        ev, ["event_type"], [F.desc("value"), F.asc("event_id")], 3, "rk"
+    ).select("event_type", "event_id", "user_id", rnd("value", 2).alias("value"), "rk")
 
 
 # --------------------------------------------------------------------------
@@ -1860,14 +1850,13 @@ def q39_compaction_roundtrip(spark: SparkSession, sf_dir: str, base: str) -> Dat
     """,
 )
 def q43_scd2_quality_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.scd import dedup_keep_first
     from ..quality import (
         check_customer_history_no_overlaps,
         check_exactly_one_current,
         check_scd2_effective_dates,
     )
 
-    ev = dedup_keep_first(
+    ev = top_k(
         load_table(spark, sf_dir, "events").select("user_id", "event_id", "ts"),
         ["user_id", "ts"],
         [F.asc("event_id")],

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from ..functions.numeric import oracle_rnd, rnd
 from ..operators import dedup as D
 from ..operators import retrieval as R
+from ..operators.scd import top_k
 from ..scratch import mkscratch
 from ..sources.tables import HEAVY, TEXT, fan_out, load_table
 from .registry import query
@@ -648,8 +649,7 @@ def t10_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("tfidf"),
         )
     )
-    w = W.partitionBy("doc_id").orderBy(F.desc("tfidf"), F.asc("term"))
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= 3)
+    return top_k(scored, ["doc_id"], [F.desc("tfidf"), F.asc("term")], 3, "rk")
 
 
 # --------------------------------------------------------------------------
@@ -908,13 +908,12 @@ def quota_sample(b: DataFrame, quota: int) -> DataFrame:
     boundary = cum.filter(
         (F.col("cum_before") < quota) & (F.col("cum") > quota)
     ).select("lang", "bucket", (F.lit(quota) - F.col("cum_before")).alias("take"))
-    wb = W.partitionBy("lang", "bucket").orderBy("doc_id")
-    partial = (
-        b.join(F.broadcast(boundary), ["lang", "bucket"])
-        .withColumn("rn", F.row_number().over(wb))
-        .filter(F.col("rn") <= F.col("take"))
-        .drop("rn", "take")
-    )
+    partial = top_k(
+        b.join(F.broadcast(boundary), ["lang", "bucket"]),
+        ["lang", "bucket"],
+        [F.asc("doc_id")],
+        F.col("take"),
+    ).drop("take")
     return full.unionByName(partial).select("doc_id", "lang", "bucket")
 
 
@@ -1859,10 +1858,7 @@ def t33_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.regexp_extract_all("text", F.lit("[a-z0-9]+"), 0)).alias("token"),
     )
     counts = tok.groupBy("lang", "token").agg(F.count(F.lit(1)).alias("n"))
-    w = W.partitionBy("lang").orderBy(F.desc("n"), F.asc("token"))
-    return counts.withColumn("rk", F.row_number().over(w)).filter(
-        F.col("rk") <= HH_TOPK
-    )
+    return top_k(counts, ["lang"], [F.desc("n"), F.asc("token")], HH_TOPK, "rk")
 
 
 # --------------------------------------------------------------------------

@@ -27,6 +27,7 @@ from ..functions.keys import (
     oracle_surrogate_key,
     surrogate_key,
 )
+from ..operators.scd import top_k
 from ..sources.tables import load_table
 from ..functions.numeric import dec, dsum, dsum_e, money_sum, money_sum_e2, oracle_rnd, rnd
 from .registry import query
@@ -62,16 +63,11 @@ def v01_hub_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     b1 = cust.select("c_custkey", F.lit("batch_1").alias("record_source"), F.lit(1).alias("load_seq"))
     b2 = cust.select("c_custkey", F.lit("batch_2").alias("record_source"), F.lit(2).alias("load_seq"))
     raw = b1.unionByName(b2)
-    w = W.partitionBy("c_custkey").orderBy(F.asc("load_seq"))
-    return (
-        raw.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            surrogate_key("c_custkey").alias("hk_customer"),
-            hash_key("c_custkey").alias("customer_hash_key"),
-            F.col("c_custkey").alias("customer_bk"),
-            "record_source",
-        )
+    return top_k(raw, ["c_custkey"], [F.asc("load_seq")]).select(
+        surrogate_key("c_custkey").alias("hk_customer"),
+        hash_key("c_custkey").alias("customer_hash_key"),
+        F.col("c_custkey").alias("customer_bk"),
+        "record_source",
     )
 
 
@@ -209,11 +205,8 @@ def v04_fct_orders_vault(spark: SparkSession, sf_dir: str) -> DataFrame:
 def v05_dim_customer_latest_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     ev = load_table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
-    latest = (
-        ev.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "event_type", rnd("value", 2).alias("last_value"))
+    latest = top_k(ev, ["user_id"], [F.desc("ts"), F.desc("event_id")]).select(
+        "user_id", "event_type", rnd("value", 2).alias("last_value")
     )
     return cust.join(latest, cust.c_custkey == latest.user_id, "left").select(
         "c_custkey",
@@ -321,12 +314,7 @@ def v07_merge_last_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(2).alias("batch"),
         )
     )
-    w = W.partitionBy("o_orderkey").orderBy(F.desc("batch"))
-    merged = (
-        target.unionByName(staged)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-    )
+    merged = top_k(target.unionByName(staged), ["o_orderkey"], [F.desc("batch")])
     return merged.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(F.col("batch") - 1).alias("n_updated"),
@@ -444,18 +432,15 @@ def v09_link_company_transaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(hub_transaction, corporate.transaction_id == F.col("transaction_bk"))
         .select("hk_company", "hk_transaction", "load_timestamp", "record_source")
     )
-    w = W.partitionBy("hk_company", "hk_transaction").orderBy(
-        F.asc("load_timestamp"), F.asc("record_source")
-    )
-    return (
-        resolved.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            surrogate_key("hk_company", "hk_transaction").alias("lk_company_transaction"),
-            "hk_company",
-            "hk_transaction",
-            "record_source",
-        )
+    return top_k(
+        resolved,
+        ["hk_company", "hk_transaction"],
+        [F.asc("load_timestamp"), F.asc("record_source")],
+    ).select(
+        surrogate_key("hk_company", "hk_transaction").alias("lk_company_transaction"),
+        "hk_company",
+        "hk_transaction",
+        "record_source",
     )
 
 
@@ -531,12 +516,7 @@ def v10_pit_user_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.asof import asof_join_backward
 
     sat_raw = v03_sat_user_activity(spark, sf_dir)
-    dw = W.partitionBy("user_id", "load_ts").orderBy(F.desc("hashdiff"))
-    sat = (
-        sat_raw.withColumn("rn", F.row_number().over(dw))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
+    sat = top_k(sat_raw, ["user_id", "load_ts"], [F.desc("hashdiff")])
     ev = load_table(spark, sf_dir, "events")
     bounds = ev.agg(
         F.date_trunc("week", F.min("ts")).cast("date").alias("d0"),

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from ..functions.numeric import iavg, oracle_rnd, rnd
 from ..operators import retrieval as RETR
 from ..operators import similarity as S
+from ..operators.scd import top_k
 from ..scratch import with_scratch
 from ..sources.tables import HEAVY, fan_out, load_table, local_rows
 from .registry import query
@@ -95,8 +96,7 @@ def x01_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             rnd(sim, 4).alias("cosine_sim"),
         )
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= 5)
+    return top_k(scored, ["query_id"], [F.desc("cosine_sim"), F.asc("neighbor_id")], 5, "rk")
 
 
 # --------------------------------------------------------------------------
@@ -305,8 +305,7 @@ def x07_ivf_probe_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             rnd(s_sim, 4).alias("cosine_sim"),
         )
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= 5)
+    return top_k(scored, ["query_id"], [F.desc("cosine_sim"), F.asc("neighbor_id")], 5, "rk")
 
 
 # --------------------------------------------------------------------------
@@ -568,8 +567,7 @@ def x08_gemm_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield pd.concat(out, ignore_index=True)
 
     cand = fan_out(emb, HEAVY, "vec_id").mapInPandas(score, schema)
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return cand.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= K)
+    return top_k(cand, ["query_id"], [F.desc("cosine_sim"), F.asc("neighbor_id")], K, "rk")
 
 
 # --------------------------------------------------------------------------
@@ -765,8 +763,7 @@ def x09_pq_adc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("neighbor_id") != F.col("query_id"))
     )
-    w = W.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
-    return adc.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= PQ_TOPK)
+    return top_k(adc, ["query_id"], [F.asc("adc_dist"), F.asc("neighbor_id")], PQ_TOPK, "rk")
 
 
 # --------------------------------------------------------------------------
@@ -981,8 +978,7 @@ def x10_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             rnd(F.col("s.adc"), 4).alias("adc_dist"),
         )
     )
-    w = W.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
-    return adc.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= PQ_TOPK)
+    return top_k(adc, ["query_id"], [F.asc("adc_dist"), F.asc("neighbor_id")], PQ_TOPK, "rk")
 
 
 # --------------------------------------------------------------------------
@@ -1440,21 +1436,16 @@ def x15_sq8_rerank_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("nrm").alias("nnrm"),
         )
     )
-    wa = W.partitionBy("query_id").orderBy(F.desc("approx_sim"), F.asc("neighbor_id"))
-    top_cand = cand.withColumn("rk_a", F.row_number().over(wa)).filter(
-        F.col("rk_a") <= _X15_CAND
+    top_cand = top_k(
+        cand, ["query_id"], [F.desc("approx_sim"), F.asc("neighbor_id")], _X15_CAND
     )
     exact = rnd(
         S.dot("qe", "ne", EMB_DIM) / F.nullif(F.col("qnrm") * F.col("nnrm"), F.lit(0.0)),
         4,
     )
-    wk = W.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        top_cand.withColumn("cosine_sim", exact)
-        .withColumn("rk", F.row_number().over(wk))
-        .filter(F.col("rk") <= _X15_K)
-        .select("query_id", "neighbor_id", "neighbor_label", "approx_sim", "cosine_sim", "rk")
-    )
+    return top_k(
+        top_cand.withColumn("cosine_sim", exact), ["query_id"], [F.desc("cosine_sim"), F.asc("neighbor_id")], _X15_K, "rk"
+    ).select("query_id", "neighbor_id", "neighbor_label", "approx_sim", "cosine_sim", "rk")
 
 
 # --------------------------------------------------------------------------
@@ -1772,12 +1763,7 @@ def x18_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(rel * 10000 + 0.5).alias("rel"),
         )
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("rel"), F.asc("cid"))
-    pool = (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _MMR_POOL)
-        .drop("rk")
-    )
+    pool = top_k(scored, ["query_id"], [F.desc("rel"), F.asc("cid")], _MMR_POOL)
 
     # Per-query greedy as ONE Arrow-grouped pass over the ≤10-row pool.
     # Pool pair similarities are computed INSIDE the pass with the exact
@@ -1967,14 +1953,15 @@ def x19_ivf_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         / F.nullif(F.col("qnrm") * F.col("nrm"), F.lit(0.0)),
         4,
     )
-    wt = W.partitionBy("query_id").orderBy(F.desc("esim"), F.asc("neighbor_id"))
-    truth = (
+    truth = top_k(
         F.broadcast(q)
         .crossJoin(emb.select(F.col("vec_id").alias("neighbor_id"), "embedding", "nrm"))
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", esim.alias("esim"))
-        .withColumn("rk", F.row_number().over(wt))
-        .filter(F.col("rk") <= _X19_K)
+        .select("query_id", "neighbor_id", esim.alias("esim")),
+        ["query_id"],
+        [F.desc("esim"), F.asc("neighbor_id")],
+        _X19_K,
+        "rk",
     )
     hitranks = (
         truth.join(assigned, assigned.vec_id == truth.neighbor_id)
@@ -2141,9 +2128,8 @@ def x20_binary_quant_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("bigint").alias("hamming_dist"),
         )
     )
-    hw = W.partitionBy("query_id").orderBy(F.asc("hamming_dist"), F.asc("neighbor_id"))
-    cand = scanned.withColumn("hrk", F.row_number().over(hw)).filter(
-        F.col("hrk") <= _X20_R
+    cand = top_k(
+        scanned, ["query_id"], [F.asc("hamming_dist"), F.asc("neighbor_id")], _X20_R
     )
     cos = S.dot("qe", "ne", EMB_DIM) / F.nullif(
         F.col("qnrm") * F.col("nnrm"), F.lit(0.0)
@@ -2152,10 +2138,7 @@ def x20_binary_quant_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id", "neighbor_id", "neighbor_label", "hamming_dist",
         rnd(cos, 4).alias("cosine_sim"),
     )
-    rw = W.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return rescored.withColumn("rk", F.row_number().over(rw)).filter(
-        F.col("rk") <= _X20_K
-    )
+    return top_k(rescored, ["query_id"], [F.desc("cosine_sim"), F.asc("neighbor_id")], _X20_K, "rk")
 
 
 # --------------------------------------------------------------------------
@@ -2403,9 +2386,8 @@ def x22_ivf_bq_probe_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("bigint").alias("hamming_dist"),
         )
     )
-    hw = W.partitionBy("query_id").orderBy(F.asc("hamming_dist"), F.asc("neighbor_id"))
-    cand = ham.withColumn("hrk", F.row_number().over(hw)).filter(
-        F.col("hrk") <= _X22_R
+    cand = top_k(
+        ham, ["query_id"], [F.asc("hamming_dist"), F.asc("neighbor_id")], _X22_R
     )
     cos = S.dot("qe", "ne", EMB_DIM) / F.nullif(
         F.col("qnrm") * F.col("nnrm"), F.lit(0.0)
@@ -2414,8 +2396,7 @@ def x22_ivf_bq_probe_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id", "neighbor_id", "neighbor_label", "hamming_dist",
         rnd(cos, 4).alias("cosine_sim"),
     )
-    rw = W.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return rescored.withColumn("rk", F.row_number().over(rw)).filter(F.col("rk") <= 5)
+    return top_k(rescored, ["query_id"], [F.desc("cosine_sim"), F.asc("neighbor_id")], 5, "rk")
 
 
 # --------------------------------------------------------------------------
@@ -2603,8 +2584,7 @@ def x24_mips_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             rnd(S.dot("qe", "embedding", EMB_DIM), 4).alias("ip_score"),
         )
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("ip_score"), F.asc("neighbor_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= 5)
+    return top_k(scored, ["query_id"], [F.desc("ip_score"), F.asc("neighbor_id")], 5, "rk")
 
 
 # --------------------------------------------------------------------------
@@ -2825,8 +2805,7 @@ def x26_filtered_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
             sim.alias("cosine_sim"),
         )
     )
-    wf = W.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    top5 = fil.withColumn("rk", F.row_number().over(wf)).filter(F.col("rk") <= 5)
+    top5 = top_k(fil, ["query_id"], [F.desc("cosine_sim"), F.asc("neighbor_id")], 5, "rk")
     # POST-filter branch: unfiltered top-R, count the survivors — the
     # shortfall an unpartitioned index would silently deliver.
     allp = (
@@ -2839,10 +2818,8 @@ def x26_filtered_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("label") == F.col("qlabel")).alias("hit"),
         )
     )
-    wa = W.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
     post = (
-        allp.withColumn("rk_all", F.row_number().over(wa))
-        .filter(F.col("rk_all") <= _X26_R)
+        top_k(allp, ["query_id"], [F.desc("cosine_sim"), F.asc("neighbor_id")], _X26_R)
         .groupBy("query_id")
         .agg(
             F.sum(F.col("hit").cast("int"))
@@ -2999,29 +2976,23 @@ def _mips_ann_recall(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame
         "score", "rank"
     )
     ip = rnd(S.dot("qe", "embedding", EMB_DIM), 4)
-    wq = W.partitionBy("query_id")
-    ivf5 = (
+    by_ip = [F.desc("ip_score"), F.asc("neighbor_id")]
+    ivf5 = top_k(
         assigned.join(F.broadcast(probes), ["centroid_id"])
         .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), ip.alias("ip_score"))
-        .withColumn(
-            "rk",
-            F.row_number().over(wq.orderBy(F.desc("ip_score"), F.asc("neighbor_id"))),
-        )
-        .filter(F.col("rk") <= 5)
-        .select("query_id", "neighbor_id")
-    )
-    exact5 = (
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), ip.alias("ip_score")),
+        ["query_id"],
+        by_ip,
+        5,
+    ).select("query_id", "neighbor_id")
+    exact5 = top_k(
         F.broadcast(q)
         .join(emb, F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), ip.alias("ip_score"))
-        .withColumn(
-            "rk",
-            F.row_number().over(wq.orderBy(F.desc("ip_score"), F.asc("neighbor_id"))),
-        )
-        .filter(F.col("rk") <= 5)
-        .select("query_id", "neighbor_id")
-    )
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), ip.alias("ip_score")),
+        ["query_id"],
+        by_ip,
+        5,
+    ).select("query_id", "neighbor_id")
     pairhits = exact5.join(ivf5, ["query_id", "neighbor_id"]).groupBy("query_id").agg(
         F.count(F.lit(1)).alias("h")
     )
@@ -3102,13 +3073,6 @@ def _x28_paths(spark: SparkSession, sf_dir: str):
     return cand, post, q
 
 
-def _top5(cand: DataFrame) -> DataFrame:
-    w = W.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("neighbor_id")
-    )
-    return cand.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= 5)
-
-
 @query(
     "x28_tombstoned_ann_search",
     oracle=f"""
@@ -3166,8 +3130,8 @@ def _top5(cand: DataFrame) -> DataFrame:
 )
 def x28_tombstoned_ann_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand, post, _q = _x28_paths(spark, sf_dir)
-    pre5 = _top5(cand)
-    post5 = _top5(post)
+    pre5 = top_k(cand, ["query_id"], [F.desc("cosine_sim"), F.asc("neighbor_id")], 5)
+    post5 = top_k(post, ["query_id"], [F.desc("cosine_sim"), F.asc("neighbor_id")], 5, "rk")
     evicted = pre5.groupBy("query_id").agg(
         F.sum(
             (F.col("neighbor_id") % _X28_MOD == _X28_RES).cast("bigint")

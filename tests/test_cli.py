@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 from stock_crypto_data_pipeline_public_spark.__main__ import (
     cmd_build,
     cmd_generate,
@@ -35,8 +37,9 @@ def test_cli_generate_build_test_roundtrip(spark, tmp_path, capsys):
     out = capsys.readouterr().out
     assert "built" in out and "quality checks passed" in out
 
-    # marts were materialized
+    # marts were materialized, ephemeral models were not
     assert spark.read.parquet(f"{marts}/fct_transactions").count() > 0
+    assert not [d for d in os.listdir(marts) if d.startswith("ephemeral_")]
 
     # standalone test command over the built warehouse
     assert cmd_test(_A(warehouse=wh), spark) == 0

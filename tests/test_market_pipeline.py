@@ -256,9 +256,10 @@ def c(ctx):
 #: seed-42 fixture digests taken before the vault helpers and the
 #: ephemeral_transactions / ephemeral_news models existed: md5 of the
 #: sorted rows (floats at 10 significant digits, so summation-order noise
-#: cannot flip one) and of ``schema.simpleString()``
+#: cannot flip one) and of ``schema.simpleString()``. dim_asset's was taken
+#: once its latest price broke a three-feed tie by ``price_source``.
 _PINNED = {
-    "dim_asset": ("ccf79144da9470e91451fe22ba8e9fca", "b9d1c5af3f20f0b7a95368776c1a5361"),
+    "dim_asset": ("991b5d3e62ba823d9635d77166d89433", "b9d1c5af3f20f0b7a95368776c1a5361"),
     "dim_company": ("aa5dfdfca663482cc1bcb689a2bea34d", "f3100d8718ff7ce53ff98b343d420dbe"),
     "dim_customer": ("43d0b1590a70d2d3ed2168c0668dd6b5", "b87374c140ca7527f6aa7da592a8b5e6"),
     "dim_customer_history": ("89bf48e2f8c1f8b0ec7754e63c7b536c", "937cdabc2b6512665f11d56599a138bd"),
@@ -290,13 +291,6 @@ _PINNED = {
 }
 
 
-#: columns left out of a model's row digest because their value is a tie
-#: that execution order breaks: every crypto asset's latest price is
-#: observed by three feeds at one instant, and dim_asset's latest_wins
-#: tiebreak (load_timestamp) is shared by all three
-_TIED = {"dim_asset": ("latest_price",)}
-
-
 def test_models_match_pinned_digests(ctx):
     """Every model's rows and schema on the seed-42 fixture are pinned, so a
     refactor of the vault builders cannot move a value or a column."""
@@ -316,7 +310,7 @@ def test_models_match_pinned_digests(ctx):
             if name in _PINNED:
                 rows = sorted(
                     repr(tuple(f"{v:.10g}" if isinstance(v, float) else v for v in r))
-                    for r in df.drop(*_TIED.get(name, ())).collect()
+                    for r in df.collect()
                 )
                 got[name] = (md5("\n".join(rows)), md5(df.schema.simpleString()))
     finally:

@@ -357,7 +357,7 @@ def test_vault_policies_have_one_home():
     first-load order (in ``first_load``), the personal ∪ corporate
     transaction union (``ephemeral_transactions``) and the news ticker
     normalization (``ephemeral_news``). Every hub and link returns through
-    the ``hub`` / ``link`` helpers, never its own ``dedup_keep_first``."""
+    the ``hub`` / ``link`` helpers, never its own ``top_k``."""
     import ast
     import inspect
 
@@ -380,9 +380,79 @@ def test_vault_policies_have_one_home():
         kind = name.split("_")[0]
         if kind in ("hub", "link"):
             body = inspect.getsource(getattr(market, name))
-            if not re.search(rf"\b{kind}\(", body) or "dedup_keep_first" in body:
+            if not re.search(rf"\b{kind}\(", body) or "top_k" in body:
                 found.append(name)
     assert not found, "build hubs and links through market.hub / market.link: " + str(found)
+
+
+def test_ranking_rule_has_one_home():
+    """operators/scd.top_k is the one place that keeps the first k rows per
+    key: no other function in plans/ or operators/ names a ``row_number``
+    rank (``withColumn`` or ``alias``) and then filters on it with ``<=``,
+    ``<`` or ``== 1``. Exempt: the functions whose rank is also a value —
+    x16, x21 and x25's recall ranks (a second rank is counted below its
+    bound), x23's unpartitioned fused rank and t40's threshold (the
+    (k+1)-th row's weight)."""
+    import ast
+    from pathlib import Path
+
+    import stock_crypto_data_pipeline_public_spark as pkg
+
+    exempt = {
+        "x16_sq8_recall",
+        "x21_binary_quant_recall",
+        "x23_hybrid_rrf_fusion",
+        "x25_matryoshka_recall",
+        "t40_priority_sample",
+    }
+    root = Path(pkg.__file__).parent
+    found = []
+
+    def name_of(f):
+        return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+
+    def col_name(node):
+        if (
+            isinstance(node, ast.Call)
+            and name_of(node.func) == "col"
+            and node.args
+            and isinstance(node.args[0], ast.Constant)
+        ):
+            return node.args[0].value
+
+    def scan(fn, rel):
+        ranks = set()
+        for n in ast.walk(fn):
+            if (
+                isinstance(n, ast.Call)
+                and name_of(n.func) in ("withColumn", "alias")
+                and n.args
+                and isinstance(n.args[0], ast.Constant)
+                and any(
+                    isinstance(c, ast.Call) and name_of(c.func) == "row_number"
+                    for c in ast.walk(n)
+                )
+            ):
+                ranks.add(n.args[0].value)
+        for n in ast.walk(fn):
+            if not (isinstance(n, ast.Call) and name_of(n.func) in ("filter", "where")):
+                continue
+            for c in ast.walk(n):
+                if not (isinstance(c, ast.Compare) and col_name(c.left) in ranks):
+                    continue
+                op, bound = c.ops[0], c.comparators[0]
+                if isinstance(op, (ast.Lt, ast.LtE)) or (
+                    isinstance(op, ast.Eq) and getattr(bound, "value", None) == 1
+                ):
+                    found.append(f"{rel}:{c.lineno} {col_name(c.left)} (in {fn.name})")
+
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel.startswith(("plans/", "operators/")) and rel != "operators/scd.py":
+            for fn in ast.walk(ast.parse(path.read_text())):
+                if isinstance(fn, ast.FunctionDef) and fn.name not in exempt:
+                    scan(fn, rel)
+    assert not found, "keep the first k rows per key with scd.top_k:\n" + "\n".join(found)
 
 
 @pytest.mark.parametrize("fails_at", ["start", "await"])

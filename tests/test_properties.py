@@ -21,9 +21,9 @@ from stock_crypto_data_pipeline_public_spark.operators.incremental import (
     merge_upsert,
 )
 from stock_crypto_data_pipeline_public_spark.operators.scd import (
-    dedup_keep_first,
     latest_wins,
     scd2,
+    top_k,
 )
 
 BASE = datetime(2024, 1, 1)
@@ -74,15 +74,47 @@ def test_scd2_ranges_tile_and_one_current(spark, rows):
 
 
 @SETTINGS
-@given(rows=versions)
-def test_dedup_keep_first_picks_global_min(spark, rows):
-    out = dedup_keep_first(_df(spark, rows), ["key"], [F.asc("ts"), F.asc("payload")]).collect()
-    expect = {}
-    for k, m, p in rows:
-        cur = expect.get(k)
-        if cur is None or (m, str(p)) < cur:
-            expect[k] = (m, str(p))
-    assert {r.key: (int((r.ts - BASE).total_seconds() // 60), r.payload) for r in out} == expect
+@given(
+    rows=st.lists(
+        st.tuples(
+            st.integers(min_value=0, max_value=5),
+            st.none() | st.integers(min_value=0, max_value=10_000),
+            st.integers(min_value=0, max_value=3),
+        ),
+        min_size=1,
+        max_size=30,
+        unique_by=lambda t: (t[0], t[1]),
+    ),
+    k=st.sampled_from([1, 3, "cap"]),
+    rank=st.sampled_from([None, "rank"]),
+)
+def test_dedup_keep_first_picks_global_min(spark, rows, k, rank):
+    """top_k keeps each key's first k rows — ts ascending with a NULL ts
+    first, payload breaking ties — numbered 1..k in ``rank`` when asked.
+    ``k="cap"`` bounds each key by its rows' ``cap`` column (key % 3 + 1)."""
+    df = spark.createDataFrame(
+        [(key, None if m is None else BASE + timedelta(minutes=m), str(p), key % 3 + 1)
+         for key, m, p in rows],
+        "key int, ts timestamp, payload string, cap int",
+    )
+    out = top_k(
+        df, ["key"], [F.asc("ts"), F.asc("payload")], F.col("cap") if k == "cap" else k, rank
+    )
+    assert out.columns == df.columns + ([rank] if rank else [])
+    by_key: dict[int, list] = {}
+    for key, m, p in sorted(rows, key=lambda t: (t[0], t[1] is not None, t[1] or 0, str(t[2]))):
+        by_key.setdefault(key, []).append((m, str(p)))
+    expect = {
+        (key, m, p) + ((i,) if rank else ())
+        for key, seq in by_key.items()
+        for i, (m, p) in enumerate(seq[: key % 3 + 1 if k == "cap" else k], 1)
+    }
+    got = {
+        (r.key, None if r.ts is None else int((r.ts - BASE).total_seconds() // 60), r.payload)
+        + ((r[rank],) if rank else ())
+        for r in out.collect()
+    }
+    assert got == expect
 
 
 @SETTINGS

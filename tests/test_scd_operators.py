@@ -7,19 +7,19 @@ from pyspark.sql import functions as F
 from stock_crypto_data_pipeline_public_spark.functions.keys import surrogate_key
 from stock_crypto_data_pipeline_public_spark.operators.scd import (
     changes_only,
-    dedup_keep_first,
     latest_wins,
     scd2,
+    top_k,
 )
 from stock_crypto_data_pipeline_public_spark.sources.tables import load_table
 
 
 def test_dedup_keep_first_deterministic(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events")
-    out = dedup_keep_first(ev, ["user_id"], [F.asc("ts"), F.asc("event_id")])
+    out = top_k(ev, ["user_id"], [F.asc("ts"), F.asc("event_id")])
     assert out.count() == ev.select("user_id").distinct().count()
     # doubling the input must not change the result (idempotent dedup)
-    doubled = dedup_keep_first(
+    doubled = top_k(
         ev.unionByName(ev), ["user_id"], [F.asc("ts"), F.asc("event_id")]
     )
     assert doubled.exceptAll(out).count() == 0
