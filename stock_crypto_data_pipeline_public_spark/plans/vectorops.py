@@ -1444,7 +1444,11 @@ def x15_sq8_rerank_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         4,
     )
     return top_k(
-        top_cand.withColumn("cosine_sim", exact), ["query_id"], [F.desc("cosine_sim"), F.asc("neighbor_id")], _X15_K, "rk"
+        top_cand.withColumn("cosine_sim", exact),
+        ["query_id"],
+        [F.desc("cosine_sim"), F.asc("neighbor_id")],
+        _X15_K,
+        "rk",
     ).select("query_id", "neighbor_id", "neighbor_label", "approx_sim", "cosine_sim", "rk")
 
 

@@ -1122,10 +1122,12 @@ def test_x28_tombstone_path_equals_fresh_reduced_index(spark, sf_dir):
     from stock_crypto_data_pipeline_public_spark.plans.vectorops import (
         _X28_MOD,
         _X28_RES,
-        _top5,
         _x28_paths,
         x28_tombstoned_ann_search,
     )
+
+    def top5(df):
+        return top_k(df, ["query_id"], [F.desc("cosine_sim"), F.asc("neighbor_id")], 5, "rk")
 
     out = x28_tombstoned_ann_search(spark, sf_dir).collect()
     assert len(out) == 50
@@ -1134,7 +1136,7 @@ def test_x28_tombstone_path_equals_fresh_reduced_index(spark, sf_dir):
 
     _cand, post, _q = _x28_paths(spark, sf_dir)
     via_tombstone = {
-        (r.query_id, r.rk): r.neighbor_id for r in _top5(post).collect()
+        (r.query_id, r.rk): r.neighbor_id for r in top5(post).collect()
     }
     # fresh "index" on the reduced corpus: filter BEFORE assignment — the
     # candidate generation then runs on reduced data with the same seeds
@@ -1160,7 +1162,7 @@ def test_x28_tombstone_path_equals_fresh_reduced_index(spark, sf_dir):
             F.col("neighbor_id") % _X28_MOD != _X28_RES
         )
         via_fresh = {
-            (r.query_id, r.rk): r.neighbor_id for r in _top5(fresh_cand).collect()
+            (r.query_id, r.rk): r.neighbor_id for r in top5(fresh_cand).collect()
         }
     finally:
         V._emb = orig_emb
